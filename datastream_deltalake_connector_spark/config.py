@@ -21,7 +21,26 @@ import json
 import os
 from dataclasses import dataclass
 
-__all__ = ["ConnectorConfig", "ENV_VARS"]
+__all__ = [
+    "ConnectorConfig",
+    "ENV_VARS",
+    "DEFAULT_MERGE_MODE",
+    "DEFAULT_MOR_MAX_DELETE_FILES",
+    "DEFAULT_MOR_MAX_DELETE_RATIO",
+]
+
+# Connector apply-path defaults, declared once: ConnectorConfig, the
+# streaming entry points (streaming/ingest.py) and the fold policy
+# (operators/mor.maybe_apply_deletes) all read them from here.
+# mor: each micro-batch writes only its own rows plus a key-only
+# equality-delete file, so write cost follows the change, not the table.
+DEFAULT_MERGE_MODE = "mor"
+# fold (apply the pending delete files) once this many pile up, or once
+# their tombstones reach this share of the data rows — 0.3 is Iceberg's
+# rewrite-data-files ``delete-ratio-threshold``
+DEFAULT_MOR_MAX_DELETE_FILES = 8
+DEFAULT_MOR_MAX_DELETE_RATIO = 0.3
+
 
 def _parse_bool(v: str) -> bool:
     if v.lower() in ("1", "true", "yes", "on"):
@@ -54,7 +73,16 @@ ENV_VARS: dict[str, tuple[str, object]] = {
 
 @dataclass(frozen=True)
 class ConnectorConfig:
-    """Engine-wide knobs (reference parity noted per field)."""
+    """Engine-wide knobs (reference parity noted per field).
+
+    The connector applies CDC micro-batches merge-on-read by default
+    (``merge_mode="mor"``), unlike the reference's per-batch Delta MERGE:
+    a batch writes its own rows and one key-only delete file, and the
+    rewrite of the files those deletes hit is folded in bulk once
+    ``mor_max_delete_files`` delete files or a ``mor_max_delete_ratio``
+    tombstone share (0.3) pile up. While deletes are pending, reads of the
+    merged table pay one broadcast anti-join. ``merge_mode="cow"`` keeps
+    the reference's rewrite-per-batch plan."""
 
     # source (application.conf:10,14-15)
     read_format: str = "avro"  # the reference's default
@@ -66,12 +94,13 @@ class ConnectorConfig:
     merge_frequency: str = "1 minute"  # processing-time trigger
     microbatch_partitions: int | None = None  # coalesce(n) small-file control
     schema_evolution: str = "merge"  # merge | overwrite | none
-    # cow: rewrite touched files per batch (reference semantics);
-    # mor: merge-on-read equality deletes (operators/mor.py) — O(batch)
-    # writes per micro-batch, deferred rewrite via maybe_apply_deletes
-    merge_mode: str = "cow"
-    mor_max_delete_files: int = 8
-    mor_max_delete_ratio: float = 0.05
+    # mor (default): merge-on-read equality deletes (operators/mor.py) —
+    # O(batch) writes per micro-batch, deferred rewrite via
+    # maybe_apply_deletes; cow: rewrite touched files per batch (the
+    # reference's Delta MERGE)
+    merge_mode: str = DEFAULT_MERGE_MODE
+    mor_max_delete_files: int = DEFAULT_MOR_MAX_DELETE_FILES
+    mor_max_delete_ratio: float = DEFAULT_MOR_MAX_DELETE_RATIO
     # per-file primary-key Bloom filters in the manifest (functions/bloom.py)
     # — file-skipping for merges into layouts min/max ranges cannot prune
     # (arrival-ordered ingest). Costs a key-column read per staged file.

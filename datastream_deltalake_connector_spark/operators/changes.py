@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import empty_frame
 from ..table.icepack import FileEntry, IcepackTable
 from .merge import SEQ_META, TS_META
 
@@ -86,15 +87,6 @@ def _keys_for(table: IcepackTable, version: int, key) -> list[str]:
     return []
 
 
-def _read(
-    table: IcepackTable, entries: list[FileEntry], schema: T.StructType
-) -> DataFrame:
-    if not entries:
-        return table.spark.createDataFrame([], schema)
-    paths = [table.data_path(e.path) for e in entries]
-    return table.spark.read.schema(schema).parquet(*paths)
-
-
 def _resolved_old(
     table: IcepackTable,
     parent: int,
@@ -105,14 +97,14 @@ def _resolved_old(
     must not include rows a pending delete file (equality or positional)
     had already shadowed (they were logically gone before this commit)."""
     if not entries:
-        return table.spark.createDataFrame([], schema)
+        return empty_frame(table.spark, schema)
     _data, pending_eq, pending_pos = table._split_deletes(table.files(parent))
     if pending_eq:
         key_cols = table.snapshot(parent).summary.get("eq_delete_cols") or []
         return table._scan_with_deletes(entries, pending_eq, schema, key_cols)
     if pending_pos:
         return table._scan_with_pos_deletes(entries, pending_pos, schema)
-    return _read(table, entries, schema)
+    return table._read_files(entries, schema)
 
 
 def _rows_at_positions(
@@ -125,7 +117,7 @@ def _rows_at_positions(
     one broadcast semi-join on the physical row ordinal, the exact-lookup
     core of the positional-delete change feed."""
     if not files:
-        return table.spark.createDataFrame([], schema)
+        return empty_frame(table.spark, schema)
     df = (
         table.spark.read.schema(schema)
         .parquet(*[table.data_path(e.path) for e in files])
@@ -273,12 +265,12 @@ def table_changes(
         # a clone's first commit is an append from the clone's own history:
         # every referenced (source-owned) file is new to THIS version line
         if op in ("append", "clone") and not removed:
-            diff = _read(table, added_data, schema).withColumn(
+            diff = table._read_files(added_data, schema).withColumn(
                 "_change_type", F.lit("insert")
             )
         else:
             keys = _keys_for(table, v, key)
-            new_df = _read(table, added_data, schema)
+            new_df = table._read_files(added_data, schema)
             if added_dels and keys and any(
                 d.seq > e.seq for d in added_dels for e in added_data
             ):
@@ -317,8 +309,7 @@ def table_changes(
                     kept_data, affect_dels, keys
                 )
                 if cand:
-                    del_keys = _read(
-                        table,
+                    del_keys = table._read_files(
                         affect_dels,
                         T.StructType(
                             [f for f in schema.fields if f.name in keys]
@@ -336,7 +327,7 @@ def table_changes(
                             cand, new_pending, schema, keys
                         )
                     else:
-                        new_vis = _read(table, cand, schema)
+                        new_vis = table._read_files(cand, schema)
                     new_df = new_df.unionByName(
                         new_vis.join(F.broadcast(del_keys), keys, "left_semi")
                     )
@@ -355,8 +346,8 @@ def table_changes(
                     if e.content == "pos_deletes"
                 ]
                 now_pos = [e for e in entries if e.content == "pos_deletes"]
-                empty_pairs = table.spark.createDataFrame(
-                    [], "__dabs string, __dpos long"
+                empty_pairs = empty_frame(
+                    table.spark, "__dabs string, __dpos long"
                 )
                 p_prev = (
                     table._pos_delete_df(parent_pos)
@@ -406,7 +397,7 @@ def table_changes(
                 )
             else:
                 old_df = old_df.unionByName(
-                    table.spark.createDataFrame([], schema),
+                    empty_frame(table.spark, schema),
                     allowMissingColumns=True,
                 ).select(*cols)
                 diff = _classify(old_df, new_df, keys, cols)
@@ -415,7 +406,7 @@ def table_changes(
             diff, allowMissingColumns=True
         )
     if out is None:
-        empty = table.spark.createDataFrame([], out_schema)
+        empty = empty_frame(table.spark, out_schema)
         return empty.withColumn(
             "_change_type", F.lit("").cast("string")
         ).withColumn("_commit_version", F.lit(0)).limit(0)

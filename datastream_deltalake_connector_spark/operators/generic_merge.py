@@ -54,6 +54,7 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..session import empty_frame
 from ..table.icepack import FileEntry, IcepackTable
 from .rowops import _read_candidates, _reclaim_staged
 
@@ -316,7 +317,7 @@ def merge_into(
                     )
                 )
             else:
-                tdf = table.spark.createDataFrame([], snap.schema)
+                tdf = empty_frame(table.spark, snap.schema)
         j = (
             tdf.withColumn("__t", F.lit(1)).alias(t_alias)
             .join(

@@ -47,6 +47,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..config import DEFAULT_MOR_MAX_DELETE_FILES, DEFAULT_MOR_MAX_DELETE_RATIO
 from ..table.icepack import FileEntry, IcepackTable
 from ..table.lineage import LineageJournal
 from .dedup import latest_by_keys
@@ -170,10 +171,11 @@ def merge_into_table_mor(
     added = table.write_data_files(merged, partition_by=table.partition_spec() or None)
 
     # The delete file is tiny (keys only): a single sorted file keeps its
-    # footer stats tight so scan-side candidate pruning stays sharp.
+    # footer stats tight so scan-side candidate pruning stays sharp. Sorting
+    # after coalesce(1) needs no range-sampling job or shuffle.
     del_entries: list[FileEntry] = []
     if touched_paths:
-        del_df = tombstones.orderBy(*keys).coalesce(1)
+        del_df = tombstones.coalesce(1).sortWithinPartitions(*keys)
         # key-only tombstones aren't table data; constraint columns are
         # validated where they exist (the co-committed data files)
         del_entries = table.write_data_files(del_df, enforce_constraints=False)
@@ -294,15 +296,18 @@ def apply_deletes(
 
 def maybe_apply_deletes(
     table: IcepackTable,
-    max_delete_files: int = 8,
-    max_delete_ratio: float = 0.05,
+    max_delete_files: int = DEFAULT_MOR_MAX_DELETE_FILES,
+    max_delete_ratio: float = DEFAULT_MOR_MAX_DELETE_RATIO,
     **kwargs,
 ) -> int | None:
     """Auto-maintenance policy for pending equality deletes, the MoR analogue
     of ``maybe_compact``: apply when delete files pile up (every one joins the
-    scan's broadcast side) or when tombstones exceed ``max_delete_ratio`` of
-    the table's rows (scan-side anti-join cost grows with churn). Driver-side
-    manifest math only; returns the new version or None (no-op)."""
+    scan's broadcast side) or when tombstones reach ``max_delete_ratio`` of
+    the table's rows (scan-side anti-join cost grows with churn). The 0.3
+    default is Iceberg's ``delete-ratio-threshold``: a lower ratio folds
+    after nearly every CDC batch and turns merge-on-read back into
+    copy-on-write. Driver-side manifest math only; returns the new version
+    or None (no-op)."""
     entries = table.files()
     dels = [e for e in entries if e.content != "data"]
     if not dels:

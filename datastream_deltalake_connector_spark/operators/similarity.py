@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import empty_frame
+
 __all__ = [
     "dot_literal",
     "cosine_topk",
@@ -169,9 +171,7 @@ def embedding_neardup_lsh(
     the same hot-bucket cap. Output: (id_a, id_b, cos_x10k)."""
     dim_row = df.select(F.size(vec_col).alias("d")).head()
     if dim_row is None:
-        return df.sparkSession.createDataFrame(
-            [], f"id_a long, id_b long, cos_x10k long"
-        )
+        return empty_frame(df.sparkSession, "id_a long, id_b long, cos_x10k long")
     dim = dim_row["d"]
     # ALL tables' sign-pattern buckets in one vectorized pandas_udf: a
     # single (batch × dim) @ (dim × tables·planes) matmul per Arrow batch,

@@ -32,6 +32,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from ..session import empty_frame
 from ..table.icepack import IcepackTable
 from ..table.lineage import LineageJournal
 from .dedup import latest_by_keys
@@ -369,7 +370,7 @@ def merge_into_table(
             paths = [table.data_path(p) for p in touched_paths]
             target = table.spark.read.schema(table.schema()).parquet(*paths)
         else:
-            target = table.spark.createDataFrame([], table.schema())
+            target = empty_frame(table.spark, table.schema())
 
         batch_bytes = n_winners * _estimate_row_bytes(winners)
         small_batch = batch_bytes <= broadcast_bytes_threshold

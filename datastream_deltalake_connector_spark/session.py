@@ -12,11 +12,23 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set, else the host's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """An empty DataFrame of ``schema`` that runs no tasks when collected.
+
+    ``spark.createDataFrame([], schema)`` plans a LogicalRDD over a Python
+    RDD with ``defaultParallelism`` partitions: every action on it (or on a
+    union containing it) starts that many Python tasks for zero rows. An
+    empty RDD has no partitions at all."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 def get_spark(

@@ -597,5 +597,9 @@ class IcepackDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the 'icepack' format on a session (idempotent)."""
+    """Register the 'icepack' format on a session (idempotent), and turn on
+    Python data-source filter pushdown: it is off by default, and Spark
+    refuses to read a source that implements ``pushFilters`` without it
+    (DATA_SOURCE_PUSHDOWN_DISABLED)."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(IcepackDataSource)

@@ -7,7 +7,8 @@ jobs/DatastreamDeltaConnector.scala:35-84, datastream/DatastreamIO.scala:
     stream 1 (ingest):  readStream(file source, maxFilesPerTrigger)
                         → append-only parquet "log table"           (S5→S7)
     stream 2 (merge):   readStream(log table) → foreachBatch(
-                        flatten envelope → merge_into_table)        (S6→S8)
+                        flatten envelope → merge_into_table_mor
+                        or merge_into_table)                        (S6→S8)
 
 Semantics preserved:
 - ``maxFilesPerTrigger`` = the reference's ``file-read-concurrency``
@@ -31,6 +32,11 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..config import (
+    DEFAULT_MERGE_MODE,
+    DEFAULT_MOR_MAX_DELETE_FILES,
+    DEFAULT_MOR_MAX_DELETE_RATIO,
+)
 from ..operators.table_merge import merge_into_table
 from ..sources.cdc import (
     DatastreamTable,
@@ -123,9 +129,9 @@ def merge_log_to_table(
     query_name: str | None = None,
     auto_compact_min_files: int | None = None,
     max_files_per_trigger: int | None = None,
-    merge_mode: str = "cow",
-    mor_max_delete_files: int = 8,
-    mor_max_delete_ratio: float = 0.05,
+    merge_mode: str = DEFAULT_MERGE_MODE,
+    mor_max_delete_files: int = DEFAULT_MOR_MAX_DELETE_FILES,
+    mor_max_delete_ratio: float = DEFAULT_MOR_MAX_DELETE_RATIO,
 ):
     """Stream 2: log table → foreachBatch merge (reference foreachBatch sink,
     DatastreamDeltaConnector.scala:57-77). Each micro-batch flattens the
@@ -146,13 +152,17 @@ def merge_log_to_table(
     the reference's README warns about (README.md:146-151); compacting in
     the sink keeps the table scan-healthy without a second scheduler.
 
-    ``merge_mode``: ``"cow"`` (default) rewrites touched files per batch;
-    ``"mor"`` applies each batch merge-on-read (operators/mor.py) — O(batch)
-    writes + one equality-delete file, the latency answer when micro-batches
-    are sub-percent of a huge table — and chains ``maybe_apply_deletes``
-    (thresholds ``mor_max_delete_files`` / ``mor_max_delete_ratio``) so the
-    deferred rewrite is paid in bulk once tombstones pile up, exactly as
-    ``auto_compact_min_files`` amortizes small files."""
+    ``merge_mode``: ``"mor"`` (default) applies each batch merge-on-read
+    (operators/mor.py) — the batch's own rows plus one key-only
+    equality-delete file, so bytes written follow the change, not the
+    table — and chains ``maybe_apply_deletes`` so the deferred rewrite is
+    paid in bulk once ``mor_max_delete_files`` delete files or a
+    ``mor_max_delete_ratio`` tombstone share (default 0.3, Iceberg's
+    ``delete-ratio-threshold``) pile up, exactly as
+    ``auto_compact_min_files`` amortizes small files. While deletes are
+    pending, reads of the merged table pay one broadcast anti-join.
+    ``"cow"`` rewrites every touched file per batch (the reference's Delta
+    MERGE, MergeQueries.scala:91-121)."""
     if merge_mode not in ("cow", "mor"):
         raise ValueError(f"merge_mode must be 'cow' or 'mor', got {merge_mode!r}")
     os.makedirs(log_dir, exist_ok=True)
@@ -233,9 +243,9 @@ def run_connector_once(
     table_source=None,
     microbatch_partitions: int | None = None,
     auto_compact_min_files: int | None = None,
-    merge_mode: str = "cow",
-    mor_max_delete_files: int = 8,
-    mor_max_delete_ratio: float = 0.05,
+    merge_mode: str = DEFAULT_MERGE_MODE,
+    mor_max_delete_files: int = DEFAULT_MOR_MAX_DELETE_FILES,
+    mor_max_delete_ratio: float = DEFAULT_MOR_MAX_DELETE_RATIO,
     bloom_filters: bool = False,
 ) -> dict[str, str]:
     """Discover every table of the stream and drain it end-to-end
@@ -357,9 +367,9 @@ class ConnectorDaemon:
         processing_time: str | None = "5 seconds",
         microbatch_partitions: int | None = None,
         auto_compact_min_files: int | None = None,
-        merge_mode: str = "cow",
-        mor_max_delete_files: int = 8,
-        mor_max_delete_ratio: float = 0.05,
+        merge_mode: str = DEFAULT_MERGE_MODE,
+        mor_max_delete_files: int = DEFAULT_MOR_MAX_DELETE_FILES,
+        mor_max_delete_ratio: float = DEFAULT_MOR_MAX_DELETE_RATIO,
         bloom_filters: bool = False,
     ) -> None:
         self.spark = spark

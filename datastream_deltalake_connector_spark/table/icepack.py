@@ -59,6 +59,8 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import empty_frame
+
 __all__ = ["IcepackTable", "FileEntry", "Snapshot", "ConflictError", "SchemaEvolutionError"]
 
 # Positional-delete file columns (Iceberg-v2 position deletes, spec §Delete
@@ -67,6 +69,13 @@ __all__ = ["IcepackTable", "FileEntry", "Snapshot", "ConflictError", "SchemaEvol
 # Spark exposes as ``_metadata.row_index``).
 POS_FILE_COL = "__file"
 POS_IDX_COL = "__pos"
+
+# ASCII characters java.net.URI percent-quotes in a path, i.e. in the
+# ``_metadata.file_path`` Spark reports; all others, non-ASCII included,
+# stay literal
+_URI_QUOTE = str.maketrans(
+    {c: f"%{ord(c):02X}" for c in [*map(chr, range(0x21)), "\x7f", *'"#%<>?[\\]^`{|}']}
+)
 
 
 class ConflictError(RuntimeError):
@@ -794,23 +803,17 @@ class IcepackTable:
 
             entries = [e for e in entries if _keep(e)]
         schema = snap.schema
-        if not entries:
-            df = self.spark.createDataFrame([], schema)
-        elif deletes:
+        if entries and deletes:
             df = self._scan_with_deletes(
                 entries,
                 deletes,
                 schema,
                 snap.summary.get("eq_delete_cols") or [],
             )
-        elif pos_deletes:
+        elif entries and pos_deletes:
             df = self._scan_with_pos_deletes(entries, pos_deletes, schema)
         else:
-            paths = [self.data_path(e.path) for e in entries]
-            # Explicit schema: files written before a schema evolution lack the
-            # new columns; the parquet reader null-fills them (mergeSchema
-            # read semantics, DeltaSchemaMigrationSpec parity).
-            df = self.spark.read.schema(schema).parquet(*paths)
+            df = self._read_files(entries, schema)
         if filters and apply_filters:
             from pyspark.sql import functions as F
 
@@ -919,6 +922,49 @@ class IcepackTable:
                 kept.append(e)
         return kept
 
+    def _read_files(self, entries: list[FileEntry], schema: T.StructType) -> DataFrame:
+        """One plain parquet scan of ``entries`` (an empty frame for none).
+        Explicit schema: files written before a schema evolution lack the
+        new columns; the parquet reader null-fills them (mergeSchema read
+        semantics, DeltaSchemaMigrationSpec parity)."""
+        if not entries:
+            return empty_frame(self.spark, schema)
+        paths = [self.data_path(e.path) for e in entries]
+        return self.spark.read.schema(schema).parquet(*paths)
+
+    def _read_with_seq(
+        self, entries: list[FileEntry], schema: T.StructType, seq_col: str
+    ) -> DataFrame:
+        """One parquet scan of ``entries`` with each row's data-sequence
+        number in ``seq_col`` — one scan node however many commits the files
+        come from.
+
+        Files of one commit get a literal. Files of several are mapped from
+        ``_metadata.file_path``, which costs a metadata column and a CASE
+        per row: one ``isin`` set per sequence number (Catalyst turns large
+        ``isin`` lists into hash sets), not a literal map column, whose
+        lookup probes its keys one by one. A row from a file the map does
+        not name fails the query instead of comparing against NULL, which
+        would resurrect deleted rows."""
+        from pyspark.sql import functions as F
+
+        df = self._read_files(entries, schema)
+        uris_by_seq: dict[int, list[str]] = {}
+        for e in entries:
+            uris_by_seq.setdefault(e.seq, []).append(self._file_uri(e.path))
+        (s0, uris0), *rest = sorted(uris_by_seq.items())
+        if not rest:
+            return df.withColumn(seq_col, F.lit(s0))
+        self._check_uri_formula(entries[0])
+        path = F.col("_metadata.file_path")
+        seq = F.when(path.isin(uris0), F.lit(s0))
+        for s, uris in rest:
+            seq = seq.when(path.isin(uris), F.lit(s))
+        seq = seq.otherwise(
+            F.raise_error(F.concat(F.lit("no data-sequence number for "), path))
+        )
+        return df.withColumn(seq_col, seq)
+
     def _scan_with_deletes(
         self,
         data: list[FileEntry],
@@ -933,12 +979,12 @@ class IcepackTable:
         Plan shape (the one you'd want at 100 TB): data files proven
         unaffected by every delete file (older-or-equal seq, or disjoint key
         range) are read as ONE plain parquet scan with no join at all. The
-        remaining candidates are read grouped by data-sequence number (one
-        ``lit(seq)`` per group — a handful of recent commits, never a
-        per-file plan node), and anti-joined against the (small, broadcast)
-        union of delete-file keys with ``delete.seq > data.seq``. Image
-        bytes in the candidate files cross no exchange: an anti-join only
-        filters the probe side."""
+        remaining candidates are read as ONE more scan, each row carrying
+        its file's data-sequence number, and anti-joined against the (small,
+        broadcast) delete-file keys with ``delete.seq > data.seq``: one
+        broadcast per scan however many commits the candidates or the
+        delete files come from. Image bytes in the candidate files cross no
+        exchange: an anti-join only filters the probe side."""
         from pyspark.sql import functions as F
 
         if not key_cols:
@@ -955,48 +1001,26 @@ class IcepackTable:
         )
         cand_paths = {e.path for e in cand}
         plain = [e for e in data if e.path not in cand_paths]
-
-        if plain:
-            paths = [self.data_path(e.path) for e in plain]
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            df = self.spark.createDataFrame([], schema)
         if not cand:
-            return df
-
-        def by_seq(entries: list[FileEntry]) -> dict[int, list[str]]:
-            groups: dict[int, list[str]] = {}
-            for e in entries:
-                groups.setdefault(e.seq, []).append(self.data_path(e.path))
-            return groups
-
-        cand_df = None
-        for seq, paths in sorted(by_seq(cand).items()):
-            part = self.spark.read.schema(schema).parquet(*paths).withColumn(
-                "__ds", F.lit(seq)
-            )
-            cand_df = part if cand_df is None else cand_df.unionByName(part)
+            return self._read_files(plain, schema)
 
         del_schema = T.StructType(
             [f for f in schema.fields if f.name in key_cols]
         )
-        del_df = None
-        for seq, paths in sorted(by_seq(deletes).items()):
-            part = (
-                self.spark.read.schema(del_schema)
-                .parquet(*paths)
-                .select(
-                    *[F.col(c).alias(f"__del_{c}") for c in key_cols],
-                    F.lit(seq).alias("__es"),
-                )
-            )
-            del_df = part if del_df is None else del_df.unionByName(part)
-
+        del_df = self._read_with_seq(deletes, del_schema, "__es").select(
+            *[F.col(c).alias(f"__del_{c}") for c in key_cols], "__es"
+        )
         cond = F.col("__es") > F.col("__ds")
         for c in key_cols:
             cond = cond & (F.col(c) == F.col(f"__del_{c}"))
-        resolved = cand_df.join(F.broadcast(del_df), cond, "left_anti").drop("__ds")
-        return df.unionByName(resolved)
+        resolved = (
+            self._read_with_seq(cand, schema, "__ds")
+            .join(F.broadcast(del_df), cond, "left_anti")
+            .drop("__ds")
+        )
+        if not plain:
+            return resolved
+        return self._read_files(plain, schema).unionByName(resolved)
 
     # ------------------------------------------------- positional deletes
     def pos_delete_targets(self, pos_deletes: list[FileEntry]) -> dict[str, int]:
@@ -1014,11 +1038,15 @@ class IcepackTable:
 
     def _file_uri(self, rel_or_abs: str) -> str:
         """The URI ``_metadata.file_path`` reports for a manifest path —
-        what lets a positional delete's rel path meet the scan's metadata
-        column in a join. Verified against Spark's actual rendering once
-        per table root (:meth:`_check_uri_formula`) so drift fails loudly
-        instead of silently resurrecting deleted rows."""
-        return "file:" + os.path.abspath(self.data_path(rel_or_abs))
+        what lets a positional delete's rel path, or a file's data-sequence
+        number, meet the scan's metadata column. Spark renders the path
+        through ``java.net.URI``, which percent-quotes spaces, ``%`` and a
+        few other ASCII characters. Verified against Spark's actual
+        rendering once per table root (:meth:`_check_uri_formula`) so drift
+        fails loudly instead of silently resurrecting deleted rows."""
+        return "file:" + os.path.abspath(self.data_path(rel_or_abs)).translate(
+            _URI_QUOTE
+        )
 
     _URI_FORMULA_CHECKED: set[str] = set()  # class-level, keyed by root
 
@@ -1036,10 +1064,10 @@ class IcepackTable:
         )
         if not got or got[0].fp != self._file_uri(entry.path):
             raise RuntimeError(
-                "positional-delete URI mapping failed: Spark reports "
+                "data-file URI mapping failed: Spark reports "
                 f"{got[0].fp if got else '<no rows>'!r} for manifest path "
                 f"{entry.path!r}, expected {self._file_uri(entry.path)!r} — "
-                "refusing to resolve pos-deletes (a silent mismatch would "
+                "refusing to resolve delete files (a silent mismatch would "
                 "resurrect deleted rows)"
             )
         IcepackTable._URI_FORMULA_CHECKED.add(root_key)
@@ -1096,13 +1124,8 @@ class IcepackTable:
         )
         hit = [e for e in data if e.path in targets]
         plain = [e for e in data if e.path not in targets]
-        if plain:
-            paths = [self.data_path(e.path) for e in plain]
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            df = self.spark.createDataFrame([], schema)
         if not hit:
-            return df
+            return self._read_files(plain, schema)
         self._check_uri_formula(hit[0])
         cand_df = (
             self.spark.read.schema(schema)
@@ -1118,7 +1141,9 @@ class IcepackTable:
             cand_df.join(F.broadcast(del_df), cond, "left_anti")
             .drop("__abs", "__idx")
         )
-        return df.unionByName(resolved)
+        if not plain:
+            return resolved
+        return self._read_files(plain, schema).unionByName(resolved)
 
     @staticmethod
     def _split_deletes(

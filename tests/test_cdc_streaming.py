@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -709,3 +710,86 @@ def test_connector_bloom_filters_end_to_end(spark, stream_root, tmp_path):
         for r in t.scan().select("pid", "name", "city").collect()
     )
     assert state(tb) == state(tp)
+
+
+def _churn_dumps(root, n_keys=1000, n_dumps=10, events=110, seed=7):
+    """A base dump of ``n_keys`` inserts, then ``n_dumps`` dumps of updates
+    (80%), deletes (10%) and inserts (10%): each dump shadows about 9% of
+    the rows, so the 0.3 tombstone ratio folds every fifth dump."""
+    import random
+
+    rng = random.Random(seed)
+    live = [f"p{i:05d}" for i in range(n_keys)]
+    next_key, uid, pos = n_keys, 0, 100
+
+    def ev(pk, minute, change_type="UPDATE-INSERT", deleted=False):
+        nonlocal uid, pos
+        uid, pos = uid + 1, pos + 10
+        ts = f"2024-01-01T{10 + minute // 60:02d}:{minute % 60:02d}:{uid % 60:02d}.000Z"
+        name = f"name-{pk}-{uid}-" + "x" * rng.randrange(20, 60)
+        return envelope(uid, ts, pk, name, f"city-{rng.randrange(50)}",
+                        change_type, deleted, log_position=pos)
+
+    dumps = [[ev(pk, 0, "INSERT") for pk in live]]
+    for d in range(1, n_dumps + 1):
+        batch = []
+        for _ in range(events):
+            r = rng.random()
+            if r < 0.8:
+                batch.append(ev(rng.choice(live), d))
+            elif r < 0.9:
+                pk = live.pop(rng.randrange(len(live)))
+                batch.append(ev(pk, d, "DELETE", True))
+            else:
+                pk = f"p{next_key:05d}"
+                next_key += 1
+                live.append(pk)
+                batch.append(ev(pk, d, "INSERT"))
+        dumps.append(batch)
+    dirs = []
+    for d, batch in enumerate(dumps):
+        out = root / "people" / "2024" / "01" / "01" / "10" / f"{d:02d}"
+        out.mkdir(parents=True)
+        (out / "records.json").write_text(json.dumps(batch))
+        dirs.append(str(out))
+    return dirs
+
+
+def _bytes_added(t: IcepackTable) -> int:
+    """Bytes of every file any snapshot added (files are immutable)."""
+    sizes = {}
+    for s in t.snapshots():
+        sizes.update((e.path, e.bytes) for e in t.files(s.version))
+    return sum(sizes.values())
+
+
+def test_connector_default_merge_on_read_writes_less(spark, tmp_path):
+    """The connector's default apply path is merge-on-read: draining eleven
+    dumps one at a time folds pending deletes at least twice (the 0.3
+    tombstone-ratio rule), adds at most half the bytes the same drain adds
+    with merge_mode='cow', and ends with identical rows."""
+    dumps = _churn_dumps(tmp_path / "src")
+    stream = tmp_path / "stream"
+    tables = {}
+    for mode in ("default", "cow"):
+        kwargs = {} if mode == "default" else {"merge_mode": "cow"}
+        root = stream / mode
+        for d in dumps:  # publish one dump, drain it
+            shutil.copytree(d, root / os.path.relpath(d, tmp_path / "src"))
+            res = run_connector_once(
+                spark, str(root), str(tmp_path / f"wh-{mode}"), fmt="json",
+                **kwargs,
+            )
+        tables[mode] = IcepackTable.load(spark, res["people"])
+
+    mor, cow = tables["default"], tables["cow"]
+    ops = [s.operation for s in mor.snapshots()]
+    assert "merge-mor" in ops
+    assert ops.count("apply-deletes") >= 2, ops
+    assert "apply-deletes" not in [s.operation for s in cow.snapshots()]
+    mor_b, cow_b = _bytes_added(mor), _bytes_added(cow)
+    assert mor_b <= 0.5 * cow_b, (mor_b, cow_b)
+    cols = ["pid", "name", "city"]
+    assert sorted(mor.scan().select(cols).collect()) == sorted(
+        cow.scan().select(cols).collect()
+    )

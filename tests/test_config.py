@@ -77,8 +77,9 @@ def test_json_roundtrip(tmp_path):
 
 
 def test_merge_mode_knob(tmp_path):
-    # default is the reference's copy-on-write semantics
-    assert ConnectorConfig().merge_mode == "cow"
+    # default is merge-on-read; copy-on-write stays selectable
+    assert ConnectorConfig().merge_mode == "mor"
+    assert ConnectorConfig(merge_mode="cow").merge_mode == "cow"
     with pytest.raises(ValueError, match="merge_mode"):
         ConnectorConfig(merge_mode="sideways")
     # env overlay, PureConfig ${?VAR} spirit
@@ -86,6 +87,32 @@ def test_merge_mode_knob(tmp_path):
         None, env={"DELTA_MERGE_MODE": "mor", "DELTA_MOR_MAX_DELETE_FILES": "3"}
     )
     assert (cfg.merge_mode, cfg.mor_max_delete_files) == ("mor", 3)
+
+
+def test_apply_path_defaults_agree():
+    """Every connector entry point and the fold policy default to the same
+    apply path as ConnectorConfig: merge-on-read, folding at 8 delete files
+    or a 0.3 tombstone ratio."""
+    import inspect
+
+    from datastream_deltalake_connector_spark.operators.mor import maybe_apply_deletes
+    from datastream_deltalake_connector_spark.streaming.ingest import (
+        ConnectorDaemon,
+        merge_log_to_table,
+        run_connector_once,
+    )
+
+    cfg = ConnectorConfig()
+    assert (cfg.merge_mode, cfg.mor_max_delete_files, cfg.mor_max_delete_ratio) == (
+        "mor", 8, 0.3,
+    )
+    for fn in (run_connector_once, merge_log_to_table, ConnectorDaemon):
+        params = inspect.signature(fn).parameters
+        for name in ("merge_mode", "mor_max_delete_files", "mor_max_delete_ratio"):
+            assert params[name].default == getattr(cfg, name), (fn, name)
+    params = inspect.signature(maybe_apply_deletes).parameters
+    assert params["max_delete_files"].default == cfg.mor_max_delete_files
+    assert params["max_delete_ratio"].default == cfg.mor_max_delete_ratio
 
 
 def test_bloom_filters_knob():

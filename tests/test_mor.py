@@ -90,6 +90,21 @@ def test_mor_matches_cow_across_batches(spark, tmp_path):
     assert mor.describe()["delete_files"] > 0  # MoR actually deferred work
 
 
+def test_mor_scan_under_root_needing_uri_quoting(spark, tmp_path):
+    """The scan maps each row's file to its data-sequence number through the
+    URI Spark reports, which percent-quotes spaces and '%' — a table root
+    holding them must resolve its deletes like any other."""
+    cow = fresh_table(spark, tmp_path, "cow")
+    mor = fresh_table(spark, tmp_path, "mor dir %41")
+    for i in range(2):
+        batch = cb(spark, i).cache()
+        merge_into_table(cow, batch)
+        merge_into_table_mor(mor, batch)
+        batch.unpersist()
+    assert mor.describe()["delete_files"] == 2
+    assert key_state(mor) == key_state(cow)
+
+
 def test_mor_idempotent_replay(spark, tmp_path):
     t = fresh_table(spark, tmp_path)
     batch = cb(spark, 0).cache()

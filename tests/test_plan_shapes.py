@@ -133,3 +133,66 @@ def test_generic_merge_single_join_write_job(noaqe, tmp_path):
     # range pre-pruning cannot engage — the EXACT file_path probe is what
     # bounds the rewrite to the single file actually holding a match
     assert rep["files_rewritten"] == 1 and rep["files_probed"] == 2
+
+
+def _kv_batch(spark, i: int):
+    """CDC batch ``i`` over the ids 0..99 table: five updates, one delete
+    and one insert, all newer than every earlier batch."""
+    from datetime import datetime, timedelta
+
+    ts = datetime(2024, 1, 1) + timedelta(hours=i)
+    rows = [(10 * i + j, f"u{i}", "UPDATE-INSERT", False, ts, i) for j in range(5)]
+    rows.append((10 * i + 5, None, "DELETE", True, ts, i))
+    rows.append((1000 + i, f"n{i}", "INSERT", False, ts, i))
+    return spark.createDataFrame(
+        rows,
+        "id BIGINT, v STRING, change_type STRING, is_deleted BOOLEAN, "
+        "source_timestamp TIMESTAMP, change_seq BIGINT",
+    )
+
+
+@pytest.mark.parametrize("n_deletes", [1, 3, 5])
+def test_mor_scan_single_broadcast(noaqe, tmp_path, n_deletes):
+    """A merge-on-read scan reads its candidate files in one parquet scan
+    and builds ONE broadcast of delete keys, however many delete files are
+    pending and however many commits the candidates come from; its rows
+    equal the copy-on-write table's."""
+    from datetime import datetime
+
+    from pyspark.sql import types as T
+
+    from datastream_deltalake_connector_spark.operators.merge import SEQ_META, TS_META
+    from datastream_deltalake_connector_spark.operators.mor import merge_into_table_mor
+    from datastream_deltalake_connector_spark.operators.table_merge import merge_into_table
+    from datastream_deltalake_connector_spark.table.icepack import IcepackTable
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("v", T.StringType()),
+            T.StructField(TS_META, T.TimestampType()),
+            T.StructField(SEQ_META, T.LongType()),
+        ]
+    )
+    base = noaqe.createDataFrame(
+        [(i, f"b{i}", datetime(2024, 1, 1), 0) for i in range(100)], schema
+    )
+    tables = {}
+    for mode, merge in (("mor", merge_into_table_mor), ("cow", merge_into_table)):
+        t = IcepackTable.create(noaqe, str(tmp_path / mode), schema)
+        t.append(base, num_files=2)
+        for i in range(1, n_deletes + 1):
+            merge(t, _kv_batch(noaqe, i), key="id")
+        tables[mode] = t
+
+    mor = tables["mor"]
+    pending = [e for e in mor.files() if e.content == "eq_deletes"]
+    assert len(pending) == n_deletes
+    df = mor.scan()
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    p = buf.getvalue()
+    broadcasts = re.findall(r"^\(\d+\) BroadcastExchange\b", p, re.M)
+    assert len(broadcasts) == 1, f"{n_deletes} delete files:\n{p[:3000]}"
+    assert sorted(df.collect()) == sorted(tables["cow"].scan().collect())

@@ -84,6 +84,28 @@ def test_filter_pushdown_prunes_partitions(spark, tmp_path):
     assert read(spark, t).count() == 200
 
 
+def test_register_enables_pushdown_on_plain_session(spark, tmp_path):
+    """Python data-source filter pushdown is off in a plain SparkSession,
+    and Spark then refuses to read a source implementing pushFilters;
+    register() turns it on, so reads and file pruning work without
+    session.py's confs."""
+    conf = "spark.sql.python.filterPushdown.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        register(spark)
+        assert spark.conf.get(conf) == "true"
+        t, _ = simple_table(
+            spark, tmp_path, name="plain", partition_by=["bucket(4, uid)"]
+        )
+        n_all = read(spark, t).rdd.getNumPartitions()
+        flt = read(spark, t).where("uid = 'u17'")
+        assert flt.rdd.getNumPartitions() < n_all
+        assert flt.count() == 1
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_schema_evolution_null_fill(spark, tmp_path):
     t, df = simple_table(spark, tmp_path, name="evo", n=50)
     evolved = df.limit(5).withColumn("extra", F.lit("x"))
