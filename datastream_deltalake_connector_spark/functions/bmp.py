@@ -49,6 +49,8 @@ def _headers(data: bytes) -> dict:
         # BITMAPINFOHEADER puts three masks directly after its 40 bytes, and
         # the V2+/V4/V5 headers embed them at that same position
         moff = 54
+        if len(data) < moff + (16 if hdr_size >= 56 else 12):
+            raise ValueError("truncated BMP header")
         r, g, b = struct.unpack_from("<III", data, moff)
         a = struct.unpack_from("<I", data, moff + 12)[0] if hdr_size >= 56 else 0
         masks = (r, g, b, a)

@@ -289,6 +289,8 @@ def decode_tiff_np(data: bytes) -> np.ndarray:
     if not offsets:
         raise ValueError("TIFF missing StripOffsets")
     if not counts:  # allowed only for the single-strip uncompressed case
+        if comp != 1 or len(offsets) > 1:
+            raise ValueError("TIFF missing StripByteCounts")
         counts = [len(data) - offsets[0]]
 
     row_bytes = (w * samples * depth + 7) // 8

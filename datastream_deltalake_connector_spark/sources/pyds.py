@@ -392,6 +392,7 @@ def _write_task(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ..table.icepack import ARROW_WRITE_OPTIONS
     from ..table.transforms import parse_spec
 
     specs = parse_spec(list(partition_by)) if partition_by else []
@@ -407,7 +408,7 @@ def _write_task(
         )
         abs_path = os.path.join(root, rel)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        return pq.ParquetWriter(abs_path, aschema), rel
+        return pq.ParquetWriter(abs_path, aschema, **ARROW_WRITE_OPTIONS), rel
 
     for batch in iterator:
         tbl = pa.Table.from_batches([batch])

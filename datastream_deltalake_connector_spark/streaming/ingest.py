@@ -45,7 +45,7 @@ from ..sources.cdc import (
     flatten_envelope,
     read_table_batch,
 )
-from ..table.icepack import IcepackTable
+from ..table.icepack import PARQUET_WRITE_OPTIONS, IcepackTable
 
 __all__ = [
     "ingest_table_to_log",
@@ -105,6 +105,7 @@ def ingest_table_to_log(
         stream = stream.coalesce(microbatch_partitions)
     writer = (
         stream.writeStream.format("parquet")
+        .options(**PARQUET_WRITE_OPTIONS)
         .option("path", log_dir)
         .option("checkpointLocation", os.path.join(checkpoint_dir, f"{table.table}_log"))
         .outputMode("append")

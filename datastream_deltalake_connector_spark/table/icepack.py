@@ -70,6 +70,16 @@ __all__ = ["IcepackTable", "FileEntry", "Snapshot", "ConflictError", "SchemaEvol
 POS_FILE_COL = "__file"
 POS_IDX_COL = "__pos"
 
+# The one Parquet writer profile for every file the engine writes (data,
+# delete, change-log and manifest files): zstd pages in the v2 page format.
+# Under v2, Spark's writer falls back from dictionary pages to
+# DELTA_BYTE_ARRAY for unique string keys and DELTA_BINARY_PACKED for
+# longs. Set on each writer, never in the session conf, so a plain
+# SparkSession writes the same files. pyarrow spells the same profile as
+# ``ARROW_WRITE_OPTIONS``.
+PARQUET_WRITE_OPTIONS = {"compression": "zstd", "parquet.writer.version": "v2"}
+ARROW_WRITE_OPTIONS = {"compression": "zstd", "data_page_version": "2.0"}
+
 # ASCII characters java.net.URI percent-quotes in a path, i.e. in the
 # ``_metadata.file_path`` Spark reports; all others, non-ASCII included,
 # stay literal
@@ -1168,7 +1178,6 @@ class IcepackTable:
     def write_data_files(
         self,
         df: DataFrame,
-        target_file_bytes: int | None = None,
         sort_within_partitions: list[str] | None = None,
         num_files: int | None = None,
         partition_by: list[str] | None = None,
@@ -1217,13 +1226,14 @@ class IcepackTable:
             # partitioning: the user schema never sees the derived column.
             specs = parse_spec(partition_by)
             dup = [t.column().alias(f"__p_{t.pname}") for t in specs]
-            writer = df.select("*", *dup).write.mode("overwrite").partitionBy(
+            writer = df.select("*", *dup).write.partitionBy(
                 *[f"__p_{t.pname}" for t in specs]
             )
-            writer.parquet(out_dir)
-            self._strip_partition_prefix(out_dir)
         else:
-            df.write.mode("overwrite").parquet(out_dir)
+            writer = df.write
+        writer.options(**PARQUET_WRITE_OPTIONS).mode("overwrite").parquet(out_dir)
+        if partition_by:
+            self._strip_partition_prefix(out_dir)
         entries = self.collect_file_entries(stage)
         kept = []
         for e in entries:
@@ -1638,7 +1648,7 @@ class IcepackTable:
             }
         )
         tmp = path + ".tmp"
-        pq.write_table(tbl, tmp)
+        pq.write_table(tbl, tmp, **ARROW_WRITE_OPTIONS)
         os.replace(tmp, path)
 
     def files_df(self, version: int | None = None) -> DataFrame:
@@ -2185,7 +2195,9 @@ class IcepackTable:
 
     # ------------------------------------------------------------- internals
     def _write_json(self, path: str, obj: dict) -> None:
-        self._atomic_write(path, json.dumps(obj, indent=1, default=_json_safe))
+        self._atomic_write(
+            path, json.dumps(obj, separators=(",", ":"), default=_json_safe)
+        )
 
     def _atomic_write(self, path: str, text: str) -> None:
         tmp = f"{path}.tmp.{uuid.uuid4().hex}"

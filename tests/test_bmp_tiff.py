@@ -281,6 +281,43 @@ def test_bmp_wide_bitfields_and_short_palette():
     assert list(out[0, 0]) == [30, 20, 10]
 
 
+def test_bmp_bitfields_truncated_header_is_value_error():
+    # BI_BITFIELDS masks start at byte 54: a stream cut anywhere inside them
+    # (or inside a V2+ header's alpha mask) is a ValueError, not struct.error
+    masks = struct.pack("<III", 0xFF0000, 0xFF00, 0xFF)
+    for hdr_size, tail in ((40, masks[:8]), (40, b""), (56, masks)):
+        info = struct.pack("<IiihHIIiiII", hdr_size, 1, -1, 1, 32, 3, 4, 0, 0, 0, 0)
+        d = struct.pack("<2sIHHI", b"BM", 54 + len(tail), 0, 0, 54) + info + tail
+        with pytest.raises(ValueError, match="truncated BMP header"):
+            decode_bmp_np(d)
+        with pytest.raises(ValueError, match="truncated BMP header"):
+            bmp_info(d)
+
+
+def test_tiff_missing_strip_byte_counts():
+    """Without StripByteCounts only a single uncompressed strip can be
+    sized (it runs to end of file); anything else is a ValueError instead
+    of feeding the whole file tail to a decoder."""
+    data_off = 8 + 2 + 12 * 6 + 4  # six IFD entries
+    base = [(256, 3, [4]), (257, 3, [2]), (258, 3, [8]), (262, 3, [1])]
+    px = bytes(range(8))
+    one = _tiff_hand(base + [(259, 3, [1]), (273, 4, [data_off])], px)
+    assert decode_tiff_np(one)[..., 0].reshape(-1).tolist() == list(px)
+    # a valid PackBits literal run of all 8 bytes, but its strip size is unknown
+    packbits = _tiff_hand(
+        base + [(259, 3, [32773]), (273, 4, [data_off])], bytes([7]) + px
+    )
+    with pytest.raises(ValueError, match="StripByteCounts"):
+        decode_tiff_np(packbits)
+    data_off += 12  # seven entries: RowsPerStrip added
+    two_strips = _tiff_hand(
+        base + [(259, 3, [1]), (273, 3, [data_off, data_off + 4]), (278, 3, [1])],
+        px,
+    )
+    with pytest.raises(ValueError, match="StripByteCounts"):
+        decode_tiff_np(two_strips)
+
+
 # ------------------------------------------------------------ shared dispatch
 def test_bmp_tiff_through_decode_image_dispatch():
     px = RNG.integers(0, 256, size=(12, 15, 3), dtype=np.uint8)

@@ -352,6 +352,36 @@ def test_ingest_microbatch_partitions_bounds_files(spark, stream_root, tmp_path)
         assert spark.read.parquet(log_dir).count() == 8
 
 
+def test_change_log_uses_engine_write_profile(spark, stream_root, tmp_path):
+    """The append-only change log is written with the engine's parquet
+    profile (zstd), whatever codec the session asks for."""
+    import glob as g
+
+    import pyarrow.parquet as pq
+
+    from datastream_deltalake_connector_spark.streaming.ingest import (
+        ingest_table_to_log,
+    )
+
+    conf = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "gzip")
+    try:
+        log_dir = str(tmp_path / "log")
+        ingest_table_to_log(
+            spark, DatastreamTable(stream_root, "people"), log_dir,
+            str(tmp_path / "ckpt"), "json", microbatch_partitions=1,
+        ).awaitTermination()
+    finally:
+        spark.conf.set(conf, prev)
+    files = g.glob(os.path.join(log_dir, "part-*"))
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata.row_group(0)
+        assert {md.column(i).compression for i in range(md.num_columns)} == {"ZSTD"}
+    assert spark.read.parquet(log_dir).count() == 8
+
+
 def test_streaming_auto_compact_in_sink(spark, tmp_path):
     """autoCompact parity (reference application.conf:38-45 + Databricks
     post-write compaction): with auto_compact_min_files set, the merge sink
