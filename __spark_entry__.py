@@ -4596,7 +4596,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_key": _zorder_key,
         "fingerprint_docs": _fingerprint_docs,
         "cdc_lww_dedup_maxby": _lww("max_by"),
-        "cdc_lww_dedup_salted": _lww("salted"),
         "pricing_summary": _pricing_summary,
         "topk_orders": _topk_orders,
         "broadcast_join_agg": _broadcast_join_agg,
@@ -4617,7 +4616,6 @@ def oracle_sql() -> dict[str, str]:
     return {
         "cdc_lww_dedup_window": _LWW_ORACLE,
         "cdc_lww_dedup_maxby": _LWW_ORACLE,
-        "cdc_lww_dedup_salted": _LWW_ORACLE,
         "cdc_merge_upsert": _MERGE_ORACLE,
         "cdc_merge_upsert_mor": _MERGE_ORACLE,
         "cdc_merge_upsert_bloom": _MERGE_ORACLE,

@@ -323,7 +323,7 @@ def query_bench(spark, sf_dir: str, runs_per_query: int = 3) -> tuple[dict, dict
 
     headline = [
         "cdc_merge_upsert",
-        "cdc_lww_dedup_salted",
+        "cdc_lww_dedup_maxby",
         "pricing_summary",
         "broadcast_join_agg",
         "zorder_key",
@@ -573,9 +573,8 @@ def skew_bench(spark, n_images: int = 24000, dedup_rows: int = 4_000_000) -> dic
     span) against a range-clustered layout — manifest min/max pruning must
     rewrite only the files overlapping the hot span; (b) LWW dedup over a
     Zipf-hot key distribution (40% of rows on ONE key), window vs max_by
-    vs salted strategies — the salted two-phase path exists exactly for
-    this shape, where a window partition would serialize the hot key on
-    one task."""
+    — the shape where a window partition without a map-side group limit
+    would serialize the hot key on one task."""
     from pyspark.sql import functions as F
 
     from datastream_deltalake_connector_spark.operators.dedup import latest_by_keys
@@ -626,7 +625,7 @@ def skew_bench(spark, n_images: int = 24000, dedup_rows: int = 4_000_000) -> dic
     shutil.rmtree(os.path.dirname(batch_dir), ignore_errors=True)
     shutil.rmtree(os.path.dirname(root), ignore_errors=True)
 
-    # ---- (b) Zipf-hot LWW dedup: window vs max_by vs salted ---------------
+    # ---- (b) Zipf-hot LWW dedup: window vs max_by ----------------------------
     hot = spark.range(dedup_rows).select(
         F.when(F.pmod(F.xxhash64("id"), 5) < 3, F.lit(0))
         .otherwise(F.pmod(F.xxhash64("id"), 50_000))
@@ -638,7 +637,7 @@ def skew_bench(spark, n_images: int = 24000, dedup_rows: int = 4_000_000) -> dic
     strat_secs: dict[str, float] = {}
     sums: dict[str, int] = {}
     for _round in range(2):
-        for strat in ("window", "max_by", "salted"):
+        for strat in ("window", "max_by"):
             t0 = time.time()
             row = (
                 latest_by_keys(hot, ["user_id"], ["ts", "seq"], strategy=strat)
@@ -663,7 +662,6 @@ def skew_bench(spark, n_images: int = 24000, dedup_rows: int = 4_000_000) -> dic
         "hot_key_share_pct": 60,
         "dedup_window_sec": round(strat_secs["window"], 3),
         "dedup_maxby_sec": round(strat_secs["max_by"], 3),
-        "dedup_salted_sec": round(strat_secs["salted"], 3),
         "probe_4p_sec_dedup": _stage_probe(),
     }
 
@@ -1123,14 +1121,11 @@ def write_bench_md(payload: dict) -> None:
             "whose keys all share the Zipf-hot '00' image_id prefix hits a",
             "range-clustered layout — the hot span is CONTIGUOUS, so the",
             "merge rewrites only the overlapping files; and LWW dedup over a",
-            "hot-key distribution compares the window / max_by / salted",
-            "strategies. Measured finding: Spark 4 rewrites the rank-1",
-            "window with Partial+Final WindowGroupLimit (map-side top-1 per",
-            "key, verified in the plan) and max_by partial-combines, so all",
-            "three absorb the hot key BEFORE the shuffle; max_by wins and",
-            "the salted path's second shuffle never pays on this engine",
-            "version — it stays as the fallback for aggregates without a",
-            "partial combine.",
+            "hot-key distribution compares the window and max_by",
+            "strategies. Spark 4 rewrites the rank-1 window with",
+            "Partial+Final WindowGroupLimit (map-side top-1 per key,",
+            "verified in the plan) and max_by partial-combines, so both",
+            "absorb the hot key BEFORE the shuffle.",
             "",
             f"- table: {sk['images']} images / {sk['table_files']} "
             f"range-clustered files; hot-prefix batch "
@@ -1144,8 +1139,7 @@ def write_bench_md(payload: dict) -> None:
             f"- LWW dedup, {sk['dedup_rows']} rows with "
             f"{sk['hot_key_share_pct']}% on ONE key (best of 2, identical "
             f"result sums asserted): window {sk['dedup_window_sec']} s | "
-            f"max_by {sk['dedup_maxby_sec']} s | salted "
-            f"**{sk['dedup_salted_sec']} s** (probe "
+            f"max_by **{sk['dedup_maxby_sec']} s** (probe "
             f"{sk['probe_4p_sec_dedup']} s)",
             "",
         ]

@@ -441,7 +441,11 @@ def decode_dims_udf(data: pd.Series) -> pd.DataFrame:
     """Header-only metadata probe (no pixel decompression): width/height/
     channels/lossy-flag from the wire header — real PNGs read their IHDR
     (always the first chunk, offset 16), stand-ins their packed header. The
-    cheap path for schema validation over billions of binaries."""
+    cheap path for schema validation over billions of binaries.
+
+    BMP and ICO report their 3 colour channels. Their decoders return RGBA
+    only when some pixel's alpha is actually used, which a header cannot
+    show, so a 32-bpp file with real alpha probes as 3 and decodes as 4."""
     rows = []
     for b in data:
         if b is None:

@@ -99,12 +99,12 @@ def _resolved_old(
     if not entries:
         return empty_frame(table.spark, schema)
     _data, pending_eq, pending_pos = table._split_deletes(table.files(parent))
-    if pending_eq:
-        key_cols = table.snapshot(parent).summary.get("eq_delete_cols") or []
-        return table._scan_with_deletes(entries, pending_eq, schema, key_cols)
-    if pending_pos:
-        return table._scan_with_pos_deletes(entries, pending_pos, schema)
-    return table._read_files(entries, schema)
+    return table.read_live(
+        entries,
+        pending_eq + pending_pos,
+        schema,
+        table.snapshot(parent).summary.get("eq_delete_cols") or [],
+    )
 
 
 def _rows_at_positions(
@@ -116,18 +116,14 @@ def _rows_at_positions(
     """Rows of ``files`` addressed by the (``__dabs``, ``__dpos``) pairs —
     one broadcast semi-join on the physical row ordinal, the exact-lookup
     core of the positional-delete change feed."""
-    if not files:
-        return empty_frame(table.spark, schema)
-    df = (
-        table.spark.read.schema(schema)
-        .parquet(*[table.data_path(e.path) for e in files])
-        .withColumn("__abs", F.col("_metadata.file_path"))
-        .withColumn("__idx", F.col("_metadata.row_index"))
-    )
     cond = (F.col("__abs") == F.col("__dabs")) & (
         F.col("__idx") == F.col("__dpos")
     )
-    return df.join(F.broadcast(pairs), cond, "left_semi").drop("__abs", "__idx")
+    return (
+        table.read_with_positions(files, schema)
+        .join(F.broadcast(pairs), cond, "left_semi")
+        .drop("__abs", "__idx")
+    )
 
 
 def _classify(
@@ -270,17 +266,13 @@ def table_changes(
             )
         else:
             keys = _keys_for(table, v, key)
-            new_df = table._read_files(added_data, schema)
-            if added_dels and keys and any(
-                d.seq > e.seq for d in added_dels for e in added_data
-            ):
-                # rows co-committed with a delete file are never shadowed by
-                # it (equal seq), but a ROLLBACK can re-add data files at
-                # their ORIGINAL (lower) seq alongside re-added delete
-                # files: resolve through the commit's own view
-                new_df = table._scan_with_deletes(
-                    added_data, added_dels, schema, keys
-                )
+            # rows co-committed with a delete file are never shadowed by it
+            # (equal seq), but a ROLLBACK can re-add data files at their
+            # ORIGINAL (lower) seq alongside re-added delete files: resolve
+            # through the commit's own view
+            new_df = table.read_live(
+                added_data, added_dels if keys else [], schema, keys
+            )
             old_schema = table.snapshot(v - 1).schema
             old_parts = [
                 _resolved_old(table, v - 1, removed_data, old_schema)
@@ -319,15 +311,12 @@ def table_changes(
                         table, v - 1, cand, old_schema
                     ).join(F.broadcast(del_keys), keys, "left_semi")
                     old_parts.append(old_vis)
-                    new_pending = [
-                        e for e in entries if e.content == "eq_deletes"
-                    ]
-                    if new_pending:
-                        new_vis = table._scan_with_deletes(
-                            cand, new_pending, schema, keys
-                        )
-                    else:
-                        new_vis = table._read_files(cand, schema)
+                    new_vis = table.read_live(
+                        cand,
+                        [e for e in entries if e.content == "eq_deletes"],
+                        schema,
+                        keys,
+                    )
                     new_df = new_df.unionByName(
                         new_vis.join(F.broadcast(del_keys), keys, "left_semi")
                     )

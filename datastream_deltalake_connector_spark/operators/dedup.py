@@ -7,7 +7,7 @@ with composite source-specific ordering keys (reference: delta/
 TableMetadata.scala:24-32 — MySQL ``(source_timestamp, log_file,
 log_position)``, Oracle ``(source_timestamp, scn)``).
 
-Three physical strategies, same logical result (callers must make the
+Two physical strategies, same logical result (callers must make the
 ordering-key tuple unique per key — e.g. end it with a change-sequence
 column — so the winner is deterministic):
 
@@ -18,16 +18,11 @@ column — so the winner is deterministic):
   no longer exists on this engine version (measured in BENCH.md's skew
   stage; the plan shows ``WindowGroupLimit ... Partial/Final``).
 - ``max_by``  — single hash aggregation with partial (map-side) combine:
-  ``max_by(struct(<all>), struct(<order>))``. No sort, least shuffle
-  volume of the three in every measured regime. Preferred at scale.
-- ``salted``  — two-phase ``max_by`` for hot-key skew (north_rule: hot
-  image_id prefixes): phase 1 aggregates per (key, salt) spreading one hot
-  key over N reducers, phase 2 reduces the N salted partials. Salt is
-  deterministic (hash of ordering cols), keeping replays identical.
-  Kept for engines/plans where no partial combine protects the hot key
-  (e.g. a window without the group-limit rewrite, collect_list-style
-  aggregates); under Spark 4's WindowGroupLimit + max_by partial combine
-  its second shuffle costs more than it saves (BENCH.md skew stage).
+  ``max_by(struct(<all>), struct(<order>))``. No sort, and the map-side
+  combine already spreads a hot key over every map task, so a salted
+  second phase only adds a shuffle (BENCH.md skew stage: window 0.42 s,
+  max_by 0.49 s, salted two-phase 0.94 s). The default, and what every CDC
+  merge uses.
 """
 
 from __future__ import annotations
@@ -49,7 +44,6 @@ def latest_by_keys(
     keys: list[str],
     order_cols: list[str],
     strategy: str = "max_by",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """Collapse ``df`` to the single latest row per ``keys``.
 
@@ -64,30 +58,11 @@ def latest_by_keys(
             .drop("__row_num")
         )
 
+    if strategy != "max_by":
+        raise ValueError(f"unknown dedup strategy: {strategy!r}")
     payload_cols = [c for c in df.columns if c not in keys]
     row_struct = F.struct(*[F.col(c) for c in payload_cols])
-
-    if strategy == "max_by":
-        winners = df.groupBy(*keys).agg(
-            F.max_by(row_struct, _order_struct(order_cols)).alias("__row")
-        )
-    elif strategy == "salted":
-        # Deterministic salt: spreads a hot key's rows over `salt_buckets`
-        # partial aggregations. xxhash64 over ordering cols is stable across
-        # replays, so resumed/replayed jobs produce identical plans.
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))
-        partial = (
-            df.withColumn("__salt", salt)
-            .groupBy(*keys, "__salt")
-            .agg(F.max_by(row_struct, _order_struct(order_cols)).alias("__row"))
-        )
-        winners = partial.groupBy(*keys).agg(
-            F.max_by(
-                F.col("__row"),
-                F.struct(*[F.col(f"__row.{c}") for c in order_cols]),
-            ).alias("__row")
-        )
-    else:
-        raise ValueError(f"unknown dedup strategy: {strategy!r}")
-
+    winners = df.groupBy(*keys).agg(
+        F.max_by(row_struct, _order_struct(order_cols)).alias("__row")
+    )
     return winners.select(*keys, *[F.col(f"__row.{c}").alias(c) for c in payload_cols])

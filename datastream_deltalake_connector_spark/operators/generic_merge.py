@@ -54,9 +54,8 @@ from typing import Any, Iterable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..session import empty_frame
 from ..table.icepack import FileEntry, IcepackTable
-from .rowops import _read_candidates, _reclaim_staged
+from .rowops import _reclaim_staged
 
 __all__ = ["merge_into", "MergeCardinalityError"]
 
@@ -130,6 +129,13 @@ def merge_into(
     entries = table.files(snap.version)
     data, eq_deletes, pos_deletes = table._split_deletes(entries)
     eq_cols = snap.summary.get("eq_delete_cols") or []
+
+    def read_live(files: list[FileEntry]) -> DataFrame:
+        # target rows with pending MoR deletes resolved: a shadowed row is
+        # not a match, and a CoW rewrite re-stamps seq, so an unresolved
+        # shadowed row would resurrect
+        return table.read_live(files, eq_deletes + pos_deletes, snap.schema, eq_cols)
+
     fields = {f.name: f.dataType for f in snap.schema.fields}
     tcols = [f.name for f in snap.schema.fields]
     missing = [k for k in on if k not in fields]
@@ -200,17 +206,14 @@ def merge_into(
         pruned = probed = 0
     else:
         bounds = _source_key_bounds(skeys, on)
-        cand = [
-            e
-            for e in data
-            if all(
-                bounds[k][0] is None  # all-NULL source keys match nothing,
-                # but conservatively keep the file (inserts may still need
-                # the cardinality context; rewrite is skipped later anyway)
-                or e.may_match(k, "between", (bounds[k][0], bounds[k][1]))
-                for k in on
-            )
-        ]
+        # all-NULL source keys match nothing, but conservatively keep the
+        # file (inserts may still need the cardinality context; rewrite is
+        # skipped later anyway)
+        cand = table.prune_files(
+            data,
+            [(k, "between", bounds[k]) for k in on if bounds[k][0] is not None],
+            snap.schema,
+        )
         pruned = len(data) - len(cand)
         hit = []
         probed = len(cand)
@@ -235,20 +238,11 @@ def merge_into(
         # source-only pre-check first: a duplicate-free source (the common
         # case) must not cost a key-column scan of the hit files
         if dup_keys.limit(1).count():
-            # the probe must see the RESOLVED view when MoR deletes are
-            # pending — a physically-present but shadowed row is not a
-            # match and must not trigger a spurious cardinality error
-            if eq_deletes or pos_deletes:
-                probe_rows = _read_candidates(
-                    table, hit, eq_deletes, snap.schema, eq_cols,
-                    pos_deletes=pos_deletes,
-                )
-            else:
-                probe_rows = table.spark.read.schema(snap.schema).parquet(
-                    *[table.data_path(e.path) for e in hit]
-                )
+            # the probe sees the RESOLVED view: a shadowed row must not
+            # trigger a spurious cardinality error
             n_dup = (
-                probe_rows.select(*on)
+                read_live(hit)
+                .select(*on)
                 .join(dup_keys, on=on, how="leftsemi")
                 .limit(1)
                 .count()
@@ -263,8 +257,6 @@ def merge_into(
     rewrite = hit if (matched or nms) else []
 
     # ---- the single merge job ------------------------------------------
-    # target side: hit-file rows with pending MoR deletes resolved (a CoW
-    # rewrite re-stamps seq — unresolved shadowed rows would resurrect)
     obs = Observation()
     added: list[FileEntry] = []
     rows_updated = rows_deleted = rows_inserted = 0
@@ -287,37 +279,15 @@ def merge_into(
     need_join = bool(rewrite) or bool(not_matched)
     out_df = None
     if need_join:
-        if rewrite:
-            tdf = _read_candidates(
-                table, rewrite, eq_deletes, snap.schema, eq_cols,
-                pos_deletes=pos_deletes,
-            )
-        else:
+        tdf = read_live(rewrite or hit)
+        if not rewrite:
             # insert-only: target enters the join ONLY to anti-match source
-            # rows. With pending MoR deletes the resolved view decides what
-            # counts as matched (a shadowed row must NOT block an insert);
-            # otherwise read just the key columns (parquet prunes the
-            # payload) and null-fill the rest for the shared projection.
-            if hit and (eq_deletes or pos_deletes):
-                tdf = _read_candidates(
-                    table, hit, eq_deletes, snap.schema, eq_cols,
-                    pos_deletes=pos_deletes,
-                )
-            elif hit:
-                tdf = (
-                    table.spark.read.schema(snap.schema)
-                    .parquet(*[table.data_path(e.path) for e in hit])
-                    .select(
-                        *on,
-                        *[
-                            F.lit(None).cast(fields[c]).alias(c)
-                            for c in tcols
-                            if c not in on
-                        ],
-                    )
-                )
-            else:
-                tdf = empty_frame(table.spark, snap.schema)
+            # rows, so read just the key columns (parquet prunes the
+            # payload) and null-fill the rest for the shared projection
+            tdf = tdf.select(
+                *on,
+                *[F.lit(None).cast(fields[c]).alias(c) for c in tcols if c not in on],
+            )
         j = (
             tdf.withColumn("__t", F.lit(1)).alias(t_alias)
             .join(

@@ -92,8 +92,6 @@ def merge_batch(
     target: DataFrame,
     batch: DataFrame,
     keys: list[str],
-    dedup_strategy: str = "max_by",
-    salt_buckets: int = 32,
     broadcast_source: bool = False,
 ) -> DataFrame:
     """Apply a raw CDC change batch to a merged-table DataFrame.
@@ -103,9 +101,7 @@ def merge_batch(
     Equivalent of MergeQueries.upsertToDelta (reference: MergeQueries.scala:
     33-106) minus the Delta-table IO.
     """
-    winners = latest_by_keys(
-        batch, keys, [TS_COL, SEQ_COL], strategy=dedup_strategy, salt_buckets=salt_buckets
-    )
+    winners = latest_by_keys(batch, keys, [TS_COL, SEQ_COL])
     return apply_winners(target, winners, keys, broadcast_source=broadcast_source)
 
 

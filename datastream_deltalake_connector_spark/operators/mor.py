@@ -41,7 +41,6 @@ matching the reference's "not matched → insert" clause.
 from __future__ import annotations
 
 import math
-import os
 import uuid
 
 from pyspark.sql import DataFrame
@@ -52,7 +51,7 @@ from ..table.icepack import FileEntry, IcepackTable
 from ..table.lineage import LineageJournal
 from .dedup import latest_by_keys
 from .merge import DELETED_COL, SEQ_COL, TS_COL, TS_META, winners_as_merged
-from .table_merge import prune_candidates
+from .table_merge import _estimate_row_bytes, prune_candidates
 
 __all__ = ["merge_into_table_mor", "apply_deletes", "maybe_apply_deletes"]
 
@@ -61,8 +60,6 @@ def merge_into_table_mor(
     table: IcepackTable,
     batch: DataFrame,
     key: str | list[str] = "image_id",
-    dedup_strategy: str = "salted",
-    salt_buckets: int = 32,
     target_rows_per_file: int | None = None,
     job_id: str | None = None,
     schema_evolution: str = "merge",
@@ -99,9 +96,7 @@ def merge_into_table_mor(
         parent = table.head_version()
         recorded = None
 
-    winners = latest_by_keys(
-        batch, keys, [TS_COL, SEQ_COL], strategy=dedup_strategy, salt_buckets=salt_buckets
-    ).cache()
+    winners = latest_by_keys(batch, keys, [TS_COL, SEQ_COL]).cache()
 
     all_entries = table.files(parent)
     pending_deletes = [e for e in all_entries if e.content == "eq_deletes"]
@@ -127,14 +122,9 @@ def merge_into_table_mor(
     if touched_paths:
         touched_set = set(touched_paths)
         cand_entries = [e for e in entries if e.path in touched_set]
-        schema = table.schema(parent)
-        if pending_deletes:
-            cand_df = table._scan_with_deletes(
-                cand_entries, pending_deletes, schema, recorded or keys
-            )
-        else:
-            paths = [table.data_path(e.path) for e in cand_entries]
-            cand_df = table.spark.read.schema(schema).parquet(*paths)
+        cand_df = table.read_live(
+            cand_entries, pending_deletes, table.schema(parent), recorded or keys
+        )
         visible = cand_df.groupBy(*keys).agg(F.max(TS_META).alias("__t_ts"))
         # cached: read twice (upsert data files + tombstone delete file);
         # unpersisted after both writes below
@@ -161,7 +151,7 @@ def merge_into_table_mor(
             1,
             round(
                 n_winners
-                * _avg_row_bytes(winners)
+                * _estimate_row_bytes(winners)
                 / table.DEFAULT_TARGET_FILE_BYTES
             ),
         )
@@ -215,12 +205,6 @@ def merge_into_table_mor(
     return version
 
 
-def _avg_row_bytes(df: DataFrame) -> float:
-    from ..operators.table_merge import _estimate_row_bytes
-
-    return _estimate_row_bytes(df)
-
-
 def apply_deletes(
     table: IcepackTable,
     job_id: str | None = None,
@@ -259,14 +243,7 @@ def apply_deletes(
     removed = [e.path for e in hit] + [e.path for e in deletes]
     added: list[FileEntry] = []
     if hit:
-        if pos_deletes:
-            resolved = table._scan_with_pos_deletes(
-                hit, pos_deletes, table.schema(parent), candidates=hit
-            )
-        else:
-            resolved = table._scan_with_deletes(
-                hit, deletes, table.schema(parent), key_cols, candidates=hit
-            )
+        resolved = table.read_live(hit, deletes, table.schema(parent), key_cols)
         added = table.write_data_files(
             resolved, partition_by=table.partition_spec() or None,
             enforce_constraints=False,  # re-files already-validated rows

@@ -7,9 +7,11 @@ ad-hoc predicate forms live here).
 
 Scale shape (the 100-TB plan):
 
-- **Manifest pruning first.** Only files whose min/max/bloom stats say the
-  predicate MIGHT match are touched; at 10^12 rows a predicate with any key
-  locality rewrites a handful of files, never the table.
+- **Manifest pruning first.** Only files whose min/max/bloom stats and
+  partition-transform values say the predicate MIGHT match are touched
+  (``IcepackTable.prune_files``, the planner ``scan`` uses); at 10^12 rows a
+  predicate with any key locality rewrites a handful of files, never the
+  table.
 - **Metadata-only deletes.** A file whose stats PROVE every row matches
   (``FileEntry.must_match_all``: exact bounds inside the predicate AND an
   exact null count of zero) is dropped from the manifest without being
@@ -63,19 +65,7 @@ def _reclaim_staged(table: IcepackTable, entries: list[FileEntry]) -> None:
 def _pred_column(filters: list[Filter], residual_sql: str | None) -> Column:
     """Conjunction of structured filters (the prunable part) and an optional
     residual SQL expression (arbitrary, never used for pruning)."""
-    conj: Column | None = None
-    for c, op, v in filters or []:
-        col = F.col(c)
-        expr = {
-            "=": col == v,
-            "<": col < v,
-            "<=": col <= v,
-            ">": col > v,
-            ">=": col >= v,
-            "between": col.between(v[0], v[1]) if op == "between" else None,
-            "in": col.isin(list(v)) if op == "in" else None,
-        }[op]
-        conj = expr if conj is None else conj & expr
+    conj = IcepackTable.filter_column(filters or [])
     if residual_sql:
         r = F.expr(residual_sql)
         conj = r if conj is None else conj & r
@@ -86,28 +76,6 @@ def _pred_column(filters: list[Filter], residual_sql: str | None) -> Column:
             "never an implicit default)"
         )
     return conj
-
-
-def _read_candidates(
-    table: IcepackTable,
-    cand: list[FileEntry],
-    deletes: list[FileEntry],
-    schema,
-    eq_cols: list[str],
-    pos_deletes: list[FileEntry] = (),
-) -> DataFrame:
-    """Read exactly the candidate files, with pending merge-on-read deletes
-    (equality or positional) resolved: a CoW rewrite stamps a fresh (higher)
-    data-sequence number / a fresh physical file, so an unresolved shadowed
-    row would RESURRECT — same discipline as clustering/compaction. A pos
-    row whose named file this rewrite removes dangles harmlessly (every
-    resolver intersects named files with the live manifest)."""
-    if deletes:
-        return table._scan_with_deletes(cand, deletes, schema, eq_cols)
-    if pos_deletes:
-        return table._scan_with_pos_deletes(cand, pos_deletes, schema)
-    paths = [table.data_path(e.path) for e in cand]
-    return table.spark.read.schema(schema).parquet(*paths)
 
 
 def _describe_pred(filters: list[Filter], residual_sql: str | None) -> str:
@@ -138,9 +106,7 @@ def delete_where(
     filters = filters or []
     pred = _pred_column(filters, residual_sql)  # validates non-empty early
 
-    cand = [
-        e for e in data if all(e.may_match(c, op, v) for (c, op, v) in filters)
-    ]
+    cand = table.prune_files(data, filters, snap.schema)
     pos_named = (
         set(table.pos_delete_targets(pos_pending)) if pos_pending else set()
     )
@@ -165,13 +131,14 @@ def delete_where(
     rows_gross = sum(e.rows for e in rewrite)
     rows_kept = 0
     if rewrite:
-        df = _read_candidates(
-            table,
+        # pending MoR deletes resolved: the rewrite stamps a fresh (higher)
+        # data-sequence number and fresh files, so an unresolved shadowed
+        # row would RESURRECT
+        df = table.read_live(
             rewrite,
-            deletes,
+            deletes + pos_pending,
             snap.schema,
             snap.summary.get("eq_delete_cols") or [],
-            pos_deletes=pos_pending,
         )
         kept_df = df.where(~F.coalesce(pred, F.lit(False)))
         # deletes only re-file rows the table already validated
@@ -237,30 +204,6 @@ def _fold_eq_deletes(table: IcepackTable) -> None:
         apply_deletes(table)
 
 
-def _read_with_positions(
-    table: IcepackTable,
-    cand: list[FileEntry],
-    pos_pending: list[FileEntry],
-) -> DataFrame:
-    """Candidate files with their physical row ordinals (``__abs`` file URI,
-    ``__idx`` row index), pending positional deletes resolved out — a row a
-    previous MoR DML already deleted can never re-match, and an update built
-    from it can never resurrect it."""
-    df = (
-        table.spark.read.schema(table.schema())
-        .parquet(*[table.data_path(e.path) for e in cand])
-        .withColumn("__abs", F.col("_metadata.file_path"))
-        .withColumn("__idx", F.col("_metadata.row_index"))
-    )
-    if pos_pending:
-        del_df = table._pos_delete_df(pos_pending)
-        cond = (F.col("__abs") == F.col("__dabs")) & (
-            F.col("__idx") == F.col("__dpos")
-        )
-        df = df.join(F.broadcast(del_df), cond, "left_anti")
-    return df
-
-
 def _write_pos_delete_file(
     table: IcepackTable,
     positions: DataFrame,
@@ -314,9 +257,7 @@ def delete_where_mor(
     filters = filters or []
     pred = _pred_column(filters, residual_sql)  # validates non-empty early
 
-    cand = [
-        e for e in data if all(e.may_match(c, op, v) for (c, op, v) in filters)
-    ]
+    cand = table.prune_files(data, filters, snap.schema)
     pos_named = (
         set(table.pos_delete_targets(pos_pending)) if pos_pending else set()
     )
@@ -339,8 +280,9 @@ def delete_where_mor(
 
     added: list[FileEntry] = []
     if rewrite:
-        table._check_uri_formula(rewrite[0])
-        df = _read_with_positions(table, rewrite, pos_pending)
+        # pending positions resolved out: a row a previous MoR DML already
+        # deleted can never re-match
+        df = table.read_with_positions(rewrite, snap.schema, pos_pending)
         matched = df.where(F.coalesce(pred, F.lit(False))).select("__abs", "__idx")
         added = _write_pos_delete_file(table, matched, rewrite)
     rows_deleted = sum(e.rows for e in added)
@@ -414,9 +356,7 @@ def update_where_mor(
     filters = filters or []
     pred = _pred_column(filters, residual_sql)
 
-    cand = [
-        e for e in data if all(e.may_match(c, op, v) for (c, op, v) in filters)
-    ]
+    cand = table.prune_files(data, filters, snap.schema)
     report_base = {
         "files_pruned": len(data) - len(cand),
         "predicate": _describe_pred(filters, residual_sql),
@@ -425,8 +365,7 @@ def update_where_mor(
         return {"version": None, "rows_updated": 0, "pos_delete_files": 0,
                 **report_base}
 
-    table._check_uri_formula(cand[0])
-    df = _read_with_positions(table, cand, pos_pending)
+    df = table.read_with_positions(cand, snap.schema, pos_pending)
     # matched rows only — bounded by the predicate's churn, read twice
     # (postimage data files + pos-delete file); unpersisted after both
     matched = df.where(F.coalesce(pred, F.lit(False))).cache()
@@ -516,9 +455,7 @@ def update_where(
     filters = filters or []
     pred = _pred_column(filters, residual_sql)
 
-    cand = [
-        e for e in data if all(e.may_match(c, op, v) for (c, op, v) in filters)
-    ]
+    cand = table.prune_files(data, filters, snap.schema)
     report_base = {
         "files_pruned": len(data) - len(cand),
         "files_rewritten": len(cand),
@@ -527,13 +464,11 @@ def update_where(
     if not cand:
         return {"version": None, "rows_updated": 0, **report_base}
 
-    df = _read_candidates(
-        table,
+    df = table.read_live(
         cand,
-        deletes,
+        deletes + pos_pending,
         schema,
         snap.summary.get("eq_delete_cols") or [],
-        pos_deletes=pos_pending,
     )
     hit = F.coalesce(pred, F.lit(False))
     # all WHEN branches read OLD values: build every assignment against df's

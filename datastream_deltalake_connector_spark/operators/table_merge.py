@@ -7,8 +7,8 @@ file rewrite + transactional commit):
 
 1. Empty-batch short-circuit (ST6, MergeQueries.scala:45-47).
 2. Schema evolution first (mergeSchema, DeltaSchemaMigration.scala:51-67).
-3. LWW dedup of the batch (W1/W2, MergeQueries.scala:108-121) — strategy
-   selectable; ``salted`` two-phase aggregation for hot-key skew.
+3. LWW dedup of the batch (W1/W2, MergeQueries.scala:108-121) — one
+   ``max_by`` hash aggregation with map-side combine (operators/dedup.py).
 4. **Manifest pruning**: broadcast the (small) per-file [min,max] key ranges
    and range-join the winner keys against them; only files whose range can
    contain a winner key are touched. Untouched files are carried into the
@@ -289,8 +289,6 @@ def merge_into_table(
     table: IcepackTable,
     batch: DataFrame,
     key: str | list[str] = "image_id",
-    dedup_strategy: str = "salted",
-    salt_buckets: int = 32,
     broadcast_bytes_threshold: int = 256 * 1024 * 1024,
     target_rows_per_file: int | None = None,
     job_id: str | None = None,
@@ -311,20 +309,7 @@ def merge_into_table(
     primary_keys): LWW dedup, the resolve join, and the range-partitioned
     rewrite all run on the full key tuple; manifest pruning tests the first
     key column (sound — see prune_candidates)."""
-    import os
-    import time as _time
-
-    _timings: dict[str, float] | None = (
-        {} if os.environ.get("DATASTREAM_MERGE_TIMINGS") else None
-    )
-
-    def _mark(name: str, t0: float) -> float:
-        if _timings is not None:
-            _timings[name] = round(_time.time() - t0, 2)
-        return _time.time()
-
     keys = [key] if isinstance(key, str) else list(key)
-    _t = _time.time()
     parent = table.head_version()
     # A CoW merge rewrites touched data files with a fresh data-sequence
     # stamp (un-shadowing rows a pending equality-delete file killed) and
@@ -338,9 +323,7 @@ def merge_into_table(
         parent = table.head_version()
     journal = LineageJournal(table.root, job_id or f"merge-{uuid.uuid4().hex[:12]}")
 
-    winners = latest_by_keys(
-        batch, keys, [TS_COL, SEQ_COL], strategy=dedup_strategy, salt_buckets=salt_buckets
-    ).cache()
+    winners = latest_by_keys(batch, keys, [TS_COL, SEQ_COL]).cache()
 
     # ---- dedup count + manifest pruning, ONE fused job (prune_candidates,
     # shared with the merge-on-read path) ----------------------------------
@@ -348,14 +331,12 @@ def merge_into_table(
     touched_paths, n_winners = prune_candidates(entries, winners, keys)
     if n_winners < 0:
         n_winners = winners.count()
-    _t = _mark("dedup_count_and_pruning", _t)
     if n_winners == 0:
         return None  # ST6 empty-batch short-circuit
 
     # Schema evolution before resolution, so the rewrite carries new columns.
     payload_schema = batch.drop("change_type", "is_deleted", TS_COL, SEQ_COL).schema
     table.evolve_schema(payload_schema, strategy=schema_evolution)
-    _t = _mark("evolve_schema", _t)
 
     touched_bytes = sum(e.bytes for e in entries if e.path in set(touched_paths))
     # Size input splits to the rewrite volume (~2 per core): after compaction
@@ -365,8 +346,6 @@ def merge_into_table(
     # I/O-bound. Both the read and its write action stay inside the context.
     with rewrite_sized_splits(table.spark, touched_bytes):
         if touched_paths:
-            import os
-
             paths = [table.data_path(p) for p in touched_paths]
             target = table.spark.read.schema(table.schema()).parquet(*paths)
         else:
@@ -376,7 +355,6 @@ def merge_into_table(
         small_batch = batch_bytes <= broadcast_bytes_threshold
         if rewrite_mode == "auto":
             rewrite_mode = "split" if small_batch else "range"
-        _t = _mark("estimate_bytes", _t)
 
         added = _rewrite(
             table,
@@ -390,7 +368,6 @@ def merge_into_table(
             touched_bytes=touched_bytes,
             target_rows_per_file=target_rows_per_file,
         )
-    _t = _mark("rewrite", _t)
     journal.log_task(
         stage="merge",
         task_id="batch",
@@ -416,7 +393,4 @@ def merge_into_table(
     )
     journal.log_commit(version)
     winners.unpersist()
-    _mark("commit", _t)
-    if _timings is not None:
-        print(f"MERGE_TIMINGS: {_timings}")
     return version

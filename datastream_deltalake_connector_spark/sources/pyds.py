@@ -27,8 +27,9 @@ Batch path (``IcepackBatchReader``):
   plan), null-fill evolved-away columns, and cast to the exact Arrow schema
   Spark expects.
 - **Merge-on-read resolution executor-side**: a partition whose file is
-  shadow-candidate (newer-seq, key-range-overlapping equality-delete files)
-  carries those delete paths; the executor reads the (small) key columns,
+  in ``IcepackTable.delete_hit_candidates`` (the range + Bloom set ``scan``
+  anti-joins) carries its newer-seq, key-range-overlapping equality-delete
+  paths; the executor reads the (small) key columns,
   builds the key set, and masks shadowed rows in the Arrow batch — the
   anti-join parallelizes per file with zero shuffles.
 
@@ -53,7 +54,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import TYPE_CHECKING, Any, Iterator, Sequence
+from typing import TYPE_CHECKING, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -200,7 +201,7 @@ class IcepackBatchReader(DataSourceReader):
             t.files(self.version)
         )
         self.eq_cols = tuple(snap.summary.get("eq_delete_cols") or [])
-        self.schema_cols = {f.name for f in snap.schema.fields}
+        self.table_schema = snap.schema
         self._t = t
         self._pruned: list[tuple] = []  # (col, op, value)
 
@@ -237,50 +238,38 @@ class IcepackBatchReader(DataSourceReader):
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        from ..table.transforms import partition_may_match, transforms_for_keys
-
         pruned, self._pruned = self._pruned, []  # consume-once (see above)
-        entries = self.data
-        if pruned:
-            tf_cache: dict[frozenset, list] = {}
-
-            def keep(e) -> bool:
-                if not all(e.may_match(c, o, v) for c, o, v in pruned):
-                    return False
-                if not e.partition:
-                    return True
-                keys = frozenset(e.partition)
-                if keys not in tf_cache:
-                    tf_cache[keys] = transforms_for_keys(keys, self.schema_cols)
-                return all(
-                    partition_may_match(e.partition, tf_cache[keys], c, o, v)
-                    for c, o, v in pruned
-                )
-
-            entries = [e for e in entries if keep(e)]
-        # merge-on-read: per data file, the newer-seq delete files whose key
-        # range overlaps (the same candidate logic scan() uses, but shipped
-        # per-partition so executors resolve independently)
+        t = self._t
+        entries = t.prune_files(self.data, pruned, self.table_schema)
+        # merge-on-read: equality-delete paths go only to the files scan()
+        # would anti-join (delete_hit_candidates: newer seq, overlapping key
+        # range, Bloom-refined), each with the newer-seq, range-overlapping
+        # delete files, so executors resolve independently.
         # positional deletes: exact per-file targeting from the delete files'
         # own __file column (driver-side, memoized) — only named files carry
         # any resolution work to the executor
+        eq_cols = list(self.eq_cols)
+        hit = (
+            {e.path for e in t.delete_hit_candidates(entries, self.deletes, eq_cols)}
+            if self.deletes and eq_cols
+            else set()
+        )
         pos_targets: dict[str, set[str]] = {}
         for d in self.pos_deletes:
-            for rel in self._t.pos_delete_targets([d]):
-                pos_targets.setdefault(rel, set()).add(self._t.data_path(d.path))
+            for rel in t.pos_delete_targets([d]):
+                pos_targets.setdefault(rel, set()).add(t.data_path(d.path))
         parts = []
         for e in entries:
             dels = ()
-            if self.deletes and self.eq_cols:
+            if e.path in hit:
                 dels = tuple(
-                    self._t.data_path(d.path)
+                    t.data_path(d.path)
                     for d in self.deletes
-                    if d.seq > e.seq
-                    and self._t._ranges_overlap(e, d, list(self.eq_cols))
+                    if d.seq > e.seq and t._ranges_overlap(e, d, eq_cols)
                 )
             parts.append(
                 _FilePart(
-                    self._t.data_path(e.path),
+                    t.data_path(e.path),
                     dels,
                     self.eq_cols,
                     pos_delete_paths=tuple(sorted(pos_targets.get(e.path, ()))),

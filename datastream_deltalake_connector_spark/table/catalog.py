@@ -106,15 +106,32 @@ class Catalog:
                 out.append(json.load(f)["name"])
         return sorted(out)
 
+    def _read_view(self, name: str) -> dict | None:
+        """The stored view named exactly ``name``, or None. Distinct names
+        can share one file (``a.b`` and ``a_b`` both sanitize to ``a_b``),
+        so the file only counts when its recorded name matches."""
+        try:
+            with open(self._view_path(name)) as f:
+                view = json.load(f)
+        except FileNotFoundError:
+            return None
+        return view if view["name"] == name else None
+
     def view_exists(self, name: str) -> bool:
-        return os.path.exists(self._view_path(name))
+        return self._read_view(name) is not None
 
     def create_view(self, name: str, sql: str, or_replace: bool = False) -> None:
         if self.exists(name):
             raise FileExistsError(f"a table named {name!r} already exists")
-        if self.view_exists(name) and not or_replace:
-            raise FileExistsError(f"view exists: {name}")
         p = self._view_path(name)
+        if os.path.exists(p):
+            if not self.view_exists(name):
+                raise FileExistsError(
+                    f"view name {name!r} collides with an existing view "
+                    f"stored as {os.path.basename(p)!r}"
+                )
+            if not or_replace:
+                raise FileExistsError(f"view exists: {name}")
         os.makedirs(os.path.dirname(p), exist_ok=True)
         # unique tmp + fsync: concurrent CREATE OR REPLACE must never
         # interleave truncated writes or race each other's os.replace
@@ -126,12 +143,13 @@ class Catalog:
         os.replace(tmp, p)
 
     def view_sql(self, name: str) -> str:
-        with open(self._view_path(name)) as f:
-            return json.load(f)["sql"]
+        view = self._read_view(name)
+        if view is None:
+            raise FileNotFoundError(f"no view named {name!r}")
+        return view["sql"]
 
     def drop_view(self, name: str) -> bool:
-        p = self._view_path(name)
-        if not os.path.exists(p):
+        if not self.view_exists(name):
             return False
-        os.remove(p)
+        os.remove(self._view_path(name))
         return True

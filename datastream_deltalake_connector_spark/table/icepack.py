@@ -56,7 +56,7 @@ from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..session import empty_frame
@@ -786,62 +786,130 @@ class IcepackTable:
                 )
             version = self.version_as_of(as_of_timestamp_ms)
         snap = self.snapshot(version)
-        entries, deletes, pos_deletes = self._split_deletes(self.files(snap.version))
-        if filters:
-            from .transforms import partition_may_match, transforms_for_keys
-
-            # Transform-partition pruning composes with stats pruning: each
-            # file's hive keys reverse-parse to the transforms that wrote it
-            # (spec evolution can never mis-prune — old files self-describe
-            # their own layout). Driver-side, zero data reads.
-            schema_cols = {f.name for f in snap.schema.fields}
-            tf_cache: dict[frozenset, list] = {}
-
-            def _keep(e: FileEntry) -> bool:
-                if not all(e.may_match(c, op, v) for (c, op, v) in filters):
-                    return False
-                if not e.partition:
-                    return True
-                keys = frozenset(e.partition)
-                if keys not in tf_cache:
-                    tf_cache[keys] = transforms_for_keys(keys, schema_cols)
-                tfs = tf_cache[keys]
-                return all(
-                    partition_may_match(e.partition, tfs, c, op, v)
-                    for (c, op, v) in filters
-                )
-
-            entries = [e for e in entries if _keep(e)]
-        schema = snap.schema
-        if entries and deletes:
-            df = self._scan_with_deletes(
-                entries,
-                deletes,
-                schema,
-                snap.summary.get("eq_delete_cols") or [],
-            )
-        elif entries and pos_deletes:
-            df = self._scan_with_pos_deletes(entries, pos_deletes, schema)
-        else:
-            df = self._read_files(entries, schema)
+        data, eq, pos = self._split_deletes(self.files(snap.version))
+        df = self.read_live(
+            self.prune_files(data, filters, snap.schema),
+            eq + pos,
+            snap.schema,
+            snap.summary.get("eq_delete_cols") or [],
+        )
         if filters and apply_filters:
-            from pyspark.sql import functions as F
+            df = df.where(self.filter_column(filters))
+        if columns:
+            df = df.select(*columns)
+        return df
 
-            for c, op, v in filters:
-                col = F.col(c)
+    # ------------------------------------------------------------ read plan
+    # The two decisions every reader of live rows makes — which files can
+    # match, and which of their rows the pending deletes leave visible —
+    # live here and nowhere else (Iceberg's scan planner owns the same
+    # pair: file pruning and its DeleteFileIndex).
+    @staticmethod
+    def prune_files(
+        entries: list[FileEntry], filters: list[tuple] | None, schema: T.StructType
+    ) -> list[FileEntry]:
+        """The entries that may hold a row satisfying every ``(col, op,
+        value)`` filter: min/max stats (plus the Bloom filter for ``=`` /
+        ``in``) and partition-transform values must both allow it.
+
+        Each file's hive keys reverse-parse to the transforms that wrote it
+        (spec evolution can never mis-prune — old files self-describe their
+        own layout). Driver-side, zero data reads."""
+        if not filters:
+            return list(entries)
+        from .transforms import partition_may_match, transforms_for_keys
+
+        schema_cols = {f.name for f in schema.fields}
+        tf_cache: dict[frozenset, list] = {}
+
+        def keep(e: FileEntry) -> bool:
+            if not all(e.may_match(c, op, v) for (c, op, v) in filters):
+                return False
+            if not e.partition:
+                return True
+            keys = frozenset(e.partition)
+            if keys not in tf_cache:
+                tf_cache[keys] = transforms_for_keys(keys, schema_cols)
+            return all(
+                partition_may_match(e.partition, tf_cache[keys], c, op, v)
+                for (c, op, v) in filters
+            )
+
+        return [e for e in entries if keep(e)]
+
+    @staticmethod
+    def filter_column(filters: list[tuple]) -> Column | None:
+        """The conjunction of ``(col, op, value)`` filters as one Column
+        (None for no filters) — the row-level twin of :meth:`prune_files`."""
+        from pyspark.sql import functions as F
+
+        conj = None
+        for c, op, v in filters:
+            col = F.col(c)
+            if op == "between":
+                expr = col.between(v[0], v[1])
+            elif op == "in":
+                expr = col.isin(list(v))
+            else:
                 expr = {
                     "=": col == v,
                     "<": col < v,
                     "<=": col <= v,
                     ">": col > v,
                     ">=": col >= v,
-                    "between": col.between(v[0], v[1]) if op == "between" else None,
-                    "in": col.isin(list(v)) if op == "in" else None,
                 }[op]
-                df = df.where(expr)
-        if columns:
-            df = df.select(*columns)
-        return df
+            conj = expr if conj is None else conj & expr
+        return conj
+
+    def read_live(
+        self,
+        entries: list[FileEntry],
+        deletes: list[FileEntry],
+        schema: T.StructType,
+        eq_cols: list[str],
+    ) -> DataFrame:
+        """The rows of ``entries`` that the pending ``deletes`` leave
+        visible. ``deletes`` are one snapshot's delete files, so they are
+        all of one kind (see :meth:`_split_deletes`): equality deletes
+        anti-join on ``eq_cols`` scoped by data-sequence number, positional
+        deletes on (file, row index). No deletes: one plain parquet scan."""
+        if not entries or not deletes:
+            return self._read_files(entries, schema)
+        if deletes[0].content == "eq_deletes":
+            return self._scan_with_deletes(entries, deletes, schema, eq_cols)
+        return self._scan_with_pos_deletes(entries, deletes, schema)
+
+    def read_with_positions(
+        self,
+        entries: list[FileEntry],
+        schema: T.StructType,
+        pos_deletes: list[FileEntry] = (),
+    ) -> DataFrame:
+        """One parquet scan of ``entries`` (at least one) with each row's
+        physical address: ``__abs``, the file URI ``_metadata.file_path``
+        reports, and ``__idx``, its parquet row index. Rows that
+        ``pos_deletes`` shadow are anti-joined out against their broadcast
+        (file URI, position) pairs.
+
+        The one reader of ``_metadata.row_index``: every position mapping
+        passes the URI-formula check first, so drift between the manifest
+        path and Spark's rendering fails loudly instead of resurrecting or
+        losing rows."""
+        from pyspark.sql import functions as F
+
+        self._check_uri_formula(entries[0])
+        df = (
+            self.spark.read.schema(schema)
+            .parquet(*[self.data_path(e.path) for e in entries])
+            .withColumn("__abs", F.col("_metadata.file_path"))
+            .withColumn("__idx", F.col("_metadata.row_index"))
+        )
+        if not pos_deletes:
+            return df
+        cond = (F.col("__abs") == F.col("__dabs")) & (
+            F.col("__idx") == F.col("__dpos")
+        )
+        return df.join(F.broadcast(self._pos_delete_df(pos_deletes)), cond, "left_anti")
 
     @staticmethod
     def _ranges_overlap(a: FileEntry, b: FileEntry, cols: list[str]) -> bool:
@@ -981,7 +1049,6 @@ class IcepackTable:
         deletes: list[FileEntry],
         schema: T.StructType,
         key_cols: list[str],
-        candidates: list[FileEntry] | None = None,
     ) -> DataFrame:
         """Merge-on-read resolution: anti-join candidate data files against
         the equality-delete files that can shadow them.
@@ -1002,13 +1069,7 @@ class IcepackTable:
                 "snapshot has equality-delete files but no eq_delete_cols "
                 "recorded — corrupt metadata"
             )
-        # ``candidates`` lets a caller that already ran delete_hit_candidates
-        # (apply_deletes) skip re-running the refinement on the same set
-        cand = (
-            self.delete_hit_candidates(data, deletes, key_cols)
-            if candidates is None
-            else candidates
-        )
+        cand = self.delete_hit_candidates(data, deletes, key_cols)
         cand_paths = {e.path for e in cand}
         plain = [e for e in data if e.path not in cand_paths]
         if not cand:
@@ -1113,7 +1174,6 @@ class IcepackTable:
         data: list[FileEntry],
         pos_deletes: list[FileEntry],
         schema: T.StructType,
-        candidates: list[FileEntry] | None = None,
     ) -> DataFrame:
         """Merge-on-read resolution for positional deletes.
 
@@ -1125,31 +1185,13 @@ class IcepackTable:
         (file URI, position) pairs — pixel bytes cross no exchange, and at
         100 TB the resolution cost is proportional to the files actually
         holding deleted rows, never the table."""
-        from pyspark.sql import functions as F
-
-        targets = (
-            set(self.pos_delete_targets(pos_deletes))
-            if candidates is None
-            else {e.path for e in candidates}
-        )
+        targets = set(self.pos_delete_targets(pos_deletes))
         hit = [e for e in data if e.path in targets]
         plain = [e for e in data if e.path not in targets]
         if not hit:
             return self._read_files(plain, schema)
-        self._check_uri_formula(hit[0])
-        cand_df = (
-            self.spark.read.schema(schema)
-            .parquet(*[self.data_path(e.path) for e in hit])
-            .withColumn("__abs", F.col("_metadata.file_path"))
-            .withColumn("__idx", F.col("_metadata.row_index"))
-        )
-        del_df = self._pos_delete_df(pos_deletes)
-        cond = (F.col("__abs") == F.col("__dabs")) & (
-            F.col("__idx") == F.col("__dpos")
-        )
-        resolved = (
-            cand_df.join(F.broadcast(del_df), cond, "left_anti")
-            .drop("__abs", "__idx")
+        resolved = self.read_with_positions(hit, schema, pos_deletes).drop(
+            "__abs", "__idx"
         )
         if not plain:
             return resolved

@@ -200,6 +200,17 @@ def transforms_for_keys(
     return out
 
 
+def _probe_value(t: Transform, v: Any) -> str | None:
+    """``t.value(v)`` for a filter probe, or None when it may differ from
+    the value Spark wrote: bucket hashes ``str(v)``, which equals Spark's
+    ``CAST(col AS STRING)`` only for str and int probes (``17.0`` renders
+    as ``"17.0"``, a bigint 17 as ``"17"``) — the Bloom filter's contract
+    too (``FileEntry.may_match``)."""
+    if t.kind == "bucket" and not isinstance(v, (str, int)):
+        return None
+    return t.value(v)
+
+
 def partition_may_match(
     partition: dict[str, str],
     transforms: list[Transform],
@@ -209,17 +220,22 @@ def partition_may_match(
 ) -> bool:
     """Conservative transform pruning: False only when THIS file's partition
     values PROVE no row can satisfy ``col op value``. Mirrors the contract of
-    ``FileEntry.may_match`` and composes with it (stats still prune too)."""
+    ``FileEntry.may_match`` and composes with it (stats still prune too).
+
+    Identity keys never prune here: Spark hive-escapes their directory
+    values (``a:b`` → ``a%3Ab``, ``True`` → ``true``), so ``str(value)``
+    cannot be compared with them, and the column kept in the file already
+    prunes exactly through its min == max stats."""
     for t in transforms:
-        if t.col != col or t.pname not in partition:
+        if t.kind == "identity" or t.col != col or t.pname not in partition:
             continue
         p = partition[t.pname]
         if op == "=":
-            exp = t.value(value)
+            exp = _probe_value(t, value)
             if exp is not None and p != exp:
                 return False
         elif op == "in":
-            exps = [t.value(v) for v in value]
+            exps = [_probe_value(t, v) for v in value]
             if all(e is not None for e in exps) and p not in exps:
                 return False
         elif t.monotone and t._cmp_ok(value) and op in ("<", "<=", ">", ">=", "between"):

@@ -347,6 +347,26 @@ def test_bmp_tiff_dims_probe(spark):
         assert (r.w, r.h, r.channels, r.lossy) == (9, 7, 3, 0)
 
 
+def test_dims_probe_reports_bmp_colour_channels(spark):
+    """A 32-bpp BMP whose alpha is really used decodes to RGBA, but the
+    header-only probe cannot see pixel alpha: it reports the 3 colour
+    channels, as decode_dims_udf documents."""
+    import pandas as pd
+
+    from datastream_deltalake_connector_spark.functions.image import (
+        decode_dims_udf,
+    )
+
+    h, w = 3, 4
+    px4 = RNG.integers(1, 256, size=(h, w, 4), dtype=np.uint8)
+    body = px4[:, :, [2, 1, 0, 3]].reshape(h, w * 4).tobytes()
+    data = _bmp((40, w, -h, 1, 32, 0, len(body), 0, 0, 0, 0), body)
+    assert decode_bmp_np(data).shape == (h, w, 4)
+    df = spark.createDataFrame(pd.DataFrame([(bytearray(data),)], columns=["bytes"]))
+    r = df.select(decode_dims_udf("bytes").alias("d")).select("d.*").collect()[0]
+    assert (r.w, r.h, r.channels, r.lossy) == (w, h, 3, 0)
+
+
 # ---------------------------------------------------------------- Netpbm
 def test_netpbm_roundtrip_and_spec_bytes():
     from datastream_deltalake_connector_spark.functions.netpbm import (

@@ -150,8 +150,8 @@ def test_entry_contract(spark):
     assert len(qs) >= 18
 
 
-def test_salted_strategies_on_real_skew(spark):
-    """Hot-prefix image ids: salted dedup equals plain window dedup."""
+def test_max_by_matches_window_on_real_skew(spark):
+    """Hot-prefix image ids: max_by dedup equals plain window dedup."""
     from datastream_deltalake_connector_spark.operators.dedup import latest_by_keys
     from datastream_deltalake_connector_spark.sources.generator import (
         generate_change_batch,
@@ -161,9 +161,7 @@ def test_salted_strategies_on_real_skew(spark):
         spark, 50, batch_index=0, updates=60, inserts=10, deletes=10, num_partitions=4
     ).cache()
     w = latest_by_keys(b, ["image_id"], ["source_timestamp", "change_seq"], "window")
-    s = latest_by_keys(
-        b, ["image_id"], ["source_timestamp", "change_seq"], "salted", salt_buckets=8
-    )
+    s = latest_by_keys(b, ["image_id"], ["source_timestamp", "change_seq"], "max_by")
     cols = ["image_id", "caption", "phash", "change_seq"]
     assert sorted(map(tuple, w.select(cols).collect())) == sorted(
         map(tuple, s.select(cols).collect())

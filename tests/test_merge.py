@@ -68,10 +68,9 @@ def snap(df):
     )
 
 
-@pytest.mark.parametrize("strategy", ["window", "max_by", "salted"])
-def test_insert_into_empty_table(spark, strategy):
+def test_insert_into_empty_table(spark):
     b = batch(spark, [ev("1", "ann", "a st"), ev("2", "bob", "b st", minutes=1)])
-    out = merge_batch(empty_target(spark), b, ["id"], dedup_strategy=strategy)
+    out = merge_batch(empty_target(spark), b, ["id"])
     assert snap(out) == [
         ("1", "ann", "a st", T0, 0),
         ("2", "bob", "b st", T0 + timedelta(minutes=1), 0),
@@ -226,7 +225,7 @@ def test_update_does_not_resurrect_columns(spark):
     assert row["gender"] is None
 
 
-@pytest.mark.parametrize("strategy", ["window", "max_by", "salted"])
+@pytest.mark.parametrize("strategy", ["window", "max_by"])
 def test_dedup_strategies_agree(spark, strategy):
     rows = []
     for i in range(200):

@@ -1158,3 +1158,19 @@ def test_view_store_name_reserved_and_multiline_create(sql):
     sql.execute("CREATE VIEW a.b AS SELECT id FROM users")
     assert "a.b" in [r.viewName for r in sql.execute("SHOW VIEWS").collect()]
     assert sql.execute("SELECT count(*) AS n FROM a.b").collect()[0].n == 3
+
+
+def test_view_names_sharing_a_file_do_not_alias(sql):
+    """``a.b`` and ``a_b`` sanitize to one view file: the second name is
+    refused, and is never read, replaced or dropped as the first."""
+    _mk_users(sql)
+    sql.execute("CREATE VIEW a.b AS SELECT id FROM users WHERE id = 1")
+    cat = sql.catalog
+    assert cat.view_exists("a.b") and not cat.view_exists("a_b")
+    with pytest.raises(SqlDialectError, match="collides"):
+        sql.execute("CREATE OR REPLACE VIEW a_b AS SELECT id FROM users")
+    with pytest.raises(FileNotFoundError):
+        cat.view_sql("a_b")
+    assert not cat.drop_view("a_b")
+    assert [r.viewName for r in sql.execute("SHOW VIEWS").collect()] == ["a.b"]
+    assert sql.execute("SELECT count(*) AS n FROM a.b").collect()[0].n == 1
