@@ -297,9 +297,8 @@ def table_changes(
                     for e in entries
                     if e.content == "data" and e.path in old_by_path
                 ]
-                cand = table.delete_hit_candidates(
-                    kept_data, affect_dels, keys
-                )
+                hits = table.delete_hit_candidates(kept_data, affect_dels, keys)
+                cand = [e for e in kept_data if e.path in hits]
                 if cand:
                     del_keys = table._read_files(
                         affect_dels,

@@ -239,7 +239,8 @@ def apply_deletes(
         # range + (when available) driver-side bloom refinement — on an
         # arrival-ordered layout the blooms are what keep a sparse tombstone
         # set from forcing a full-table rewrite here
-        hit = table.delete_hit_candidates(data, deletes, key_cols)
+        hits = table.delete_hit_candidates(data, deletes, key_cols)
+        hit = [e for e in data if e.path in hits]
     removed = [e.path for e in hit] + [e.path for e in deletes]
     added: list[FileEntry] = []
     if hit:

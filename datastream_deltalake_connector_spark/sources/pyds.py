@@ -26,10 +26,10 @@ Batch path (``IcepackBatchReader``):
   pyarrow directly (no driver fan-out of paths through a parquet reader
   plan), null-fill evolved-away columns, and cast to the exact Arrow schema
   Spark expects.
-- **Merge-on-read resolution executor-side**: a partition whose file is
-  in ``IcepackTable.delete_hit_candidates`` (the range + Bloom set ``scan``
-  anti-joins) carries its newer-seq, key-range-overlapping equality-delete
-  paths; the executor reads the (small) key columns,
+- **Merge-on-read resolution executor-side**: each partition carries the
+  equality-delete paths ``IcepackTable.delete_hit_candidates`` gives its file
+  (the range + Bloom set ``scan`` anti-joins); the executor reads the
+  (small) key columns,
   builds the key set, and masks shadowed rows in the Arrow batch — the
   anti-join parallelizes per file with zero shuffles.
 
@@ -241,18 +241,16 @@ class IcepackBatchReader(DataSourceReader):
         pruned, self._pruned = self._pruned, []  # consume-once (see above)
         t = self._t
         entries = t.prune_files(self.data, pruned, self.table_schema)
-        # merge-on-read: equality-delete paths go only to the files scan()
-        # would anti-join (delete_hit_candidates: newer seq, overlapping key
-        # range, Bloom-refined), each with the newer-seq, range-overlapping
-        # delete files, so executors resolve independently.
+        # merge-on-read: each file gets exactly the equality-delete files
+        # the table assigns it (the set scan() anti-joins), so executors
+        # resolve independently.
         # positional deletes: exact per-file targeting from the delete files'
         # own __file column (driver-side, memoized) — only named files carry
         # any resolution work to the executor
-        eq_cols = list(self.eq_cols)
-        hit = (
-            {e.path for e in t.delete_hit_candidates(entries, self.deletes, eq_cols)}
-            if self.deletes and eq_cols
-            else set()
+        assigned = (
+            t.delete_hit_candidates(entries, self.deletes, list(self.eq_cols))
+            if self.deletes
+            else {}
         )
         pos_targets: dict[str, set[str]] = {}
         for d in self.pos_deletes:
@@ -260,17 +258,10 @@ class IcepackBatchReader(DataSourceReader):
                 pos_targets.setdefault(rel, set()).add(t.data_path(d.path))
         parts = []
         for e in entries:
-            dels = ()
-            if e.path in hit:
-                dels = tuple(
-                    t.data_path(d.path)
-                    for d in self.deletes
-                    if d.seq > e.seq and t._ranges_overlap(e, d, eq_cols)
-                )
             parts.append(
                 _FilePart(
                     t.data_path(e.path),
-                    dels,
+                    tuple(t.data_path(d.path) for d in assigned.get(e.path, ())),
                     self.eq_cols,
                     pos_delete_paths=tuple(sorted(pos_targets.get(e.path, ()))),
                     rel_path=e.path,

@@ -292,6 +292,9 @@ class FileEntry:
             # answer for anything outside the build contract
             and isinstance(value, (str, int))
             and not isinstance(value, bool)
+            # ...and of the column's own kind, judged by its min: Spark
+            # matches '017' with bigint 17, whose bloom hashed "17"
+            and isinstance(value, str) == isinstance(st.get("min"), str)
         ):
             from ..functions.bloom import bloom_from_stats, bloom_might_contain
 
@@ -814,12 +817,28 @@ class IcepackTable:
 
         Each file's hive keys reverse-parse to the transforms that wrote it
         (spec evolution can never mis-prune — old files self-describe their
-        own layout). Driver-side, zero data reads."""
+        own layout). Bucket and truncate values are computed from the
+        column's text, so they prune only on probes whose ``str()`` is that
+        text: str on string columns, int on integral ones. Spark matches
+        ``'017'`` and ``11.0`` with the bigints 17 and 11, whose text
+        differs. Driver-side, zero data reads."""
         if not filters:
             return list(entries)
         from .transforms import partition_may_match, transforms_for_keys
 
-        schema_cols = {f.name for f in schema.fields}
+        types = {f.name: f.dataType for f in schema.fields}
+
+        def textual(c: str, op: str, v: Any) -> bool:
+            # type(x) is int, not isinstance: Spark renders a bool 'true'
+            dt = types.get(c)
+            want = str if isinstance(dt, T.StringType) else (
+                int if isinstance(dt, T.IntegralType) else None
+            )
+            probes = v if op in ("in", "between") else (v,)
+            return all(type(x) is want for x in probes)
+
+        exact = [textual(c, op, v) for (c, op, v) in filters]
+        text_kinds = ("bucket", "truncate")
         tf_cache: dict[frozenset, list] = {}
 
         def keep(e: FileEntry) -> bool:
@@ -829,10 +848,15 @@ class IcepackTable:
                 return True
             keys = frozenset(e.partition)
             if keys not in tf_cache:
-                tf_cache[keys] = transforms_for_keys(keys, schema_cols)
+                tf_cache[keys] = transforms_for_keys(keys, set(types))
+            tfs = tf_cache[keys]
             return all(
-                partition_may_match(e.partition, tf_cache[keys], c, op, v)
-                for (c, op, v) in filters
+                partition_may_match(
+                    e.partition,
+                    tfs if ok else [t for t in tfs if t.kind not in text_kinds],
+                    c, op, v,
+                )
+                for (c, op, v), ok in zip(filters, exact)
             )
 
         return [e for e in entries if keep(e)]
@@ -938,10 +962,12 @@ class IcepackTable:
         data: list[FileEntry],
         deletes: list[FileEntry],
         key_cols: list[str],
-    ) -> list[FileEntry]:
-        """Data files a pending equality-delete file might actually shadow
-        (``delete.seq > data.seq`` and keys possibly shared) — the set both
-        the MoR scan anti-joins and ``apply_deletes`` rewrites.
+    ) -> dict[str, list[FileEntry]]:
+        """For each data file a pending equality-delete file might actually
+        shadow, the delete files that apply to it (``delete.seq > data.seq``
+        and key ranges overlap), keyed by data path — Iceberg's
+        DeleteFileIndex. Files absent from the map need no resolution; the
+        rest are what the MoR scan anti-joins and ``apply_deletes`` rewrites.
 
         Range test first (conservative). When ANY surviving candidate
         carries a key Bloom filter, refine DRIVER-SIDE: delete files are
@@ -952,20 +978,31 @@ class IcepackTable:
         negatives — on an arrival-ordered layout this is what keeps a sparse
         tombstone set from forcing a full-table rewrite (ranges overlap
         everything)."""
-        cand = [
-            e
-            for e in data
-            if any(
-                d.seq > e.seq and self._ranges_overlap(e, d, key_cols)
-                for d in deletes
+        if not key_cols:
+            raise ValueError(
+                "snapshot has equality-delete files but no eq_delete_cols "
+                "recorded — corrupt metadata"
             )
-        ]
+        assigned: dict[str, list[FileEntry]] = {}
+        for e in data:
+            ds = [
+                d
+                for d in deletes
+                if d.seq > e.seq and self._ranges_overlap(e, d, key_cols)
+            ]
+            if ds:
+                assigned[e.path] = ds
+        bloomed = {
+            e.path: e.stats[key_cols[0]]["bloom"]
+            for e in data
+            if e.path in assigned and (e.stats.get(key_cols[0]) or {}).get("bloom")
+        }
         if (
             len(key_cols) != 1
             or sum(d.rows for d in deletes) > self.DELETE_BLOOM_REFINE_MAX_ROWS
-            or not any(e.stats.get(key_cols[0], {}).get("bloom") for e in cand)
+            or not bloomed
         ):
-            return cand
+            return assigned
         from ..functions.bloom import bloom_from_stats, bloom_might_contain
 
         key = key_cols[0]
@@ -986,19 +1023,14 @@ class IcepackTable:
                 )
             return probe_cache[data_seq]
 
-        kept = []
-        for e in cand:
-            bl = e.stats.get(key, {}).get("bloom")
-            if bl is None:
-                kept.append(e)  # pre-bloom file: range answer stands
-                continue
+        for e in data:
+            if e.path not in bloomed:
+                continue  # unassigned, or pre-bloom: range answer stands
+            bits, m, k = bloom_from_stats(bloomed[e.path])
             h1 = probes_for(e.seq)
-            if len(h1) == 0:
-                continue
-            bits, m, k = bloom_from_stats(bl)
-            if bool(bloom_might_contain(bits, m, k, None, h1=h1).any()):
-                kept.append(e)
-        return kept
+            if not bool(bloom_might_contain(bits, m, k, None, h1=h1).any()):
+                del assigned[e.path]
+        return assigned
 
     def _read_files(self, entries: list[FileEntry], schema: T.StructType) -> DataFrame:
         """One plain parquet scan of ``entries`` (an empty frame for none).
@@ -1064,14 +1096,9 @@ class IcepackTable:
         exchange: an anti-join only filters the probe side."""
         from pyspark.sql import functions as F
 
-        if not key_cols:
-            raise ValueError(
-                "snapshot has equality-delete files but no eq_delete_cols "
-                "recorded — corrupt metadata"
-            )
-        cand = self.delete_hit_candidates(data, deletes, key_cols)
-        cand_paths = {e.path for e in cand}
-        plain = [e for e in data if e.path not in cand_paths]
+        hits = self.delete_hit_candidates(data, deletes, key_cols)
+        cand = [e for e in data if e.path in hits]
+        plain = [e for e in data if e.path not in hits]
         if not cand:
             return self._read_files(plain, schema)
 

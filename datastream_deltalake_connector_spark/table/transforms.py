@@ -103,8 +103,10 @@ class Transform:
                 dt = _as_datetime(v)
                 return None if dt is None else dt.strftime(_PYFMT[self.kind])
             if self.kind == "bucket":
-                if isinstance(v, bool):
-                    return None  # Spark casts bool to 'true'/'false', not 'True'
+                # str(v) equals Spark's CAST(col AS STRING) only for str and
+                # int probes: bool renders 'true', 17.0 renders '17.0'
+                if isinstance(v, bool) or not isinstance(v, (str, int)):
+                    return None
                 return str(
                     int(hashlib.md5(str(v).encode()).hexdigest()[:8], 16)
                     % self.arg
@@ -200,17 +202,6 @@ def transforms_for_keys(
     return out
 
 
-def _probe_value(t: Transform, v: Any) -> str | None:
-    """``t.value(v)`` for a filter probe, or None when it may differ from
-    the value Spark wrote: bucket hashes ``str(v)``, which equals Spark's
-    ``CAST(col AS STRING)`` only for str and int probes (``17.0`` renders
-    as ``"17.0"``, a bigint 17 as ``"17"``) — the Bloom filter's contract
-    too (``FileEntry.may_match``)."""
-    if t.kind == "bucket" and not isinstance(v, (str, int)):
-        return None
-    return t.value(v)
-
-
 def partition_may_match(
     partition: dict[str, str],
     transforms: list[Transform],
@@ -231,11 +222,11 @@ def partition_may_match(
             continue
         p = partition[t.pname]
         if op == "=":
-            exp = _probe_value(t, value)
+            exp = t.value(value)
             if exp is not None and p != exp:
                 return False
         elif op == "in":
-            exps = [_probe_value(t, v) for v in value]
+            exps = [t.value(v) for v in value]
             if all(e is not None for e in exps) and p not in exps:
                 return False
         elif t.monotone and t._cmp_ok(value) and op in ("<", "<=", ">", ">=", "between"):

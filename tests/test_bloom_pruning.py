@@ -345,7 +345,7 @@ def test_delete_hit_candidates_seq_scoping_with_blooms(spark, tmp_path):
     # the upsert's own data file carries key img-00000077 and a matching
     # bloom, but shares the delete file's seq -> excluded
     newer = [e for e in data if e.seq >= max(d.seq for d in dels)]
-    assert newer and all(e not in cand for e in newer)
+    assert newer and all(e.path not in cand for e in newer)
     assert 1 <= len(cand) <= 2  # the base file(s) actually containing the key
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from datastream_deltalake_connector_spark.operators.mor import merge_into_table_mor
@@ -20,6 +21,7 @@ from datastream_deltalake_connector_spark.sources.pyds import (
     register,
 )
 from datastream_deltalake_connector_spark.table import IcepackTable
+from datastream_deltalake_connector_spark.table.transforms import Transform
 
 PKG = Path(__file__).resolve().parents[1] / "datastream_deltalake_connector_spark"
 
@@ -89,8 +91,10 @@ def test_pyds_ships_eq_deletes_only_to_bloom_refined_files(spark, tmp_path):
     assert len(hit) < len(ranged)  # the Bloom filters dropped some files
 
     reader = IcepackBatchReader({"path": t.root}, t.schema())
-    shipped = {p.path for p in reader.partitions() if p.delete_paths}
-    assert shipped == {t.data_path(e.path) for e in hit}
+    shipped = {p.path: set(p.delete_paths) for p in reader.partitions() if p.delete_paths}
+    assert shipped == {
+        t.data_path(path): {t.data_path(d.path) for d in ds} for path, ds in hit.items()
+    }
 
     got = spark.read.format("icepack").option("path", t.root).load()
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, t.scan().collect()))
@@ -137,20 +141,75 @@ def test_dml_prunes_on_bucket_transform(spark, tmp_path):
     assert rep["files_pruned"] > floor and rep["rows_deleted"] == 1
     assert _rows(part) == _rows(twin)
 
-    # a probe whose str() differs from Spark's CAST(col AS STRING) never
-    # prunes: 11.0 hashes to another bucket than the bigint row 11
-    assert part.scan(filters=[("id", "=", 11.0)]).count() == 1
-    rep = delete_where(part, [("id", "=", 11.0)])
-    delete_where(twin, [("id", "=", 11.0)])
-    assert rep["rows_deleted"] == 1
-    assert _rows(part) == _rows(twin)
-
     isin = [("uid", "in", ["u3", "u5"])]
     floor = stats_pruned(isin)
     rep = update_where(part, {"v": "v + 1000"}, isin)
     update_where(twin, {"v": "v + 1000"}, isin)
     assert rep["files_pruned"] > floor and rep["rows_updated"] == 2
     assert _rows(part) == _rows(twin)
+
+
+def test_bucket_prunes_only_on_probes_with_the_column_text(spark, tmp_path):
+    """Spark matches '0<n>' and 11.0 with the bigints n and 11, but their
+    str() hashes to other buckets: DELETE must not prune the row's file."""
+    bkt = Transform("bucket", "id", 4)
+    n = next(n for n in range(20, 200) if bkt.value(f"0{n}") != bkt.value(n))
+    for i, probe in enumerate((f"0{n}", 11.0)):
+        part, twin = _bucketed_and_twin(spark, tmp_path / str(i))
+        assert part.scan(filters=[("id", "=", probe)]).count() == 1
+        rep = delete_where(part, [("id", "=", probe)])
+        delete_where(twin, [("id", "=", probe)])
+        assert rep["rows_deleted"] == 1
+        assert _rows(part) == _rows(twin)
+
+
+def test_truncate_prunes_only_on_probes_with_the_column_text(spark, tmp_path):
+    """truncate(3, id) slices the bigint's text: the probe 11.0 slices to
+    '11.' and '011' to '011', yet Spark matches both with the row 11 (its
+    partition value is '11'). DELETE and UPDATE must not prune that file."""
+    df = spark.createDataFrame(
+        [(i, i * 1.0) for i in [11] + list(range(1000, 1040))], "id long, v double"
+    )
+    part = IcepackTable.create(
+        spark, str(tmp_path / "trunc"), df.schema, partition_by=["truncate(3, id)"]
+    )
+    part.append(df)
+    twin = IcepackTable.create(spark, str(tmp_path / "twin"), df.schema)
+    twin.append(df, num_files=4)
+
+    rep = update_where(part, {"v": "v + 1000"}, [("id", "=", 11.0)])
+    update_where(twin, {"v": "v + 1000"}, [("id", "=", 11.0)])
+    assert rep["rows_updated"] == 1
+    assert _rows(part) == _rows(twin)
+    rep = delete_where(part, [("id", "=", "011")])
+    delete_where(twin, [("id", "=", "011")])
+    assert rep["rows_deleted"] == 1
+    assert _rows(part) == _rows(twin)
+
+
+def test_bloom_prunes_only_on_probes_of_the_column_kind(spark, tmp_path):
+    """A bigint key's Bloom filter hashed the text "17"; Spark matches the
+    probe '017' with 17, so the filter must not be asked about '017'."""
+    df = spark.range(0, 40).select("id", (F.col("id") * 1.0).alias("v"))
+    t = IcepackTable.create(
+        spark, str(tmp_path / "bl"), df.schema, bloom_cols=["id"]
+    )
+    t.append(df, num_files=1)
+    assert t.scan(filters=[("id", "=", "017")]).count() == 1
+    assert delete_where(t, [("id", "=", "017")])["rows_deleted"] == 1
+
+
+def test_pyds_refuses_eq_deletes_without_key_columns(spark, tmp_path):
+    """Equality deletes with no recorded key are corrupt metadata: the
+    data source raises as scan() does instead of returning shadowed rows."""
+    df = _keyed(spark, 40)
+    t = IcepackTable.create(spark, str(tmp_path / "t"), df.schema)
+    t.append(df, num_files=1)
+    reader = IcepackBatchReader({"path": t.root}, t.schema())
+    reader.deletes = t.files()  # stand-in delete files
+    assert reader.eq_cols == ()
+    with pytest.raises(ValueError, match="corrupt metadata"):
+        reader.partitions()
 
 
 def test_identity_partition_values_never_mis_prune(spark, tmp_path):
