@@ -3577,9 +3577,9 @@ def _icepack_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta UPDATE parity): same three-file range layout as the delete twin;
     ``update_where(SET value = value + 1000, event_type = upper(event_type)
     WHERE user_id BETWEEN 30 AND 59)`` must rewrite only the two files the
-    range touches (the third prunes via manifest stats), count updated rows
-    ON the write job (DataFrame.observe — no extra scan), and leave every
-    other row bit-identical. Assignments read pre-update values by
+    range touches (the third prunes via manifest stats; the locate scan
+    finds a match in each of the other two), count updated rows on the
+    write job (DataFrame.observe), and leave every other row bit-identical. Assignments read pre-update values by
     contract; the oracle recomputes both columns with CASE."""
     from datastream_deltalake_connector_spark.operators.rowops import update_where
     from datastream_deltalake_connector_spark.table import IcepackTable
@@ -4273,7 +4273,7 @@ def _icepack_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     LWW-guarded update second, tombstone-filtered insert third, driven by
     the odd-seq change batch against the even-seq snapshot. File-precise
     CoW underneath: candidates are range-pre-pruned then resolved exactly
-    via a ``_metadata.file_path`` probe join; the commit carries the
+    by a key probe join that names each row's file; the commit carries the
     optimistic-concurrency requirements. Oracled as a three-branch
     FULL-OUTER reconstruction in plain SQL — clause ordering, the ``>=``
     guard, and tombstone precedence are all load-bearing in the hash."""

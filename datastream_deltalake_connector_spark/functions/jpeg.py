@@ -187,8 +187,8 @@ class _CleanBitReader:
     per-byte 0xFF branches (each segment was unstuffed by one C-level
     ``bytes.replace`` and padded with 1-bits, reproducing the spec's
     feed-1s-past-the-segment behavior). ``term_pos`` is the original-stream
-    offset of the scan's terminating marker, replacing the post-hoc
-    ``_next_marker`` walk. Same decode interface (`nbits`/`acc`/`_fill`),
+    offset of the scan's terminating marker, so no walk past the entropy
+    data is needed afterwards. Same decode interface (`nbits`/`acc`/`_fill`),
     so ``_HuffTable.decode`` works unchanged."""
 
     __slots__ = ("segs", "term_pos", "si", "buf", "p", "acc", "nbits")
@@ -655,19 +655,6 @@ def _reconstruct(frame, store, qt):
     )
     rgb = ycc @ m.T
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8).reshape(h, w, 3)
-
-
-def _next_marker(data: bytes, pos: int) -> int:
-    """Advance past entropy data to the next true marker (skips stuffed
-    0xFF00 and RSTn)."""
-    n = len(data)
-    while pos + 1 < n:
-        if data[pos] == 0xFF and data[pos + 1] != 0x00 and not (
-            0xD0 <= data[pos + 1] <= 0xD7
-        ):
-            return pos
-        pos += 1
-    return n
 
 
 def _decode_progressive_scan(

@@ -151,8 +151,7 @@ def cluster(
         # by partition value at write time (one file per bucket × partition),
         # so pruning composes — partition dirs first, then key ranges.
         added = table.write_data_files(
-            clustered, partition_by=table.partition_spec() or None,
-            enforce_constraints=False,  # re-files already-validated rows
+            clustered, enforce_constraints=False  # re-files validated rows
         )
     journal.log_task(
         stage="cluster",

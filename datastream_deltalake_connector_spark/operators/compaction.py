@@ -162,8 +162,7 @@ def compact(
         # faster per bin at 512 MB.
         df = table.spark.read.schema(schema).parquet(*paths).repartition(1)
         added = table.write_data_files(
-            df, partition_by=table.partition_spec() or None,
-            enforce_constraints=False,  # re-files already-validated rows
+            df, enforce_constraints=False  # re-files already-validated rows
         )
         journal.log_task(
             stage="compact-bin",

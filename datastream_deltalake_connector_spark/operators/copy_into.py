@@ -158,7 +158,6 @@ def copy_into(
         raise ValueError(f"unsupported FILEFORMAT {file_format!r}")
     from ..table.icepack import ConflictError
     from ._align import align_to_schema
-    from .rowops import _reclaim_staged
 
     files = _discover(src, pattern)
     last_exc: Exception | None = None
@@ -219,7 +218,7 @@ def copy_into(
             # retry subtracts the other copy's files from `todo`. Jittered
             # backoff keeps N racing copies from re-colliding in lockstep
             # (each wasted attempt is a full dataset write).
-            _reclaim_staged(table, added)
+            table.discard_staged(added)
             try:
                 os.unlink(ledger_path)
             except FileNotFoundError:

@@ -13,10 +13,10 @@ Scale shape (the 100-TB plan):
 
 - **Touch only files that can contain a match.** Candidate files are
   pre-pruned driver-side against the source's per-key min/max (one tiny agg
-  job), then resolved EXACTLY with a key-column probe join against
-  ``_metadata.file_path`` — the rewrite set is "files holding at least one
-  matching key", never the table. A 1k-row source against 10^12 rows
-  rewrites a handful of files. (``NOT MATCHED BY SOURCE`` clauses touch
+  job), then resolved EXACTLY by a key-column probe join whose rows carry
+  their file (``IcepackTable.files_holding``) — the rewrite set is "files
+  holding at least one matching key", never the table. A 1k-row source
+  against 10^12 rows rewrites a handful of files. (``NOT MATCHED BY SOURCE`` clauses touch
   every target row by definition — with one present the candidate set is
   honestly the whole table, same as Delta.)
 - **One pass, no collect of data.** Matched/not-matched/by-source routing,
@@ -55,7 +55,6 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..table.icepack import FileEntry, IcepackTable
-from .rowops import _reclaim_staged
 
 __all__ = ["merge_into", "MergeCardinalityError"]
 
@@ -218,17 +217,13 @@ def merge_into(
         hit = []
         probed = len(cand)
         if cand and (matched or not_matched):
-            paths = [table.data_path(e.path) for e in cand]
-            probe = (
-                table.spark.read.schema(snap.schema)
-                .parquet(*paths)
-                .select(*on, F.col("_metadata.file_path").alias("__fp"))
-                .join(skeys, on=on, how="leftsemi")
-                .select("__fp")
-                .distinct()
+            # rows pending positional deletes shadow are resolved out: a
+            # deleted row is no match and must not force a rewrite
+            probe = table.read_with_positions(cand, snap.schema, pos_deletes)
+            holding = table.files_holding(
+                cand, probe.join(skeys, on=on, how="leftsemi")
             )
-            hit_uris = {r[0] for r in probe.collect()}
-            hit = [e for e in cand if table._file_uri(e.path) in hit_uris]
+            hit = [e for e in cand if e.path in holding]
 
     # ---- ANSI cardinality check (key columns only, no payload) ---------
     if matched and hit:
@@ -385,7 +380,7 @@ def merge_into(
     ):
         # provable no-op — reclaim staged bytes, never churn the manifest
         # (unless the rewrite folded pending MoR deletes, which IS a change)
-        _reclaim_staged(table, added)
+        table.discard_staged(added)
         return {"version": None, **report, "files_rewritten": 0}
 
     version = table.commit(

@@ -158,7 +158,7 @@ def merge_into_table_mor(
     merged = merged.repartitionByRange(
         n_files, *[F.col(c) for c in keys]
     ).sortWithinPartitions(*keys)
-    added = table.write_data_files(merged, partition_by=table.partition_spec() or None)
+    added = table.write_data_files(merged)
 
     # The delete file is tiny (keys only): a single sorted file keeps its
     # footer stats tight so scan-side candidate pruning stays sharp. Sorting
@@ -168,9 +168,9 @@ def merge_into_table_mor(
         del_df = tombstones.coalesce(1).sortWithinPartitions(*keys)
         # key-only tombstones aren't table data; constraint columns are
         # validated where they exist (the co-committed data files)
-        del_entries = table.write_data_files(del_df, enforce_constraints=False)
-        for e in del_entries:
-            e.content = "eq_deletes"
+        del_entries = table.write_data_files(
+            del_df, content="eq_deletes", enforce_constraints=False
+        )
 
     if guard_cached is not None:
         guard_cached.unpersist()
@@ -246,8 +246,7 @@ def apply_deletes(
     if hit:
         resolved = table.read_live(hit, deletes, table.schema(parent), key_cols)
         added = table.write_data_files(
-            resolved, partition_by=table.partition_spec() or None,
-            enforce_constraints=False,  # re-files already-validated rows
+            resolved, enforce_constraints=False  # re-files validated rows
         )
     journal.log_task(
         stage="apply-deletes",

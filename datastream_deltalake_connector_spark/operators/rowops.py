@@ -5,36 +5,47 @@ icepack tables (the reference rides Delta for these, README.md:9 ACID notes;
 its own MERGE clauses in MergeQueries.scala cover only the CDC path — the
 ad-hoc predicate forms live here).
 
-Scale shape (the 100-TB plan):
+Every entry point runs one plan (:func:`_plan`), the 100-TB shape:
 
-- **Manifest pruning first.** Only files whose min/max/bloom stats and
-  partition-transform values say the predicate MIGHT match are touched
+- **Prune.** Only files whose min/max/bloom stats and partition-transform
+  values say the predicate MIGHT match are touched
   (``IcepackTable.prune_files``, the planner ``scan`` uses); at 10^12 rows a
-  predicate with any key locality rewrites a handful of files, never the
+  predicate with any key locality reads a handful of files, never the
   table.
-- **Metadata-only deletes.** A file whose stats PROVE every row matches
-  (``FileEntry.must_match_all``: exact bounds inside the predicate AND an
-  exact null count of zero) is dropped from the manifest without being
-  read — Iceberg's "delete with metadata" fast path. Partition-aligned
+- **Metadata-only drops (DELETE).** A file whose stats PROVE every row
+  matches (``FileEntry.must_match_all``: exact bounds inside the predicate
+  AND an exact null count of zero) is dropped from the manifest without
+  being read — Iceberg's "delete with metadata" fast path. Partition-aligned
   deletes (drop a day, drop a source) cost one manifest write.
-- **CoW rewrite for the rest.** Surviving candidate files are read once
-  (merge-on-read deletes resolved, so shadowed rows can never resurrect
-  with the rewrite's fresh data-sequence number), filtered/rewritten with
-  vectorized expressions, and swapped in one atomic commit. Untouched
-  files never enter any plan.
-- **No extra count jobs.** Affected-row counts ride the write job via
-  ``DataFrame.observe`` (update) or manifest row-count arithmetic (delete).
+- **Locate.** The remaining candidates are read once through
+  ``read_with_positions`` (pending positional deletes resolved out), and
+  ``IcepackTable.files_holding`` names the files holding a matching row —
+  Delta's "find the touched files first". No hit: no write, no commit.
+- **Emit.** Copy-on-write rewrites exactly the hit files (pending deletes
+  resolved through ``read_live``, so shadowed rows can never resurrect
+  with the rewrite's fresh data-sequence number); merge-on-read shadows
+  the matched rows with ONE positional-delete file. Both swap in one
+  atomic commit whose requirements name every pruned candidate.
+
+Affected-row counts ride the write job (``DataFrame.observe`` for UPDATE)
+or manifest row-count arithmetic (DELETE).
 """
 
 from __future__ import annotations
 
-import os
+from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..table.icepack import POS_FILE_COL, POS_IDX_COL, FileEntry, IcepackTable
+from ..table.icepack import (
+    POS_FILE_COL,
+    POS_IDX_COL,
+    FileEntry,
+    IcepackTable,
+    Snapshot,
+)
 
 __all__ = [
     "delete_where",
@@ -44,22 +55,6 @@ __all__ = [
 ]
 
 Filter = tuple  # (col, op, value) with op in = < <= > >= between in
-
-
-def _reclaim_staged(table: IcepackTable, entries: list[FileEntry]) -> None:
-    """Remove the staging dir(s) of never-committed entries entirely —
-    including _SUCCESS/.crc markers the entry list doesn't know about.
-    Every write_data_files call stages under its own data/<uuid>/ root, so
-    the first two path components identify it unambiguously."""
-    import shutil
-
-    roots = set()
-    for e in entries:
-        parts = e.path.split(os.sep)
-        if len(parts) >= 2 and parts[0] == "data":
-            roots.add(os.path.join(table.root, parts[0], parts[1]))
-    for r in roots:
-        shutil.rmtree(r, ignore_errors=True)
 
 
 def _pred_column(filters: list[Filter], residual_sql: str | None) -> Column:
@@ -85,6 +80,120 @@ def _describe_pred(filters: list[Filter], residual_sql: str | None) -> str:
     return " AND ".join(parts)
 
 
+@dataclass
+class _Plan:
+    """One DML's view of the table: the snapshot it read, the pending
+    delete files, the pruned candidates, the ones metadata alone proves
+    fully matching (``dropped``) and the rest, which need a row-level look."""
+
+    table: IcepackTable
+    snap: Snapshot
+    deletes: list[FileEntry]  # pending delete files, all of one kind
+    pos: list[FileEntry]  # the positional ones among them
+    pred: Column
+    cand: list[FileEntry]
+    dropped: list[FileEntry]
+    rest: list[FileEntry]
+    report: dict
+
+    def matches(self, files: list[FileEntry]) -> DataFrame:
+        """The rows of ``files`` the predicate holds on, with their
+        (``__abs``, ``__idx``) address; rows pending positional deletes
+        shadow are resolved out, so a deleted row can never re-match."""
+        return self.table.read_with_positions(
+            files, self.snap.schema, self.pos
+        ).where(F.coalesce(self.pred, F.lit(False)))
+
+    def locate(self) -> list[FileEntry]:
+        """The ``rest`` files holding at least one matching row. Rows that
+        pending equality deletes shadow still count: a hit file is only
+        rewritten, through :meth:`read_live`, never trusted for a count."""
+        if not self.rest:
+            return []
+        hits = self.table.files_holding(self.rest, self.matches(self.rest))
+        return [e for e in self.rest if e.path in hits]
+
+    def read_live(self, files: list[FileEntry]) -> DataFrame:
+        return self.table.read_live(
+            files,
+            self.deletes,
+            self.snap.schema,
+            self.snap.summary.get("eq_delete_cols") or [],
+        )
+
+    def commit(
+        self, op: str, added: list[FileEntry], removed: list[FileEntry], summary: dict
+    ) -> int:
+        return self.table.commit(
+            op,
+            added=added,
+            removed_paths=[e.path for e in removed],
+            # snapshot-isolation DML with optimistic concurrency: rebase over
+            # concurrent appends (rows this predicate never saw stay
+            # untouched), refuse if a candidate file was removed (a rewrite
+            # would resurrect its old rows; positions would dangle) or a
+            # delete file landed since the read (a fresh seq would un-shadow
+            # its rows; two kinds would break homogeneity) — see commit()
+            requirements=[
+                ("files-live", [e.path for e in self.cand]),
+                ("no-new-deletes", self.snap.version),
+            ],
+            summary={"predicate": self.report["predicate"], **summary},
+        )
+
+
+def _plan(
+    table: IcepackTable,
+    filters: list[Filter] | None,
+    residual_sql: str | None,
+    metadata_drops: bool,
+) -> _Plan:
+    """Snapshot, delete split, pruning and (for DELETE) metadata-only drops.
+    ``residual_sql`` disables the drops: arbitrary SQL can't be proven from
+    stats."""
+    snap = table.snapshot()
+    data, eq, pos = table._split_deletes(table.files(snap.version))
+    filters = filters or []
+    pred = _pred_column(filters, residual_sql)  # validates non-empty early
+    cand = table.prune_files(data, filters, snap.schema)
+    dropped: list[FileEntry] = []
+    if metadata_drops and filters and not residual_sql:
+        # a file with pending pos-deleted rows is NOT fully matching — its
+        # shadowed rows are logically gone already and must not be
+        # double-counted by a metadata drop
+        named = set(table.pos_delete_targets(pos)) if pos else set()
+        dropped = [
+            e
+            for e in cand
+            if e.path not in named
+            and all(e.must_match_all(c, op, v) for (c, op, v) in filters)
+        ]
+    drop_paths = {e.path for e in dropped}
+    rest = [e for e in cand if e.path not in drop_paths]
+    report = {
+        "files_pruned": len(data) - len(cand),
+        "files_scanned": len(rest),
+        "predicate": _describe_pred(filters, residual_sql),
+    }
+    if metadata_drops:
+        report["files_dropped_metadata_only"] = len(dropped)
+    return _Plan(table, snap, eq + pos, pos, pred, cand, dropped, rest, report)
+
+
+def _assignment_types(table: IcepackTable, assignments: dict[str, Any]) -> dict:
+    """The declared type of every column, after checking that each
+    assignment targets one."""
+    field_types = {f.name: f.dataType for f in table.snapshot().schema.fields}
+    bad = sorted(set(assignments) - set(field_types))
+    if bad:
+        raise ValueError(f"unknown column(s) in assignments: {bad}")
+    return field_types
+
+
+def _expr(e: Any) -> Column:
+    return F.expr(e) if isinstance(e, str) else e
+
+
 def delete_where(
     table: IcepackTable,
     filters: list[Filter] | None = None,
@@ -92,105 +201,41 @@ def delete_where(
     num_files: int | None = None,
 ) -> dict:
     """``DELETE FROM table WHERE <pred>``: metadata-drop fully-matching
-    files, rewrite partially-matching ones, one atomic commit.
+    files, rewrite the files holding a match, one atomic commit.
 
     ``filters``: [(col, op, value)] — the prunable conjunction (same ops as
     ``scan``). ``residual_sql``: extra SQL predicate ANDed in row-level
-    (disables metadata-only drops — arbitrary SQL can't be proven from
-    stats). SQL null semantics: rows where the predicate is NULL survive.
+    (disables metadata-only drops). SQL null semantics: rows where the
+    predicate is NULL survive.
 
-    Returns a report dict; ``version`` is None when the delete provably
-    matched nothing (no commit, staged bytes reclaimed)."""
-    snap = table.snapshot()
-    data, deletes, pos_pending = table._split_deletes(table.files(snap.version))
-    filters = filters or []
-    pred = _pred_column(filters, residual_sql)  # validates non-empty early
-
-    cand = table.prune_files(data, filters, snap.schema)
-    pos_named = (
-        set(table.pos_delete_targets(pos_pending)) if pos_pending else set()
-    )
-    droppable = (
-        []
-        if residual_sql
-        else [
-            e
-            for e in cand
-            if filters
-            # a file with pending pos-deleted rows is NOT fully matching —
-            # its shadowed rows are logically gone already and must not be
-            # double-counted by a metadata drop
-            and e.path not in pos_named
-            and all(e.must_match_all(c, op, v) for (c, op, v) in filters)
-        ]
-    )
-    drop_paths = {e.path for e in droppable}
-    rewrite = [e for e in cand if e.path not in drop_paths]
-
+    Returns a report dict; ``version`` is None when the delete matched
+    nothing (no write, no commit)."""
+    plan = _plan(table, filters, residual_sql, metadata_drops=True)
+    hit = plan.locate()
+    report = {**plan.report, "files_rewritten": len(hit)}
+    if not plan.dropped and not hit:
+        return {"version": None, "rows_deleted": 0, **report}
     added: list[FileEntry] = []
-    rows_gross = sum(e.rows for e in rewrite)
-    rows_kept = 0
-    if rewrite:
-        # pending MoR deletes resolved: the rewrite stamps a fresh (higher)
-        # data-sequence number and fresh files, so an unresolved shadowed
-        # row would RESURRECT
-        df = table.read_live(
-            rewrite,
-            deletes + pos_pending,
-            snap.schema,
-            snap.summary.get("eq_delete_cols") or [],
-        )
-        kept_df = df.where(~F.coalesce(pred, F.lit(False)))
+    if hit:
+        kept = plan.read_live(hit).where(~F.coalesce(plan.pred, F.lit(False)))
         # deletes only re-file rows the table already validated
         added = table.write_data_files(
-            kept_df, num_files=num_files, enforce_constraints=False
+            kept, num_files=num_files, enforce_constraints=False
         )
-        rows_kept = sum(e.rows for e in added)
-
-    # Provable no-op: nothing droppable, no pending MoR deletes muddying the
-    # gross/kept arithmetic, and the rewrite kept every row — skip the commit
-    # and reclaim the staged bytes instead of churning the manifest.
-    if not droppable and not deletes and not pos_pending and rows_kept == rows_gross:
-        _reclaim_staged(table, added)
-        return {
-            "version": None,
-            "rows_deleted": 0,
-            "files_scanned": len(rewrite),
-            "files_dropped_metadata_only": 0,
-            "files_rewritten": 0,
-            "files_pruned": len(data) - len(cand),
-            "predicate": _describe_pred(filters, residual_sql),
-        }
-
-    version = table.commit(
+    removed = plan.dropped + hit
+    version = plan.commit(
         "delete",
-        added=added,
-        removed_paths=[e.path for e in droppable] + [e.path for e in rewrite],
-        # snapshot-isolation DML with optimistic concurrency: rebase over
-        # concurrent appends (rows this predicate never saw stay untouched —
-        # Iceberg's snapshot-isolation DELETE), refuse if a candidate file
-        # was removed or a delete file landed since the read (see commit())
-        requirements=[
-            ("files-live", [e.path for e in cand]),
-            ("no-new-deletes", snap.version),
-        ],
-        summary={
-            "predicate": _describe_pred(filters, residual_sql),
-            "files_dropped_metadata_only": len(droppable),
-            "files_rewritten": len(rewrite),
+        added,
+        removed,
+        {
+            "files_dropped_metadata_only": len(plan.dropped),
+            "files_rewritten": len(hit),
         },
     )
-    return {
-        "version": version,
-        # gross arithmetic: with pending MoR deletes resolved at read this
-        # also counts previously-shadowed rows (they leave the manifest too)
-        "rows_deleted": sum(e.rows for e in droppable) + rows_gross - rows_kept,
-        "files_scanned": len(rewrite),
-        "files_dropped_metadata_only": len(droppable),
-        "files_rewritten": len(rewrite),
-        "files_pruned": len(data) - len(cand),
-        "predicate": _describe_pred(filters, residual_sql),
-    }
+    # gross arithmetic: with pending MoR deletes resolved at read this also
+    # counts previously-shadowed rows (they leave the manifest too)
+    rows_deleted = sum(e.rows for e in removed) - sum(e.rows for e in added)
+    return {"version": version, "rows_deleted": rows_deleted, **report}
 
 
 def _fold_eq_deletes(table: IcepackTable) -> None:
@@ -212,7 +257,7 @@ def _write_pos_delete_file(
     """Stage ONE positional-delete file from (``__abs``, ``__idx``) rows:
     URIs map back to manifest-relative paths through a broadcast of the
     candidate list (driver-side, exact), sorted (file, pos) so footer stats
-    stay tight. Returns the staged entries re-tagged ``pos_deletes``."""
+    stay tight."""
     mapping = table.spark.createDataFrame(
         [(table._file_uri(e.path), e.path) for e in cand],
         "__abs string, __relfile string",
@@ -226,10 +271,9 @@ def _write_pos_delete_file(
         .orderBy(POS_FILE_COL, POS_IDX_COL)
         .coalesce(1)
     )
-    added = table.write_data_files(pos_df, enforce_constraints=False)
-    for e in added:
-        e.content = "pos_deletes"
-    return added
+    return table.write_data_files(
+        pos_df, content="pos_deletes", enforce_constraints=False
+    )
 
 
 def delete_where_mor(
@@ -243,7 +287,7 @@ def delete_where_mor(
     their files.
 
     The copy-on-write twin (:func:`delete_where`) re-encodes every byte of
-    every partially-matching file; at 100 TB of image rows a predicate that
+    every file holding a match; at 100 TB of image rows a predicate that
     deletes 0.1% of rows scattered across the table makes that a full-table
     rewrite. This path writes O(matched rows) — a few longs per deleted
     row — and defers the rewrite to ``apply_deletes`` (policy-batched via
@@ -252,78 +296,28 @@ def delete_where_mor(
     Same predicate surface and report shape as ``delete_where``; identical
     visible rows afterwards (pinned by tests/test_pos_deletes.py parity)."""
     _fold_eq_deletes(table)
-    snap = table.snapshot()
-    data, _eq, pos_pending = table._split_deletes(table.files(snap.version))
-    filters = filters or []
-    pred = _pred_column(filters, residual_sql)  # validates non-empty early
-
-    cand = table.prune_files(data, filters, snap.schema)
-    pos_named = (
-        set(table.pos_delete_targets(pos_pending)) if pos_pending else set()
-    )
-    # metadata-only drops still beat a pos-delete file — but a file with
-    # pending pos rows must stay row-level (dropping it would strand its
-    # positions and break the metadata-only count arithmetic)
-    droppable = (
-        []
-        if residual_sql
-        else [
-            e
-            for e in cand
-            if filters
-            and e.path not in pos_named
-            and all(e.must_match_all(c, op, v) for (c, op, v) in filters)
-        ]
-    )
-    drop_paths = {e.path for e in droppable}
-    rewrite = [e for e in cand if e.path not in drop_paths]
-
+    plan = _plan(table, filters, residual_sql, metadata_drops=True)
     added: list[FileEntry] = []
-    if rewrite:
-        # pending positions resolved out: a row a previous MoR DML already
-        # deleted can never re-match
-        df = table.read_with_positions(rewrite, snap.schema, pos_pending)
-        matched = df.where(F.coalesce(pred, F.lit(False))).select("__abs", "__idx")
-        added = _write_pos_delete_file(table, matched, rewrite)
+    if plan.rest:
+        matched = plan.matches(plan.rest).select("__abs", "__idx")
+        added = _write_pos_delete_file(table, matched, plan.rest)
     rows_deleted = sum(e.rows for e in added)
-
-    if not droppable and rows_deleted == 0:
-        return {
-            "version": None,
-            "rows_deleted": 0,
-            "files_scanned": len(rewrite),
-            "files_dropped_metadata_only": 0,
-            "pos_delete_files": 0,
-            "files_pruned": len(data) - len(cand),
-            "predicate": _describe_pred(filters, residual_sql),
-        }
-
-    version = table.commit(
+    report = {**plan.report, "pos_delete_files": len(added)}
+    if not plan.dropped and not added:
+        return {"version": None, "rows_deleted": 0, **report}
+    version = plan.commit(
         "delete-pos",
-        added=added,
-        removed_paths=[e.path for e in droppable],
-        # positions address candidate files BY PATH: a concurrent rewrite of
-        # one (compact/cluster/merge) re-files its rows and this delete's
-        # pairs would dangle — the matched rows would silently survive.
-        # A delete file landing meanwhile breaks delete-kind homogeneity.
-        requirements=[
-            ("files-live", [e.path for e in cand]),
-            ("no-new-deletes", snap.version),
-        ],
-        summary={
-            "predicate": _describe_pred(filters, residual_sql),
-            "files_dropped_metadata_only": len(droppable),
+        added,
+        plan.dropped,
+        {
+            "files_dropped_metadata_only": len(plan.dropped),
             "rows_pos_deleted": rows_deleted,
         },
     )
     return {
         "version": version,
-        "rows_deleted": sum(e.rows for e in droppable) + rows_deleted,
-        "files_scanned": len(rewrite),
-        "files_dropped_metadata_only": len(droppable),
-        "pos_delete_files": len(added),
-        "files_pruned": len(data) - len(cand),
-        "predicate": _describe_pred(filters, residual_sql),
+        "rows_deleted": sum(e.rows for e in plan.dropped) + rows_deleted,
+        **report,
     }
 
 
@@ -345,76 +339,45 @@ def update_where_mor(
     co-committed with the pos-delete file; positions address only the OLD
     physical rows by (file, row-index), so the commit can never shadow its
     own output — the path-exact analogue of the eq-delete seq scoping."""
-    snap0 = table.snapshot()
-    field_types = {f.name: f.dataType for f in snap0.schema.fields}
-    bad = sorted(set(assignments) - set(field_types))
-    if bad:
-        raise ValueError(f"unknown column(s) in assignments: {bad}")
+    field_types = _assignment_types(table, assignments)
     _fold_eq_deletes(table)
-    snap = table.snapshot()
-    data, _eq, pos_pending = table._split_deletes(table.files(snap.version))
-    filters = filters or []
-    pred = _pred_column(filters, residual_sql)
+    plan = _plan(table, filters, residual_sql, metadata_drops=False)
+    report = plan.report
+    if not plan.cand:
+        return {"version": None, "rows_updated": 0, "pos_delete_files": 0, **report}
 
-    cand = table.prune_files(data, filters, snap.schema)
-    report_base = {
-        "files_pruned": len(data) - len(cand),
-        "predicate": _describe_pred(filters, residual_sql),
-    }
-    if not cand:
-        return {"version": None, "rows_updated": 0, "pos_delete_files": 0,
-                **report_base}
-
-    df = table.read_with_positions(cand, snap.schema, pos_pending)
     # matched rows only — bounded by the predicate's churn, read twice
     # (postimage data files + pos-delete file); unpersisted after both
-    matched = df.where(F.coalesce(pred, F.lit(False))).cache()
-    new_cols = {
-        col: (F.expr(expr) if isinstance(expr, str) else expr).cast(
-            field_types[col]
-        )
-        for col, expr in assignments.items()
-    }
-    post = matched.withColumns(new_cols).drop("__abs", "__idx")
-    added_data = table.write_data_files(
-        post,
-        num_files=num_files,
-        partition_by=table.partition_spec() or None,
-        enforce_constraints=True,  # an UPDATE can introduce violations
-    )
+    matched = plan.matches(plan.cand).cache()
+    post = matched.withColumns(
+        {c: _expr(e).cast(field_types[c]) for c, e in assignments.items()}
+    ).drop("__abs", "__idx")
+    # an UPDATE can introduce CHECK violations: constraints stay enforced
+    added_data = table.write_data_files(post, num_files=num_files)
     rows_updated = sum(e.rows for e in added_data)
     if rows_updated == 0:
         matched.unpersist()
-        return {"version": None, "rows_updated": 0, "pos_delete_files": 0,
-                **report_base, "files_scanned": len(cand)}
+        return {"version": None, "rows_updated": 0, "pos_delete_files": 0, **report}
 
     pos_entries = _write_pos_delete_file(
-        table, matched.select("__abs", "__idx"), cand
+        table, matched.select("__abs", "__idx"), plan.cand
     )
     matched.unpersist()
     pos_rows = sum(e.rows for e in pos_entries)
     if pos_rows != rows_updated:
         # the URI mapping dropped rows — abort loudly before committing a
         # snapshot that would double-count the updated rows
-        _reclaim_staged(table, added_data + pos_entries)
+        table.discard_staged(added_data + pos_entries)
         raise RuntimeError(
             f"update_where_mor position mapping mismatch: {rows_updated} "
             f"updated rows but {pos_rows} positions staged"
         )
 
-    version = table.commit(
+    version = plan.commit(
         "update-mor",
-        added=added_data + pos_entries,
-        # same contract as delete-pos: path-addressed positions die with a
-        # concurrent rewrite of a candidate file (the update would apply
-        # AND its preimage rows would survive — a duplicate, worse than a
-        # lost write), and a concurrent delete file breaks homogeneity
-        requirements=[
-            ("files-live", [e.path for e in cand]),
-            ("no-new-deletes", snap.version),
-        ],
-        summary={
-            "predicate": report_base["predicate"],
+        added_data + pos_entries,
+        [],
+        {
             "assignments": {k: str(v) for k, v in assignments.items()},
             "rows_updated": rows_updated,
         },
@@ -423,8 +386,7 @@ def update_where_mor(
         "version": version,
         "rows_updated": rows_updated,
         "pos_delete_files": len(pos_entries),
-        "files_scanned": len(cand),
-        **report_base,
+        **report,
     }
 
 
@@ -436,7 +398,7 @@ def update_where(
     num_files: int | None = None,
 ) -> dict:
     """``UPDATE table SET <assignments> WHERE <pred>``: rewrite only the
-    files the predicate might touch.
+    files holding a matching row.
 
     ``assignments``: {column: SQL expression string | Column}. Expressions
     see the pre-update row (standard UPDATE semantics — all assignments
@@ -444,82 +406,41 @@ def update_where(
     Assigned values are cast back to the column's declared type; CHECK
     constraints are enforced on the rewritten rows (an UPDATE can introduce
     violations, unlike DELETE). Updated-row count rides the write job via
-    ``observe`` — no extra scan."""
-    snap = table.snapshot()
-    schema = snap.schema
-    field_types = {f.name: f.dataType for f in schema.fields}
-    bad = sorted(set(assignments) - set(field_types))
-    if bad:
-        raise ValueError(f"unknown column(s) in assignments: {bad}")
-    data, deletes, pos_pending = table._split_deletes(table.files(snap.version))
-    filters = filters or []
-    pred = _pred_column(filters, residual_sql)
+    ``observe``."""
+    field_types = _assignment_types(table, assignments)
+    plan = _plan(table, filters, residual_sql, metadata_drops=False)
+    hit = plan.locate()
+    report = {**plan.report, "files_rewritten": len(hit)}
+    if not hit:
+        return {"version": None, "rows_updated": 0, **report}
 
-    cand = table.prune_files(data, filters, snap.schema)
-    report_base = {
-        "files_pruned": len(data) - len(cand),
-        "files_rewritten": len(cand),
-        "predicate": _describe_pred(filters, residual_sql),
-    }
-    if not cand:
-        return {"version": None, "rows_updated": 0, **report_base}
-
-    df = table.read_live(
-        cand,
-        deletes + pos_pending,
-        schema,
-        snap.summary.get("eq_delete_cols") or [],
-    )
-    hit = F.coalesce(pred, F.lit(False))
+    df = plan.read_live(hit)
+    match = F.coalesce(plan.pred, F.lit(False))
     # all WHEN branches read OLD values: build every assignment against df's
     # columns before any withColumn rebinds them
     new_cols = {
-        col: F.when(
-            hit, F.expr(expr) if isinstance(expr, str) else expr
-        )
-        .otherwise(F.col(col))
-        .cast(field_types[col])
-        for col, expr in assignments.items()
+        c: F.when(match, _expr(e)).otherwise(F.col(c)).cast(field_types[c])
+        for c, e in assignments.items()
     }
-    from pyspark.sql import Observation
-
     obs = Observation()
     # observe BEFORE the projection: an assignment that modifies a predicate
     # column (SET g = g + 100 WHERE g = 2) must count hits against the OLD
     # values — observed after withColumns, the metric re-evaluates the
-    # predicate on updated rows, reads 0, and the no-op short-circuit
-    # silently reclaims a real update (caught by test_pos_deletes parity)
+    # predicate on updated rows and reads 0
     out = df.observe(
-        obs, F.sum(hit.cast("long")).alias("rows_updated")
+        obs, F.sum(match.cast("long")).alias("rows_updated")
     ).withColumns(new_cols)
-    added = table.write_data_files(
-        out, num_files=num_files, enforce_constraints=True
-    )
+    added = table.write_data_files(out, num_files=num_files)
     rows_updated = int(obs.get["rows_updated"] or 0)
 
-    if rows_updated == 0 and not deletes and not pos_pending:
-        # provable no-op (the conservative manifest pruning over-selected):
-        # reclaim staged bytes, leave the manifest alone
-        _reclaim_staged(table, added)
-        return {"version": None, "rows_updated": 0, **report_base,
-                "files_rewritten": 0, "files_scanned": len(cand)}
-
-    version = table.commit(
+    version = plan.commit(
         "update",
-        added=added,
-        removed_paths=[e.path for e in cand],
-        # snapshot-isolation UPDATE: rebase over concurrent appends, refuse
-        # if a candidate was removed (rewrite would resurrect its old rows)
-        # or a delete file landed (fresh seq would un-shadow its rows)
-        requirements=[
-            ("files-live", [e.path for e in cand]),
-            ("no-new-deletes", snap.version),
-        ],
-        summary={
-            "predicate": report_base["predicate"],
+        added,
+        hit,
+        {
             "assignments": {k: str(v) for k, v in assignments.items()},
             "rows_updated": rows_updated,
-            "files_rewritten": len(cand),
+            "files_rewritten": len(hit),
         },
     )
-    return {"version": version, "rows_updated": rows_updated, **report_base}
+    return {"version": version, "rows_updated": rows_updated, **report}

@@ -260,16 +260,14 @@ def _rewrite(
         # splits track spark.sql.files.maxPartitionBytes; small outputs are
         # compaction's job (and the reference's own dominant failure mode —
         # which this engine compacts natively).
-        pspec = table.partition_spec() or None
         resolved, inserts = apply_winners_split(target, winners, keys)
-        # partitioned tables keep their hive layout through the rewrite
-        added = table.write_data_files(resolved, partition_by=pspec)  # zero-row splits dropped+unlinked
+        added = table.write_data_files(resolved)  # zero-row splits dropped+unlinked
         if target_rows_per_file:
             n_ins_files = max(1, math.ceil(n_winners / target_rows_per_file))
         else:
             n_ins_files = max(1, round(batch_bytes / table.DEFAULT_TARGET_FILE_BYTES))
         ins_df = inserts.repartitionByRange(n_ins_files, *kcols).sortWithinPartitions(*keys)
-        added += table.write_data_files(ins_df, partition_by=pspec)
+        added += table.write_data_files(ins_df)
         return added
     merged = apply_winners(target, winners, keys, broadcast_source=small_batch)
     # Range-partition the rewrite on the key and sort within partitions:
@@ -282,7 +280,7 @@ def _rewrite(
     else:
         num_files = max(1, round(touched_bytes / table.DEFAULT_TARGET_FILE_BYTES)) or 1
     merged = merged.repartitionByRange(num_files, *kcols).sortWithinPartitions(*keys)
-    return table.write_data_files(merged, partition_by=table.partition_spec() or None)
+    return table.write_data_files(merged)
 
 
 def merge_into_table(

@@ -17,10 +17,9 @@ the first file. One driver-side header read (a few hundred bytes) pins the
 schema; no record crosses the driver.
 
 Supported: all primitive types, record/array/map/enum/fixed/union,
-nullable unions, null + deflate + snappy codecs (snappy via the engine's
-pure-Python block-format codec in sources/snappy_codec.py, with the Avro
-spec's big-endian CRC32-of-uncompressed block check), timestamp-millis/
-micros and date logical types.
+nullable unions, null + deflate + snappy codecs (snappy through pyarrow's
+block-format codec, with the Avro spec's big-endian CRC32-of-uncompressed
+block check), timestamp-millis/micros and date logical types.
 """
 
 from __future__ import annotations
@@ -200,6 +199,35 @@ def parse_header(buf: io.BytesIO) -> tuple[dict, str, bytes]:
     return schema, codec, sync
 
 
+def snappy_compress(data: bytes) -> bytes:
+    """One snappy block-format stream (no Avro CRC framing)."""
+    import pyarrow as pa
+
+    return pa.Codec("snappy").compress(data, asbytes=True)
+
+
+def snappy_decompress(data: bytes) -> bytes:
+    """Decode one snappy block-format stream. The codec needs the output
+    size up front: it is the stream's own unsigned varint preamble. Every
+    corruption, a truncated preamble included, raises ValueError."""
+    import pyarrow as pa
+
+    size = shift = 0
+    for b in data[:5]:  # a 32-bit length takes at most 5 varint bytes
+        size |= (b & 0x7F) << shift
+        if not b & 0x80:
+            break
+        shift += 7
+    else:
+        raise ValueError("corrupt snappy block: truncated length preamble")
+    try:
+        return pa.Codec("snappy").decompress(
+            data, decompressed_size=size, asbytes=True
+        )
+    except OSError as exc:
+        raise ValueError(f"corrupt snappy block: {exc}") from exc
+
+
 def read_ocf_bytes(data: bytes) -> tuple[dict, list[Any]]:
     """Decode a whole OCF blob → (writer schema, records)."""
     buf = io.BytesIO(data)
@@ -220,10 +248,8 @@ def read_ocf_bytes(data: bytes) -> tuple[dict, list[Any]]:
         elif codec == "snappy":
             # Avro spec: snappy blocks carry a trailing 4-byte BIG-endian
             # CRC32 of the UNCOMPRESSED data
-            from .snappy_codec import decompress as _snappy_decompress
-
             crc = int.from_bytes(block[-4:], "big")
-            block = _snappy_decompress(block[:-4])
+            block = snappy_decompress(block[:-4])
             if zlib.crc32(block) & 0xFFFFFFFF != crc:
                 raise ValueError("avro snappy block CRC mismatch (corrupt block)")
         bbuf = io.BytesIO(block)
@@ -383,10 +409,8 @@ def write_ocf(
             c = zlib.compressobj(9, zlib.DEFLATED, -15)
             payload = c.compress(payload) + c.flush()
         elif codec == "snappy":
-            from .snappy_codec import compress as _snappy_compress
-
             crc = zlib.crc32(payload) & 0xFFFFFFFF
-            payload = _snappy_compress(payload) + crc.to_bytes(4, "big")
+            payload = snappy_compress(payload) + crc.to_bytes(4, "big")
         _write_long(out, len(chunk))
         _write_long(out, len(payload))
         out.extend(payload)

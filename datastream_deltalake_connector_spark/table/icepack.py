@@ -48,6 +48,7 @@ import functools as _functools
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -935,6 +936,24 @@ class IcepackTable:
         )
         return df.join(F.broadcast(self._pos_delete_df(pos_deletes)), cond, "left_anti")
 
+    def files_holding(self, entries: list[FileEntry], rows: DataFrame) -> dict[str, int]:
+        """{manifest path: row count} for the ``entries`` holding at least
+        one of ``rows`` — a :meth:`read_with_positions` frame of those
+        entries narrowed by a predicate or a join. One ``groupBy`` job; its
+        scan reads only the columns the narrowing names. A URI that maps to
+        no entry fails loudly: a hit set emptied by URI drift would skip a
+        rewrite and let matched rows survive."""
+        by_uri = {self._file_uri(e.path): e.path for e in entries}
+        out: dict[str, int] = {}
+        for uri, n in rows.groupBy("__abs").count().collect():
+            if uri not in by_uri:
+                raise RuntimeError(
+                    f"data-file URI mapping failed: Spark reports {uri!r}, "
+                    "which names no candidate file"
+                )
+            out[by_uri[uri]] = n
+        return out
+
     @staticmethod
     def _ranges_overlap(a: FileEntry, b: FileEntry, cols: list[str]) -> bool:
         """Conservative: False only when the two files' [min,max] stats PROVE
@@ -1247,19 +1266,22 @@ class IcepackTable:
     def write_data_files(
         self,
         df: DataFrame,
-        sort_within_partitions: list[str] | None = None,
         num_files: int | None = None,
-        partition_by: list[str] | None = None,
+        content: str = "data",
         enforce_constraints: bool = True,
     ) -> list[FileEntry]:
-        """Stage a DataFrame as immutable parquet data files; returns manifest
-        entries with footer-derived stats. Does NOT commit.
+        """Stage a DataFrame as immutable parquet files of one ``content``
+        kind (``"data"``, ``"eq_deletes"`` or ``"pos_deletes"``); returns
+        manifest entries with footer-derived stats, tagged with that kind.
+        Does NOT commit.
 
+        The writer owns the table layout: data files always take the
+        table's partition spec, delete files are always unpartitioned.
         ``enforce_constraints=False`` skips CHECK validation — for
         maintenance rewrites (compact/cluster/apply-deletes), which only
         re-file rows the table already validated.
 
-        ``partition_by`` writes hive-layout subdirectories (``col=val/``) —
+        A partition spec writes hive-layout subdirectories (``col=val/``) —
         but, unlike plain ``partitionBy``, the partition columns are KEPT in
         the data files (written through a ``__p_<col>`` duplicate that only
         names the directory). That makes every file self-describing: scans
@@ -1275,16 +1297,15 @@ class IcepackTable:
         expired snapshots — left in place they leak forever."""
         if enforce_constraints:
             self._enforce_check_constraints(df)
+        partition_by = self.partition_spec() if content == "data" else []
         stage = f"data/{uuid.uuid4().hex}"
         out_dir = os.path.join(self.root, stage)
         if num_files is not None:
-            # with partition_by, each of the num_files round-robin tasks
+            # with a partition spec, each of the num_files round-robin tasks
             # splits by partition value at write time -> ~num_files files
             # PER hive dir (hashing on the partition cols instead would
             # funnel each value into a single task/file)
             df = df.repartition(num_files) if num_files > 1 else df.coalesce(1)
-        if sort_within_partitions:
-            df = df.sortWithinPartitions(*sort_within_partitions)
         if partition_by:
             from .transforms import parse_spec
 
@@ -1303,19 +1324,30 @@ class IcepackTable:
         writer.options(**PARQUET_WRITE_OPTIONS).mode("overwrite").parquet(out_dir)
         if partition_by:
             self._strip_partition_prefix(out_dir)
-        entries = self.collect_file_entries(stage)
         kept = []
-        for e in entries:
+        for e in self.collect_file_entries(stage):
             if e.rows > 0:
+                e.content = content
                 kept.append(e)
             else:
                 os.unlink(os.path.join(self.root, e.path))
         if not kept:
             # nothing staged: remove the empty staging dir too
-            import shutil
-
             shutil.rmtree(out_dir, ignore_errors=True)
         return kept
+
+    def discard_staged(self, entries: list[FileEntry]) -> None:
+        """Remove the staging dir(s) of never-committed entries entirely —
+        including _SUCCESS/.crc markers the entry list doesn't know about.
+        Every :meth:`write_data_files` call stages under its own
+        data/<uuid>/ root, so the first two path components identify it."""
+        roots = set()
+        for e in entries:
+            parts = e.path.split(os.sep)
+            if len(parts) >= 2 and parts[0] == "data":
+                roots.add(os.path.join(self.root, parts[0], parts[1]))
+        for r in roots:
+            shutil.rmtree(r, ignore_errors=True)
 
     # Below this count, footer stats are read on the driver with a thread
     # pool: a local footer read is ~0.2 ms (pyarrow releases the GIL), while
@@ -2012,16 +2044,12 @@ class IcepackTable:
             )
 
     def append(self, df: DataFrame, num_files: int | None = None) -> int:
-        entries = self.write_data_files(
-            df, num_files=num_files, partition_by=self.partition_spec() or None
-        )
+        entries = self.write_data_files(df, num_files=num_files)
         return self.commit("append", added=entries)
 
     def overwrite_all(self, df: DataFrame, num_files: int | None = None) -> int:
         old = [e.path for e in self.files()]
-        entries = self.write_data_files(
-            df, num_files=num_files, partition_by=self.partition_spec() or None
-        )
+        entries = self.write_data_files(df, num_files=num_files)
         return self.commit("overwrite", added=entries, removed_paths=old)
 
     def rollback(self, version: int) -> int:

@@ -488,7 +488,7 @@ def test_maybe_compact_policy(spark, tmp_path):
         F.lit(0).cast("long").alias("datastream_metadata_change_seq"),
     )
     added = pt.write_data_files(
-        pbase.repartition(3), partition_by=["fmt"]
+        pbase.repartition(3)
     )  # ~3 files per fmt partition (2 fmt values)
     pt.commit("append", added=added, removed_paths=[], expected_parent=0)
     per_part: dict = {}

@@ -11,9 +11,12 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from datastream_deltalake_connector_spark.operators.copy_into import copy_into
+from datastream_deltalake_connector_spark.operators.generic_merge import merge_into
 from datastream_deltalake_connector_spark.operators.mor import merge_into_table_mor
 from datastream_deltalake_connector_spark.operators.rowops import (
     delete_where,
+    delete_where_mor,
     update_where,
 )
 from datastream_deltalake_connector_spark.sources.pyds import (
@@ -29,9 +32,14 @@ PKG = Path(__file__).resolve().parents[1] / "datastream_deltalake_connector_spar
 def test_delete_resolution_lives_only_in_icepack_table():
     """A second copy of the delete-resolving read cannot come back
     unnoticed: only table/icepack.py may name the resolvers or read
-    parquet row ordinals."""
+    parquet row addresses."""
     owner = PKG / "table" / "icepack.py"
-    needles = ("_scan_with_deletes", "_scan_with_pos_deletes", "_metadata.row_index")
+    needles = (
+        "_scan_with_deletes",
+        "_scan_with_pos_deletes",
+        "_metadata.row_index",
+        "_metadata.file_path",
+    )
     offenders = [
         f"{path.relative_to(PKG)}: {needle}"
         for path in sorted(PKG.rglob("*.py"))
@@ -147,6 +155,106 @@ def test_dml_prunes_on_bucket_transform(spark, tmp_path):
     update_where(twin, {"v": "v + 1000"}, isin)
     assert rep["files_pruned"] > floor and rep["rows_updated"] == 2
     assert _rows(part) == _rows(twin)
+
+
+def _upsert_one_insert_one(t):
+    src = t.spark.createDataFrame(
+        [(5, "u5", 555.0), (500, "u500", 1.0)], "id long, uid string, v double"
+    )
+    return merge_into(
+        t,
+        src,
+        "id",
+        matched=[{"action": "update", "condition": None, "set": "*"}],
+        not_matched=[{"action": "insert", "condition": None, "values": "*"}],
+    )
+
+
+def _copy_two_rows(t):
+    src = t.root + "-drop"
+    t.spark.createDataFrame(
+        [(300, "u300", 3.0), (301, "u301", 3.5)], "id long, uid string, v double"
+    ).coalesce(1).write.parquet(src + "/a")
+    return copy_into(t, src)
+
+
+@pytest.mark.parametrize(
+    "dml",
+    [
+        lambda t: delete_where(t, [("id", "=", 11.0)]),
+        lambda t: update_where(t, {"v": "v + 1000"}, [("v", "<", 30.0)]),
+        _upsert_one_insert_one,
+        _copy_two_rows,
+    ],
+    ids=["delete_where", "update_where", "merge_into", "copy_into"],
+)
+def test_every_writer_keeps_the_partition_layout(spark, tmp_path, dml):
+    """The table's partition spec is applied by the writer itself, so no
+    DML can forget it: every data file stays under its bucket pair."""
+    part, twin = _bucketed_and_twin(spark, tmp_path)
+    dml(part)
+    dml(twin)
+    data = [e for e in part.files() if e.content == "data"]
+    assert data and all(e.partition for e in data)
+    assert _rows(part) == _rows(twin)
+
+
+@pytest.mark.parametrize(
+    "dml",
+    [
+        lambda t: delete_where(t, [("id", "=", "018")]),
+        lambda t: delete_where(t, [("id", "=", 18)]),
+        lambda t: update_where(t, {"v": "v + 1000"}, [("v", "=", 18.0)]),
+    ],
+    ids=["string-probe", "int-probe", "update"],
+)
+def test_cow_dml_rewrites_only_the_file_holding_the_match(spark, tmp_path, dml):
+    """Candidates that survive pruning but hold no matching row are left
+    alone: one matching row, one rewritten file."""
+    part, twin = _bucketed_and_twin(spark, tmp_path)
+    before = {e.path for e in part.files()}
+    rep = dml(part)
+    dml(twin)
+    assert rep["files_rewritten"] == 1
+    assert len(before - {e.path for e in part.files()}) == 1
+    assert _rows(part) == _rows(twin)
+
+
+def test_delete_keeps_later_pruning_intact(spark, tmp_path):
+    """A rewritten file keeps its bucket pair, so a later DML on the other
+    bucketed column prunes as much as on the untouched table."""
+    part, _twin = _bucketed_and_twin(spark, tmp_path)
+    eq = [("uid", "=", "u17")]
+    data = [e for e in part.files() if e.content == "data"]
+    fresh = len(data) - len(part.prune_files(data, eq, part.schema()))
+    delete_where(part, [("id", "=", 18)])
+    rep = update_where(part, {"v": "v + 1000"}, eq)
+    assert rep["rows_updated"] == 1 and rep["files_pruned"] == fresh
+
+
+def test_cow_delete_of_shadowed_rows_commits_nothing(spark, tmp_path):
+    """The locate step reads through pending positional deletes: a CoW
+    delete whose only match is already pos-deleted writes no file and
+    leaves the head where it was."""
+    part, _twin = _bucketed_and_twin(spark, tmp_path)
+    delete_where_mor(part, [("id", "=", 5)])
+    head = part.head_version()
+    files = {e.path for e in part.files()}
+    rep = delete_where(part, [("id", "=", 5)])
+    assert rep["version"] is None and rep["rows_deleted"] == 0
+    assert part.head_version() == head
+    assert {e.path for e in part.files()} == files
+
+
+def test_files_holding_refuses_rows_of_an_unnamed_file(spark, tmp_path):
+    """A row whose file URI maps to none of the entries fails loudly
+    instead of dropping out of the hit set."""
+    part, _twin = _bucketed_and_twin(spark, tmp_path)
+    a, b = [e for e in part.files() if e.content == "data"][:2]
+    rows = part.read_with_positions([b], part.schema())
+    assert part.files_holding([b], rows) == {b.path: b.rows}
+    with pytest.raises(RuntimeError, match="URI mapping"):
+        part.files_holding([a], rows)
 
 
 def test_bucket_prunes_only_on_probes_with_the_column_text(spark, tmp_path):
