@@ -164,8 +164,8 @@ def _merge_upsert_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bloom_cols=["user_id"]`` and appended hash-shuffled (every file's
     key range spans the whole domain — min/max pruning is structurally
     useless, exactly the fresh-ingest layout at 100 TB). The CoW merge
-    then routes candidate finding through the per-file Bloom filters
-    (operators/table_merge.py `_prune_with_blooms`), so the oracle pins
+    then finds its candidate files through the per-file Bloom filters
+    (`IcepackTable.prune_by_keys`, table/icepack.py), so the oracle pins
     the whole bloom build→store→probe→merge path, which must be visible-
     row identical to the plain merge by construction (blooms have no
     false negatives; false positives only widen the rewrite set)."""
@@ -1724,7 +1724,7 @@ GROUP BY o_orderstatus
 
 def _customers_semi_urgent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers with at least one urgent open order (the
-    MERGE touched-file finder's join type, operators/table_merge.py)."""
+    join type of generic MERGE's hit probe, operators/generic_merge.py)."""
     c = _read(spark, sf_dir, "customer")
     o = _read(spark, sf_dir, "orders").where(
         (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "O")

@@ -481,9 +481,6 @@ def bloom_prune_bench(spark, n_images: int = 24000) -> dict:
     from datastream_deltalake_connector_spark.operators.dedup import latest_by_keys
     from datastream_deltalake_connector_spark.operators.merge import SEQ_META, TS_META
     from datastream_deltalake_connector_spark.operators.mor import merge_into_table_mor
-    from datastream_deltalake_connector_spark.operators.table_merge import (
-        prune_candidates,
-    )
     from datastream_deltalake_connector_spark.sources.generator import (
         generate_change_batch,
         generate_images,
@@ -521,13 +518,13 @@ def bloom_prune_bench(spark, n_images: int = 24000) -> dict:
     winners.count()
 
     t0 = time.time()
-    bloom_paths, _ = prune_candidates(entries, winners, "image_id")
+    bloom_kept, _ = t.prune_by_keys(entries, winners, ["image_id"], t.schema())
     bloom_prune_sec = time.time() - t0
     stripped = copy.deepcopy(entries)
     for e in stripped:
         e.stats.get("image_id", {}).pop("bloom", None)
     t0 = time.time()
-    range_paths, _ = prune_candidates(stripped, winners, "image_id")
+    range_kept, _ = t.prune_by_keys(stripped, winners, ["image_id"], t.schema())
     range_prune_sec = time.time() - t0
     winners.unpersist()
 
@@ -551,10 +548,10 @@ def bloom_prune_bench(spark, n_images: int = 24000) -> dict:
         "files": len(entries),
         "sparse_batch_rows": n_sparse,
         "ingest_with_blooms_sec": round(ingest_sec, 3),
-        "bloom_candidate_files": len(bloom_paths),
-        "range_candidate_files": len(range_paths),
+        "bloom_candidate_files": len(bloom_kept),
+        "range_candidate_files": len(range_kept),
         "files_skipped_pct": round(
-            100.0 * (len(range_paths) - len(bloom_paths)) / max(len(range_paths), 1), 1
+            100.0 * (len(range_kept) - len(bloom_kept)) / max(len(range_kept), 1), 1
         ),
         "bloom_prune_sec": round(bloom_prune_sec, 3),
         "range_prune_sec": round(range_prune_sec, 3),

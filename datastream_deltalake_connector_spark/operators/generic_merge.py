@@ -12,18 +12,20 @@ Databricks to provide (README.md:9 ACID notes).
 Scale shape (the 100-TB plan):
 
 - **Touch only files that can contain a match.** Candidate files are
-  pre-pruned driver-side against the source's per-key min/max (one tiny agg
-  job), then resolved EXACTLY by a key-column probe join whose rows carry
-  their file (``IcepackTable.files_holding``) — the rewrite set is "files
-  holding at least one matching key", never the table. A 1k-row source
-  against 10^12 rows rewrites a handful of files. (``NOT MATCHED BY SOURCE`` clauses touch
-  every target row by definition — with one present the candidate set is
-  honestly the whole table, same as Delta.)
+  pre-pruned driver-side against the source's keys
+  (``IcepackTable.prune_by_keys``: ranges, Bloom filters and partition
+  transforms, the pruning the CDC merges use), then resolved EXACTLY by a
+  key-column probe join whose rows carry their file
+  (``IcepackTable.files_holding``) — the rewrite set is "files holding at
+  least one matching key", never the table. A 1k-row source against 10^12
+  rows rewrites a handful of files. (``NOT MATCHED BY SOURCE`` clauses
+  touch every target row by definition — with one present the candidate
+  set is honestly the whole table, same as Delta.)
 - **One pass, no collect of data.** Matched/not-matched/by-source routing,
   clause-condition cascades, update projections, and insert projections all
   ride ONE full-outer join evaluated once; per-action row counts ride
-  ``DataFrame.observe`` on that same job. Only file paths and per-key
-  min/max scalars ever reach the driver.
+  ``DataFrame.observe`` on that same job. Only file paths and the source's
+  key columns ever reach the driver.
 - **ANSI cardinality check.** A target row matched by >1 source rows with
   any MATCHED clause present raises ``MergeCardinalityError`` (key-column
   probe job, no payload shuffle) — silently applying one arbitrary match is
@@ -72,17 +74,6 @@ def _norm_clauses(clauses: Iterable[dict] | None, allowed: set[str]) -> list[dic
             raise ValueError(f"clause action {action!r} not in {sorted(allowed)}")
         out.append(c)
     return out
-
-
-def _source_key_bounds(skeys: DataFrame, on: list[str]) -> dict[str, tuple]:
-    """Per-key min/max of the source — a single tiny agg job whose result
-    drives manifest pruning. len(on) scalars cross the driver, nothing else."""
-    aggs = []
-    for k in on:
-        aggs.append(F.min(k).alias(f"__mn_{k}"))
-        aggs.append(F.max(k).alias(f"__mx_{k}"))
-    row = skeys.agg(*aggs).collect()[0]
-    return {k: (row[f"__mn_{k}"], row[f"__mx_{k}"]) for k in on}
 
 
 def merge_into(
@@ -195,7 +186,7 @@ def merge_into(
                     "(INSERT (cols) VALUES ...) to null-fill the rest"
                 )
 
-    # raw key projection: min/max and the leftsemi probe are both
+    # raw key projection: pruning and the leftsemi probe are both
     # duplicate-insensitive, so a distinct here would only add a shuffle
     skeys = source.select(*on)
 
@@ -204,22 +195,16 @@ def merge_into(
         hit = list(data)  # every target row is in scope by definition
         pruned = probed = 0
     else:
-        bounds = _source_key_bounds(skeys, on)
-        # all-NULL source keys match nothing, but conservatively keep the
-        # file (inserts may still need the cardinality context; rewrite is
-        # skipped later anyway)
-        cand = table.prune_files(
-            data,
-            [(k, "between", bounds[k]) for k in on if bounds[k][0] is not None],
-            snap.schema,
-        )
+        cand, _ = table.prune_by_keys(data, skeys, on, snap.schema)
         pruned = len(data) - len(cand)
         hit = []
         probed = len(cand)
         if cand and (matched or not_matched):
-            # rows pending positional deletes shadow are resolved out: a
-            # deleted row is no match and must not force a rewrite
-            probe = table.read_with_positions(cand, snap.schema, pos_deletes)
+            # rows pending deletes shadow are resolved out: a deleted row is
+            # no match and must not force a rewrite
+            probe = table.read_with_positions(
+                cand, snap.schema, eq_deletes + pos_deletes, eq_cols
+            )
             holding = table.files_holding(
                 cand, probe.join(skeys, on=on, how="leftsemi")
             )

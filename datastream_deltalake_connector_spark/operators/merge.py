@@ -28,10 +28,11 @@ Load-bearing details pinned by the reference's tests:
 Scale notes: the join is an equi-join on the primary key; when the deduped
 batch is small relative to the target, pass ``broadcast_source=True`` to
 force a broadcast-hash join (no shuffle of the target). Otherwise AQE picks
-sort-merge with runtime skew splitting. The icepack-backed merge
-(table/maintenance.py) additionally prunes the target to the manifest files
-whose [min,max] key range can contain a winner, so only touched files are
-read and rewritten.
+sort-merge with runtime skew splitting. The icepack-backed merges
+(operators/table_merge.py, operators/mor.py) additionally prune the target
+to the manifest files whose key ranges, Bloom filters and partition values
+can hold a winner (``IcepackTable.prune_by_keys``), so only touched files
+are read and rewritten.
 """
 
 from __future__ import annotations

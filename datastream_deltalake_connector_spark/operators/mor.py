@@ -14,9 +14,11 @@ on icepack:
 
 1. LWW-dedup the batch (same winners as CoW, MergeQueries.scala:108-121).
 2. Enforce the ``<=`` replay guard (MergeQueries.scala:124-129) by reading
-   ONLY (key, ts) of the manifest-pruned candidate files — parquet column
-   pruning means the image bytes are never touched — resolved through the
-   snapshot's own merge-on-read view so shadowed rows cannot veto.
+   ONLY (key, ts) of the candidate files ``IcepackTable.prune_by_keys``
+   keeps (ranges, Bloom filters and partition transforms, as for the CoW
+   merge) — parquet column pruning means the image bytes are never touched
+   — resolved through the snapshot's own merge-on-read view so shadowed
+   rows cannot veto.
 3. Append the surviving upserts as new data files, and ONE equality-delete
    file holding the keys whose older versions must stop being visible
    (updates and deletes that actually hit an existing row; pure inserts
@@ -102,9 +104,9 @@ def merge_into_table_mor(
     pending_deletes = [e for e in all_entries if e.content == "eq_deletes"]
     entries = [e for e in all_entries if e.content == "data"]
     # shared with the CoW merge: identical candidate sets by construction
-    touched_paths, n_winners = prune_candidates(entries, winners, keys)
-    if n_winners < 0:
-        n_winners = winners.count()
+    cand_entries, n_winners = prune_candidates(
+        entries, winners, keys, table.schema(parent)
+    )
     if n_winners == 0:
         winners.unpersist()
         return None  # ST6 empty-batch short-circuit
@@ -119,9 +121,7 @@ def merge_into_table_mor(
     # earlier compares against nothing (reinsert at any ts — reference
     # insert-clause parity). Catalyst prunes the read to (key, ts): the
     # image bytes in the candidate files are never fetched.
-    if touched_paths:
-        touched_set = set(touched_paths)
-        cand_entries = [e for e in entries if e.path in touched_set]
+    if cand_entries:
         cand_df = table.read_live(
             cand_entries, pending_deletes, table.schema(parent), recorded or keys
         )
@@ -164,7 +164,7 @@ def merge_into_table_mor(
     # footer stats tight so scan-side candidate pruning stays sharp. Sorting
     # after coalesce(1) needs no range-sampling job or shuffle.
     del_entries: list[FileEntry] = []
-    if touched_paths:
+    if cand_entries:
         del_df = tombstones.coalesce(1).sortWithinPartitions(*keys)
         # key-only tombstones aren't table data; constraint columns are
         # validated where they exist (the co-committed data files)
@@ -181,7 +181,7 @@ def merge_into_table_mor(
     journal.log_task(
         stage="merge-mor",
         task_id="batch",
-        files_in=touched_paths,
+        files_in=[e.path for e in cand_entries],
         files_out=[e.path for e in added + del_entries],
         rows_in=n_winners,
         rows_out=sum(e.rows for e in added),
@@ -195,7 +195,7 @@ def merge_into_table_mor(
         expected_parent=table.head_version(),
         summary={
             "batch_winners": n_winners,
-            "candidate_files": len(touched_paths),
+            "candidate_files": len(cand_entries),
             "eq_delete_cols": keys,
             "tombstone_rows": sum(e.rows for e in del_entries),
         },

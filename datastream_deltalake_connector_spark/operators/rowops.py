@@ -18,9 +18,10 @@ Every entry point runs one plan (:func:`_plan`), the 100-TB shape:
   being read — Iceberg's "delete with metadata" fast path. Partition-aligned
   deletes (drop a day, drop a source) cost one manifest write.
 - **Locate.** The remaining candidates are read once through
-  ``read_with_positions`` (pending positional deletes resolved out), and
-  ``IcepackTable.files_holding`` names the files holding a matching row —
-  Delta's "find the touched files first". No hit: no write, no commit.
+  ``read_with_positions`` (pending deletes of either kind resolved out),
+  and ``IcepackTable.files_holding`` names the files holding a matching
+  live row — Delta's "find the touched files first". No hit: no write, no
+  commit.
 - **Emit.** Copy-on-write rewrites exactly the hit files (pending deletes
   resolved through ``read_live``, so shadowed rows can never resurrect
   with the rewrite's fresh data-sequence number); merge-on-read shadows
@@ -89,7 +90,6 @@ class _Plan:
     table: IcepackTable
     snap: Snapshot
     deletes: list[FileEntry]  # pending delete files, all of one kind
-    pos: list[FileEntry]  # the positional ones among them
     pred: Column
     cand: list[FileEntry]
     dropped: list[FileEntry]
@@ -97,29 +97,26 @@ class _Plan:
     report: dict
 
     def matches(self, files: list[FileEntry]) -> DataFrame:
-        """The rows of ``files`` the predicate holds on, with their
-        (``__abs``, ``__idx``) address; rows pending positional deletes
-        shadow are resolved out, so a deleted row can never re-match."""
+        """The live rows of ``files`` the predicate holds on, with their
+        (``__abs``, ``__idx``) address; rows pending deletes shadow are
+        resolved out, so a deleted row can never re-match."""
         return self.table.read_with_positions(
-            files, self.snap.schema, self.pos
+            files, self.snap.schema, self.deletes, self.eq_cols
         ).where(F.coalesce(self.pred, F.lit(False)))
 
+    @property
+    def eq_cols(self) -> list[str]:
+        return self.snap.summary.get("eq_delete_cols") or []
+
     def locate(self) -> list[FileEntry]:
-        """The ``rest`` files holding at least one matching row. Rows that
-        pending equality deletes shadow still count: a hit file is only
-        rewritten, through :meth:`read_live`, never trusted for a count."""
+        """The ``rest`` files holding at least one matching live row."""
         if not self.rest:
             return []
         hits = self.table.files_holding(self.rest, self.matches(self.rest))
         return [e for e in self.rest if e.path in hits]
 
     def read_live(self, files: list[FileEntry]) -> DataFrame:
-        return self.table.read_live(
-            files,
-            self.deletes,
-            self.snap.schema,
-            self.snap.summary.get("eq_delete_cols") or [],
-        )
+        return self.table.read_live(files, self.deletes, self.snap.schema, self.eq_cols)
 
     def commit(
         self, op: str, added: list[FileEntry], removed: list[FileEntry], summary: dict
@@ -177,7 +174,7 @@ def _plan(
     }
     if metadata_drops:
         report["files_dropped_metadata_only"] = len(dropped)
-    return _Plan(table, snap, eq + pos, pos, pred, cand, dropped, rest, report)
+    return _Plan(table, snap, eq + pos, pred, cand, dropped, rest, report)
 
 
 def _assignment_types(table: IcepackTable, assignments: dict[str, Any]) -> dict:
@@ -268,8 +265,11 @@ def _write_pos_delete_file(
             F.col("__relfile").alias(POS_FILE_COL),
             F.col("__idx").alias(POS_IDX_COL),
         )
-        .orderBy(POS_FILE_COL, POS_IDX_COL)
-        .coalesce(1)
+        # one task sorts the few matched rows; orderBy would first run a
+        # range-sampling job over the uncached candidate scan, and
+        # coalesce(1) would run that scan itself in one task
+        .repartition(1)
+        .sortWithinPartitions(POS_FILE_COL, POS_IDX_COL)
     )
     return table.write_data_files(
         pos_df, content="pos_deletes", enforce_constraints=False

@@ -55,7 +55,7 @@ import uuid
 import numpy as np
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -207,7 +207,7 @@ def _footer_stats(
 @_functools.lru_cache(maxsize=32)
 def _delete_key_hashes(abs_path: str, key: str) -> "np.ndarray":
     """Hashed key column of one equality-delete file, memoized: delete files
-    are immutable and capped by DELETE_BLOOM_REFINE_MAX_ROWS total, so every
+    are immutable and capped by KEY_PROBE_MAX_ROWS total, so every
     scan over a table with pending deletes reuses the same arrays instead of
     re-reading and re-hashing parquet per query (review finding)."""
     import pyarrow.parquet as pq
@@ -241,6 +241,62 @@ def _pos_delete_refs(abs_path: str) -> tuple[tuple[str, ...], tuple[int, ...]]:
     )
 
 
+class KeyProbe:
+    """The members of an ``=`` / ``in`` filter, prepared once to probe many
+    files: grouped by kind, each group sorted for range tests by binary
+    search and, for the str and int groups a Bloom filter can answer,
+    hashed once.
+
+    A file may match iff some member passes both its range and its Bloom
+    filter, as if each member were probed alone. A member whose stats form
+    is null or NaN keeps every file: no range comparison can exclude it."""
+
+    def __init__(self, values: Iterable):
+        from ..functions.bloom import _hash_values
+
+        groups: dict[tuple, list] = {}
+        self.keeps_all = False
+        for v in values:
+            j = _json_safe(v)
+            if j is None or j != j:
+                self.keeps_all = True
+                continue
+            # blooms hash the canonical text of str/int columns
+            # (_footer_stats); a probe of another type (42.0, True) hashes
+            # other text and would FALSELY prune
+            kind = None
+            if isinstance(v, (str, int)) and not isinstance(v, bool):
+                kind = str if isinstance(v, str) else int
+            groups.setdefault((kind, type(j)), []).append(j)
+        self.groups = []
+        for (kind, _), vals in groups.items():
+            arr = np.array(sorted(set(vals)), dtype=object)
+            self.groups.append((kind, arr, None if kind is None else _hash_values(arr)))
+
+    def may_match(self, entry: "FileEntry", col: str) -> bool:
+        """Whether ``entry``, which has stats on ``col``, may hold a member."""
+        if self.keeps_all:
+            return True
+        st = entry.stats[col]
+        lo, hi = st.get("min"), st.get("max")
+        # the bloom answers only probes of the column's own kind, judged by
+        # its min: Spark matches '017' with bigint 17, whose bloom hashed "17"
+        col_kind = str if isinstance(lo, str) else int
+        for kind, vals, hashes in self.groups:
+            i, j = 0, len(vals)
+            if lo is not None and hi is not None:
+                try:
+                    i = np.searchsorted(vals, lo, "left")
+                    j = np.searchsorted(vals, hi, "right")
+                except TypeError:
+                    i, j = 0, len(vals)  # incomparable types: never prune
+            if i >= j:
+                continue
+            if kind is not col_kind or not entry.bloom_excludes(col, hashes[i:j]):
+                return True
+        return False
+
+
 @dataclass
 class FileEntry:
     path: str  # relative to table root
@@ -271,49 +327,25 @@ class FileEntry:
     def may_match(self, col: str, op: str, value: Any) -> bool:
         """Conservative: False only when stats PROVE no row can match.
 
-        Point lookups (``=``) additionally consult the column's Bloom
-        filter when present: on an arrival-ordered layout every file's
-        range contains every key, but the bloom skips all files that
-        provably lack it — a manifest-level point read instead of a
-        full-table scan. Nulls never probe the bloom (built null-free)."""
+        ``=`` and ``in`` additionally consult the column's Bloom filter
+        when present: on an arrival-ordered layout every file's range
+        contains every key, but the bloom skips all files that provably
+        lack them — a manifest-level point read instead of a full-table
+        scan. ``value`` of ``in`` may be a :class:`KeyProbe` prepared once
+        for many files. Nulls never probe the bloom (built null-free)."""
         st = self.stats.get(col)
         if not st:
             return True
-        if op == "in":
-            # a file may match an IN-list iff it may match ANY member —
-            # each member gets the full treatment (range + bloom)
-            return any(self.may_match(col, "=", v) for v in value)
-        if (
-            op == "="
-            and st.get("bloom")
-            # blooms are built only for str/int key columns (_footer_stats)
-            # with canonical-string hashing; a type-mismatched probe (42.0
-            # against an int column) would hash "42.0" vs the stored "42"
-            # and FALSELY prune — fall through to the conservative range
-            # answer for anything outside the build contract
-            and isinstance(value, (str, int))
-            and not isinstance(value, bool)
-            # ...and of the column's own kind, judged by its min: Spark
-            # matches '017' with bigint 17, whose bloom hashed "17"
-            and isinstance(value, str) == isinstance(st.get("min"), str)
-        ):
-            from ..functions.bloom import bloom_from_stats, bloom_might_contain
-
-            bits, m, k = bloom_from_stats(st["bloom"])
-            if not bool(
-                bloom_might_contain(
-                    bits, m, k, np.array([value], dtype=object)
-                ).any()
-            ):
-                return False
+        if op in ("=", "in"):
+            if not isinstance(value, KeyProbe):
+                value = KeyProbe(value if op == "in" else (value,))
+            return value.may_match(self, col)
         lo, hi = st.get("min"), st.get("max")
         if lo is None or hi is None:
             return True
         if op != "between":
             value = _json_safe(value)
         try:
-            if op == "=":
-                return lo <= value <= hi
             if op == "<":
                 return lo < value
             if op == "<=":
@@ -328,6 +360,18 @@ class FileEntry:
         except TypeError:
             return True  # incomparable types: never prune
         return True
+
+    def bloom_excludes(self, col: str, hashes: np.ndarray) -> bool:
+        """True when ``col``'s Bloom filter proves this file holds none of
+        the keys hashed (``functions.bloom._hash_values``) into ``hashes``;
+        False when the file has no filter on ``col``."""
+        bloom = (self.stats.get(col) or {}).get("bloom")
+        if not bloom:
+            return False
+        from ..functions.bloom import bloom_from_stats, bloom_might_contain
+
+        bits, m, k = bloom_from_stats(bloom)
+        return not bool(bloom_might_contain(bits, m, k, None, h1=hashes).any())
 
     # Parquet writers may TRUNCATE long binary/string column statistics
     # (min rounded down, max rounded up) — sound for may_match pruning but
@@ -840,27 +884,80 @@ class IcepackTable:
 
         exact = [textual(c, op, v) for (c, op, v) in filters]
         text_kinds = ("bucket", "truncate")
-        tf_cache: dict[frozenset, list] = {}
+        # members hashed and sorted once, not once per file
+        probes = [(c, op, KeyProbe(v) if op == "in" else v) for (c, op, v) in filters]
+        # the partition verdict depends on the partition values alone
+        verdicts: dict[tuple, bool] = {}
 
-        def keep(e: FileEntry) -> bool:
-            if not all(e.may_match(c, op, v) for (c, op, v) in filters):
-                return False
-            if not e.partition:
-                return True
-            keys = frozenset(e.partition)
-            if keys not in tf_cache:
-                tf_cache[keys] = transforms_for_keys(keys, set(types))
-            tfs = tf_cache[keys]
+        def partition_keeps(part: dict[str, str]) -> bool:
+            tfs = transforms_for_keys(frozenset(part), set(types))
             return all(
                 partition_may_match(
-                    e.partition,
+                    part,
                     tfs if ok else [t for t in tfs if t.kind not in text_kinds],
                     c, op, v,
                 )
                 for (c, op, v), ok in zip(filters, exact)
             )
 
+        def keep(e: FileEntry) -> bool:
+            if not all(e.may_match(c, op, v) for (c, op, v) in probes):
+                return False
+            if not e.partition:
+                return True
+            part = tuple(sorted(e.partition.items()))
+            if part not in verdicts:
+                verdicts[part] = partition_keeps(e.partition)
+            return verdicts[part]
+
         return [e for e in entries if keep(e)]
+
+    # Key sets up to this many rows are pruned member by member on the
+    # driver (prune_by_keys), and equality deletes up to this many rows are
+    # hashed there for Bloom refinement (delete_hit_candidates); past it,
+    # the conservative range answer holds
+    KEY_PROBE_MAX_ROWS = 2_000_000
+
+    @classmethod
+    def prune_by_keys(
+        cls,
+        entries: list[FileEntry],
+        keys_df: DataFrame,
+        key_cols: list[str],
+        schema: T.StructType,
+    ) -> tuple[list[FileEntry], int]:
+        """The entries that may hold a row whose ``key_cols`` equal those of
+        some ``keys_df`` row, and the number of ``keys_df`` rows (rows with
+        null keys count, though they match no file).
+
+        One job collects the key columns. Up to ``KEY_PROBE_MAX_ROWS`` rows,
+        each key column becomes an ``in`` filter of its distinct non-null
+        values, so ranges, Bloom filters and partition transforms all prune
+        (:meth:`prune_files`); per column is sound for composite keys, since
+        a file holding a key tuple holds each of its values. Past the cap,
+        one aggregate gives the row count and each column's bounds, and the
+        files prune by range alone."""
+        import pyarrow.compute as pc
+        from pyspark.sql import functions as F
+
+        keys = keys_df.select(*key_cols)
+        got = keys.limit(cls.KEY_PROBE_MAX_ROWS + 1).toArrow()
+        if got.num_rows <= cls.KEY_PROBE_MAX_ROWS:
+            filters = [
+                (c, "in", pc.unique(got.column(c).drop_null()).to_pylist())
+                for c in key_cols
+            ]
+            return cls.prune_files(entries, filters, schema), got.num_rows
+        k = len(key_cols)
+        row = keys.agg(
+            F.count(F.lit(1)), *map(F.min, key_cols), *map(F.max, key_cols)
+        ).collect()[0]
+        filters = [
+            (c, "between", (lo, hi))
+            for c, lo, hi in zip(key_cols, row[1 : 1 + k], row[1 + k :])
+            if lo is not None
+        ]
+        return cls.prune_files(entries, filters, schema), row[0]
 
     @staticmethod
     def filter_column(filters: list[tuple]) -> Column | None:
@@ -908,13 +1005,14 @@ class IcepackTable:
         self,
         entries: list[FileEntry],
         schema: T.StructType,
-        pos_deletes: list[FileEntry] = (),
+        deletes: list[FileEntry] = (),
+        eq_cols: list[str] = (),
     ) -> DataFrame:
-        """One parquet scan of ``entries`` (at least one) with each row's
-        physical address: ``__abs``, the file URI ``_metadata.file_path``
-        reports, and ``__idx``, its parquet row index. Rows that
-        ``pos_deletes`` shadow are anti-joined out against their broadcast
-        (file URI, position) pairs.
+        """The rows of ``entries`` (at least one) that the pending
+        ``deletes`` leave visible, as :meth:`read_live` resolves them, each
+        with its physical address: ``__abs``, the file URI
+        ``_metadata.file_path`` reports, and ``__idx``, its parquet row
+        index.
 
         The one reader of ``_metadata.row_index``: every position mapping
         passes the URI-formula check first, so drift between the manifest
@@ -923,18 +1021,25 @@ class IcepackTable:
         from pyspark.sql import functions as F
 
         self._check_uri_formula(entries[0])
-        df = (
-            self.spark.read.schema(schema)
-            .parquet(*[self.data_path(e.path) for e in entries])
-            .withColumn("__abs", F.col("_metadata.file_path"))
-            .withColumn("__idx", F.col("_metadata.row_index"))
-        )
-        if not pos_deletes:
-            return df
+
+        def scan(files: list[FileEntry], schema: T.StructType) -> DataFrame:
+            return (
+                self.spark.read.schema(schema)
+                .parquet(*[self.data_path(e.path) for e in files])
+                .withColumn("__abs", F.col("_metadata.file_path"))
+                .withColumn("__idx", F.col("_metadata.row_index"))
+            )
+
+        if not deletes:
+            return scan(entries, schema)
+        if deletes[0].content == "eq_deletes":
+            return self._scan_with_deletes(entries, deletes, schema, eq_cols, scan)
         cond = (F.col("__abs") == F.col("__dabs")) & (
             F.col("__idx") == F.col("__dpos")
         )
-        return df.join(F.broadcast(self._pos_delete_df(pos_deletes)), cond, "left_anti")
+        return scan(entries, schema).join(
+            F.broadcast(self._pos_delete_df(deletes)), cond, "left_anti"
+        )
 
     def files_holding(self, entries: list[FileEntry], rows: DataFrame) -> dict[str, int]:
         """{manifest path: row count} for the ``entries`` holding at least
@@ -971,11 +1076,6 @@ class IcepackTable:
                 continue
         return True
 
-    # Bloom refinement of delete-hit candidates stays on the driver only
-    # while the total tombstone count is modest; past this it would stall
-    # the driver hashing keys (the conservative range answer is still sound)
-    DELETE_BLOOM_REFINE_MAX_ROWS = 2_000_000
-
     def delete_hit_candidates(
         self,
         data: list[FileEntry],
@@ -1011,20 +1111,18 @@ class IcepackTable:
             ]
             if ds:
                 assigned[e.path] = ds
-        bloomed = {
-            e.path: e.stats[key_cols[0]]["bloom"]
+        key = key_cols[0]
+        bloomed = [
+            e
             for e in data
-            if e.path in assigned and (e.stats.get(key_cols[0]) or {}).get("bloom")
-        }
+            if e.path in assigned and (e.stats.get(key) or {}).get("bloom")
+        ]
         if (
             len(key_cols) != 1
-            or sum(d.rows for d in deletes) > self.DELETE_BLOOM_REFINE_MAX_ROWS
+            or sum(d.rows for d in deletes) > self.KEY_PROBE_MAX_ROWS
             or not bloomed
         ):
             return assigned
-        from ..functions.bloom import bloom_from_stats, bloom_might_contain
-
-        key = key_cols[0]
         by_seq: dict[int, list] = {}
         for d in deletes:
             by_seq.setdefault(d.seq, []).append(
@@ -1042,12 +1140,9 @@ class IcepackTable:
                 )
             return probe_cache[data_seq]
 
-        for e in data:
-            if e.path not in bloomed:
-                continue  # unassigned, or pre-bloom: range answer stands
-            bits, m, k = bloom_from_stats(bloomed[e.path])
-            h1 = probes_for(e.seq)
-            if not bool(bloom_might_contain(bits, m, k, None, h1=h1).any()):
+        # unassigned or pre-bloom files keep the range answer
+        for e in bloomed:
+            if e.bloom_excludes(key, probes_for(e.seq)):
                 del assigned[e.path]
         return assigned
 
@@ -1062,11 +1157,15 @@ class IcepackTable:
         return self.spark.read.schema(schema).parquet(*paths)
 
     def _read_with_seq(
-        self, entries: list[FileEntry], schema: T.StructType, seq_col: str
+        self,
+        entries: list[FileEntry],
+        schema: T.StructType,
+        seq_col: str,
+        read: Callable[[list[FileEntry], T.StructType], DataFrame] | None = None,
     ) -> DataFrame:
         """One parquet scan of ``entries`` with each row's data-sequence
         number in ``seq_col`` — one scan node however many commits the files
-        come from.
+        come from. ``read`` scans the files (default :meth:`_read_files`).
 
         Files of one commit get a literal. Files of several are mapped from
         ``_metadata.file_path``, which costs a metadata column and a CASE
@@ -1077,7 +1176,7 @@ class IcepackTable:
         would resurrect deleted rows."""
         from pyspark.sql import functions as F
 
-        df = self._read_files(entries, schema)
+        df = (read or self._read_files)(entries, schema)
         uris_by_seq: dict[int, list[str]] = {}
         for e in entries:
             uris_by_seq.setdefault(e.seq, []).append(self._file_uri(e.path))
@@ -1100,9 +1199,11 @@ class IcepackTable:
         deletes: list[FileEntry],
         schema: T.StructType,
         key_cols: list[str],
+        read: Callable[[list[FileEntry], T.StructType], DataFrame] | None = None,
     ) -> DataFrame:
         """Merge-on-read resolution: anti-join candidate data files against
-        the equality-delete files that can shadow them.
+        the equality-delete files that can shadow them. ``read`` scans data
+        files (default :meth:`_read_files`).
 
         Plan shape (the one you'd want at 100 TB): data files proven
         unaffected by every delete file (older-or-equal seq, or disjoint key
@@ -1115,11 +1216,12 @@ class IcepackTable:
         exchange: an anti-join only filters the probe side."""
         from pyspark.sql import functions as F
 
+        read = read or self._read_files
         hits = self.delete_hit_candidates(data, deletes, key_cols)
         cand = [e for e in data if e.path in hits]
         plain = [e for e in data if e.path not in hits]
         if not cand:
-            return self._read_files(plain, schema)
+            return read(plain, schema)
 
         del_schema = T.StructType(
             [f for f in schema.fields if f.name in key_cols]
@@ -1131,13 +1233,13 @@ class IcepackTable:
         for c in key_cols:
             cond = cond & (F.col(c) == F.col(f"__del_{c}"))
         resolved = (
-            self._read_with_seq(cand, schema, "__ds")
+            self._read_with_seq(cand, schema, "__ds", read)
             .join(F.broadcast(del_df), cond, "left_anti")
             .drop("__ds")
         )
         if not plain:
             return resolved
-        return self._read_files(plain, schema).unionByName(resolved)
+        return read(plain, schema).unionByName(resolved)
 
     # ------------------------------------------------- positional deletes
     def pos_delete_targets(self, pos_deletes: list[FileEntry]) -> dict[str, int]:

@@ -1,5 +1,5 @@
 """Per-file key Bloom filters (functions/bloom.py) + manifest-level MERGE
-pruning through them (operators/table_merge.py `_prune_with_blooms`).
+pruning through them (``IcepackTable.prune_by_keys``).
 
 Why this exists: min/max footer stats prune candidate files only when the
 layout is range-clustered on the merge key. A freshly ingested table is
@@ -26,9 +26,13 @@ from datastream_deltalake_connector_spark.functions.bloom import (
 from datastream_deltalake_connector_spark.operators.dedup import latest_by_keys
 from datastream_deltalake_connector_spark.operators.table_merge import (
     merge_into_table,
-    prune_candidates,
 )
 from datastream_deltalake_connector_spark.table import IcepackTable
+
+
+def _prune(entries, winners, key, schema):
+    kept, n = IcepackTable.prune_by_keys(entries, winners, [key], schema)
+    return [e.path for e in kept], n
 
 
 # ------------------------------------------------------------------ unit
@@ -122,13 +126,13 @@ def test_bloom_prunes_where_ranges_cannot(spark, bloomed):
     winners = latest_by_keys(
         _batch(spark, [100, 4100]), ["image_id"], ["source_timestamp", "change_seq"]
     )
-    paths, n = prune_candidates(entries, winners, "image_id")
+    paths, n = _prune(entries, winners, "image_id", bloomed.schema())
     assert n == 2
     # 2 keys over 16 full-range files: ranges keep all 16, blooms keep ≤ a few
     stripped = copy.deepcopy(entries)
     for e in stripped:
         e.stats["image_id"].pop("bloom")
-    rpaths, rn = prune_candidates(stripped, winners, "image_id")
+    rpaths, rn = _prune(stripped, winners, "image_id", bloomed.schema())
     assert rn == 2 and len(rpaths) == 16
     assert set(paths) <= set(rpaths)
     assert len(paths) <= 4  # 2 true files + bounded false positives
@@ -160,7 +164,7 @@ def test_bloom_prune_counts_null_keys(spark, bloomed):
         _batch(spark, [60]).withColumn("image_id", F.lit(None).cast("string"))
     )
     winners = latest_by_keys(b, ["image_id"], ["source_timestamp", "change_seq"])
-    paths, n = prune_candidates(bloomed.files(), winners, "image_id")
+    paths, n = _prune(bloomed.files(), winners, "image_id", bloomed.schema())
     assert n == 2  # null key counts as a winner, matches no file
     assert len(paths) <= 3
 
@@ -189,7 +193,7 @@ def test_bloom_int_keys(spark, tmp_path):
         F.lit(1).cast("long").alias("change_seq"),
     )
     winners = latest_by_keys(batch, ["user_id"], ["source_timestamp", "change_seq"])
-    paths, n = prune_candidates(t.files(), winners, "user_id")
+    paths, n = _prune(t.files(), winners, "user_id", t.schema())
     assert n == 2 and len(paths) <= 3
     merge_into_table(t, batch, key="user_id")
     got = dict(
@@ -217,7 +221,7 @@ def test_bloom_skipped_for_unsupported_key_types(spark, tmp_path):
 
 
 def test_bloom_mor_merge_uses_pruning(spark, tmp_path):
-    """The MoR merge shares prune_candidates: a sparse batch against a
+    """The MoR merge shares prune_by_keys: a sparse batch against a
     bloomed unclustered table reads (key, ts) of a file SUBSET for its
     replay guard, and the resolved scan still matches expectations."""
     from datastream_deltalake_connector_spark.operators.mor import (

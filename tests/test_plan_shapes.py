@@ -95,12 +95,12 @@ def test_generic_merge_single_join_write_job(noaqe, tmp_path):
     )
     for lo in (0, 100):
         t.append(
-            noaqe.range(lo, lo + 100).selectExpr(
-                "id", "cast(id as double) as v"
-            ),
+            noaqe.range(lo, lo + 100)
+            .where("id != 150")
+            .selectExpr("id", "cast(id as double) as v"),
             num_files=1,
         )
-    src = noaqe.createDataFrame([(5, 50.0), (250, 2.5)], "id BIGINT, v DOUBLE")
+    src = noaqe.createDataFrame([(5, 50.0), (150, 2.5)], "id BIGINT, v DOUBLE")
     captured = {}
     orig = IcepackTable.write_data_files
 
@@ -129,9 +129,9 @@ def test_generic_merge_single_join_write_job(noaqe, tmp_path):
     assert scans == 1, f"only the probe-hit file may be scanned, got {scans}"
     # SMJ costs its two exchange+sort pairs and nothing else
     assert exchanges(p) <= 2, f"unexpected extra exchange:\n{p[:2000]}"
-    # the insert key (250) stretches the source bounds across both files so
-    # range pre-pruning cannot engage — the EXACT file_path probe is what
-    # bounds the rewrite to the single file actually holding a match
+    # the insert key (150) lies inside the second file's range, which does
+    # not hold it, so pre-pruning keeps both files — the EXACT file_path
+    # probe is what bounds the rewrite to the single file holding a match
     assert rep["files_rewritten"] == 1 and rep["files_probed"] == 2
 
 

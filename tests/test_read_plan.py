@@ -50,6 +50,21 @@ def test_delete_resolution_lives_only_in_icepack_table():
     assert not offenders, offenders
 
 
+def test_file_stats_are_read_only_in_icepack_table_and_bloom():
+    """Which files can hold a key is decided by ``prune_files`` alone: no
+    other module reads a file's stats or probes a Bloom filter."""
+    owners = {PKG / "table" / "icepack.py", PKG / "functions" / "bloom.py"}
+    needles = (".stats.get(", ".stats[", "bloom_might_contain")
+    offenders = [
+        f"{path.relative_to(PKG)}: {needle}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path not in owners
+        for needle in needles
+        if needle in path.read_text()
+    ]
+    assert not offenders, offenders
+
+
 def _keyed(spark, n=4000):
     return (
         spark.range(0, n)
@@ -244,6 +259,72 @@ def test_cow_delete_of_shadowed_rows_commits_nothing(spark, tmp_path):
     assert rep["version"] is None and rep["rows_deleted"] == 0
     assert part.head_version() == head
     assert {e.path for e in part.files()} == files
+
+
+def test_cow_delete_of_eq_shadowed_rows_commits_nothing(spark, tmp_path):
+    """The locate step reads through pending equality deletes too: a CoW
+    delete whose only match a MoR merge already tombstoned leaves the head
+    where it was."""
+    df = spark.range(0, 100).select(
+        "id",
+        (F.col("id") * 1.0).alias("v"),
+        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias(
+            "datastream_metadata_source_timestamp"
+        ),
+        F.lit(0).cast("long").alias("datastream_metadata_change_seq"),
+    )
+    t = IcepackTable.create(spark, str(tmp_path / "eq"), df.schema)
+    for lo in (0, 50):
+        t.append(df.where((F.col("id") >= lo) & (F.col("id") < lo + 50)), num_files=1)
+    tombstones = spark.range(10, 20).select(
+        "id",
+        F.lit(0.0).alias("v"),
+        F.lit("DELETE").alias("change_type"),
+        F.lit(True).alias("is_deleted"),
+        F.to_timestamp(F.lit("2024-06-01 00:00:00")).alias("source_timestamp"),
+        F.lit(1).cast("long").alias("change_seq"),
+    )
+    merge_into_table_mor(t, tombstones, key="id")
+    head = t.head_version()
+    assert any(e.content == "eq_deletes" for e in t.files())
+    rep = delete_where(t, [("id", "=", 15)])
+    assert rep["version"] is None and rep["files_rewritten"] == 0
+    assert t.head_version() == head
+    assert t.scan().count() == 90
+
+
+def test_pos_delete_file_is_written_sorted_without_range_sampling(spark, tmp_path):
+    """The positional-delete writer sorts within one partition: no
+    range-partitioning sample job re-reads the candidate files, and the
+    file's rows still come out in (file, position) order."""
+    import io
+    from contextlib import redirect_stdout
+
+    import pyarrow.parquet as pq
+
+    part, _twin = _bucketed_and_twin(spark, tmp_path)
+    plans = []
+    orig = IcepackTable.write_data_files
+
+    def spy(self, df, **kw):
+        if kw.get("content") == "pos_deletes":
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain()
+            plans.append(buf.getvalue())
+        return orig(self, df, **kw)
+
+    IcepackTable.write_data_files = spy
+    try:
+        rep = delete_where_mor(part, [("v", "<", 60.0)])
+    finally:
+        IcepackTable.write_data_files = orig
+    assert rep["rows_deleted"] == 60 and len(plans) == 1
+    assert "rangepartitioning" not in plans[0].lower()
+    (pos,) = [e for e in part.files() if e.content == "pos_deletes"]
+    rows = pq.read_table(part.data_path(pos.path)).to_pylist()
+    keys = [(r["__file"], r["__pos"]) for r in rows]
+    assert len(keys) == 60 and keys == sorted(keys) and len({k[0] for k in keys}) > 1
 
 
 def test_files_holding_refuses_rows_of_an_unnamed_file(spark, tmp_path):
