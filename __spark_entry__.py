@@ -3641,7 +3641,7 @@ def _icepack_delete_where_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     superset of the post-delete one), count_rows stays manifest-exact
     (net = gross - shadowed, no counting scan), and the returned scan
     itself exercises the broadcast anti-join resolution
-    (IcepackTable._scan_with_pos_deletes) against the DuckDB truth."""
+    (IcepackTable.read_live) against the DuckDB truth."""
     from datastream_deltalake_connector_spark.operators.rowops import (
         delete_where_mor,
     )

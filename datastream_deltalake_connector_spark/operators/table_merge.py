@@ -33,7 +33,6 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from ..session import empty_frame
 from ..table.icepack import IcepackTable
 from ..table.lineage import LineageJournal
 from .dedup import latest_by_keys
@@ -177,11 +176,8 @@ def merge_into_table(
     # pipeline would run on a handful of tasks — parallelism-starved, not
     # I/O-bound. Both the read and its write action stay inside the context.
     with rewrite_sized_splits(table.spark, touched_bytes):
-        if touched_paths:
-            paths = [table.data_path(p) for p in touched_paths]
-            target = table.spark.read.schema(table.schema()).parquet(*paths)
-        else:
-            target = empty_frame(table.spark, table.schema())
+        # pending deletes were applied above: the touched files are live
+        target = table.read_live(touched, [], table.schema(), [])
 
         batch_bytes = n_winners * _estimate_row_bytes(winners)
         small_batch = batch_bytes <= broadcast_bytes_threshold

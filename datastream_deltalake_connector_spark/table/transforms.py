@@ -226,8 +226,13 @@ def partition_may_match(
             if exp is not None and p != exp:
                 return False
         elif op == "in":
-            exps = [t.value(v) for v in value]
-            if all(e is not None for e in exps) and p not in exps:
+            # a prepared probe (icepack.KeyProbe) derives them once per transform
+            exps = (
+                value.partition_values(t)
+                if hasattr(value, "partition_values")
+                else {t.value(v) for v in value}
+            )
+            if None not in exps and p not in exps:
                 return False
         elif t.monotone and t._cmp_ok(value) and op in ("<", "<=", ">", ">=", "between"):
             # col < v  =>  T(col) <= T(v): keep iff p <= T(v); dual for >

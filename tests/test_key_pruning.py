@@ -11,6 +11,7 @@ import random
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from datastream_deltalake_connector_spark.functions.bloom import (
     bloom_from_stats,
@@ -22,7 +23,7 @@ from datastream_deltalake_connector_spark.operators.table_merge import (
     merge_into_table,
 )
 from datastream_deltalake_connector_spark.table import IcepackTable
-from datastream_deltalake_connector_spark.table.icepack import _json_safe
+from datastream_deltalake_connector_spark.table.icepack import FileEntry, _json_safe
 from datastream_deltalake_connector_spark.table.transforms import Transform
 
 TS = "datastream_metadata_source_timestamp"
@@ -130,9 +131,9 @@ def test_composite_key_merge_prunes_on_its_second_column(spark, tmp_path):
 
 
 @pytest.mark.parametrize("merge", [merge_into_table, merge_into_table_mor])
-def test_key_probe_cap_falls_back_to_bounds(spark, tmp_path, monkeypatch, merge):
-    """Past KEY_PROBE_MAX_ROWS the key set prunes by its bounds: the same
-    rows, the same winner count, and ranges still prune."""
+def test_key_sets_past_the_cap_prune_on_the_executors(spark, tmp_path, monkeypatch, merge):
+    """Past KEY_PROBE_MAX_ROWS the executors apply the same filters per
+    Arrow batch: the same rows, winner count and candidate files."""
     ids = [10, 20, 30, 1000]  # 1000 is an insert
     batch = _batch(spark, ids).unionByName(_batch(spark, [60], deleted=True))
     capped = _clustered(spark, str(tmp_path / "capped"))
@@ -142,10 +143,67 @@ def test_key_probe_cap_falls_back_to_bounds(spark, tmp_path, monkeypatch, merge)
     merge(capped, batch, key="id")
     assert _state(capped) == _state(plain)
     assert capped.snapshot().summary["batch_winners"] == 5
-    # bounds [10, 1000] exclude nothing here; the in-list kept one file
+    # bounds [10, 1000] exclude nothing here; the in-lists keep one file
     files = "touched_files" if merge is merge_into_table else "candidate_files"
     assert plain.snapshot().summary[files] == 1
-    assert capped.snapshot().summary[files] == 4
+    assert capped.snapshot().summary[files] == 1
+
+
+def test_executor_pruning_keeps_bloom_and_partition_pruning(spark, tmp_path, monkeypatch):
+    """On a Bloom-keyed hash-ordered table and on a bucket(4, id) table,
+    key sets past the cap keep every file holding a key and no file the
+    driver drops, and null keys still count. (Each batch tests ranges and
+    partitions on its own keys, so it may keep fewer files.)"""
+    tables = [
+        _spread(spark, str(tmp_path / "bl"), n=4000, num_files=16, bloom_cols=["id"]),
+        _spread(spark, str(tmp_path / "bk"), partition_by=["bucket(4, id)"]),
+    ]
+    keys = spark.createDataFrame(
+        [(7,), (150,), (1000,), (3000,), (None,)], "id long"
+    ).repartition(3)
+    for t in tables:
+        entries = t.files()
+        want, n = IcepackTable.prune_by_keys(entries, keys, ["id"], t.schema())
+        assert n == 5 and 0 < len(want) < len(entries)
+        with monkeypatch.context() as m:
+            m.setattr(IcepackTable, "KEY_PROBE_MAX_ROWS", 1)
+            got, n = IcepackTable.prune_by_keys(entries, keys, ["id"], t.schema())
+        assert n == 5
+        rows = t.read_with_positions(entries, t.schema()).where(
+            F.col("id").isin(7, 150, 1000, 3000)
+        )
+        holding = set(t.files_holding(entries, rows))
+        assert holding <= {e.path for e in got} <= {e.path for e in want}
+
+
+def test_in_list_partition_values_are_derived_once_per_transform(monkeypatch):
+    """A large in-list is bucketed once per transform, not once per
+    partition, and stops once every bucket is hit."""
+    real = Transform.value
+    calls = []
+    monkeypatch.setattr(
+        Transform, "value", lambda self, v: calls.append(v) or real(self, v)
+    )
+    entries = [
+        FileEntry(
+            path=f"id_bucket16={i % 16}/f{i}.parquet",
+            bytes=1,
+            rows=1,
+            stats={"id": {"min": 0, "max": 10**9}},
+            partition={"id_bucket16": str(i % 16)},
+        )
+        for i in range(64)
+    ]
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    keys = list(range(0, 70000, 7))
+    assert len(IcepackTable.prune_files(entries, [("id", "in", keys)], schema)) == 64
+    assert len(calls) < 500
+    bkt = Transform("bucket", "id", 16)
+    one = [k for k in keys if real(bkt, k) == "3"]
+    calls.clear()
+    kept = IcepackTable.prune_files(entries, [("id", "in", one)], schema)
+    assert {e.partition["id_bucket16"] for e in kept} == {"3"} and len(kept) == 4
+    assert len(calls) == len(one)
 
 
 def _reference_candidates(entries, keys, col):
