@@ -67,7 +67,6 @@ ENV_VARS: dict[str, tuple[str, object]] = {
     "DATASTREAM_BUCKET": ("bucket", str),
     "DATASTREAM_PREFIX": ("prefix", str),
     "DELTA_CHECKPOINT_DIR": ("checkpoint_dir", str),
-    "BROADCAST_BYTES_THRESHOLD_MB": ("broadcast_bytes_threshold_mb", int),
 }
 
 
@@ -111,7 +110,6 @@ class ConnectorConfig:
     # accumulate — the reference's application.conf:38-45 default is OFF)
     auto_compact_min_files: int | None = None
     target_file_size_mb: int = 512
-    broadcast_bytes_threshold_mb: int = 256
     checkpoint_dir: str | None = None
 
     def __post_init__(self):
@@ -131,10 +129,6 @@ class ConnectorConfig:
     @property
     def target_file_bytes(self) -> int:
         return self.target_file_size_mb * 1024 * 1024
-
-    @property
-    def broadcast_bytes_threshold(self) -> int:
-        return self.broadcast_bytes_threshold_mb * 1024 * 1024
 
     @classmethod
     def load(

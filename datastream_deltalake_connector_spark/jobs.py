@@ -50,10 +50,10 @@ matter of the submit command, not the code:
                                                  awaitAnyTermination parity
 
 On a cluster, ``master`` comes from spark-submit and executors bring their
-own cores; locally the SPARK_GRAFT_CPUS env picks local[k]. Every stage
-journals per-partition lineage and resumes from it (see table/lineage.py),
-so a preempted job is re-submitted with the same --job-id and skips
-completed work.
+own cores; locally the SPARK_GRAFT_CPUS env picks local[k]. Compaction and
+clustering journal per-bin lineage and resume from it (see
+table/lineage.py), so a preempted compact or cluster job is re-submitted
+with the same --job-id and skips completed work.
 """
 
 from __future__ import annotations
@@ -98,7 +98,6 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("merge")
     common(p)
     p.add_argument("--batch", required=True)
-    p.add_argument("--rewrite-mode", default="auto", choices=["auto", "split", "range"])
     p.add_argument(
         "--mode",
         default=None,
@@ -341,21 +340,13 @@ def main(argv: list[str] | None = None) -> int:
             from .operators.mor import merge_into_table_mor
 
             out["version"] = merge_into_table_mor(
-                t,
-                batch,
-                job_id=args.job_id,
-                schema_evolution=cfg.schema_evolution,
+                t, batch, schema_evolution=cfg.schema_evolution
             )
         else:
             from .operators.table_merge import merge_into_table
 
             out["version"] = merge_into_table(
-                t,
-                batch,
-                job_id=args.job_id,
-                rewrite_mode=args.rewrite_mode,
-                schema_evolution=cfg.schema_evolution,
-                broadcast_bytes_threshold=cfg.broadcast_bytes_threshold,
+                t, batch, schema_evolution=cfg.schema_evolution
             )
     elif args.cmd == "apply-deletes":
         from .operators.mor import apply_deletes, maybe_apply_deletes
@@ -374,10 +365,9 @@ def main(argv: list[str] | None = None) -> int:
                     if args.max_delete_ratio is not None
                     else cfg.mor_max_delete_ratio
                 ),
-                job_id=args.job_id,
             )
         else:
-            out["version"] = apply_deletes(t, job_id=args.job_id)
+            out["version"] = apply_deletes(t)
     elif args.cmd == "compact":
         from .operators.compaction import compact
 

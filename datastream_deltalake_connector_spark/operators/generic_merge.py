@@ -1,38 +1,48 @@
-"""General-purpose ``MERGE INTO`` with full ANSI/Delta clause semantics.
+"""``MERGE INTO`` with full ANSI/Delta clause semantics — the engine's one
+MERGE executor.
 
-The CDC path (``operators/table_merge.py``, the reference's
-MergeQueries.scala:18-126 shape) is a fixed three-clause LWW upsert keyed on
-``datastream_metadata_*``. This module is the *ad-hoc* MERGE a lakehouse
-user writes by hand — arbitrary ordered ``WHEN MATCHED [AND cond] THEN
-UPDATE/DELETE``, ``WHEN NOT MATCHED [AND cond] THEN INSERT``, and Delta's
-``WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE`` extension — the statement
-Delta documents as its primary upsert surface and the reference leans on
-Databricks to provide (README.md:9 ACID notes).
+Arbitrary ordered ``WHEN MATCHED [AND cond] THEN UPDATE/DELETE``, ``WHEN
+NOT MATCHED [AND cond] THEN INSERT``, and Delta's ``WHEN NOT MATCHED BY
+SOURCE THEN UPDATE/DELETE`` extension — the statement Delta documents as its
+primary upsert surface and the reference leans on Databricks to provide
+(README.md:9 ACID notes). The CDC copy-on-write merge
+(``operators/table_merge.py``) is LWW dedup followed by this executor with
+the reference's fixed three clauses (MergeQueries.scala:91-121).
 
 Scale shape (the 100-TB plan):
 
-- **Touch only files that can contain a match.** Candidate files are
-  pre-pruned driver-side against the source's keys
-  (``IcepackTable.prune_by_keys``: ranges, Bloom filters and partition
-  transforms, the pruning the CDC merges use), then resolved EXACTLY by a
-  key-column probe join whose rows carry their file
+- **Touch only files that hold a match.** Candidate files are pre-pruned
+  driver-side against the source's keys (``IcepackTable.prune_by_keys``:
+  ranges, Bloom filters and partition transforms), then resolved EXACTLY by
+  a key-column probe join whose rows carry their file
   (``IcepackTable.files_holding``) — the rewrite set is "files holding at
-  least one matching key", never the table. A 1k-row source against 10^12
-  rows rewrites a handful of files. (``NOT MATCHED BY SOURCE`` clauses
-  touch every target row by definition — with one present the candidate
-  set is honestly the whole table, same as Delta.)
-- **One pass, no collect of data.** Matched/not-matched/by-source routing,
-  clause-condition cascades, update projections, and insert projections all
-  ride ONE full-outer join evaluated once; per-action row counts ride
-  ``DataFrame.observe`` on that same job. Only file paths and the source's
-  key columns ever reach the driver.
-- **ANSI cardinality check.** A target row matched by >1 source rows with
-  any MATCHED clause present raises ``MergeCardinalityError`` (key-column
-  probe job, no payload shuffle) — silently applying one arbitrary match is
-  how engines corrupt tables.
-- **Append-only fast path.** Insert-only merges (no MATCHED / BY SOURCE
-  clauses) never rewrite a file: matched source rows are anti-joined away
-  and the remainder is appended — O(new data) like the MoR write path.
+  least one matching key", never the table. (``NOT MATCHED BY SOURCE``
+  clauses touch every target row by definition — with one present the
+  candidate set is honestly the whole table, same as Delta.)
+- **Two emitters, picked by source bytes** (row count × measured row size
+  against ``SPLIT_MAX_SOURCE_BYTES``):
+  - *split* (small source, the common CDC shape): each hit file is read at
+    its natural splits and LEFT OUTER joined with the broadcast source; each
+    input split writes one output file, so no target row crosses an exchange
+    and, since updates keep their key, each output file's key range stays
+    inside its input's. Inserts are the source anti-joined with a broadcast
+    of the matched keys, range-partitioned and sorted on the key. An
+    insert-only merge therefore never rewrites a file.
+  - *range* (large source): ONE full-outer join of the hit files with the
+    source, range-partitioned and sorted on the key, so every output file
+    covers a tight, disjoint key range and later merges keep pruning.
+- **No collect of data.** Per-action row counts ride ``DataFrame.observe``
+  on every written frame; only file paths and the source's key columns
+  reach the driver. The source is cached once for the whole statement.
+- **ANSI cardinality check.** A target row matched by >1 source rows while
+  a MATCHED or NOT MATCHED BY SOURCE clause exists raises
+  ``MergeCardinalityError`` (key-column probe job, no payload shuffle) —
+  silently applying one arbitrary match, or keeping the target row once per
+  match, is how engines corrupt tables.
+- **Serializable commit.** The commit requires that its inputs are live and
+  that no data or delete file landed since its snapshot (Delta's
+  Serializable level), so a racing append raises ``ConflictError`` instead
+  of letting a MERGE insert a key that append just wrote.
 
 Clause dicts (the SQL front end in ``sql.py`` builds these from text):
 
@@ -51,19 +61,48 @@ row satisfying no clause condition is kept unchanged.
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Iterable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..table.icepack import FileEntry, IcepackTable
+from ..table.icepack import ConflictError, FileEntry, IcepackTable
+from .partitioning import rewrite_sized_splits
 
-__all__ = ["merge_into", "MergeCardinalityError"]
+__all__ = ["merge_into", "MergeCardinalityError", "SPLIT_MAX_SOURCE_BYTES"]
+
+# A source estimated at or under this many bytes is broadcast to every
+# executor and the split emitter rewrites each hit file in place; past it
+# the range emitter shuffles both sides. Bytes, not rows: 2M image rows at
+# ~12 KB each would be a ~24 GB broadcast.
+SPLIT_MAX_SOURCE_BYTES = 256 * 1024 * 1024
 
 
 class MergeCardinalityError(ValueError):
-    """>1 source rows matched one target row while a MATCHED clause exists
-    (the ANSI 'MERGE cardinality violation' / Delta multiple-match error)."""
+    """>1 source rows matched one target row while a MATCHED or NOT MATCHED
+    BY SOURCE clause exists (the ANSI 'MERGE cardinality violation' / Delta
+    multiple-match error)."""
+
+
+def _estimate_row_bytes(df: DataFrame) -> float:
+    """Average serialized row size of a (cached) DataFrame: measured lengths
+    of the variable-width columns plus a fixed per-column overhead. One cheap
+    agg over the cache — no sampling bias, no collect of payload rows."""
+    var_cols = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, (T.BinaryType, T.StringType))
+    ]
+    fixed = 16.0 * len(df.schema.fields)
+    if not var_cols:
+        return fixed
+    total = None
+    for c in var_cols:
+        term = F.coalesce(F.length(F.col(f"`{c}`")).cast("double"), F.lit(0.0))
+        total = term if total is None else total + term
+    row = df.select(F.avg(total).alias("b")).collect()[0]
+    return float(row["b"] or 0.0) + fixed
 
 
 def _norm_clauses(clauses: Iterable[dict] | None, allowed: set[str]) -> list[dict]:
@@ -74,6 +113,61 @@ def _norm_clauses(clauses: Iterable[dict] | None, allowed: set[str]) -> list[dic
             raise ValueError(f"clause action {action!r} not in {sorted(allowed)}")
         out.append(c)
     return out
+
+
+def _cascade(clauses: list[dict], offset: int) -> Column:
+    """first-true-clause index (offset+i) as a when-chain, else lit(-1)"""
+    expr = F.lit(-1)
+    for i in reversed(range(len(clauses))):
+        cond = clauses[i].get("condition")
+        expr = F.when(F.expr(cond) if cond else F.lit(True), F.lit(offset + i)).otherwise(
+            expr
+        )
+    return expr
+
+
+def _write_observed(
+    table: IcepackTable,
+    df: DataFrame,
+    counts: dict[str, Column],
+    sort_on: list[str] | None = None,
+) -> tuple[list[FileEntry], dict[str, int]]:
+    """Stage the rows of ``df`` whose ``__keep`` holds, with the ``counts``
+    observed on the write job itself. CHECK constraints are validated on the
+    unobserved frame first: a constraint probe over the observed one would
+    report its partial counts as the write's."""
+
+    def final(d: DataFrame) -> DataFrame:
+        d = d.where("__keep").drop("__clause", "__keep")
+        return d.sortWithinPartitions(*sort_on) if sort_on else d
+
+    table._enforce_check_constraints(final(df))
+    obs = Observation()
+    observed = df.observe(obs, *[c.alias(k) for k, c in counts.items()])
+    added = table.write_data_files(final(observed), enforce_constraints=False)
+    got = obs.get
+    return added, {k: int(got[k] or 0) for k in counts}
+
+
+def _dangling(
+    table: IcepackTable,
+    carried: list[FileEntry],
+    deletes: list[FileEntry],
+    eq_cols: list[str],
+) -> list[FileEntry]:
+    """The delete files that apply to none of the ``carried`` data files once
+    a rewrite removed the rest — Iceberg's dangling deletes. The rewrite read
+    through them and every file it wrote has a higher sequence number, so
+    they can leave the manifest in the same commit."""
+    if not deletes:
+        return []
+    if deletes[0].content == "eq_deletes":
+        hits = table.delete_hit_candidates(carried, deletes, eq_cols)
+        live = {d.path for ds in hits.values() for d in ds}
+    else:
+        paths = {e.path for e in carried}
+        live = {d.path for d in deletes if paths & set(table.pos_delete_targets([d]))}
+    return [d for d in deletes if d.path not in live]
 
 
 def merge_into(
@@ -94,6 +188,10 @@ def merge_into(
     express the extra predicate as clause conditions instead, which is also
     the performant formulation in Delta.)
 
+    ``num_files``: how many range-partitioned files the emitter writes —
+    the inserts for the split emitter, the whole output for the range one.
+    Default: the volume over ``IcepackTable.DEFAULT_TARGET_FILE_BYTES``.
+
     ``schema_evolution``: ``"none"`` (default) — the target schema is fixed;
     ``UPDATE SET *``/``INSERT *`` project the target's columns and an
     explicit assignment to an unknown column is an error. ``"merge"`` —
@@ -101,6 +199,10 @@ def merge_into(
     from the target are appended nullable (metadata-only commit) BEFORE the
     merge executes, so ``SET *``/``INSERT *`` carry them and existing rows
     read them as NULL.
+
+    The commit summary records ``keys``, ``batch_winners`` (source rows),
+    ``touched_files`` (files rewritten) and ``rewrite_mode`` (``split`` or
+    ``range``), which the change feed and the benches read.
     """
     on = [on] if isinstance(on, str) else list(on)
     if not on:
@@ -116,16 +218,6 @@ def merge_into(
         table.evolve_schema(source.schema, strategy="merge")
 
     snap = table.snapshot()
-    entries = table.files(snap.version)
-    data, eq_deletes, pos_deletes = table._split_deletes(entries)
-    eq_cols = snap.summary.get("eq_delete_cols") or []
-
-    def read_live(files: list[FileEntry]) -> DataFrame:
-        # target rows with pending MoR deletes resolved: a shadowed row is
-        # not a match, and a CoW rewrite re-stamps seq, so an unresolved
-        # shadowed row would resurrect
-        return table.read_live(files, eq_deletes + pos_deletes, snap.schema, eq_cols)
-
     fields = {f.name: f.dataType for f in snap.schema.fields}
     tcols = [f.name for f in snap.schema.fields]
     missing = [k for k in on if k not in fields]
@@ -186,205 +278,225 @@ def merge_into(
                     "(INSERT (cols) VALUES ...) to null-fill the rest"
                 )
 
-    # raw key projection: pruning and the leftsemi probe are both
-    # duplicate-insensitive, so a distinct here would only add a shuffle
-    skeys = source.select(*on)
+    def _scol(col: str) -> Column:
+        sc = src_by_lower.get(col.lower())
+        return F.col(f"s.`{sc}`") if sc else F.lit(None)
 
-    # ---- candidate discovery -------------------------------------------
-    if nms:
-        hit = list(data)  # every target row is in scope by definition
-        pruned = probed = 0
-    else:
-        cand, _ = table.prune_by_keys(data, skeys, on, snap.schema)
-        pruned = len(data) - len(cand)
-        hit = []
-        probed = len(cand)
-        if cand and (matched or not_matched):
-            # rows pending deletes shadow are resolved out: a deleted row is
-            # no match and must not force a rewrite
-            probe = table.read_with_positions(
-                cand, snap.schema, eq_deletes + pos_deletes, eq_cols
-            )
-            holding = table.files_holding(
-                cand, probe.join(skeys, on=on, how="leftsemi")
-            )
-            hit = [e for e in cand if e.path in holding]
-
-    # ---- ANSI cardinality check (key columns only, no payload) ---------
-    if matched and hit:
-        dup_keys = (
-            source.groupBy(*on).count().where(F.col("count") > 1).drop("count")
-        )
-        # source-only pre-check first: a duplicate-free source (the common
-        # case) must not cost a key-column scan of the hit files
-        if dup_keys.limit(1).count():
-            # the probe sees the RESOLVED view: a shadowed row must not
-            # trigger a spurious cardinality error
-            n_dup = (
-                read_live(hit)
-                .select(*on)
-                .join(dup_keys, on=on, how="leftsemi")
-                .limit(1)
-                .count()
-            )
-            if n_dup:
-                raise MergeCardinalityError(
-                    "MERGE cardinality violation: a target row is matched by "
-                    "more than one source row and a WHEN MATCHED clause exists — "
-                    "dedupe the source (e.g. row_number() = 1) first"
-                )
-
-    rewrite = hit if (matched or nms) else []
-
-    # ---- the single merge job ------------------------------------------
-    obs = Observation()
-    added: list[FileEntry] = []
-    rows_updated = rows_deleted = rows_inserted = 0
-
-    t_alias, s_alias = "t", "s"
-    join_cond = None
-    for k in on:
-        c = F.col(f"{t_alias}.{k}") == F.col(f"{s_alias}.{k}")
-        join_cond = c if join_cond is None else (join_cond & c)
-
-    def _clause_cascade(base: Any, clauses: list[dict], offset: int):
-        """first-true-clause index (offset+i) as a when-chain, else lit(-1)"""
-        expr = F.lit(-1)
-        for i in reversed(range(len(clauses))):
-            cond = clauses[i].get("condition")
-            c = F.expr(cond) if cond else F.lit(True)
-            expr = F.when(base & c, F.lit(offset + i)).otherwise(expr)
-        return expr
-
-    need_join = bool(rewrite) or bool(not_matched)
-    out_df = None
-    if need_join:
-        tdf = read_live(rewrite or hit)
-        if not rewrite:
-            # insert-only: target enters the join ONLY to anti-match source
-            # rows, so read just the key columns (parquet prunes the
-            # payload) and null-fill the rest for the shared projection
-            tdf = tdf.select(
-                *on,
-                *[F.lit(None).cast(fields[c]).alias(c) for c in tcols if c not in on],
-            )
-        j = (
-            tdf.withColumn("__t", F.lit(1)).alias(t_alias)
-            .join(
-                source.withColumn("__s", F.lit(1)).alias(s_alias),
-                on=join_cond,
-                how="full_outer",
-            )
-        )
-        t_here = F.col(f"{t_alias}.__t").isNotNull()
-        s_here = F.col(f"{s_alias}.__s").isNotNull()
-        clause = (
-            F.when(t_here & s_here, _clause_cascade(F.lit(True), matched, 0))
-            .when(t_here & ~s_here, _clause_cascade(F.lit(True), nms, 100))
-            .otherwise(_clause_cascade(F.lit(True), not_matched, 200))
-        )
-        j = j.withColumn("__clause", clause)
-
-        def _is(kind: str, idx_off: int, clauses: list[dict]) -> Any:
-            ids = [idx_off + i for i, c in enumerate(clauses) if c["action"] == kind]
-            return F.col("__clause").isin(ids) if ids else F.lit(False)
-
-        upd = _is("update", 0, matched) | _is("update", 100, nms)
-        dele = _is("delete", 0, matched) | _is("delete", 100, nms)
-        ins = _is("insert", 200, not_matched)
-        j = j.observe(
-            obs,
-            F.sum(upd.cast("long")).alias("u"),
-            F.sum(dele.cast("long")).alias("d"),
-            F.sum(ins.cast("long")).alias("i"),
-        )
-        # drop: deleted rows; source rows with no applicable insert clause;
-        # and — when not rewriting — every target-side row (those files stay)
-        keep = ~dele & ~(~t_here & (F.col("__clause") == -1))
-        if not rewrite:
-            keep = keep & ~t_here
-        j = j.where(keep)
-
-        # per-column projection: cascade over clause ids; source columns
-        # resolve case-insensitively (Spark's own identifier semantics)
-        def _scol(col: str):
-            sc = src_by_lower.get(col.lower())
-            return F.col(f"{s_alias}.`{sc}`") if sc else F.lit(None)
-
-        def _val(col: str):
-            expr = F.col(f"{t_alias}.{col}")  # default: old target value
-            for i, c in enumerate(matched):
+    def _val(col: str, target: bool) -> Column:
+        """``col`` of the output row: a cascade over the clause ids the
+        frame carries (matched 0.., by-source 100.. when it holds ``target``
+        rows; not-matched 200..), defaulting to the target value."""
+        t_col = F.col(f"t.`{col}`")
+        expr = t_col if target else F.lit(None)
+        for off, clauses in ((0, matched), (100, nms)) if target else ():
+            for i, c in enumerate(clauses):
                 if c["action"] != "update":
                     continue
                 st = c["set"]
                 if st == "*":
-                    v = _scol(col)
+                    v = _scol(col) if off == 0 else t_col
                 else:
-                    v = F.expr(st[col]) if col in st else F.col(f"{t_alias}.{col}")
-                expr = F.when(F.col("__clause") == i, v).otherwise(expr)
-            for i, c in enumerate(nms):
-                if c["action"] != "update":
-                    continue
-                st = c["set"]
-                v = F.expr(st[col]) if st != "*" and col in st else F.col(f"{t_alias}.{col}")
-                expr = F.when(F.col("__clause") == 100 + i, v).otherwise(expr)
-            for i, c in enumerate(not_matched):
-                vals = c["values"]
-                if vals == "*":
-                    v = _scol(col)
+                    v = F.expr(st[col]) if col in st else t_col
+                expr = F.when(F.col("__clause") == off + i, v).otherwise(expr)
+        for i, c in enumerate(not_matched):
+            vals = c["values"]
+            if vals == "*":
+                v = _scol(col)
+            else:
+                v = F.expr(vals[col]) if col in vals else F.lit(None)
+            expr = F.when(F.col("__clause") == 200 + i, v).otherwise(expr)
+        return expr.cast(fields[col]).alias(col)
+
+    def _is(kind: str) -> Column:
+        ids = [
+            off + i
+            for off, clauses in ((0, matched), (100, nms), (200, not_matched))
+            for i, c in enumerate(clauses)
+            if c["action"] == kind
+        ]
+        return F.col("__clause").isin(ids) if ids else F.lit(False)
+
+    upd, dele, ins = _is("update"), _is("delete"), _is("insert")
+    # the pruner, the cardinality check, the size estimate and the emitter
+    # all read the source: cache it once, unless the caller already did
+    # (then the cache is theirs to drop)
+    cached = [] if source.is_cached else [source.cache()]
+    try:
+        data, eq_deletes, pos_deletes = table._split_deletes(table.files(snap.version))
+        deletes = eq_deletes + pos_deletes
+        eq_cols = snap.summary.get("eq_delete_cols") or []
+
+        # raw key projection: pruning and the leftsemi probe are both
+        # duplicate-insensitive, so a distinct here would only add a shuffle
+        skeys = source.select(*on)
+
+        # ---- candidate discovery ---------------------------------------
+        if nms:
+            cand, n_rows = list(data), source.count()
+        else:
+            cand, n_rows = table.prune_by_keys(data, skeys, on, snap.schema)
+        # the live target rows holding a source key, with their file, read
+        # once from the key columns: the exact hit set, the cardinality
+        # check and the inserts' anti-join all use it. Rows pending deletes
+        # shadow are resolved out: a deleted row is no match and must not
+        # force a rewrite
+        held = None
+        if cand:
+            held = (
+                table.read_with_positions(cand, snap.schema, deletes, eq_cols)
+                .join(skeys, on=on, how="leftsemi")
+                .select("__abs", *on)
+                .cache()
+            )
+            cached.append(held)
+        if nms:
+            hit = list(data)  # every target row is in scope by definition
+            pruned = probed = 0
+        else:
+            holding = table.files_holding(cand, held) if cand else {}
+            hit = [e for e in cand if e.path in holding]
+            pruned, probed = len(data) - len(cand), len(cand)
+
+        # ---- ANSI cardinality check (key columns only, no payload) -----
+        if (matched or nms) and hit:
+            dup_keys = (
+                source.groupBy(*on).count().where(F.col("count") > 1).drop("count")
+            )
+            # source-only pre-check first: a duplicate-free source (the
+            # common case) must not cost a key-column scan of the hit files
+            if dup_keys.limit(1).count():
+                # held rows are the RESOLVED view: a shadowed row must not
+                # trigger a spurious cardinality error
+                n_dup = held.join(dup_keys, on=on, how="leftsemi").limit(1).count()
+                if n_dup:
+                    raise MergeCardinalityError(
+                        "MERGE cardinality violation: a target row is matched "
+                        "by more than one source row and a WHEN MATCHED or "
+                        "NOT MATCHED BY SOURCE clause exists — dedupe the "
+                        "source (e.g. row_number() = 1) first"
+                    )
+
+        rewrite = hit if (matched or nms) else []
+        report = {
+            "rows_updated": 0,
+            "rows_deleted": 0,
+            "rows_inserted": 0,
+            "files_rewritten": len(rewrite),
+            "files_pruned": pruned,
+            "files_probed": probed,
+        }
+        if not rewrite and not not_matched:
+            return {"version": None, **report, "files_rewritten": 0}
+
+        # ---- emit ------------------------------------------------------
+        src_bytes = n_rows * _estimate_row_bytes(source)
+        split = src_bytes <= SPLIT_MAX_SOURCE_BYTES
+        rewrite_bytes = sum(e.bytes for e in rewrite)
+        if num_files is None:
+            volume = src_bytes if split else src_bytes + rewrite_bytes
+            num_files = max(1, round(volume / table.DEFAULT_TARGET_FILE_BYTES))
+        marked = source.withColumn("__s", F.lit(1)).alias("s")
+        join_cond = None
+        for k in on:
+            c = F.col(f"t.`{k}`") == F.col(f"s.`{k}`")
+            join_cond = c if join_cond is None else (join_cond & c)
+        s_here = F.col("s.__s").isNotNull()
+        added: list[FileEntry] = []
+        counts = {"u": 0, "d": 0, "i": 0}
+        with rewrite_sized_splits(table.spark, rewrite_bytes):
+            if rewrite:
+                # target rows with pending MoR deletes resolved: a rewrite
+                # re-stamps seq, so an unresolved shadowed row would resurrect
+                tdf = table.read_live(rewrite, deletes, snap.schema, eq_cols)
+                tdf = tdf.withColumn("__t", F.lit(1)).alias("t")
+                if split:
+                    # updates / deletes / keeps: each input split of the hit
+                    # files writes one output file, no exchange
+                    j = tdf.join(F.broadcast(marked), join_cond, "left_outer")
                 else:
-                    v = F.expr(vals[col]) if col in vals else F.lit(None)
-                expr = F.when(F.col("__clause") == 200 + i, v).otherwise(expr)
-            return expr.cast(fields[col]).alias(col)
+                    # one join for every clause, inserts included
+                    j = tdf.join(marked, join_cond, "full_outer")
+                t_here = F.col("t.__t").isNotNull()
+                j = j.withColumn(
+                    "__clause",
+                    F.when(t_here & s_here, _cascade(matched, 0))
+                    .when(t_here, _cascade(nms, 100))
+                    .otherwise(_cascade(not_matched, 200)),
+                )
+                # drop deleted rows and source rows no insert clause takes
+                keep = ~dele & (t_here | (F.col("__clause") != -1))
+                pre = j.withColumn("__keep", keep).select(
+                    *[_val(c, True) for c in tcols], "__clause", "__keep"
+                )
+                if not split:
+                    # observed after the range exchange, whose sampling job
+                    # would otherwise count every row twice
+                    pre = pre.repartitionByRange(num_files, *on)
+                added, counts = _write_observed(
+                    table,
+                    pre,
+                    {k: F.sum(c.cast("long")) for k, c in (("u", upd), ("d", dele), ("i", ins))},
+                    sort_on=None if split else on,
+                )
+            if not_matched and (split or not rewrite):
+                # inserts: source keys no live target row holds (the
+                # payload never moves)
+                fresh = source
+                if held is not None:
+                    held_keys = held.select(*on)
+                    fresh = source.join(
+                        F.broadcast(held_keys) if split else held_keys,
+                        on=on,
+                        how="left_anti",
+                    )
+                fresh = fresh.alias("s").withColumn("__clause", _cascade(not_matched, 200))
+                more = table.write_data_files(
+                    fresh.where(F.col("__clause") != -1)
+                    .select(*[_val(c, False) for c in tcols])
+                    .repartitionByRange(num_files, *on)
+                    .sortWithinPartitions(*on)
+                )
+                added += more
+                counts["i"] = sum(e.rows for e in more)  # every row an insert
 
-        out_df = j.select(*[_val(c) for c in tcols])
-
-    # ---- commit ---------------------------------------------------------
-    if out_df is not None:
-        added = table.write_data_files(
-            out_df, num_files=num_files, enforce_constraints=True
+        report.update(
+            rows_updated=counts["u"], rows_deleted=counts["d"], rows_inserted=counts["i"]
         )
-        rows_updated = int(obs.get["u"] or 0)
-        rows_deleted = int(obs.get["d"] or 0)
-        rows_inserted = int(obs.get["i"] or 0)
+        if not (counts["u"] or counts["d"] or counts["i"]) and not (rewrite and deletes):
+            # provable no-op — reclaim staged bytes, never churn the
+            # manifest (unless the rewrite folded pending MoR deletes,
+            # which IS a change)
+            table.discard_staged(added)
+            return {"version": None, **report, "files_rewritten": 0}
 
-    removed = [e.path for e in rewrite]
-    report = {
-        "rows_updated": rows_updated,
-        "rows_deleted": rows_deleted,
-        "rows_inserted": rows_inserted,
-        "files_rewritten": len(rewrite),
-        "files_pruned": pruned,
-        "files_probed": probed,
-    }
-    if (
-        rows_updated == 0
-        and rows_deleted == 0
-        and rows_inserted == 0
-        and not (rewrite and (eq_deletes or pos_deletes))
-    ):
-        # provable no-op — reclaim staged bytes, never churn the manifest
-        # (unless the rewrite folded pending MoR deletes, which IS a change)
-        table.discard_staged(added)
-        return {"version": None, **report, "files_rewritten": 0}
-
-    version = table.commit(
-        "merge",
-        added=added,
-        removed_paths=removed,
-        # snapshot-isolation MERGE with optimistic concurrency: rebase over
-        # concurrent appends, refuse if an input file was removed or a
-        # delete file landed since the read (see IcepackTable.commit)
-        requirements=[
-            ("files-live", removed),
-            ("no-new-deletes", snap.version),
-        ],
-        summary={
-            "on": on,
-            "matched": len(matched),
-            "not_matched": len(not_matched),
-            "not_matched_by_source": len(nms),
-            **{k: report[k] for k in ("rows_updated", "rows_deleted", "rows_inserted")},
-        },
-    )
-    return {"version": version, **report}
+        removed = [e.path for e in rewrite]
+        gone = set(removed)
+        dropped = _dangling(table, [e for e in data if e.path not in gone], deletes, eq_cols)
+        try:
+            version = table.commit(
+                "merge",
+                added=added,
+                removed_paths=removed + [d.path for d in dropped],
+                requirements=[
+                    ("files-live", removed),
+                    ("no-new-deletes", snap.version),
+                    ("no-new-data", snap.version),
+                ],
+                summary={
+                    "keys": on,
+                    "matched": len(matched),
+                    "not_matched": len(not_matched),
+                    "not_matched_by_source": len(nms),
+                    "batch_winners": n_rows,
+                    "touched_files": len(rewrite),
+                    "rewrite_mode": "split" if split else "range",
+                    **{k: report[k] for k in ("rows_updated", "rows_deleted", "rows_inserted")},
+                },
+            )
+        except ConflictError:
+            table.discard_staged(added)  # a refused commit leaves no files
+            raise
+        return {"version": version, **report}
+    finally:
+        for df in cached:
+            df.unpersist()

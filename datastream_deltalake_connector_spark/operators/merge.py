@@ -25,14 +25,13 @@ Load-bearing details pinned by the reference's tests:
   in MERGE (DatastreamMetadataColumn.scala:8-13); we keep the flat names for
   test parity (DeltaSchemaMigrationSpec.scala:34-52).
 
-Scale notes: the join is an equi-join on the primary key; when the deduped
-batch is small relative to the target, pass ``broadcast_source=True`` to
-force a broadcast-hash join (no shuffle of the target). Otherwise AQE picks
-sort-merge with runtime skew splitting. The icepack-backed merges
-(operators/table_merge.py, operators/mor.py) additionally prune the target
-to the manifest files whose key ranges, Bloom filters and partition values
-can hold a winner (``IcepackTable.prune_by_keys``), so only touched files
-are read and rewritten.
+Scale notes: this is the pure-DataFrame reference of the CDC merge — one
+full-outer join that AQE plans as sort-merge with skew splitting. The
+icepack-backed copy-on-write merge (operators/table_merge.py) runs the same
+three clauses on the engine's MERGE executor (operators/generic_merge.py),
+which rewrites only the files holding a winner key; the merge-on-read one
+(operators/mor.py) writes equality deletes instead. Both are checked against
+this operator.
 """
 
 from __future__ import annotations
@@ -65,7 +64,6 @@ __all__ = [
     "winners_as_merged",
     "merge_batch",
     "apply_winners",
-    "apply_winners_split",
 ]
 
 
@@ -93,7 +91,6 @@ def merge_batch(
     target: DataFrame,
     batch: DataFrame,
     keys: list[str],
-    broadcast_source: bool = False,
 ) -> DataFrame:
     """Apply a raw CDC change batch to a merged-table DataFrame.
 
@@ -103,28 +100,25 @@ def merge_batch(
     33-106) minus the Delta-table IO.
     """
     winners = latest_by_keys(batch, keys, [TS_COL, SEQ_COL])
-    return apply_winners(target, winners, keys, broadcast_source=broadcast_source)
+    return apply_winners(target, winners, keys)
 
 
-def _source_projection(winners: DataFrame, keys: list[str]) -> tuple[DataFrame, list[str]]:
+def _source_projection(winners: DataFrame, keys: list[str]) -> DataFrame:
     """Merged-table projection of the winners, keeping the delete flag as a
-    private resolution column (dropped from the output)."""
-    payload = payload_columns(winners, keys)
-    src = winners.select(
+    private resolution column ``__deleted`` (never written)."""
+    return winners.select(
         *keys,
-        *payload,
+        *payload_columns(winners, keys),
         F.col(TS_COL).alias(TS_META),
         F.col(SEQ_COL).alias(SEQ_META),
         F.coalesce(F.col(DELETED_COL), F.lit(False)).alias("__deleted"),
     )
-    return src, payload
 
 
 def apply_winners(
     target: DataFrame,
     winners: DataFrame,
     keys: list[str],
-    broadcast_source: bool = False,
 ) -> DataFrame:
     """Resolve deduped winner rows against the target.
 
@@ -133,19 +127,11 @@ def apply_winners(
     evolution: new columns appended nullable, removed columns retained —
     DeltaSchemaMigrationSpec.scala:55-152).
 
-    Physical strategy:
-    - default: ONE full-outer sort-merge join (AQE handles skew). Spark
-      cannot broadcast a full-outer build side, so this always shuffles both
-      sides — correct at any size ratio.
-    - ``broadcast_source=True`` (small batch vs big target — the common CDC
-      case): decompose into broadcastable joins so the TARGET NEVER
-      SHUFFLES: a left-outer join target×broadcast(src) resolves updates/
-      deletes/keeps, a left-semi target×broadcast(src) finds matched keys,
-      and src anti-joined against the broadcast matched-key set yields
-      inserts. Two scans of the (manifest-pruned) target, zero exchanges of
-      the pixel-carrying rows.
+    Physical strategy: ONE full-outer sort-merge join (AQE handles skew).
+    Spark cannot broadcast a full-outer build side, so this always shuffles
+    both sides — correct at any size ratio.
     """
-    src, _ = _source_projection(winners, keys)
+    src = _source_projection(winners, keys)
 
     target_payload = [c for c in target.columns if c not in keys and c not in META_COLS]
     source_payload = [
@@ -153,11 +139,6 @@ def apply_winners(
     ]
     # Union preserving target order, new batch columns appended (mergeSchema).
     out_payload = target_payload + [c for c in source_payload if c not in target_payload]
-
-    if broadcast_source:
-        return _apply_winners_broadcast(
-            target, src, keys, out_payload, source_payload
-        )
 
     s = src.select([F.col(c).alias(f"__s_{c}") for c in src.columns])
 
@@ -191,101 +172,3 @@ def apply_winners(
     out_cols += [pick(c) for c in out_payload + META_COLS]
 
     return joined.where(~drop_row).select(*out_cols)
-
-
-def _apply_winners_broadcast(
-    target: DataFrame,
-    src: DataFrame,
-    keys: list[str],
-    out_payload: list[str],
-    source_payload: list[str],
-) -> DataFrame:
-    """Broadcast decomposition of the MERGE (see apply_winners docstring)."""
-    resolved, inserts = _resolve_and_inserts_broadcast(
-        target, src, keys, out_payload, source_payload
-    )
-    return resolved.unionByName(inserts)
-
-
-def apply_winners_split(
-    target: DataFrame,
-    winners: DataFrame,
-    keys: list[str],
-) -> tuple[DataFrame, DataFrame]:
-    """Broadcast MERGE decomposition returning ``(resolved, inserts)``
-    separately (identical schemas) instead of their union.
-
-    This is the zero-shuffle rewrite contract: ``resolved`` (updates /
-    deletes / keeps) is partition-preserving over the target scan — the
-    caller can write one output file per input split with NO exchange of the
-    pixel-carrying rows — while the (small) ``inserts`` side gets its own
-    range-partitioned layout. Updates never change the key, so each output
-    file's [min,max] key range stays a subset of its input's and manifest
-    pruning keeps working."""
-    src, _ = _source_projection(winners, keys)
-    target_payload = [c for c in target.columns if c not in keys and c not in META_COLS]
-    source_payload = [
-        c for c in src.columns if c not in keys and c not in META_COLS and c != "__deleted"
-    ]
-    out_payload = target_payload + [c for c in source_payload if c not in target_payload]
-    return _resolve_and_inserts_broadcast(target, src, keys, out_payload, source_payload)
-
-
-def _resolve_and_inserts_broadcast(
-    target: DataFrame,
-    src: DataFrame,
-    keys: list[str],
-    out_payload: list[str],
-    source_payload: list[str],
-) -> tuple[DataFrame, DataFrame]:
-    s = src.select([F.col(c).alias(f"__s_{c}") for c in src.columns])
-
-    def key_cond(left: DataFrame, right: DataFrame):
-        cond = None
-        for k in keys:
-            c = left[k] == right[f"__s_{k}"]
-            cond = c if cond is None else (cond & c)
-        return cond
-
-    # 1. updates / deletes / keeps: left-outer with the small side broadcast
-    joined = target.join(F.broadcast(s), key_cond(target, s), "left_outer")
-    s_key = F.col(f"__s_{keys[0]}")
-    take_source = s_key.isNotNull() & (F.col(TS_META) <= F.col(f"__s_{TS_META}"))
-    drop_row = take_source & F.col("__s___deleted")
-
-    def pick(col: str) -> F.Column:
-        s_col = (
-            F.col(f"__s_{col}")
-            if col in source_payload or col in META_COLS
-            else F.lit(None)
-        )
-        t_col = F.col(col) if col in target.columns else F.lit(None)
-        return F.when(take_source, s_col).otherwise(t_col).alias(col)
-
-    resolved = joined.where(~drop_row).select(
-        *[F.col(k) for k in keys], *[pick(c) for c in out_payload + META_COLS]
-    )
-
-    # 2. inserts: src keys not matched in the target. The matched-key set is
-    # ≤ |src| (semi join with src broadcast), so IT broadcasts too — the
-    # anti join never shuffles. The target side reads only the key columns
-    # (column-pruned parquet scan: the pixel bytes never move).
-    matched_keys = (
-        target.select(*keys)
-        .join(F.broadcast(s.select(*[f"__s_{k}" for k in keys])), key_cond(target, s), "left_semi")
-        .select(*[F.col(k).alias(f"__m_{k}") for k in keys])
-    )
-    anti_cond = None
-    for k in keys:
-        c = src[k] == F.col(f"__m_{k}")
-        anti_cond = c if anti_cond is None else (anti_cond & c)
-    inserts = src.join(F.broadcast(matched_keys), anti_cond, "left_anti").where(
-        ~F.col("__deleted")
-    )
-    insert_cols = [F.col(k) for k in keys]
-    insert_cols += [
-        (F.col(c) if c in source_payload else F.lit(None)).alias(c) for c in out_payload
-    ]
-    insert_cols += [F.col(m) for m in META_COLS]
-
-    return resolved, inserts.select(*insert_cols)

@@ -43,17 +43,16 @@ matching the reference's "not matched → insert" clause.
 from __future__ import annotations
 
 import math
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_MOR_MAX_DELETE_FILES, DEFAULT_MOR_MAX_DELETE_RATIO
 from ..table.icepack import FileEntry, IcepackTable
-from ..table.lineage import LineageJournal
 from .dedup import latest_by_keys
 from .merge import DELETED_COL, SEQ_COL, TS_COL, TS_META, winners_as_merged
-from .table_merge import _estimate_row_bytes, prune_candidates
+from .generic_merge import _estimate_row_bytes
+from .table_merge import prune_candidates
 
 __all__ = ["merge_into_table_mor", "apply_deletes", "maybe_apply_deletes"]
 
@@ -63,7 +62,6 @@ def merge_into_table_mor(
     batch: DataFrame,
     key: str | list[str] = "image_id",
     target_rows_per_file: int | None = None,
-    job_id: str | None = None,
     schema_evolution: str = "merge",
 ) -> int | None:
     """Apply one CDC change batch merge-on-read; returns the committed
@@ -75,7 +73,6 @@ def merge_into_table_mor(
     read once, column-pruned to (key, ts), and never rewritten."""
     keys = [key] if isinstance(key, str) else list(key)
     parent = table.head_version()
-    journal = LineageJournal(table.root, job_id or f"merge-mor-{uuid.uuid4().hex[:12]}")
 
     if any(e.content == "pos_deletes" for e in table.files(parent)):
         # DML positional deletes (rowops.delete_where_mor/update_where_mor)
@@ -89,8 +86,7 @@ def merge_into_table_mor(
     if recorded and recorded != keys:
         # Pending tombstones recorded under a DIFFERENT key set cannot be
         # resolved by this merge's guard scan — pay the deferred rewrite
-        # now and proceed on a clean manifest (the CoW merge auto-applies
-        # for its own reason at table_merge.py; raising here instead would
+        # now and proceed on a clean manifest (raising here instead would
         # permanently wedge a foreachBatch stream whose key set changed,
         # e.g. a composite-PK table upgraded from first-key-only merging:
         # every replayed batch would hit the same error forever).
@@ -103,7 +99,7 @@ def merge_into_table_mor(
     all_entries = table.files(parent)
     pending_deletes = [e for e in all_entries if e.content == "eq_deletes"]
     entries = [e for e in all_entries if e.content == "data"]
-    # shared with the CoW merge: identical candidate sets by construction
+    # the pruner the CoW merge's executor uses: the same candidate files
     cand_entries, n_winners = prune_candidates(
         entries, winners, keys, table.schema(parent)
     )
@@ -178,20 +174,11 @@ def merge_into_table_mor(
         winners.unpersist()
         return None  # every batch row lost the replay guard
 
-    journal.log_task(
-        stage="merge-mor",
-        task_id="batch",
-        files_in=[e.path for e in cand_entries],
-        files_out=[e.path for e in added + del_entries],
-        rows_in=n_winners,
-        rows_out=sum(e.rows for e in added),
-    )
     version = table.commit(
         "merge-mor",
         added=added + del_entries,
         # re-resolved, not the captured parent: evolve_schema may have
-        # committed a metadata-only version in between (CoW merge does the
-        # same at table_merge.py:255)
+        # committed a metadata-only version in between
         expected_parent=table.head_version(),
         summary={
             "batch_winners": n_winners,
@@ -200,15 +187,11 @@ def merge_into_table_mor(
             "tombstone_rows": sum(e.rows for e in del_entries),
         },
     )
-    journal.log_commit(version)
     winners.unpersist()
     return version
 
 
-def apply_deletes(
-    table: IcepackTable,
-    job_id: str | None = None,
-) -> int | None:
+def apply_deletes(table: IcepackTable) -> int | None:
     """Major compaction of pending delete files — equality (CDC merge
     tombstones) or positional (rowops DML) alike: rewrite exactly the data
     files a pending delete file can hit (eq: newer delete seq + overlapping
@@ -226,7 +209,6 @@ def apply_deletes(
     if not deletes and not pos_deletes:
         return None
     key_cols = table.snapshot(parent).summary.get("eq_delete_cols") or []
-    journal = LineageJournal(table.root, job_id or f"apply-del-{uuid.uuid4().hex[:12]}")
 
     if pos_deletes:
         # positional deletes name their victim files exactly — the hit set
@@ -248,14 +230,6 @@ def apply_deletes(
         added = table.write_data_files(
             resolved, enforce_constraints=False  # re-files validated rows
         )
-    journal.log_task(
-        stage="apply-deletes",
-        task_id="all",
-        files_in=removed,
-        files_out=[e.path for e in added],
-        rows_in=sum(e.rows for e in hit),
-        rows_out=sum(e.rows for e in added),
-    )
     version = table.commit(
         "apply-deletes",
         added=added,
@@ -267,7 +241,6 @@ def apply_deletes(
             "rewritten_files": len(hit),
         },
     )
-    journal.log_commit(version)
     return version
 
 
@@ -275,7 +248,6 @@ def maybe_apply_deletes(
     table: IcepackTable,
     max_delete_files: int = DEFAULT_MOR_MAX_DELETE_FILES,
     max_delete_ratio: float = DEFAULT_MOR_MAX_DELETE_RATIO,
-    **kwargs,
 ) -> int | None:
     """Auto-maintenance policy for pending equality deletes, the MoR analogue
     of ``maybe_compact``: apply when delete files pile up (every one joins the
@@ -294,5 +266,5 @@ def maybe_apply_deletes(
         len(dels) >= max_delete_files
         or sum(e.rows for e in dels) / data_rows >= max_delete_ratio
     ):
-        return apply_deletes(table, **kwargs)
+        return apply_deletes(table)
     return None

@@ -200,19 +200,14 @@ def merge_log_to_table(
         if merge_mode == "mor":
             from ..operators.mor import maybe_apply_deletes, merge_into_table_mor
 
-            merge_into_table_mor(
-                target, changes, key=key, job_id=f"stream-batch-{batch_id}"
-            )
+            merge_into_table_mor(target, changes, key=key)
             maybe_apply_deletes(
                 target,
                 max_delete_files=mor_max_delete_files,
                 max_delete_ratio=mor_max_delete_ratio,
-                job_id=f"stream-applydel-{batch_id}",
             )
         else:
-            merge_into_table(
-                target, changes, key=key, job_id=f"stream-batch-{batch_id}"
-            )
+            merge_into_table(target, changes, key=key)
         if auto_compact_min_files:
             from ..operators.compaction import maybe_compact
 

@@ -130,11 +130,18 @@ def _footer_stats(
     needs column DATA, not just the footer. The read is pruned to exactly
     those columns, so for an image table it touches key strings, never
     pixels; cost is O(keys in this file) on whichever worker stages it."""
+    import decimal as _decimal
+
+    import pyarrow as _pa
     import pyarrow.parquet as _pq
 
     pf = _pq.ParquetFile(abs_path)
     md = pf.metadata
     cols = set(stats_cols)
+    # columns whose bounds pyarrow cannot convert (Spark's int-backed
+    # decimals) or would convert to Decimal, which as text compares
+    # lexicographically and mis-prunes: no min/max, unknown null count
+    unreadable: set[str] = set()
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
     # Per-column null totals (None = at least one row group didn't record
@@ -160,7 +167,15 @@ def _footer_stats(
                 nulls[name] = None if nc is None else nulls[name] + int(nc)
             if not st.has_min_max:
                 continue
-            mn, mx = _json_safe(st.min), _json_safe(st.max)
+            try:
+                mn, mx = st.min, st.max
+            except _pa.ArrowNotImplementedError:
+                unreadable.add(name)
+                continue
+            if isinstance(mn, _decimal.Decimal):
+                unreadable.add(name)
+                continue
+            mn, mx = _json_safe(mn), _json_safe(mx)
             if mn is not None and (name not in mins or mn < mins[name]):
                 mins[name] = mn
             if mx is not None and (name not in maxs or mx > maxs[name]):
@@ -168,8 +183,11 @@ def _footer_stats(
     # a column whose statistics were missing from SOME row group has an
     # unknowable total — never report a partial count as exact
     for c, n_seen in seen_rgs.items():
-        if n_seen < md.num_row_groups:
+        if n_seen < md.num_row_groups or c in unreadable:
             nulls[c] = None
+    for c in unreadable:
+        mins.pop(c, None)
+        maxs.pop(c, None)
     stats = {
         c: {"min": mins.get(c), "max": maxs.get(c), "nulls": nulls.get(c)}
         for c in set(mins) | set(maxs) | set(nulls)

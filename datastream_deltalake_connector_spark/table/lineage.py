@@ -1,16 +1,18 @@
 """Per-partition lineage journal for resumable maintenance jobs.
 
-North_rule: every maintenance job checkpoints per-partition lineage
-(files-in → files-out + row counts) so any stage resumes exactly. This is the
-engine's analogue of the reference's Structured Streaming checkpointing
-(reference: DatastreamIO.scala:73, DatastreamDeltaConnector.scala:60-62,
-README.md:142) — but at task granularity, not stream-offset granularity.
+The rewriting maintenance jobs (compaction, clustering) checkpoint
+per-partition lineage (files-in → files-out + row counts) so they resume
+exactly. This is the engine's analogue of the reference's Structured
+Streaming checkpointing (reference: DatastreamIO.scala:73,
+DatastreamDeltaConnector.scala:60-62, README.md:142) — but at task
+granularity, not stream-offset granularity. Merges and apply-deletes are a
+single job and a single commit, so they keep no journal.
 
 Journal = append-only JSONL under <table>/metadata/lineage/<job_id>.jsonl.
-Each completed unit of work (a compaction bin, a cluster range, a merge
-partition) appends one record *after* its output files are durably staged;
-the final table commit appends a ``commit`` record. A resumed job replays the
-journal, skips completed tasks, and reuses their staged outputs verbatim.
+Each completed unit of work (a compaction bin, a cluster range) appends one
+record *after* its output files are durably staged; the final table commit
+appends a ``commit`` record. A resumed job replays the journal, skips
+completed tasks, and reuses their staged outputs verbatim.
 """
 
 from __future__ import annotations

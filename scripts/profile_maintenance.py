@@ -23,7 +23,7 @@ CORES = int(sys.argv[2]) if len(sys.argv) > 2 else 32
 def main():
     from pyspark.sql import functions as F
 
-    from datastream_deltalake_connector_spark.operators import table_merge
+    from datastream_deltalake_connector_spark.operators import generic_merge, table_merge
     from datastream_deltalake_connector_spark.operators.clustering import cluster
     from datastream_deltalake_connector_spark.operators.compaction import compact
     from datastream_deltalake_connector_spark.operators import partitioning
@@ -77,7 +77,7 @@ def main():
     cl.quantile_boundaries = timed_quant
 
     orig_latest = table_merge.latest_by_keys
-    orig_estimate = table_merge._estimate_row_bytes
+    orig_estimate = generic_merge._estimate_row_bytes
 
     def timed_latest(*a, **kw):
         t0 = time.time()
@@ -92,7 +92,7 @@ def main():
         return out
 
     table_merge.latest_by_keys = timed_latest
-    table_merge._estimate_row_bytes = timed_estimate
+    generic_merge._estimate_row_bytes = timed_estimate
 
     n_changes = max(N // 10, 100)
     t0 = time.time()

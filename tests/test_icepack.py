@@ -438,3 +438,25 @@ def test_scan_cli_version_and_as_of(spark, tmp_path, capsys):
     out = run("scan", "--table", root, "--as-of-ms",
               str(t.snapshot(v1).timestamp_ms))
     assert out["rows"] in (50, 150) and out["version"] >= v1
+
+
+def test_decimal_column_appends_scans_and_deletes(spark, tmp_path):
+    """A decimal column records no footer min/max (pyarrow cannot convert
+    Spark's int-backed decimal bounds, and as text they would compare
+    wrongly), so it never prunes — but append, filtered scan and DELETE on
+    it all work."""
+    from decimal import Decimal
+
+    from datastream_deltalake_connector_spark.operators.rowops import delete_where
+
+    df = spark.createDataFrame(
+        [(i, Decimal(f"{i}.25")) for i in range(10)], "id bigint, d decimal(10,2)"
+    )
+    t = IcepackTable.create(spark, str(tmp_path / "dec"), df.schema)
+    t.append(df, num_files=2)
+    assert all((e.stats.get("d") or {}).get("min") is None for e in t.files())
+    got = t.scan(filters=[("d", ">=", Decimal("5.25"))]).select("id").collect()
+    assert sorted(r.id for r in got) == [5, 6, 7, 8, 9]
+    rep = delete_where(t, [("d", "<", Decimal("3.00"))])
+    assert rep["rows_deleted"] == 3
+    assert sorted(r.id for r in t.scan().select("id").collect()) == list(range(3, 10))

@@ -130,6 +130,41 @@ def test_composite_key_merge_prunes_on_its_second_column(spark, tmp_path):
     assert len(got) == 400 and got[10] == 42 and got[20] == 42 and got[30] == 30 % 7
 
 
+def test_generic_merge_keeps_the_range_layout(spark, tmp_path):
+    """A MERGE updating keys in every file of a range-clustered table keeps
+    each file's key range: no output file spans the table, so a later
+    single-key merge still prunes."""
+    t = _clustered(spark, str(tmp_path / "rl"), n=400, num_files=8)
+    ids = list(range(0, 400, 10)) + [399]
+    src = spark.createDataFrame([(i, 9) for i in ids], "id long, v int")
+    rep = merge_into(
+        t, src, "id", matched=[{"action": "update", "condition": None, "set": {"v": "s.v"}}]
+    )
+    assert rep["rows_updated"] == 41 and rep["files_rewritten"] == 8
+    data = t.files()
+    assert all(e.stats["id"]["max"] - e.stats["id"]["min"] < 399 for e in data)
+    kept, _ = t.prune_by_keys(data, spark.createDataFrame([(5,)], "id long"), ["id"], t.schema())
+    assert len(kept) < len(data)
+    got = dict(_state(t))
+    assert len(got) == 400 and all(got[i] == 9 for i in ids) and got[1] == 1
+
+
+def test_cdc_insert_only_batch_rewrites_no_file(spark, tmp_path):
+    """New keys that fall inside the files' ranges but in none of the
+    files: the CoW CDC merge appends them and rewrites nothing."""
+    df = _rows_df(spark, 400).where(F.col("id") % 2 == 0)
+    t = IcepackTable.create(spark, str(tmp_path / "io"), df.schema)
+    for lo in range(0, 400, 40):
+        t.append(df.where((F.col("id") >= lo) & (F.col("id") < lo + 40)), num_files=1)
+    before = {e.path for e in t.files()}
+    ids = [1 + 20 * i for i in range(20)]
+    assert merge_into_table(t, _batch(spark, ids), key="id") is not None
+    assert t.snapshot().summary["touched_files"] == 0
+    assert before <= {e.path for e in t.files()}
+    got = dict(_state(t))
+    assert len(got) == 220 and all(got[i] == 42 for i in ids)
+
+
 @pytest.mark.parametrize("merge", [merge_into_table, merge_into_table_mor])
 def test_key_sets_past_the_cap_prune_on_the_executors(spark, tmp_path, monkeypatch, merge):
     """Past KEY_PROBE_MAX_ROWS the executors apply the same filters per

@@ -26,6 +26,7 @@ from datastream_deltalake_connector_spark.operators.compaction import (
     plan_bins_ffd,
 )
 from datastream_deltalake_connector_spark.operators.expire import expire_snapshots
+from datastream_deltalake_connector_spark.operators import generic_merge
 from datastream_deltalake_connector_spark.operators.merge import merge_batch
 from datastream_deltalake_connector_spark.operators.table_merge import merge_into_table
 from datastream_deltalake_connector_spark.sources.generator import (
@@ -116,12 +117,14 @@ def test_merge_idempotent_replay(spark, image_table):
     assert scan_key_state(t) == state1
 
 
-def test_split_and_range_rewrites_agree(spark, tmp_path):
-    """rewrite_mode='split' (zero-shuffle per-split rewrite) must produce the
-    exact same table state as rewrite_mode='range', and its output files must
-    keep key ranges inside their inputs' (pruning stays sound)."""
+def test_split_and_range_rewrites_agree(spark, tmp_path, monkeypatch):
+    """The MERGE executor's split emitter (zero-shuffle per-split rewrite)
+    must produce the exact same table state as its range emitter, and its
+    rewritten files must keep key ranges inside their inputs' (pruning
+    stays sound)."""
     states = {}
-    for mode in ("split", "range"):
+    for mode, limit in (("split", 1 << 40), ("range", 0)):
+        monkeypatch.setattr(generic_merge, "SPLIT_MAX_SOURCE_BYTES", limit)
         root = str(tmp_path / f"t-{mode}" / "images")
         t = IcepackTable.create(spark, root, MERGED_IMAGE_SCHEMA)
         base = generate_images(spark, 80, num_partitions=4).select(
@@ -136,11 +139,22 @@ def test_split_and_range_rewrites_agree(spark, tmp_path):
             "image_id"
         )
         t.commit("append", added=t.write_data_files(staged), removed_paths=[])
+        before = {e.path for e in t.files()}
         batch = generate_change_batch(
             spark, 80, batch_index=0, updates=20, inserts=8, deletes=6, num_partitions=4
         )
-        merge_into_table(t, batch, rewrite_mode=mode)
+        v = merge_into_table(t, batch)
+        assert t.snapshot(v).summary["rewrite_mode"] == mode
         states[mode] = scan_key_state(t)
+        if mode == "split":
+            span = lambda e: (e.stats["image_id"]["min"], e.stats["image_id"]["max"])  # noqa: E731
+            after = t.files()
+            inputs = [span(e) for e in t.files(v - 1) if e.path not in {a.path for a in after}]
+            outputs = [span(e) for e in after if e.path not in before]
+            # each rewritten input leaves an output inside its own key range
+            # (insert files cover the batch's new keys and may lie anywhere)
+            within = [o for o in outputs if any(lo <= o[0] and o[1] <= hi for lo, hi in inputs)]
+            assert inputs and len(within) >= len(inputs)
     assert states["split"] == states["range"]
 
 
@@ -348,14 +362,11 @@ def test_catalog(spark, tmp_path):
     assert not cat.exists("inventory.voters")
 
 
-def test_broadcast_decision_is_byte_based(spark, tmp_path):
-    """The split (broadcast) vs range (sort-merge) auto decision must follow
-    batch BYTES, not row count: the same tiny-row-count batch flips to range
-    mode when the threshold says its bytes don't fit a broadcast."""
-    from datastream_deltalake_connector_spark.operators.table_merge import (
-        _estimate_row_bytes,
-    )
-
+def test_broadcast_decision_is_byte_based(spark, tmp_path, monkeypatch):
+    """The split (broadcast) vs range (sort-merge) emitter decision must
+    follow source BYTES, not row count: the same tiny-row-count batch flips
+    to the range emitter when the limit says its bytes don't fit a
+    broadcast."""
     root = str(tmp_path / "bt" / "images")
     t = IcepackTable.create(spark, root, MERGED_IMAGE_SCHEMA)
     base = generate_images(spark, 60, num_partitions=2).select(
@@ -369,17 +380,19 @@ def test_broadcast_decision_is_byte_based(spark, tmp_path):
     batch = generate_change_batch(
         spark, 60, batch_index=0, updates=10, inserts=4, deletes=2, num_partitions=2
     ).cache()
-    est = _estimate_row_bytes(batch)
+    est = generic_merge._estimate_row_bytes(batch)
     assert est > 1000  # image rows are KB-scale, not row-count-scale
 
-    v1 = merge_into_table(t, batch, broadcast_bytes_threshold=1)  # forces range
+    monkeypatch.setattr(generic_merge, "SPLIT_MAX_SOURCE_BYTES", 1)
+    v1 = merge_into_table(t, batch)
     assert t.snapshot(v1).summary.get("rewrite_mode") == "range"
-    v2 = merge_into_table(t, batch, broadcast_bytes_threshold=1 << 30)
+    monkeypatch.setattr(generic_merge, "SPLIT_MAX_SOURCE_BYTES", 1 << 30)
+    v2 = merge_into_table(t, batch)
     assert t.snapshot(v2).summary.get("rewrite_mode") == "split"
     batch.unpersist()
 
 
-def test_no_orphan_zero_row_files(spark, tmp_path):
+def test_no_orphan_zero_row_files(spark, tmp_path, monkeypatch):
     """Every parquet file on disk must be reachable from some snapshot:
     an update/delete-only batch (no inserts) must not leak empty insert-side
     part files (round-2 ADVICE finding)."""
@@ -396,7 +409,9 @@ def test_no_orphan_zero_row_files(spark, tmp_path):
     batch = generate_change_batch(
         spark, 50, batch_index=0, updates=10, inserts=0, deletes=5, num_partitions=2
     )
-    merge_into_table(t, batch, rewrite_mode="split")
+    monkeypatch.setattr(generic_merge, "SPLIT_MAX_SOURCE_BYTES", 1 << 40)
+    v = merge_into_table(t, batch)
+    assert t.snapshot(v).summary["rewrite_mode"] == "split"
 
     referenced = set()
     for snap in t.snapshots():

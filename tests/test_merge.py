@@ -21,7 +21,10 @@ from datastream_deltalake_connector_spark.operators.merge import (
     merge_batch,
     winners_as_merged,
 )
+from datastream_deltalake_connector_spark.operators import generic_merge
 from datastream_deltalake_connector_spark.operators.dedup import latest_by_keys
+from datastream_deltalake_connector_spark.operators.table_merge import merge_into_table
+from datastream_deltalake_connector_spark.table import IcepackTable
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 
@@ -245,10 +248,18 @@ def test_winners_as_merged_shape(spark):
     assert m.columns == ["id", "name", "address", TS_META, SEQ_META]
 
 
+def _as_table(spark, path, df):
+    t = IcepackTable.create(spark, str(path), MERGED_SCHEMA)
+    t.append(df)
+    return t
+
+
 @pytest.mark.parametrize("scenario", ["mixed", "all_inserts", "all_deletes"])
-def test_broadcast_path_equals_default(spark, scenario):
-    """The broadcast decomposition (left-outer + semi + anti) must be
-    row-identical to the full-outer reference plan in every clause mix."""
+def test_broadcast_path_equals_default(spark, tmp_path, monkeypatch, scenario):
+    """Both emitters of the table MERGE executor — the split rewrite joined
+    with the broadcast batch, and the range-partitioned full-outer join —
+    must be row-identical to the full-outer reference plan in every clause
+    mix."""
     t1 = merge_batch(
         empty_target(spark),
         batch(spark, [ev("1", "ann", "a st"), ev("2", "bob", "b st"), ev("3", "cy", "c st")]),
@@ -267,23 +278,37 @@ def test_broadcast_path_equals_default(spark, scenario):
     else:
         rows = [ev(str(i), "x", "y", minutes=9, ct="DELETE", deleted=True) for i in ("1", "2", "3")]
     b = batch(spark, rows)
-    default = merge_batch(t1, b, ["id"], broadcast_source=False)
-    bcast = merge_batch(t1, b, ["id"], broadcast_source=True)
-    assert snap(default) == snap(bcast)
+    expect = snap(merge_batch(t1, b, ["id"]))
+    for mode, limit in (("split", 1 << 40), ("range", 0)):
+        monkeypatch.setattr(generic_merge, "SPLIT_MAX_SOURCE_BYTES", limit)
+        t = _as_table(spark, tmp_path / mode, t1)
+        v = merge_into_table(t, b, key="id")
+        assert t.snapshot(v).summary["rewrite_mode"] == mode
+        assert snap(t.scan()) == expect, mode
 
 
-def test_broadcast_path_has_no_target_exchange(spark):
-    """Scale assertion: with broadcast_source=True, the target side never
-    shuffles — the physical plan contains only broadcast exchanges."""
-    t1 = merge_batch(
-        empty_target(spark), batch(spark, [ev("1", "ann", "a st")]), ["id"]
+def test_broadcast_path_has_no_target_exchange(spark, tmp_path, monkeypatch):
+    """Scale assertion: the split emitter's rewrite of the target never
+    shuffles — its one join is a broadcast join and the plan has no range
+    or hash exchange outside the cached batch."""
+    t = _as_table(
+        spark,
+        tmp_path / "t",
+        merge_batch(empty_target(spark), batch(spark, [ev("1", "ann", "a st")]), ["id"]),
     )
-    t1 = spark.createDataFrame(t1.collect(), t1.schema)  # pin as a leaf
-    b = batch(spark, [ev("2", "bob", "b st", minutes=1)])
-    out = merge_batch(t1, b, ["id"], broadcast_source=True)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # Every join must be a broadcast join (target side streamed, never
-    # shuffled); the only hash exchanges allowed are the small batch's own
-    # dedup groupBy.
+    plans = []
+    write = IcepackTable.write_data_files
+
+    def spy(self, df, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, **kw)
+
+    monkeypatch.setattr(IcepackTable, "write_data_files", spy)
+    b = batch(spark, [ev("1", "ann2", "b st", minutes=1, ct="UPDATE-INSERT")])
+    v = merge_into_table(t, b, key="id")
+    assert t.snapshot(v).summary["rewrite_mode"] == "split"
+    # the scan below the cached batch is not part of the rewrite's plan
+    plan = plans[0].split("InMemoryRelation")[0]
     assert "SortMergeJoin" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert "rangepartitioning" not in plan and "hashpartitioning" not in plan, plan

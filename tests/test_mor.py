@@ -12,9 +12,10 @@ merge. These tests pin:
 - apply_deletes: drops delete files, restores metadata-only count_rows,
   leaves the visible row set unchanged
 - snapshot isolation: a reader pinned before a MoR merge sees the old rows
-- compact()/cluster()/CoW-merge auto-apply pending deletes before any
-  data-file rewrite (a rewrite re-stamps data sequence numbers, which would
-  otherwise un-shadow deleted rows)
+- compact()/cluster() auto-apply pending deletes before any data-file
+  rewrite, and the CoW merge reads through them and drops the ones its
+  rewrite leaves dangling (a rewrite re-stamps data sequence numbers, which
+  would otherwise un-shadow deleted rows)
 """
 
 from __future__ import annotations
@@ -263,14 +264,40 @@ def test_cluster_applies_pending_deletes_first(spark, tmp_path):
 def test_cow_merge_applies_pending_deletes_first(spark, tmp_path):
     t = fresh_table(spark, tmp_path)
     merge_into_table_mor(t, cb(spark, 0))
-    # now a CoW merge lands on the same table: it must apply the deletes
-    # before rewriting, and end bit-identical to an all-CoW history
+    # now a CoW merge lands on the same table: it must resolve the deletes
+    # in its rewrite, and end bit-identical to an all-CoW history
     ref = fresh_table(spark, tmp_path, "ref")
     merge_into_table(ref, cb(spark, 0))
     merge_into_table(ref, cb(spark, 1))
     merge_into_table(t, cb(spark, 1))
     assert not [e for e in t.files() if e.content == "eq_deletes"]
     assert key_state(t) == key_state(ref)
+
+
+def test_cow_merge_reads_through_pending_deletes(spark, tmp_path):
+    """A CoW merge over pending equality deletes resolves them in its own
+    read: the rows of an all-MoR history, and no apply-deletes commit."""
+    t = fresh_table(spark, tmp_path)
+    twin = fresh_table(spark, tmp_path, "twin")
+    for table in (t, twin):
+        merge_into_table_mor(table, cb(spark, 0))
+    merge_into_table(t, cb(spark, 1))
+    merge_into_table_mor(twin, cb(spark, 1))
+    assert key_state(t) == key_state(twin)
+    assert "apply-deletes" not in {s.operation for s in t.snapshots()}
+
+
+def test_merges_and_apply_deletes_leave_no_lineage_journal(spark, tmp_path):
+    """Only the resumable rewrites (compaction, clustering) keep a lineage
+    journal; a merge or an apply-deletes is one job and one commit."""
+    import os
+
+    t = fresh_table(spark, tmp_path)
+    merge_into_table_mor(t, cb(spark, 0))
+    apply_deletes(t)
+    merge_into_table(t, cb(spark, 1))
+    lineage = os.path.join(t.root, "metadata", "lineage")
+    assert not os.path.exists(lineage) or not os.listdir(lineage)
 
 
 def test_maybe_apply_deletes_policy(spark, tmp_path):

@@ -74,10 +74,11 @@ def test_scan_projection_pruned(noaqe):
 
 
 def test_generic_merge_single_join_write_job(noaqe, tmp_path):
-    """The general MERGE writes through ONE join: clause routing, cascades,
-    projections, and observe metrics all ride a single full-outer join over
-    only the probe-hit files — a refactor that adds a second join or an
-    extra exchange pair is a scale regression."""
+    """The general MERGE rewrites through ONE join: clause routing,
+    cascades, projections, and observe metrics all ride a single join of
+    only the probe-hit file with the broadcast source, and no target row
+    crosses a shuffle — a refactor that adds a second join or an exchange
+    is a scale regression."""
     from pyspark.sql import types as T
 
     from datastream_deltalake_connector_spark.operators import generic_merge as gm
@@ -101,14 +102,14 @@ def test_generic_merge_single_join_write_job(noaqe, tmp_path):
             num_files=1,
         )
     src = noaqe.createDataFrame([(5, 50.0), (150, 2.5)], "id BIGINT, v DOUBLE")
-    captured = {}
+    plans = []
     orig = IcepackTable.write_data_files
 
     def spy(self, df, **kw):
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        captured["plan"] = buf.getvalue()
+        plans.append(buf.getvalue())
         return orig(self, df, **kw)
 
     IcepackTable.write_data_files = spy
@@ -122,17 +123,17 @@ def test_generic_merge_single_join_write_job(noaqe, tmp_path):
         )
     finally:
         IcepackTable.write_data_files = orig
-    p = captured["plan"]
+    p = plans[0]  # the rewrite; the second write holds the one insert
     joins = re.findall(r"^\(\d+\) (\w*Join\w*)", p, re.M)
-    assert len(joins) == 1, f"expected ONE join, got {joins}:\n{p[:2000]}"
+    assert joins == ["BroadcastHashJoin"], f"expected ONE broadcast join, got {joins}:\n{p[:2000]}"
     scans = len(re.findall(r"^\(\d+\) Scan parquet", p, re.M))
     assert scans == 1, f"only the probe-hit file may be scanned, got {scans}"
-    # SMJ costs its two exchange+sort pairs and nothing else
-    assert exchanges(p) <= 2, f"unexpected extra exchange:\n{p[:2000]}"
+    assert exchanges(p) == 0, f"the rewrite shuffles:\n{p[:2000]}"
     # the insert key (150) lies inside the second file's range, which does
     # not hold it, so pre-pruning keeps both files — the EXACT file_path
     # probe is what bounds the rewrite to the single file holding a match
     assert rep["files_rewritten"] == 1 and rep["files_probed"] == 2
+    assert rep["rows_updated"] == 1 and rep["rows_inserted"] == 1
 
 
 def _kv_batch(spark, i: int):

@@ -277,6 +277,22 @@ def test_merge_cardinality_violation(sql, spark):
         )
 
 
+def test_merge_by_source_only_rejects_duplicate_matches(sql, spark):
+    """With only a NOT MATCHED BY SOURCE clause, a target row matched by two
+    source rows is a cardinality violation too — not a row kept twice."""
+    t = _mk_users(sql)
+    before = sorted((r.id, r.name) for r in t.scan().collect())
+    spark.createDataFrame(
+        [(1, "x", 0.0), (1, "y", 0.0)], "id BIGINT, name STRING, score DOUBLE"
+    ).createOrReplaceTempView("dup_src")
+    with pytest.raises(MergeCardinalityError):
+        sql.execute(
+            "MERGE INTO users t USING dup_src s ON t.id = s.id "
+            "WHEN NOT MATCHED BY SOURCE THEN DELETE"
+        )
+    assert sorted((r.id, r.name) for r in t.scan().collect()) == before
+
+
 def test_merge_noop_returns_null_version(sql, spark):
     t = _merge_fixture(sql, spark)
     v_before = t.head_version()
