@@ -126,10 +126,10 @@ def _merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _merge_upsert_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read twin of `cdc_merge_upsert`: the same even/odd batch
-    framing, but driven through the REAL table with equality-delete files
+    framing, but driven through the REAL table with positional-delete files
     (operators/mor.py) instead of copy-on-write rewrites — the scan the
     driver hashes is resolved through the broadcast anti-join over pending
-    delete files (IcepackTable._scan_with_deletes), so the oracle pins the
+    delete files (IcepackTable.read_live), so the oracle pins the
     whole MoR read path, not just the merge math. Shares `_MERGE_ORACLE`:
     MoR and CoW must be visible-row identical by construction."""
     from datastream_deltalake_connector_spark.operators.mor import (

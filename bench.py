@@ -182,7 +182,7 @@ def _maintenance_chain(spark, n_images: int) -> dict:
     shutil.rmtree(os.path.dirname(batch_dir), ignore_errors=True)
 
     # 2b. the SAME-SIZE batch merged MERGE-ON-READ (operators/mor.py): the
-    # batch lands as O(batch) new files + one key-only delete file — no
+    # batch lands as O(batch) new files + one positional-delete file — no
     # table rewrite. This is the latency story at 100 TB (a sub-percent CDC
     # batch shouldn't pay for the table); the deferred rewrite is then paid
     # once, measured separately as apply_deletes.
@@ -518,13 +518,13 @@ def bloom_prune_bench(spark, n_images: int = 24000) -> dict:
     winners.count()
 
     t0 = time.time()
-    bloom_kept, _ = t.prune_by_keys(entries, winners, ["image_id"], t.schema())
+    bloom_kept, _, _ = t.prune_by_keys(entries, winners, ["image_id"], t.schema())
     bloom_prune_sec = time.time() - t0
     stripped = copy.deepcopy(entries)
     for e in stripped:
         e.stats.get("image_id", {}).pop("bloom", None)
     t0 = time.time()
-    range_kept, _ = t.prune_by_keys(stripped, winners, ["image_id"], t.schema())
+    range_kept, _, _ = t.prune_by_keys(stripped, winners, ["image_id"], t.schema())
     range_prune_sec = time.time() - t0
     winners.unpersist()
 
@@ -716,7 +716,7 @@ def mor_soak_bench(spark, n_images: int = 4000, batches: int = 20) -> dict:
         if maybe_apply_deletes(t, max_delete_files=6, max_delete_ratio=10.0):
             applies += 1
         trajectory.append(
-            sum(1 for e in t.files() if e.content == "eq_deletes")
+            sum(1 for e in t.files() if e.content != "data")
         )
         shutil.rmtree(os.path.dirname(bdir), ignore_errors=True)
     scan_last = scan_wall()
@@ -1146,7 +1146,7 @@ def write_bench_md(payload: dict) -> None:
             "## Merge-on-read churn soak (maybe_apply_deletes policy)",
             "",
             "Sustained sparse CDC churn through the streaming sink's",
-            "per-batch policy chain: every merge lands one equality-delete",
+            "per-batch policy chain: every merge lands one positional-delete",
             "file; maybe_apply_deletes folds them into the data files when",
             "the count reaches 6. Pending delete files bound the scan's",
             "broadcast side, so the trajectory + first/last scan walls pin",

@@ -32,11 +32,11 @@ __all__ = [
 # Connector apply-path defaults, declared once: ConnectorConfig, the
 # streaming entry points (streaming/ingest.py) and the fold policy
 # (operators/mor.maybe_apply_deletes) all read them from here.
-# mor: each micro-batch writes only its own rows plus a key-only
-# equality-delete file, so write cost follows the change, not the table.
+# mor: each micro-batch writes only its own rows plus one small
+# positional-delete file, so write cost follows the change, not the table.
 DEFAULT_MERGE_MODE = "mor"
 # fold (apply the pending delete files) once this many pile up, or once
-# their tombstones reach this share of the data rows — 0.3 is Iceberg's
+# their deleted positions reach this share of the data rows — 0.3 is Iceberg's
 # rewrite-data-files ``delete-ratio-threshold``
 DEFAULT_MOR_MAX_DELETE_FILES = 8
 DEFAULT_MOR_MAX_DELETE_RATIO = 0.3
@@ -76,10 +76,10 @@ class ConnectorConfig:
 
     The connector applies CDC micro-batches merge-on-read by default
     (``merge_mode="mor"``), unlike the reference's per-batch Delta MERGE:
-    a batch writes its own rows and one key-only delete file, and the
-    rewrite of the files those deletes hit is folded in bulk once
+    a batch writes its own rows and one positional-delete file, and the
+    rewrite of the files those deletes name is folded in bulk once
     ``mor_max_delete_files`` delete files or a ``mor_max_delete_ratio``
-    tombstone share (0.3) pile up. While deletes are pending, reads of the
+    deleted-row share (0.3) pile up. While deletes are pending, reads of the
     merged table pay one broadcast anti-join. ``merge_mode="cow"`` keeps
     the reference's rewrite-per-batch plan."""
 
@@ -93,7 +93,7 @@ class ConnectorConfig:
     merge_frequency: str = "1 minute"  # processing-time trigger
     microbatch_partitions: int | None = None  # coalesce(n) small-file control
     schema_evolution: str = "merge"  # merge | overwrite | none
-    # mor (default): merge-on-read equality deletes (operators/mor.py) —
+    # mor (default): merge-on-read positional deletes (operators/mor.py) —
     # O(batch) writes per micro-batch, deferred rewrite via
     # maybe_apply_deletes; cow: rewrite touched files per batch (the
     # reference's Delta MERGE)

@@ -16,7 +16,7 @@ matter of the submit command, not the code:
       init     --table PATH [--partition-by fmt]  create an empty image table
       ingest   --table PATH --batch PARQUET      append a generated/base batch
       merge    --table PATH --batch PARQUET      CDC merge a change batch
-               [--mode cow|mor]                  (mor = equality deletes)
+               [--mode cow|mor]                  (mor = positional deletes)
       apply-deletes --table PATH [--if-needed]   pay the deferred MoR rewrite
       compact  --table PATH [--target-mb N]      FFD bin-pack small files
       autocompact --table PATH [--min-num-files N]  compact only past threshold
@@ -102,12 +102,12 @@ def main(argv: list[str] | None = None) -> int:
         "--mode",
         default=None,
         choices=["cow", "mor"],
-        help="cow rewrites touched files; mor lands equality deletes "
+        help="cow rewrites touched files; mor lands positional deletes "
         "(operators/mor.py). Default: config merge_mode",
     )
     p = sub.add_parser(
         "apply-deletes",
-        help="major compaction of pending merge-on-read equality deletes "
+        help="major compaction of pending merge-on-read positional deletes "
         "(rewrite hit data files, drop delete files)",
     )
     common(p)

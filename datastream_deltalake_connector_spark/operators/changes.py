@@ -25,9 +25,9 @@ feed reads ONLY
 
   * data files ADDED by that commit (the new/updated rows), and
   * data files REMOVED by that commit (copy-on-write preimages), and
-  * for merge-on-read commits, the bloom/range-refined candidate files the
-    commit's new equality-delete file can actually hit (the shadowed
-    preimages) — ``delete_hit_candidates``, the same refinement scan() uses,
+  * for merge-on-read commits, the rows at the positions the commit's
+    positional-delete files add or drop (the shadowed preimages), read
+    only from the files those positions name,
 
 i.e. the commit's own churn working set — never the table. Maintenance
 commits (compact / cluster / apply-deletes / evolve-schema / rollup of
@@ -71,8 +71,7 @@ _ROW_PRESERVING_OPS = {
 def _keys_for(table: IcepackTable, version: int, key) -> list[str]:
     if key:
         return [key] if isinstance(key, str) else list(key)
-    summary = table.snapshot(version).summary or {}
-    recorded = summary.get("keys") or summary.get("eq_delete_cols")
+    recorded = (table.snapshot(version).summary or {}).get("keys")
     if recorded:
         return list(recorded)
     # walk back: rollback/overwrite commits don't record keys, but the
@@ -80,8 +79,7 @@ def _keys_for(table: IcepackTable, version: int, key) -> list[str]:
     for snap in reversed(table.snapshots()):
         if snap.version >= version:
             continue
-        s = snap.summary or {}
-        rec = s.get("keys") or s.get("eq_delete_cols")
+        rec = (snap.summary or {}).get("keys")
         if rec:
             return list(rec)
     return []
@@ -94,17 +92,12 @@ def _resolved_old(
     schema: T.StructType,
 ) -> DataFrame:
     """Rows of ``entries`` as they were VISIBLE at ``parent`` — preimages
-    must not include rows a pending delete file (equality or positional)
-    had already shadowed (they were logically gone before this commit)."""
+    must not include rows a pending delete file had already shadowed
+    (they were logically gone before this commit)."""
     if not entries:
         return empty_frame(table.spark, schema)
-    _data, pending_eq, pending_pos = table._split_deletes(table.files(parent))
-    return table.read_live(
-        entries,
-        pending_eq + pending_pos,
-        schema,
-        table.snapshot(parent).summary.get("eq_delete_cols") or [],
-    )
+    _data, pending = table._split_deletes(table.files(parent))
+    return table.read_live(entries, pending, schema)
 
 
 def _rows_at_positions(
@@ -198,8 +191,7 @@ def table_changes(
     'update_postimage' | 'delete') and ``_commit_version``.
 
     ``key``: the merge key column(s). Defaults to what the commits
-    recorded (CoW merges record ``keys``, MoR merges ``eq_delete_cols``);
-    required only for key-less diffs of overwrite/rollback commits on
+    recorded (every merge records ``keys``); required only for key-less diffs of overwrite/rollback commits on
     tables that never merged.
 
     Guarantees (pinned by tests/test_changes.py):
@@ -251,10 +243,9 @@ def table_changes(
         removed = [e for e in prev_entries if e.path not in new_by_path]
         prev_entries = entries
         added_data = [e for e in added if e.content == "data"]
-        added_dels = [e for e in added if e.content == "eq_deletes"]
         removed_data = [e for e in removed if e.content == "data"]
-        removed_dels = [e for e in removed if e.content == "eq_deletes"]
         affect_pos = [e for e in added + removed if e.content == "pos_deletes"]
+        now_pos = [e for e in entries if e.content == "pos_deletes"]
 
         schema = snap.schema
         cols = [f.name for f in schema.fields]
@@ -266,74 +257,27 @@ def table_changes(
             )
         else:
             keys = _keys_for(table, v, key)
-            # rows co-committed with a delete file are never shadowed by it
-            # (equal seq), but a ROLLBACK can re-add data files at their
-            # ORIGINAL (lower) seq alongside re-added delete files: resolve
-            # through the commit's own view
-            new_df = table.read_live(
-                added_data, added_dels if keys else [], schema, keys
-            )
+            # a ROLLBACK can re-add data files together with the delete
+            # files naming some of their rows: resolve through the commit's
+            # own view
+            new_df = table.read_live(added_data, now_pos, schema)
             old_schema = table.snapshot(v - 1).schema
             old_parts = [
                 _resolved_old(table, v - 1, removed_data, old_schema)
             ]
-            affect_dels = added_dels + removed_dels
-            if affect_dels:
-                if not keys:
-                    raise ValueError(
-                        f"commit v{v} ({op}) changed equality-delete files "
-                        "but no merge key is recorded; pass key=..."
-                    )
-                # Delete files added or removed by this commit flip the
-                # VISIBILITY of rows in files present in both manifests:
-                # an added tombstone shadows preimages (MoR merge), a
-                # removed one un-shadows them (rollback). Read only the
-                # bloom/range-refined candidates, restricted to the delete
-                # keys, on BOTH sides — rows whose visibility didn't change
-                # appear identically and are suppressed by the identity
-                # join in _classify.
-                kept_data = [
-                    e
-                    for e in entries
-                    if e.content == "data" and e.path in old_by_path
-                ]
-                hits = table.delete_hit_candidates(kept_data, affect_dels, keys)
-                cand = [e for e in kept_data if e.path in hits]
-                if cand:
-                    del_keys = table._read_files(
-                        affect_dels,
-                        T.StructType(
-                            [f for f in schema.fields if f.name in keys]
-                        ),
-                    ).distinct()
-                    old_vis = _resolved_old(
-                        table, v - 1, cand, old_schema
-                    ).join(F.broadcast(del_keys), keys, "left_semi")
-                    old_parts.append(old_vis)
-                    new_vis = table.read_live(
-                        cand,
-                        [e for e in entries if e.content == "eq_deletes"],
-                        schema,
-                        keys,
-                    )
-                    new_df = new_df.unionByName(
-                        new_vis.join(F.broadcast(del_keys), keys, "left_semi")
-                    )
             if affect_pos:
                 # Positional-delete files added or removed by this commit
                 # flip the visibility of EXACT rows: pair sets diffed across
                 # the two manifests give newly-shadowed positions (preimages
                 # — delete_where_mor / update_where_mor) and un-shadowed
                 # ones (resurrections — rollback), each restricted to the
-                # named data files present in BOTH manifests. No resolved
-                # double-scan is needed (the eq path's machinery): the pairs
-                # ARE the diff, so the feed reads only the addressed files.
+                # named data files present in BOTH manifests. The pairs ARE
+                # the diff, so the feed reads only the addressed files.
                 parent_pos = [
                     e
                     for e in old_by_path.values()
                     if e.content == "pos_deletes"
                 ]
-                now_pos = [e for e in entries if e.content == "pos_deletes"]
                 empty_pairs = empty_frame(
                     table.spark, "__dabs string, __dpos long"
                 )

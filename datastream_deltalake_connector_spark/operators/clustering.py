@@ -73,10 +73,10 @@ def cluster(
     journal = LineageJournal(table.root, job_id)
     parent = table.head_version()
     entries = table.files(parent)
-    # Apply pending deletes (equality OR positional) first: a clustering
-    # rewrite re-stamps data-sequence numbers and re-files every row — both
-    # would un-shadow rows a delete file killed (same guard as compact();
-    # Iceberg's rewrite_data_files does likewise).
+    # Apply pending deletes first: a clustering rewrite re-files every row,
+    # and a positional delete's (file, pos) refs would no longer name the
+    # rows it killed (same guard as compact(); Iceberg's rewrite_data_files
+    # does likewise).
     if any(e.content != "data" for e in entries):
         from .mor import apply_deletes
 

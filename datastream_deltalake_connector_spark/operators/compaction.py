@@ -90,7 +90,7 @@ def maybe_compact(
     groups: dict[tuple, list[FileEntry]] = {}
     for e in table.files():
         if e.content != "data":
-            continue  # equality-delete files are maybe_apply_deletes' job
+            continue  # delete files are maybe_apply_deletes' job
         groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
     binnable = sum(
         len(b)
@@ -114,11 +114,10 @@ def compact(
     journal = LineageJournal(table.root, job_id)
     parent = table.head_version()
     entries = table.files(parent)
-    # Pending deletes must be applied BEFORE any data-file rewrite: commit()
-    # stamps rewritten files with a fresh data-sequence number, which would
-    # lift them above an equality-delete file's seq and un-shadow dead rows —
-    # and a positional delete's (file, pos) refs don't survive re-filing at
-    # all. (Iceberg's rewrite_data_files applies deletes for the same reason.)
+    # Pending deletes must be applied BEFORE any data-file rewrite: a
+    # positional delete's (file, pos) refs don't survive re-filing, so the
+    # rows they shadow would come back. (Iceberg's rewrite_data_files applies
+    # deletes for the same reason.)
     if any(e.content != "data" for e in entries):
         from .mor import apply_deletes
 

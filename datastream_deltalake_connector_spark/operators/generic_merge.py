@@ -5,9 +5,10 @@ Arbitrary ordered ``WHEN MATCHED [AND cond] THEN UPDATE/DELETE``, ``WHEN
 NOT MATCHED [AND cond] THEN INSERT``, and Delta's ``WHEN NOT MATCHED BY
 SOURCE THEN UPDATE/DELETE`` extension — the statement Delta documents as its
 primary upsert surface and the reference leans on Databricks to provide
-(README.md:9 ACID notes). The CDC copy-on-write merge
-(``operators/table_merge.py``) is LWW dedup followed by this executor with
-the reference's fixed three clauses (MergeQueries.scala:91-121).
+(README.md:9 ACID notes). Both CDC merges — copy-on-write
+(``operators/table_merge.py``) and merge-on-read (``operators/mor.py``) —
+are LWW dedup followed by this executor with the reference's fixed three
+clauses (MergeQueries.scala:91-121); they differ only in the emitter.
 
 Scale shape (the 100-TB plan):
 
@@ -19,8 +20,8 @@ Scale shape (the 100-TB plan):
   least one matching key", never the table. (``NOT MATCHED BY SOURCE``
   clauses touch every target row by definition — with one present the
   candidate set is honestly the whole table, same as Delta.)
-- **Two emitters, picked by source bytes** (row count × measured row size
-  against ``SPLIT_MAX_SOURCE_BYTES``):
+- **Copy-on-write: two emitters, picked by source bytes** (row count ×
+  measured row size against ``SPLIT_MAX_SOURCE_BYTES``):
   - *split* (small source, the common CDC shape): each hit file is read at
     its natural splits and LEFT OUTER joined with the broadcast source; each
     input split writes one output file, so no target row crosses an exchange
@@ -31,6 +32,13 @@ Scale shape (the 100-TB plan):
   - *range* (large source): ONE full-outer join of the hit files with the
     source, range-partitioned and sorted on the key, so every output file
     covers a tight, disjoint key range and later merges keep pruning.
+- **Merge-on-read: no rewrite.** The candidates are read once with their
+  row positions and joined with the source (broadcast under the same
+  bound); that cached frame holds each matched row's clause outcome and
+  post-image. Updated and inserted rows go out as one range-partitioned,
+  sorted data write; the positions of updated and deleted rows as ONE
+  positional-delete file (Delta's deletion vectors, Iceberg's position
+  deletes), which ``apply_deletes`` later folds in bulk.
 - **No collect of data.** Per-action row counts ride ``DataFrame.observe``
   on every written frame; only file paths and the source's key columns
   reach the driver. The source is cached once for the whole statement.
@@ -38,9 +46,11 @@ Scale shape (the 100-TB plan):
   a MATCHED or NOT MATCHED BY SOURCE clause exists raises
   ``MergeCardinalityError`` (key-column probe job, no payload shuffle) —
   silently applying one arbitrary match, or keeping the target row once per
-  match, is how engines corrupt tables.
-- **Serializable commit.** The commit requires that its inputs are live and
-  that no data or delete file landed since its snapshot (Delta's
+  match, is how engines corrupt tables. A source whose collected key set
+  holds no duplicate tuple skips the check.
+- **Serializable commit.** The commit requires that its inputs (the files
+  it rewrites, or the files its positions name) are live and that no data
+  or delete file landed since its snapshot (Delta's
   Serializable level), so a racing append raises ``ConflictError`` instead
   of letting a MERGE insert a key that append just wrote.
 
@@ -67,7 +77,13 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..table.icepack import ConflictError, FileEntry, IcepackTable
+from ..table.icepack import (
+    POS_FILE_COL,
+    POS_IDX_COL,
+    ConflictError,
+    FileEntry,
+    IcepackTable,
+)
 from .partitioning import rewrite_sized_splits
 
 __all__ = ["merge_into", "MergeCardinalityError", "SPLIT_MAX_SOURCE_BYTES"]
@@ -150,24 +166,42 @@ def _write_observed(
 
 
 def _dangling(
-    table: IcepackTable,
-    carried: list[FileEntry],
-    deletes: list[FileEntry],
-    eq_cols: list[str],
+    table: IcepackTable, carried: list[FileEntry], deletes: list[FileEntry]
 ) -> list[FileEntry]:
-    """The delete files that apply to none of the ``carried`` data files once
-    a rewrite removed the rest — Iceberg's dangling deletes. The rewrite read
-    through them and every file it wrote has a higher sequence number, so
-    they can leave the manifest in the same commit."""
-    if not deletes:
-        return []
-    if deletes[0].content == "eq_deletes":
-        hits = table.delete_hit_candidates(carried, deletes, eq_cols)
-        live = {d.path for ds in hits.values() for d in ds}
-    else:
-        paths = {e.path for e in carried}
-        live = {d.path for d in deletes if paths & set(table.pos_delete_targets([d]))}
+    """The delete files that name none of the ``carried`` data files once a
+    rewrite removed the rest — Iceberg's dangling deletes. The rewrite read
+    through them, so they can leave the manifest in the same commit."""
+    hits = table.delete_hit_candidates(carried, deletes)
+    live = {d.path for ds in hits.values() for d in ds}
     return [d for d in deletes if d.path not in live]
+
+
+def _write_pos_delete_file(
+    table: IcepackTable, positions: DataFrame, cand: list[FileEntry]
+) -> list[FileEntry]:
+    """Stage ONE positional-delete file from (``__abs``, ``__idx``) rows:
+    URIs map back to manifest-relative paths through a broadcast of the
+    candidate list (driver-side, exact), sorted (file, pos) so footer stats
+    stay tight."""
+    mapping = table.spark.createDataFrame(
+        [(table._file_uri(e.path), e.path) for e in cand],
+        "__abs string, __relfile string",
+    )
+    pos_df = (
+        positions.join(F.broadcast(mapping), "__abs")
+        .select(
+            F.col("__relfile").alias(POS_FILE_COL),
+            F.col("__idx").alias(POS_IDX_COL),
+        )
+        # one task sorts the few matched rows; orderBy would first run a
+        # range-sampling job over the uncached candidate scan, and
+        # coalesce(1) would run that scan itself in one task
+        .repartition(1)
+        .sortWithinPartitions(POS_FILE_COL, POS_IDX_COL)
+    )
+    return table.write_data_files(
+        pos_df, content="pos_deletes", enforce_constraints=False
+    )
 
 
 def merge_into(
@@ -179,6 +213,7 @@ def merge_into(
     not_matched_by_source: Iterable[dict] | None = None,
     num_files: int | None = None,
     schema_evolution: str = "none",
+    emitter: str = "cow",
 ) -> dict:
     """Apply a general MERGE; returns a report dict (``version`` None when
     the merge provably changed nothing).
@@ -200,9 +235,16 @@ def merge_into(
     merge executes, so ``SET *``/``INSERT *`` carry them and existing rows
     read them as NULL.
 
+    ``emitter``: ``"cow"`` (default) rewrites the files holding a match;
+    ``"mor"`` (merge-on-read) rewrites nothing: it writes the updated and
+    inserted rows as new data files and shadows the old versions of
+    updated and deleted rows with ONE positional-delete file. It takes no
+    NOT MATCHED BY SOURCE clause.
+
     The commit summary records ``keys``, ``batch_winners`` (source rows),
-    ``touched_files`` (files rewritten) and ``rewrite_mode`` (``split`` or
-    ``range``), which the change feed and the benches read.
+    ``candidate_files`` (files left after pruning), ``touched_files``
+    (files rewritten) and ``rewrite_mode`` (``split``, ``range`` or
+    ``mor``), which the change feed and the benches read.
     """
     on = [on] if isinstance(on, str) else list(on)
     if not on:
@@ -214,6 +256,11 @@ def merge_into(
         raise ValueError("MERGE requires at least one WHEN clause")
     if schema_evolution not in ("none", "merge"):
         raise ValueError("schema_evolution must be 'none' or 'merge'")
+    if emitter not in ("cow", "mor"):
+        raise ValueError("emitter must be 'cow' or 'mor'")
+    mor = emitter == "mor"
+    if mor and nms:
+        raise ValueError("the merge-on-read emitter takes no NOT MATCHED BY SOURCE clause")
     if schema_evolution == "merge":
         table.evolve_schema(source.schema, strategy="merge")
 
@@ -285,9 +332,11 @@ def merge_into(
     def _val(col: str, target: bool) -> Column:
         """``col`` of the output row: a cascade over the clause ids the
         frame carries (matched 0.., by-source 100.. when it holds ``target``
-        rows; not-matched 200..), defaulting to the target value."""
+        rows; not-matched 200..), defaulting to the target value. The
+        merge-on-read emitter writes only updated target rows, so its
+        default is NULL and the scan skips target columns no SET reads."""
         t_col = F.col(f"t.`{col}`")
-        expr = t_col if target else F.lit(None)
+        expr = t_col if target and not mor else F.lit(None)
         for off, clauses in ((0, matched), (100, nms)) if target else ():
             for i, c in enumerate(clauses):
                 if c["action"] != "update":
@@ -322,9 +371,7 @@ def merge_into(
     # (then the cache is theirs to drop)
     cached = [] if source.is_cached else [source.cache()]
     try:
-        data, eq_deletes, pos_deletes = table._split_deletes(table.files(snap.version))
-        deletes = eq_deletes + pos_deletes
-        eq_cols = snap.summary.get("eq_delete_cols") or []
+        data, deletes = table._split_deletes(table.files(snap.version))
 
         # raw key projection: pruning and the leftsemi probe are both
         # duplicate-insensitive, so a distinct here would only add a shuffle
@@ -332,39 +379,56 @@ def merge_into(
 
         # ---- candidate discovery ---------------------------------------
         if nms:
-            cand, n_rows = list(data), source.count()
+            cand, n_rows, dups = list(data), source.count(), None
         else:
-            cand, n_rows = table.prune_by_keys(data, skeys, on, snap.schema)
-        # the live target rows holding a source key, with their file, read
-        # once from the key columns: the exact hit set, the cardinality
-        # check and the inserts' anti-join all use it. Rows pending deletes
-        # shadow are resolved out: a deleted row is no match and must not
-        # force a rewrite
+            cand, n_rows, dups = table.prune_by_keys(data, skeys, on, snap.schema)
+        src_bytes = n_rows * _estimate_row_bytes(source)
+        split = src_bytes <= SPLIT_MAX_SOURCE_BYTES
+        marked = source.withColumn("__s", F.lit(1)).alias("s")
+        join_cond = None
+        for k in on:
+            c = F.col(f"t.`{k}`") == F.col(f"s.`{k}`")
+            join_cond = c if join_cond is None else (join_cond & c)
+        # the live target rows holding a source key, with their address,
+        # read once: the cardinality check and the inserts' anti-join use
+        # it, and so do the exact hit set (copy-on-write) or the clause
+        # outcomes, post-images and positions (merge-on-read). Rows pending
+        # deletes shadow are resolved out: a deleted row is no match
         held = None
         if cand:
-            held = (
-                table.read_with_positions(cand, snap.schema, deletes, eq_cols)
-                .join(skeys, on=on, how="leftsemi")
-                .select("__abs", *on)
-                .cache()
-            )
+            tdf = table.read_with_positions(cand, snap.schema, deletes)
+            if mor:
+                j = tdf.alias("t").join(
+                    F.broadcast(marked) if split else marked, join_cond
+                )
+                held = j.withColumn("__clause", _cascade(matched, 0)).select(
+                    "__abs",
+                    "__idx",
+                    "__clause",
+                    *[F.col(f"t.`{k}`").alias(k) for k in on],
+                    *[_val(c, True).alias(f"__v_{c}") for c in tcols],
+                )
+            else:
+                held = tdf.join(skeys, on=on, how="leftsemi").select("__abs", *on)
+            held = held.cache()
             cached.append(held)
         if nms:
             hit = list(data)  # every target row is in scope by definition
             pruned = probed = 0
         else:
-            holding = table.files_holding(cand, held) if cand else {}
+            holding = table.files_holding(cand, held) if cand and not mor else {}
             hit = [e for e in cand if e.path in holding]
             pruned, probed = len(data) - len(cand), len(cand)
 
         # ---- ANSI cardinality check (key columns only, no payload) -----
-        if (matched or nms) and hit:
+        # skipped when the pruner's key collect saw no duplicate tuple
+        if (matched or nms) and (hit or (mor and held is not None)) and dups is not False:
             dup_keys = (
                 source.groupBy(*on).count().where(F.col("count") > 1).drop("count")
             )
-            # source-only pre-check first: a duplicate-free source (the
-            # common case) must not cost a key-column scan of the hit files
-            if dup_keys.limit(1).count():
+            # source-only pre-check first when the pruner could not tell: a
+            # duplicate-free source must not cost a scan of the held rows
+            if dups or dup_keys.limit(1).count():
                 # held rows are the RESOLVED view: a shadowed row must not
                 # trigger a spurious cardinality error
                 n_dup = held.join(dup_keys, on=on, how="leftsemi").limit(1).count()
@@ -385,29 +449,76 @@ def merge_into(
             "files_pruned": pruned,
             "files_probed": probed,
         }
-        if not rewrite and not not_matched:
+        shadows = bool(mor and matched) and held is not None
+        if not rewrite and not not_matched and not shadows:
             return {"version": None, **report, "files_rewritten": 0}
 
         # ---- emit ------------------------------------------------------
-        src_bytes = n_rows * _estimate_row_bytes(source)
-        split = src_bytes <= SPLIT_MAX_SOURCE_BYTES
         rewrite_bytes = sum(e.bytes for e in rewrite)
         if num_files is None:
             volume = src_bytes if split else src_bytes + rewrite_bytes
             num_files = max(1, round(volume / table.DEFAULT_TARGET_FILE_BYTES))
-        marked = source.withColumn("__s", F.lit(1)).alias("s")
-        join_cond = None
-        for k in on:
-            c = F.col(f"t.`{k}`") == F.col(f"s.`{k}`")
-            join_cond = c if join_cond is None else (join_cond & c)
         s_here = F.col("s.__s").isNotNull()
         added: list[FileEntry] = []
+        shadowed: list[FileEntry] = []
         counts = {"u": 0, "d": 0, "i": 0}
+
+        def inserts(broadcast: bool) -> DataFrame:
+            """source rows no live target row holds, with their clause id
+            (the payload never moves)"""
+            fresh = source
+            if held is not None:
+                held_keys = held.select(*on)
+                fresh = source.join(
+                    F.broadcast(held_keys) if broadcast else held_keys,
+                    on=on,
+                    how="left_anti",
+                )
+            return fresh.alias("s").withColumn("__clause", _cascade(not_matched, 200))
+
         with rewrite_sized_splits(table.spark, rewrite_bytes):
-            if rewrite:
-                # target rows with pending MoR deletes resolved: a rewrite
-                # re-stamps seq, so an unresolved shadowed row would resurrect
-                tdf = table.read_live(rewrite, deletes, snap.schema, eq_cols)
+            if mor:
+                # updated and inserted rows: one range-partitioned, sorted
+                # write; counts observed after the range exchange
+                parts = []
+                if shadows:
+                    parts.append(
+                        held.select(
+                            *[F.col(f"__v_{c}").alias(c) for c in tcols], "__clause"
+                        )
+                    )
+                if not_matched:
+                    parts.append(
+                        inserts(split).select(
+                            *[_val(c, False) for c in tcols], "__clause"
+                        )
+                    )
+                rows = parts[0]
+                for p in parts[1:]:
+                    rows = rows.unionByName(p)
+                pre = (
+                    rows.where(upd | ins)
+                    .withColumn("__keep", F.lit(True))
+                    .repartitionByRange(num_files, *on)
+                )
+                added, got = _write_observed(
+                    table,
+                    pre,
+                    {k: F.sum(c.cast("long")) for k, c in (("u", upd), ("i", ins))},
+                    sort_on=on,
+                )
+                counts.update(got)
+                if shadows:
+                    # the old versions of updated and deleted rows
+                    shadowed = _write_pos_delete_file(
+                        table, held.where(upd | dele).select("__abs", "__idx"), cand
+                    )
+                    added += shadowed
+                    counts["d"] = sum(e.rows for e in shadowed) - counts["u"]
+            elif rewrite:
+                # target rows with pending MoR deletes resolved: a shadowed
+                # row left unresolved would resurrect in the rewrite
+                tdf = table.read_live(rewrite, deletes, snap.schema)
                 tdf = tdf.withColumn("__t", F.lit(1)).alias("t")
                 if split:
                     # updates / deletes / keeps: each input split of the hit
@@ -438,20 +549,10 @@ def merge_into(
                     {k: F.sum(c.cast("long")) for k, c in (("u", upd), ("d", dele), ("i", ins))},
                     sort_on=None if split else on,
                 )
-            if not_matched and (split or not rewrite):
-                # inserts: source keys no live target row holds (the
-                # payload never moves)
-                fresh = source
-                if held is not None:
-                    held_keys = held.select(*on)
-                    fresh = source.join(
-                        F.broadcast(held_keys) if split else held_keys,
-                        on=on,
-                        how="left_anti",
-                    )
-                fresh = fresh.alias("s").withColumn("__clause", _cascade(not_matched, 200))
+            if not mor and not_matched and (split or not rewrite):
                 more = table.write_data_files(
-                    fresh.where(F.col("__clause") != -1)
+                    inserts(split)
+                    .where(F.col("__clause") != -1)
                     .select(*[_val(c, False) for c in tcols])
                     .repartitionByRange(num_files, *on)
                     .sortWithinPartitions(*on)
@@ -471,14 +572,17 @@ def merge_into(
 
         removed = [e.path for e in rewrite]
         gone = set(removed)
-        dropped = _dangling(table, [e for e in data if e.path not in gone], deletes, eq_cols)
+        carried = [e for e in data if e.path not in gone]
+        dropped = _dangling(table, carried, deletes) if rewrite else []
+        # a rewrite needs its inputs live, positions the files they name
+        inputs = sorted(table.pos_delete_targets(shadowed)) if mor else removed
         try:
             version = table.commit(
-                "merge",
+                "merge-mor" if mor else "merge",
                 added=added,
                 removed_paths=removed + [d.path for d in dropped],
                 requirements=[
-                    ("files-live", removed),
+                    ("files-live", inputs),
                     ("no-new-deletes", snap.version),
                     ("no-new-data", snap.version),
                 ],
@@ -488,8 +592,9 @@ def merge_into(
                     "not_matched": len(not_matched),
                     "not_matched_by_source": len(nms),
                     "batch_winners": n_rows,
+                    "candidate_files": len(cand),
                     "touched_files": len(rewrite),
-                    "rewrite_mode": "split" if split else "range",
+                    "rewrite_mode": emitter if mor else "split" if split else "range",
                     **{k: report[k] for k in ("rows_updated", "rows_deleted", "rows_inserted")},
                 },
             )

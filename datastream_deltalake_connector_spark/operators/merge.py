@@ -30,7 +30,7 @@ full-outer join that AQE plans as sort-merge with skew splitting. The
 icepack-backed copy-on-write merge (operators/table_merge.py) runs the same
 three clauses on the engine's MERGE executor (operators/generic_merge.py),
 which rewrites only the files holding a winner key; the merge-on-read one
-(operators/mor.py) writes equality deletes instead. Both are checked against
+(operators/mor.py) writes positional deletes instead. Both are checked against
 this operator.
 """
 

@@ -18,7 +18,7 @@ Every entry point runs one plan (:func:`_plan`), the 100-TB shape:
   being read — Iceberg's "delete with metadata" fast path. Partition-aligned
   deletes (drop a day, drop a source) cost one manifest write.
 - **Locate.** The remaining candidates are read once through
-  ``read_with_positions`` (pending deletes of either kind resolved out),
+  ``read_with_positions`` (pending positional deletes resolved out),
   and ``IcepackTable.files_holding`` names the files holding a matching
   live row — Delta's "find the touched files first". No hit: no write, no
   commit.
@@ -40,13 +40,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..table.icepack import (
-    POS_FILE_COL,
-    POS_IDX_COL,
-    FileEntry,
-    IcepackTable,
-    Snapshot,
-)
+from ..table.icepack import FileEntry, IcepackTable, Snapshot
+from .generic_merge import _write_pos_delete_file
 
 __all__ = [
     "delete_where",
@@ -89,7 +84,7 @@ class _Plan:
 
     table: IcepackTable
     snap: Snapshot
-    deletes: list[FileEntry]  # pending delete files, all of one kind
+    deletes: list[FileEntry]  # pending positional-delete files
     pred: Column
     cand: list[FileEntry]
     dropped: list[FileEntry]
@@ -101,12 +96,8 @@ class _Plan:
         (``__abs``, ``__idx``) address; rows pending deletes shadow are
         resolved out, so a deleted row can never re-match."""
         return self.table.read_with_positions(
-            files, self.snap.schema, self.deletes, self.eq_cols
+            files, self.snap.schema, self.deletes
         ).where(F.coalesce(self.pred, F.lit(False)))
-
-    @property
-    def eq_cols(self) -> list[str]:
-        return self.snap.summary.get("eq_delete_cols") or []
 
     def locate(self) -> list[FileEntry]:
         """The ``rest`` files holding at least one matching live row."""
@@ -116,7 +107,7 @@ class _Plan:
         return [e for e in self.rest if e.path in hits]
 
     def read_live(self, files: list[FileEntry]) -> DataFrame:
-        return self.table.read_live(files, self.deletes, self.snap.schema, self.eq_cols)
+        return self.table.read_live(files, self.deletes, self.snap.schema)
 
     def commit(
         self, op: str, added: list[FileEntry], removed: list[FileEntry], summary: dict
@@ -129,8 +120,8 @@ class _Plan:
             # concurrent appends (rows this predicate never saw stay
             # untouched), refuse if a candidate file was removed (a rewrite
             # would resurrect its old rows; positions would dangle) or a
-            # delete file landed since the read (a fresh seq would un-shadow
-            # its rows; two kinds would break homogeneity) — see commit()
+            # delete file landed since the read (a rewrite would drop the
+            # file its positions name) — see commit()
             requirements=[
                 ("files-live", [e.path for e in self.cand]),
                 ("no-new-deletes", self.snap.version),
@@ -149,7 +140,7 @@ def _plan(
     ``residual_sql`` disables the drops: arbitrary SQL can't be proven from
     stats."""
     snap = table.snapshot()
-    data, eq, pos = table._split_deletes(table.files(snap.version))
+    data, deletes = table._split_deletes(table.files(snap.version))
     filters = filters or []
     pred = _pred_column(filters, residual_sql)  # validates non-empty early
     cand = table.prune_files(data, filters, snap.schema)
@@ -158,7 +149,7 @@ def _plan(
         # a file with pending pos-deleted rows is NOT fully matching — its
         # shadowed rows are logically gone already and must not be
         # double-counted by a metadata drop
-        named = set(table.pos_delete_targets(pos)) if pos else set()
+        named = set(table.pos_delete_targets(deletes))
         dropped = [
             e
             for e in cand
@@ -174,7 +165,7 @@ def _plan(
     }
     if metadata_drops:
         report["files_dropped_metadata_only"] = len(dropped)
-    return _Plan(table, snap, eq + pos, pred, cand, dropped, rest, report)
+    return _Plan(table, snap, deletes, pred, cand, dropped, rest, report)
 
 
 def _assignment_types(table: IcepackTable, assignments: dict[str, Any]) -> dict:
@@ -235,47 +226,6 @@ def delete_where(
     return {"version": version, "rows_deleted": rows_deleted, **report}
 
 
-def _fold_eq_deletes(table: IcepackTable) -> None:
-    """Positional-delete DML never coexists with pending CDC equality
-    deletes in one snapshot (delete-kind homogeneity — every reader resolves
-    ONE kind): fold pending eq tombstones into the data files first, exactly
-    as merge_into_table_mor folds pending positions."""
-    if any(e.content == "eq_deletes" for e in table.files()):
-        from .mor import apply_deletes
-
-        apply_deletes(table)
-
-
-def _write_pos_delete_file(
-    table: IcepackTable,
-    positions: DataFrame,
-    cand: list[FileEntry],
-) -> list[FileEntry]:
-    """Stage ONE positional-delete file from (``__abs``, ``__idx``) rows:
-    URIs map back to manifest-relative paths through a broadcast of the
-    candidate list (driver-side, exact), sorted (file, pos) so footer stats
-    stay tight."""
-    mapping = table.spark.createDataFrame(
-        [(table._file_uri(e.path), e.path) for e in cand],
-        "__abs string, __relfile string",
-    )
-    pos_df = (
-        positions.join(F.broadcast(mapping), "__abs")
-        .select(
-            F.col("__relfile").alias(POS_FILE_COL),
-            F.col("__idx").alias(POS_IDX_COL),
-        )
-        # one task sorts the few matched rows; orderBy would first run a
-        # range-sampling job over the uncached candidate scan, and
-        # coalesce(1) would run that scan itself in one task
-        .repartition(1)
-        .sortWithinPartitions(POS_FILE_COL, POS_IDX_COL)
-    )
-    return table.write_data_files(
-        pos_df, content="pos_deletes", enforce_constraints=False
-    )
-
-
 def delete_where_mor(
     table: IcepackTable,
     filters: list[Filter] | None = None,
@@ -291,11 +241,10 @@ def delete_where_mor(
     deletes 0.1% of rows scattered across the table makes that a full-table
     rewrite. This path writes O(matched rows) — a few longs per deleted
     row — and defers the rewrite to ``apply_deletes`` (policy-batched via
-    ``maybe_apply_deletes``, exactly like CDC equality tombstones).
+    ``maybe_apply_deletes``, exactly like the MoR CDC merge's).
 
     Same predicate surface and report shape as ``delete_where``; identical
     visible rows afterwards (pinned by tests/test_pos_deletes.py parity)."""
-    _fold_eq_deletes(table)
     plan = _plan(table, filters, residual_sql, metadata_drops=True)
     added: list[FileEntry] = []
     if plan.rest:
@@ -338,9 +287,8 @@ def update_where_mor(
     constraints enforced on the updated rows). The new data files are
     co-committed with the pos-delete file; positions address only the OLD
     physical rows by (file, row-index), so the commit can never shadow its
-    own output — the path-exact analogue of the eq-delete seq scoping."""
+    own output."""
     field_types = _assignment_types(table, assignments)
-    _fold_eq_deletes(table)
     plan = _plan(table, filters, residual_sql, metadata_drops=False)
     report = plan.report
     if not plan.cand:

@@ -16,6 +16,9 @@ file rewrite + transactional commit):
    key, rewrites only those (zero-shuffle split rewrite for small batches,
    a range-partitioned full-outer join for large ones), reads through
    pending merge-on-read deletes, and commits serializably.
+
+``merge_cdc`` is that body; the merge-on-read CDC merge
+(``operators/mor.py``) runs it with the positional-delete emitter.
 """
 
 from __future__ import annotations
@@ -48,6 +51,19 @@ def merge_into_table(
     primary_keys): LWW dedup, the merge join and file pruning all run on
     the full key tuple. ``target_rows_per_file`` sets how many
     range-partitioned files the merge writes (LWW winners over it)."""
+    return merge_cdc(table, batch, key, target_rows_per_file, schema_evolution, "cow")
+
+
+def merge_cdc(
+    table: IcepackTable,
+    batch: DataFrame,
+    key: str | list[str],
+    target_rows_per_file: int | None,
+    schema_evolution: str,
+    emitter: str,
+) -> int | None:
+    """The body both CDC merges share: LWW dedup, schema evolution and the
+    reference's three clauses on ``merge_into`` with the given emitter."""
     keys = [key] if isinstance(key, str) else list(key)
     source = _source_projection(latest_by_keys(batch, keys, [TS_COL, SEQ_COL]), keys)
     source = source.cache()  # merge_into reads a cached source as is
@@ -81,6 +97,7 @@ def merge_into_table(
                 if target_rows_per_file
                 else None
             ),
+            emitter=emitter,
         )
         return report["version"]
     finally:

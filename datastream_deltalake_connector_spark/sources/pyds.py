@@ -27,10 +27,9 @@ Batch path (``IcepackBatchReader``):
   plan), null-fill evolved-away columns, and cast to the exact Arrow schema
   Spark expects.
 - **Merge-on-read resolution executor-side**: each partition carries the
-  equality-delete paths ``IcepackTable.delete_hit_candidates`` gives its file
-  (the range + Bloom set ``scan`` anti-joins); the executor reads the
-  (small) key columns,
-  builds the key set, and masks shadowed rows in the Arrow batch — the
+  positional-delete paths ``IcepackTable.delete_hit_candidates`` assigns its
+  file (the exact set ``scan`` anti-joins); the executor reads the (small)
+  position column of its own rows and masks them in the Arrow batch — the
   anti-join parallelizes per file with zero shuffles.
 
 Streaming path (``IcepackStreamReader``): the table as an exactly-once
@@ -118,16 +117,11 @@ def _resolve_version(t, options) -> int:
 @dataclass
 class _FilePart(InputPartition):
     path: str  # absolute data-file path
-    # absolute paths of equality-delete files with seq > this file's seq and
-    # overlapping key range — empty for the common (clean) case
-    delete_paths: tuple
-    key_cols: tuple
-    # positional deletes: absolute paths of pos-delete files NAMING this data
-    # file (exact, from their __file column), plus the manifest-relative path
-    # the executor filters those files on. Never set together with
-    # delete_paths (delete-kind homogeneity invariant).
-    pos_delete_paths: tuple = ()
-    rel_path: str = ""
+    # the manifest-relative path the executor filters delete rows on
+    rel_path: str
+    # absolute paths of the positional-delete files NAMING this data file
+    # (exact, from their __file column) — empty for the common clean case
+    delete_paths: tuple = ()
 
 
 def _arrow_batches(
@@ -135,7 +129,7 @@ def _arrow_batches(
 ) -> Iterator["pa.RecordBatch"]:
     """Executor-side file read → Arrow batches in Spark's expected schema.
     Null-fills columns the file predates (schema evolution), casts the rest,
-    and masks rows shadowed by the partition's equality-delete files.
+    and masks rows shadowed by the partition's positional-delete files.
 
     ``part`` is None when pruning eliminated every file: Spark represents an
     empty partitions() result as one None partition — emit nothing."""
@@ -160,32 +154,18 @@ def _arrow_batches(
             cols.append(pa.nulls(n, field.type))
     out = pa.table(dict(zip(target.names, cols)), schema=target)
 
-    if part.pos_delete_paths:
+    if part.delete_paths:
         # masked on the ORIGINAL row ordinals (before any other filter):
         # a pos-delete row shadows the file's physical row index
         import numpy as np
-        import pyarrow.compute as pc
 
-        dead: set[int] = set()
-        for dp in part.pos_delete_paths:
-            dt = pq.read_table(dp, columns=["__file", "__pos"])
-            mine = dt.filter(pc.equal(dt.column("__file"), part.rel_path))
-            dead.update(mine.column("__pos").to_pylist())
-        if dead:
-            keep = np.ones(n, dtype=bool)
-            keep[np.fromiter(dead, dtype=np.int64)] = False
-            out = out.filter(pa.array(keep))
-
-    if part.delete_paths and part.key_cols:
-        shadowed = set()
+        keep = np.ones(n, dtype=bool)
         for dp in part.delete_paths:
-            dt = pq.read_table(dp, columns=list(part.key_cols))
-            shadowed.update(
-                zip(*[dt.column(k).to_pylist() for k in part.key_cols])
+            dt = pq.read_table(
+                dp, columns=["__pos"], filters=[("__file", "=", part.rel_path)]
             )
-        keys = zip(*[out.column(k).to_pylist() for k in part.key_cols])
-        mask = pa.array([k not in shadowed for k in keys], pa.bool_())
-        out = out.filter(mask)
+            keep[dt.column("__pos").to_numpy()] = False
+        out = out.filter(pa.array(keep))
 
     yield from out.to_batches(max_chunksize=65536)
 
@@ -197,10 +177,7 @@ class IcepackBatchReader(DataSourceReader):
         t = _table(self.root)
         self.version = _resolve_version(t, options)
         snap = t.snapshot(self.version)
-        self.data, self.deletes, self.pos_deletes = t._split_deletes(
-            t.files(self.version)
-        )
-        self.eq_cols = tuple(snap.summary.get("eq_delete_cols") or [])
+        self.data, self.deletes = t._split_deletes(t.files(self.version))
         self.table_schema = snap.schema
         self._t = t
         self._pruned: list[tuple] = []  # (col, op, value)
@@ -241,33 +218,18 @@ class IcepackBatchReader(DataSourceReader):
         pruned, self._pruned = self._pruned, []  # consume-once (see above)
         t = self._t
         entries = t.prune_files(self.data, pruned, self.table_schema)
-        # merge-on-read: each file gets exactly the equality-delete files
-        # the table assigns it (the set scan() anti-joins), so executors
-        # resolve independently.
-        # positional deletes: exact per-file targeting from the delete files'
-        # own __file column (driver-side, memoized) — only named files carry
-        # any resolution work to the executor
-        assigned = (
-            t.delete_hit_candidates(entries, self.deletes, list(self.eq_cols))
-            if self.deletes
-            else {}
-        )
-        pos_targets: dict[str, set[str]] = {}
-        for d in self.pos_deletes:
-            for rel in t.pos_delete_targets([d]):
-                pos_targets.setdefault(rel, set()).add(t.data_path(d.path))
-        parts = []
-        for e in entries:
-            parts.append(
-                _FilePart(
-                    t.data_path(e.path),
-                    tuple(t.data_path(d.path) for d in assigned.get(e.path, ())),
-                    self.eq_cols,
-                    pos_delete_paths=tuple(sorted(pos_targets.get(e.path, ()))),
-                    rel_path=e.path,
-                )
+        # merge-on-read: each file gets exactly the positional-delete files
+        # naming it (the set scan() anti-joins), so executors resolve
+        # independently and only named files carry any resolution work
+        assigned = t.delete_hit_candidates(entries, self.deletes)
+        return [
+            _FilePart(
+                t.data_path(e.path),
+                e.path,
+                tuple(t.data_path(d.path) for d in assigned.get(e.path, ())),
             )
-        return parts
+            for e in entries
+        ]
 
     def read(self, partition: _FilePart):
         return _arrow_batches(partition, self.schema)
@@ -338,7 +300,7 @@ class IcepackStreamReader(DataSourceStreamReader):
                     "row-level feed."
                 )
             parts.extend(
-                _FilePart(t.data_path(e.path), (), ()) for e in added
+                _FilePart(t.data_path(e.path), e.path) for e in added
             )
         return parts
 

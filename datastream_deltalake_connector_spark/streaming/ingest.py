@@ -154,11 +154,11 @@ def merge_log_to_table(
     the sink keeps the table scan-healthy without a second scheduler.
 
     ``merge_mode``: ``"mor"`` (default) applies each batch merge-on-read
-    (operators/mor.py) — the batch's own rows plus one key-only
-    equality-delete file, so bytes written follow the change, not the
+    (operators/mor.py) — the batch's own rows plus one small
+    positional-delete file, so bytes written follow the change, not the
     table — and chains ``maybe_apply_deletes`` so the deferred rewrite is
     paid in bulk once ``mor_max_delete_files`` delete files or a
-    ``mor_max_delete_ratio`` tombstone share (default 0.3, Iceberg's
+    ``mor_max_delete_ratio`` deleted-row share (default 0.3, Iceberg's
     ``delete-ratio-threshold``) pile up, exactly as
     ``auto_compact_min_files`` amortizes small files. While deletes are
     pending, reads of the merged table pay one broadcast anti-join.

@@ -55,7 +55,7 @@ import uuid
 import numpy as np
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
-from typing import Any, Callable, Iterable
+from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -222,26 +222,6 @@ def _footer_stats(
     }
 
 
-@_functools.lru_cache(maxsize=32)
-def _delete_key_hashes(abs_path: str, key: str) -> "np.ndarray":
-    """Hashed key column of one equality-delete file, memoized: delete files
-    are immutable and capped by DELETE_BLOOM_REFINE_MAX_ROWS total, so every
-    scan over a table with pending deletes reuses the same arrays instead of
-    re-reading and re-hashing parquet per query (review finding)."""
-    import pyarrow.parquet as pq
-
-    from ..functions.bloom import _hash_values
-
-    col = (
-        pq.ParquetFile(abs_path)
-        .read(columns=[key])
-        .column(key)
-        .combine_chunks()
-        .drop_null()
-    )
-    return _hash_values(col.to_numpy(zero_copy_only=False))
-
-
 @_functools.lru_cache(maxsize=64)
 def _pos_delete_refs(abs_path: str) -> tuple[tuple[str, ...], tuple[int, ...]]:
     """(distinct data-file rel paths, per-path shadowed-row counts) of one
@@ -339,19 +319,15 @@ class FileEntry:
     # duplicated into the data files, so their min==max stats prune exactly)
     partition: dict[str, str] = field(default_factory=dict)
     # Iceberg-v2-style merge-on-read support:
-    #   content: "data" (row files) | "eq_deletes" (equality-delete files —
-    #            parquet of key tuples that SHADOW every older data row with
-    #            a matching key) | "pos_deletes" (positional-delete files —
-    #            parquet of (__file, __pos) pairs, each shadowing exactly one
-    #            physical row of the named data file; path-exact, so no seq
-    #            scoping is needed and a file leaving the manifest strands
-    #            its positions harmlessly).
+    #   content: "data" (row files) | "pos_deletes" (positional-delete files
+    #            — parquet of (__file, __pos) pairs, each shadowing exactly
+    #            one physical row of the named data file; path-exact, so a
+    #            file leaving the manifest strands its positions harmlessly).
+    #            Any other kind is refused by _split_deletes.
     #   seq:     data sequence number, stamped by commit() with the committing
-    #            snapshot version. A delete file applies to a data file iff
-    #            delete.seq > data.seq — rows co-committed with their delete
-    #            file (a MoR upsert) are never shadowed by it. Manifests
-    #            written before this field existed load as seq=0 ("older than
-    #            any delete"), which is exactly right.
+    #            snapshot version; the commit requirements compare it with
+    #            their base snapshot. Manifests written before this field
+    #            existed load as seq=0.
     content: str = "data"
     seq: int = 0
 
@@ -848,15 +824,11 @@ class IcepackTable:
         table has one); surviving files get the same predicates pushed into
         the parquet scan by Catalyst.
 
-        Merge-on-read: when the snapshot carries equality-delete files
-        (``FileEntry.content == "eq_deletes"``, written by
-        ``operators.mor.merge_into_table_mor``), shadowed rows are resolved
-        out here — a data row is dropped iff some delete file with a HIGHER
-        data sequence number contains its key. The anti-join is scoped to
-        the candidate data files whose key range overlaps a newer delete
-        file's range (manifest stats, driver-side); every other file streams
-        through untouched, so at 100 TB the resolution cost is proportional
-        to the recent-churn working set, not the table.
+        Merge-on-read: rows the snapshot's pending positional-delete files
+        name are resolved out here (:meth:`read_live`). Only the files those
+        deletes name pay the anti-join; every other file streams through
+        untouched, so the resolution cost follows the recent churn, not the
+        table.
         """
         if ref is not None:
             if version is not None or as_of_timestamp_ms is not None:
@@ -871,12 +843,9 @@ class IcepackTable:
                 )
             version = self.version_as_of(as_of_timestamp_ms)
         snap = self.snapshot(version)
-        data, eq, pos = self._split_deletes(self.files(snap.version))
+        data, deletes = self._split_deletes(self.files(snap.version))
         df = self.read_live(
-            self.prune_files(data, filters, snap.schema),
-            eq + pos,
-            snap.schema,
-            snap.summary.get("eq_delete_cols") or [],
+            self.prune_files(data, filters, snap.schema), deletes, snap.schema
         )
         if filters and apply_filters:
             df = df.where(self.filter_column(filters))
@@ -958,10 +927,6 @@ class IcepackTable:
     # the driver took 0.5 s for 100k keys and 6-8 s for 2M, the executors
     # 0.55-0.85 s and 1.6-2.4 s.
     KEY_PROBE_MAX_ROWS = 100_000
-    # Equality deletes up to this many rows are hashed on the driver for
-    # Bloom refinement (delete_hit_candidates); past it, the conservative
-    # range answer holds
-    DELETE_BLOOM_REFINE_MAX_ROWS = 2_000_000
 
     @classmethod
     def prune_by_keys(
@@ -970,10 +935,11 @@ class IcepackTable:
         keys_df: DataFrame,
         key_cols: list[str],
         schema: T.StructType,
-    ) -> tuple[list[FileEntry], int]:
+    ) -> tuple[list[FileEntry], int, bool | None]:
         """The entries that may hold a row whose ``key_cols`` equal those of
-        some ``keys_df`` row, and the number of ``keys_df`` rows (rows with
-        null keys count, though they match no file).
+        some ``keys_df`` row, the number of ``keys_df`` rows (rows with
+        null keys count, though they match no file), and whether two rows
+        share a key tuple (None past the cap: not known).
 
         One job collects the key columns. Up to ``KEY_PROBE_MAX_ROWS`` rows,
         each key column becomes an ``in`` filter of its distinct non-null
@@ -994,7 +960,8 @@ class IcepackTable:
         keys = keys_df.select(*key_cols)
         got = keys.limit(cls.KEY_PROBE_MAX_ROWS + 1).toArrow()
         if got.num_rows <= cls.KEY_PROBE_MAX_ROWS:
-            return cls.prune_files(entries, key_filters(got), schema), got.num_rows
+            dups = got.group_by(key_cols).aggregate([]).num_rows < got.num_rows
+            return cls.prune_files(entries, key_filters(got), schema), got.num_rows, dups
         bc = keys_df.sparkSession.sparkContext.broadcast(entries)
 
         def kept(batches):
@@ -1015,7 +982,7 @@ class IcepackTable:
         finally:
             bc.destroy()
         hit = {r[0] for r in rows}
-        return [e for e in entries if e.path in hit], sum(r[1] for r in rows)
+        return [e for e in entries if e.path in hit], sum(r[1] for r in rows), None
 
     @staticmethod
     def filter_column(filters: list[tuple]) -> Column | None:
@@ -1046,30 +1013,20 @@ class IcepackTable:
         entries: list[FileEntry],
         deletes: list[FileEntry],
         schema: T.StructType,
-        eq_cols: list[str],
     ) -> DataFrame:
-        """The rows of ``entries`` that the pending ``deletes`` leave
-        visible. ``deletes`` are one snapshot's delete files, so they are
-        all of one kind (see :meth:`_split_deletes`): equality deletes
-        anti-join on ``eq_cols`` scoped by data-sequence number, positional
-        deletes on (file, row index). No deletes: one plain parquet scan."""
-        if not entries or not deletes:
-            return self._read_files(entries, schema)
-        if deletes[0].content == "eq_deletes":
-            return self._scan_with_deletes(entries, deletes, schema, eq_cols)
-        # positional deletes: files they do not name are read as one plain
-        # scan with no join; the named ones (the exact target set, from the
-        # delete files' own ``__file`` column) with their row positions,
-        # anti-joined against the broadcast (file URI, position) pairs, so
-        # the cost follows the files holding deleted rows, never the table
-        targets = self.pos_delete_targets(deletes)
-        hit = [e for e in entries if e.path in targets]
-        plain = [e for e in entries if e.path not in targets]
+        """The rows of ``entries`` that the pending positional ``deletes``
+        leave visible. Files no delete names are read as one plain scan with
+        no join; the named ones (:meth:`delete_hit_candidates`) with their
+        row positions, anti-joined against the broadcast (file URI,
+        position) pairs, so the cost follows the files holding deleted rows,
+        never the table."""
+        hits = self.delete_hit_candidates(entries, deletes)
+        hit = [e for e in entries if e.path in hits]
+        plain = [e for e in entries if e.path not in hits]
         if not hit:
             return self._read_files(plain, schema)
-        resolved = self.read_with_positions(hit, schema, deletes).drop(
-            "__abs", "__idx"
-        )
+        named = list({d.path: d for ds in hits.values() for d in ds}.values())
+        resolved = self.read_with_positions(hit, schema, named).drop("__abs", "__idx")
         if not plain:
             return resolved
         return self._read_files(plain, schema).unionByName(resolved)
@@ -1079,13 +1036,11 @@ class IcepackTable:
         entries: list[FileEntry],
         schema: T.StructType,
         deletes: list[FileEntry] = (),
-        eq_cols: list[str] = (),
     ) -> DataFrame:
         """The rows of ``entries`` (at least one) that the pending
-        ``deletes`` leave visible, as :meth:`read_live` resolves them, each
-        with its physical address: ``__abs``, the file URI
-        ``_metadata.file_path`` reports, and ``__idx``, its parquet row
-        index.
+        positional ``deletes`` leave visible, each with its physical
+        address: ``__abs``, the file URI ``_metadata.file_path`` reports,
+        and ``__idx``, its parquet row index.
 
         The one reader of ``_metadata.row_index``: every position mapping
         passes the URI-formula check first, so drift between the manifest
@@ -1094,25 +1049,18 @@ class IcepackTable:
         from pyspark.sql import functions as F
 
         self._check_uri_formula(entries[0])
-
-        def scan(files: list[FileEntry], schema: T.StructType) -> DataFrame:
-            return (
-                self.spark.read.schema(schema)
-                .parquet(*[self.data_path(e.path) for e in files])
-                .withColumn("__abs", F.col("_metadata.file_path"))
-                .withColumn("__idx", F.col("_metadata.row_index"))
-            )
-
+        df = (
+            self.spark.read.schema(schema)
+            .parquet(*[self.data_path(e.path) for e in entries])
+            .withColumn("__abs", F.col("_metadata.file_path"))
+            .withColumn("__idx", F.col("_metadata.row_index"))
+        )
         if not deletes:
-            return scan(entries, schema)
-        if deletes[0].content == "eq_deletes":
-            return self._scan_with_deletes(entries, deletes, schema, eq_cols, scan)
+            return df
         cond = (F.col("__abs") == F.col("__dabs")) & (
             F.col("__idx") == F.col("__dpos")
         )
-        return scan(entries, schema).join(
-            F.broadcast(self._pos_delete_df(deletes)), cond, "left_anti"
-        )
+        return df.join(F.broadcast(self._pos_delete_df(deletes)), cond, "left_anti")
 
     def files_holding(self, entries: list[FileEntry], rows: DataFrame) -> dict[str, int]:
         """{manifest path: row count} for the ``entries`` holding at least
@@ -1132,71 +1080,21 @@ class IcepackTable:
             out[by_uri[uri]] = n
         return out
 
-    @staticmethod
-    def _ranges_overlap(a: FileEntry, b: FileEntry, cols: list[str]) -> bool:
-        """Conservative: False only when the two files' [min,max] stats PROVE
-        they share no key tuple on ``cols``."""
-        return all(
-            a.may_match(c, "between", (st.get("min"), st.get("max")))
-            for c in cols
-            for st in [b.stats.get(c) or {}]
-        )
-
     def delete_hit_candidates(
-        self,
-        data: list[FileEntry],
-        deletes: list[FileEntry],
-        key_cols: list[str],
+        self, data: list[FileEntry], deletes: list[FileEntry]
     ) -> dict[str, list[FileEntry]]:
-        """For each data file a pending equality-delete file might actually
-        shadow, the delete files that apply to it (``delete.seq > data.seq``
-        and key ranges overlap), keyed by data path — Iceberg's
-        DeleteFileIndex. Files absent from the map need no resolution; the
-        rest are what the MoR scan anti-joins and ``apply_deletes`` rewrites.
-
-        Range test first (conservative). When ANY surviving candidate
-        carries a key Bloom filter, refine DRIVER-SIDE: delete files are
-        key-only (tiny — one per MoR batch since the last apply), so their
-        keys are read with pyarrow (hashes memoized per immutable file) and
-        probed against each bloomed candidate's bitmap; candidates WITHOUT
-        a bloom keep the conservative range answer. No Spark job, no false
-        negatives — on an arrival-ordered layout this is what keeps a sparse
-        tombstone set from forcing a full-table rewrite (ranges overlap
-        everything)."""
-        if not key_cols:
-            raise ValueError(
-                "snapshot has equality-delete files but no eq_delete_cols "
-                "recorded — corrupt metadata"
-            )
+        """For each of the ``data`` files a pending positional-delete file
+        names, the delete files naming it, keyed by data path — Iceberg's
+        DeleteFileIndex. Exact: read from the delete files' own ``__file``
+        column (driver-side pyarrow, memoized per immutable file). Files
+        absent from the map need no resolution; the rest are what
+        :meth:`read_live` anti-joins and ``apply_deletes`` rewrites."""
+        paths = {e.path for e in data}
         assigned: dict[str, list[FileEntry]] = {}
-        for e in data:
-            ds = [
-                d
-                for d in deletes
-                if d.seq > e.seq and self._ranges_overlap(e, d, key_cols)
-            ]
-            if ds:
-                assigned[e.path] = ds
-        key = key_cols[0]
-        bloomed = [
-            e
-            for e in data
-            if e.path in assigned and (e.stats.get(key) or {}).get("bloom")
-        ]
-        if (
-            len(key_cols) != 1
-            or sum(d.rows for d in deletes) > self.DELETE_BLOOM_REFINE_MAX_ROWS
-            or not bloomed
-        ):
-            return assigned
-        # each delete file read and hashed once; a data file drops out when
-        # its bloom holds no key of any delete file assigned to it
-        hashes = {
-            d.path: _delete_key_hashes(self.data_path(d.path), key) for d in deletes
-        }
-        for e in bloomed:
-            if all(e.bloom_excludes(key, hashes[d.path]) for d in assigned[e.path]):
-                del assigned[e.path]
+        for d in deletes:
+            for rel in _pos_delete_refs(self.data_path(d.path))[0]:
+                if rel in paths:
+                    assigned.setdefault(rel, []).append(d)
         return assigned
 
     def _read_files(self, entries: list[FileEntry], schema: T.StructType) -> DataFrame:
@@ -1209,98 +1107,12 @@ class IcepackTable:
         paths = [self.data_path(e.path) for e in entries]
         return self.spark.read.schema(schema).parquet(*paths)
 
-    def _read_with_seq(
-        self,
-        entries: list[FileEntry],
-        schema: T.StructType,
-        seq_col: str,
-        read: Callable[[list[FileEntry], T.StructType], DataFrame] | None = None,
-    ) -> DataFrame:
-        """One parquet scan of ``entries`` with each row's data-sequence
-        number in ``seq_col`` — one scan node however many commits the files
-        come from. ``read`` scans the files (default :meth:`_read_files`).
-
-        Files of one commit get a literal. Files of several are mapped from
-        ``_metadata.file_path``, which costs a metadata column and a CASE
-        per row: one ``isin`` set per sequence number (Catalyst turns large
-        ``isin`` lists into hash sets), not a literal map column, whose
-        lookup probes its keys one by one. A row from a file the map does
-        not name fails the query instead of comparing against NULL, which
-        would resurrect deleted rows."""
-        from pyspark.sql import functions as F
-
-        df = (read or self._read_files)(entries, schema)
-        uris_by_seq: dict[int, list[str]] = {}
-        for e in entries:
-            uris_by_seq.setdefault(e.seq, []).append(self._file_uri(e.path))
-        (s0, uris0), *rest = sorted(uris_by_seq.items())
-        if not rest:
-            return df.withColumn(seq_col, F.lit(s0))
-        self._check_uri_formula(entries[0])
-        path = F.col("_metadata.file_path")
-        seq = F.when(path.isin(uris0), F.lit(s0))
-        for s, uris in rest:
-            seq = seq.when(path.isin(uris), F.lit(s))
-        seq = seq.otherwise(
-            F.raise_error(F.concat(F.lit("no data-sequence number for "), path))
-        )
-        return df.withColumn(seq_col, seq)
-
-    def _scan_with_deletes(
-        self,
-        data: list[FileEntry],
-        deletes: list[FileEntry],
-        schema: T.StructType,
-        key_cols: list[str],
-        read: Callable[[list[FileEntry], T.StructType], DataFrame] | None = None,
-    ) -> DataFrame:
-        """Merge-on-read resolution: anti-join candidate data files against
-        the equality-delete files that can shadow them. ``read`` scans data
-        files (default :meth:`_read_files`).
-
-        Plan shape (the one you'd want at 100 TB): data files proven
-        unaffected by every delete file (older-or-equal seq, or disjoint key
-        range) are read as ONE plain parquet scan with no join at all. The
-        remaining candidates are read as ONE more scan, each row carrying
-        its file's data-sequence number, and anti-joined against the (small,
-        broadcast) delete-file keys with ``delete.seq > data.seq``: one
-        broadcast per scan however many commits the candidates or the
-        delete files come from. Image bytes in the candidate files cross no
-        exchange: an anti-join only filters the probe side."""
-        from pyspark.sql import functions as F
-
-        read = read or self._read_files
-        hits = self.delete_hit_candidates(data, deletes, key_cols)
-        cand = [e for e in data if e.path in hits]
-        plain = [e for e in data if e.path not in hits]
-        if not cand:
-            return read(plain, schema)
-
-        del_schema = T.StructType(
-            [f for f in schema.fields if f.name in key_cols]
-        )
-        del_df = self._read_with_seq(deletes, del_schema, "__es").select(
-            *[F.col(c).alias(f"__del_{c}") for c in key_cols], "__es"
-        )
-        cond = F.col("__es") > F.col("__ds")
-        for c in key_cols:
-            cond = cond & (F.col(c) == F.col(f"__del_{c}"))
-        resolved = (
-            self._read_with_seq(cand, schema, "__ds", read)
-            .join(F.broadcast(del_df), cond, "left_anti")
-            .drop("__ds")
-        )
-        if not plain:
-            return resolved
-        return read(plain, schema).unionByName(resolved)
-
     # ------------------------------------------------- positional deletes
     def pos_delete_targets(self, pos_deletes: list[FileEntry]) -> dict[str, int]:
         """Exact {data-file rel path: shadowed-row count} named by pending
         positional-delete files. Driver-side pyarrow read of the tiny
-        ``__file`` column (memoized per immutable file) — the pos analogue
-        of ``delete_hit_candidates``, but EXACT instead of range/bloom
-        conservative, because pos-delete files address files by path."""
+        ``__file`` column (memoized per immutable file): the counts behind
+        the metadata-only :meth:`count_rows`."""
         out: dict[str, int] = {}
         for d in pos_deletes:
             paths, counts = _pos_delete_refs(self.data_path(d.path))
@@ -1346,8 +1158,10 @@ class IcepackTable:
 
     def _pos_delete_df(self, pos_deletes: list[FileEntry]) -> DataFrame:
         """Union of pending pos-delete files as (__dabs, __dpos): rel paths
-        resolved to the URIs the scan's ``_metadata.file_path`` reports.
-        Small by design (matched rows only) — callers broadcast it."""
+        resolved to the URIs the scan's ``_metadata.file_path`` reports
+        through a literal map of the files they name, so the frame plans as
+        one scan with no join. Small by design (matched rows only) —
+        callers broadcast it."""
         from pyspark.sql import functions as F
 
         schema = T.StructType(
@@ -1356,38 +1170,36 @@ class IcepackTable:
                 T.StructField(POS_IDX_COL, T.LongType()),
             ]
         )
-        del_df = self.spark.read.schema(schema).parquet(
-            *[self.data_path(d.path) for d in pos_deletes]
-        )
         rels = sorted(self.pos_delete_targets(pos_deletes))
-        mapping = self.spark.createDataFrame(
-            [(r, self._file_uri(r)) for r in rels], "__rel string, __dabs string"
+        uris = F.map_from_arrays(
+            F.array(*[F.lit(r) for r in rels]),
+            F.array(*[F.lit(self._file_uri(r)) for r in rels]),
         )
-        return (
-            del_df.join(
-                F.broadcast(mapping), del_df[POS_FILE_COL] == mapping["__rel"]
-            )
-            .select("__dabs", F.col(POS_IDX_COL).alias("__dpos"))
+        return self.spark.read.schema(schema).parquet(
+            *[self.data_path(d.path) for d in pos_deletes]
+        ).select(
+            uris[F.col(POS_FILE_COL)].alias("__dabs"),
+            F.col(POS_IDX_COL).alias("__dpos"),
         )
 
     @staticmethod
     def _split_deletes(
         entries: list[FileEntry],
-    ) -> tuple[list[FileEntry], list[FileEntry], list[FileEntry]]:
-        """(data, eq_deletes, pos_deletes) — and enforce the delete-kind
-        homogeneity invariant: writers fold pending deletes of the OTHER
-        kind before committing theirs (operators/mor.py, operators/rowops.py),
-        so a snapshot carrying both is corrupt metadata, not a state any
-        reader is expected to resolve."""
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """(data, pos_deletes). Raises ``ValueError`` for any other entry
+        kind, such as the equality-delete files older releases wrote: no
+        reader resolves them, so reading past one would return rows it
+        shadows. Fold them with the release that wrote them
+        (``apply_deletes``) before upgrading."""
         data = [e for e in entries if e.content == "data"]
-        eq = [e for e in entries if e.content == "eq_deletes"]
-        pos = [e for e in entries if e.content == "pos_deletes"]
-        if eq and pos:
+        deletes = [e for e in entries if e.content == "pos_deletes"]
+        if len(data) + len(deletes) != len(entries):
+            kinds = sorted({e.content for e in entries} - {"data", "pos_deletes"})
             raise ValueError(
-                "snapshot carries BOTH equality- and positional-delete files "
-                "— corrupt metadata (writers fold the other kind first)"
+                f"manifest holds {kinds} entries, which this release does not "
+                "read; fold them with the release that wrote them first"
             )
-        return data, eq, pos
+        return data, deletes
 
     # ---------------------------------------------------------------- write
     def write_data_files(
@@ -1398,7 +1210,7 @@ class IcepackTable:
         enforce_constraints: bool = True,
     ) -> list[FileEntry]:
         """Stage a DataFrame as immutable parquet files of one ``content``
-        kind (``"data"``, ``"eq_deletes"`` or ``"pos_deletes"``); returns
+        kind (``"data"`` or ``"pos_deletes"``); returns
         manifest entries with footer-derived stats, tagged with that kind.
         Does NOT commit.
 
@@ -1448,7 +1260,14 @@ class IcepackTable:
             )
         else:
             writer = df.write
-        writer.options(**PARQUET_WRITE_OPTIONS).mode("overwrite").parquet(out_dir)
+        writer = writer.options(**PARQUET_WRITE_OPTIONS)
+        if content == "pos_deletes":
+            # no min/max of the long path strings in the footer: nothing
+            # reads them (pos_delete_targets reads the column itself)
+            writer = writer.option(
+                f"parquet.column.statistics.enabled#{POS_FILE_COL}", "false"
+            )
+        writer.mode("overwrite").parquet(out_dir)
         if partition_by:
             self._strip_partition_prefix(out_dir)
         kept = []
@@ -1604,9 +1423,9 @@ class IcepackTable:
                     raise ConflictError(
                         f"commit requirement no-new-deletes violated: {len(bad)} "
                         f"delete file(s) committed after base snapshot {base} — "
-                        "a rewrite landing now would re-stamp data above their "
-                        "seq and resurrect shadowed rows; recompute from the "
-                        "current head"
+                        "their (file, pos) refs would die with a rewrite of "
+                        "the files they name and resurrect those rows; "
+                        "recompute from the current head"
                     )
             elif kind == "no-new-data":
                 base = req[1]
@@ -1671,8 +1490,8 @@ class IcepackTable:
 
         ``entries_override`` replaces the usual carry-forward+added/removed
         entry derivation with an exact entry list, seq numbers INCLUDED —
-        the rollback path, where restamping seqs would re-scope pending
-        equality deletes (a delete file shadows only lower-seq data files).
+        the rollback path, which restores the target's entries as they
+        were.
 
         ``requirements`` are Iceberg-style commit preconditions (the
         UpdateRequirements of its optimistic-concurrency retry loop),
@@ -1687,11 +1506,10 @@ class IcepackTable:
         - ``("files-live", paths)`` — every path is still in the head
           manifest. A rewrite's inputs left the table → its outputs would
           duplicate/resurrect rows another writer removed or re-filed.
-        - ``("no-new-deletes", base_version)`` — no delete file (equality
-          or positional) entered the manifest after ``base_version``. A
-          rewrite re-stamps data seq ABOVE such a delete's seq (un-shadowing
-          its rows), and a pos delete's (file, pos) refs die with the
-          rewrite.
+        - ``("no-new-deletes", base_version)`` — no positional-delete file
+          entered the manifest after ``base_version``. Its (file, pos) refs
+          die with a rewrite of the files they name, which resurrects the
+          rows they shadowed.
         - ``("no-new-data", base_version)`` — no data file entered after
           ``base_version``; for writers whose computed result depends on
           the full row set (serializable rather than snapshot isolation).
@@ -1768,8 +1586,8 @@ class IcepackTable:
                 else:
                     # Stamp the data sequence number: every file added by
                     # this commit is "as of" this snapshot. Carried-over
-                    # entries keep theirs — the seq ordering is what scopes
-                    # equality deletes.
+                    # entries keep theirs — the commit requirements compare
+                    # it with their base snapshot.
                     for e in added:
                         e.seq = version
                     entries = [e for e in old_entries if e.path not in removed] + added
@@ -1817,7 +1635,7 @@ class IcepackTable:
                         "added_files": len(added),
                         "removed_files": len(removed),
                         "total_files": len(entries),
-                        # data-file totals; with pending equality deletes the
+                        # data-file totals; with pending deletes the
                         # row total is GROSS (shadowed rows still counted —
                         # count_rows() nets them out)
                         "total_rows": sum(e.rows for e in entries if e.content == "data"),
@@ -1957,20 +1775,12 @@ class IcepackTable:
         read (the metadata-only COUNT(*) pushdown a table format owes its
         users; footer-derived row counts are exact).
 
-        With pending equality-delete files the manifest total is gross
-        (shadowed rows still counted), so this falls back to counting the
-        resolved scan — still column-pruned to nothing by Catalyst, but a
-        data pass. ``operators.mor.apply_deletes`` restores the
-        metadata-only path.
-
-        Pending POSITIONAL deletes stay metadata-only: each pos-delete row
-        shadows exactly one physical row of a named file, and writers only
-        ever name still-visible rows (matches are computed against the
+        Pending positional deletes keep it metadata-only: each pos-delete
+        row shadows exactly one physical row of a named file, and writers
+        only ever name still-visible rows (matches are computed against the
         resolved view), so net = gross - shadowed, with dangling references
         to since-removed files excluded driver-side."""
-        data, eq, pos = self._split_deletes(self.files(version))
-        if eq:
-            return self.scan(version).count()
+        data, pos = self._split_deletes(self.files(version))
         gross = sum(e.rows for e in data)
         if not pos:
             return gross
@@ -2133,8 +1943,8 @@ class IcepackTable:
         shuffle, stops at the first violation; clean batches pay one extra
         batch-local scan — maintenance rewrites skip it entirely since
         they carry already-validated rows). Constraints referencing
-        columns absent from this frame (equality-delete key files) are
-        skipped: their columns were validated where they exist."""
+        columns absent from this frame are skipped: their columns are
+        validated where they exist."""
         from pyspark.errors import AnalysisException
         from pyspark.sql import functions as F
 
@@ -2187,12 +1997,9 @@ class IcepackTable:
 
         Commits a NEW snapshot (history is preserved: the undone versions
         stay time-travelable until expired) whose manifest is exactly the
-        target snapshot's entry list. Entries keep their ORIGINAL data
-        sequence numbers — restamping would re-scope pending equality
-        deletes, silently resurrecting or dropping rows under merge-on-read
-        (a delete file shadows only lower-seq data files). The target
-        snapshot's schema is restored too, undoing later evolve_schema
-        commits.
+        target snapshot's entry list, ORIGINAL data sequence numbers
+        included. The target snapshot's schema is restored too, undoing
+        later evolve_schema commits.
 
         Raises ``FileNotFoundError`` if any target data file was already
         physically removed (snapshot expired + orphans vacuumed) — same
@@ -2214,19 +2021,14 @@ class IcepackTable:
                 f"no longer exist (expired/vacuumed), e.g. {missing[0]}"
             )
         # The summary must restore the TARGET's state keys, not inherit
-        # HEAD's: e.g. rolling back over an apply_deletes must bring back
-        # eq_delete_cols or the restored delete files are unreadable
-        # ("corrupt metadata" on scan). Forced even when absent in the
-        # target so a pending->clean rollback clears it too. Bookkeeping
-        # totals are recomputed by commit() regardless.
+        # HEAD's. Bookkeeping totals are recomputed by commit() regardless.
         tgt_summary = target.summary or {}
         return self.commit(
             "rollback",
             schema=target.schema,
             summary={
                 **tgt_summary,
-                "eq_delete_cols": tgt_summary.get("eq_delete_cols"),
-                # same forcing for CHECK constraints: a constraint added
+                # forced even when absent in the target: a constraint added
                 # after the target snapshot must roll back with it (commit()
                 # merges HEAD's summary, which would otherwise keep it)
                 "check_constraints": tgt_summary.get("check_constraints"),
@@ -2247,12 +2049,10 @@ class IcepackTable:
         SOURCE can still invalidate a clone that references expired files,
         exactly Delta's documented VACUUM-vs-clone hazard.
 
-        Cloned entries are re-stamped to data-sequence 1: with no pending
-        equality deletes their relative seq order carries no information,
-        and future MoR delete files in the clone (seq = commit version >= 2)
-        must shadow them. Cloning a table WITH pending deletes is refused —
-        the delete files' seq scoping is meaningless under a fresh version
-        line; run ``apply_deletes`` first."""
+        Cloned entries are re-stamped to data-sequence 1, below every
+        commit of the clone's own version line. Cloning a table WITH
+        pending deletes is refused — their positions name the source's
+        files; run ``apply_deletes`` first."""
         import dataclasses
 
         head = self.snapshot()
@@ -2260,10 +2060,8 @@ class IcepackTable:
         if any(e.content != "data" for e in entries):
             raise ValueError(
                 "cannot shallow-clone a table with pending delete files "
-                "(an equality delete's seq scoping would not survive the "
-                "clone's fresh version line, and a positional delete's "
-                "file refs would not survive a later localizing rewrite); "
-                "run apply_deletes() first"
+                "(a positional delete's file refs would not survive a "
+                "later localizing rewrite); run apply_deletes() first"
             )
         summary = head.summary or {}
         t = IcepackTable.create(

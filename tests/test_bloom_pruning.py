@@ -31,7 +31,7 @@ from datastream_deltalake_connector_spark.table import IcepackTable
 
 
 def _prune(entries, winners, key, schema):
-    kept, n = IcepackTable.prune_by_keys(entries, winners, [key], schema)
+    kept, n, _ = IcepackTable.prune_by_keys(entries, winners, [key], schema)
     return [e.path for e in kept], n
 
 
@@ -283,11 +283,11 @@ def test_connector_target_created_with_blooms(spark, tmp_path):
     assert t2.bloom_cols() == []
 
 
-def test_delete_hit_candidates_bloom_refined(spark, tmp_path):
-    """apply_deletes / MoR-scan candidate selection: with blooms, a sparse
-    tombstone set shadows only the files that really contain a deleted key
-    — the range answer on this arrival-ordered layout is ALL 16 files. The
-    refined rewrite must still produce the identical visible table."""
+def test_delete_hit_candidates_name_exact_files(spark, tmp_path):
+    """apply_deletes / MoR-scan candidate selection: a positional-delete
+    file names exactly the files holding a replaced row, with or without
+    Bloom filters — the range answer on this arrival-ordered layout would
+    be ALL 16 files — and never the merge's own output files."""
     from datastream_deltalake_connector_spark.operators.mor import (
         apply_deletes,
         merge_into_table_mor,
@@ -305,52 +305,25 @@ def test_delete_hit_candidates_bloom_refined(spark, tmp_path):
         return t
 
     tb, tp = mk("b", True), mk("p", False)
-    data = [e for e in tb.files() if e.content == "data"]
-    dels = [e for e in tb.files() if e.content == "eq_deletes"]
-    refined = tb.delete_hit_candidates(data, dels, ["image_id"])
-    datp = [e for e in tp.files() if e.content == "data"]
-    delp = [e for e in tp.files() if e.content == "eq_deletes"]
-    ranged = tp.delete_hit_candidates(datp, delp, ["image_id"])
-    assert len(ranged) == 16  # ranges cannot prune this layout
-    assert 1 <= len(refined) <= 4  # 2 true hits + bounded false positives
+    hits = {}
+    for t in (tb, tp):
+        data = [e for e in t.files() if e.content == "data"]
+        dels = [e for e in t.files() if e.content == "pos_deletes"]
+        hits[t.root] = t.delete_hit_candidates(data, dels)
+        newest = max(d.seq for d in dels)
+        assert all(e.path not in hits[t.root] for e in data if e.seq == newest)
+        assert 1 <= len(hits[t.root]) <= 2  # the files holding 123 and 6500
 
     state = lambda t: sorted(
         (r["image_id"], r["v"]) for r in t.scan().select("image_id", "v").collect()
     )
-    assert state(tb) == state(tp)  # scan-side refinement is result-invariant
+    assert state(tb) == state(tp)
     apply_deletes(tb)
     apply_deletes(tp)
     assert state(tb) == state(tp)
-    # the bloomed table paid a bounded rewrite; the plain one rewrote the lot
-    assert tb.snapshot().summary["rewritten_files"] == len(refined)
-    assert tp.snapshot().summary["rewritten_files"] == 16
-
-
-def test_delete_hit_candidates_seq_scoping_with_blooms(spark, tmp_path):
-    """A delete file shadows only LOWER-seq data files: a data file whose
-    key IS in a tombstone but was committed at a HIGHER seq (the co-committed
-    MoR upsert) must stay out of the candidate set even though its bloom
-    matches."""
-    from datastream_deltalake_connector_spark.operators.mor import (
-        merge_into_table_mor,
-    )
-
-    t = IcepackTable.create(
-        spark,
-        str(tmp_path / "seq"),
-        _base(spark).schema,
-        bloom_cols=["image_id"],
-    )
-    t.append(_base(spark, n=2000), num_files=4)
-    merge_into_table_mor(t, _batch(spark, [77]), key="image_id")
-    data = [e for e in t.files() if e.content == "data"]
-    dels = [e for e in t.files() if e.content == "eq_deletes"]
-    cand = t.delete_hit_candidates(data, dels, ["image_id"])
-    # the upsert's own data file carries key img-00000077 and a matching
-    # bloom, but shares the delete file's seq -> excluded
-    newer = [e for e in data if e.seq >= max(d.seq for d in dels)]
-    assert newer and all(e.path not in cand for e in newer)
-    assert 1 <= len(cand) <= 2  # the base file(s) actually containing the key
+    # each table paid a rewrite of only the named files
+    for t in (tb, tp):
+        assert t.snapshot().summary["rewritten_files"] == len(hits[t.root])
 
 
 def test_point_lookup_scan_bloom_pruned(spark, bloomed):

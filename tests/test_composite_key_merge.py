@@ -102,8 +102,8 @@ def test_composite_cow_mor_parity_and_apply_deletes(spark, tmp_path):
         merge_into_table(tc, b, key=KEYS)
         merge_into_table_mor(tm, b, key=KEYS)
     assert _state(tc) == _state(tm)
-    # eq_delete_cols records the composite; apply_deletes preserves the view
-    assert tm.snapshot().summary.get("eq_delete_cols") == KEYS
+    # the merge records the composite; apply_deletes preserves the view
+    assert tm.snapshot().summary.get("keys") == KEYS
     before = _state(tm)
     apply_deletes(tm)
     assert _state(tm) == before
@@ -123,20 +123,26 @@ def test_composite_replay_and_stale_guard(spark, tmp_path):
     assert _state(t) == s1
 
 
-def test_composite_mor_key_set_change_self_heals(spark, tmp_path):
-    """A merge under a different key set auto-applies the pending composite
-    tombstones first (instead of raising forever — review finding), then
-    proceeds; the visible rows reflect both merges."""
-    t = IcepackTable.create(spark, str(tmp_path / "mm"), _base(spark).schema)
-    t.append(_base(spark), num_files=2)
-    merge_into_table_mor(t, _batch(spark, [(5, "click", 1.0, False)]), key=KEYS)
-    assert t.snapshot().summary["eq_delete_cols"] == KEYS
-    v = merge_into_table_mor(
-        t,
-        _batch(spark, [(5, "zzz", 2.0, False)], ts="2024-08-01 00:00:00"),
-        key="user_id",
+def test_composite_mor_key_set_change_commits_without_folding(spark, tmp_path):
+    """A merge under a different key set commits on top of the pending
+    composite-key deletes: positions name rows, not keys, so nothing is
+    folded first. The visible rows reflect both merges, as on CoW."""
+    mk = lambda name: IcepackTable.create(
+        spark, str(tmp_path / name), _base(spark).schema
     )
-    assert v is not None
+    t, cow = mk("mm"), mk("cow")
+    b1 = _batch(spark, [(5, "click", 1.0, False)])
+    b2 = _batch(spark, [(5, "zzz", 2.0, False)], ts="2024-08-01 00:00:00")
+    for tbl in (t, cow):
+        tbl.append(_base(spark), num_files=2)
+    merge_into_table_mor(t, b1, key=KEYS)
+    merge_into_table(cow, b1, key=KEYS)
+    assert t.describe()["delete_files"] == 1
+    assert merge_into_table_mor(t, b2, key="user_id") is not None
+    merge_into_table(cow, b2, key="user_id")
+    assert t.describe()["delete_files"] == 2
+    assert "apply-deletes" not in {s.operation for s in t.snapshots()}
+    assert _state(t) == _state(cow)
     got = dict(((u, et), val) for u, et, val in _state(t))
     # single-key merge: user 5's LWW winner replaces ALL of user 5's rows
     assert got[(5, "zzz")] == 2.0

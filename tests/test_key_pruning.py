@@ -143,7 +143,7 @@ def test_generic_merge_keeps_the_range_layout(spark, tmp_path):
     assert rep["rows_updated"] == 41 and rep["files_rewritten"] == 8
     data = t.files()
     assert all(e.stats["id"]["max"] - e.stats["id"]["min"] < 399 for e in data)
-    kept, _ = t.prune_by_keys(data, spark.createDataFrame([(5,)], "id long"), ["id"], t.schema())
+    kept, _, _ = t.prune_by_keys(data, spark.createDataFrame([(5,)], "id long"), ["id"], t.schema())
     assert len(kept) < len(data)
     got = dict(_state(t))
     assert len(got) == 400 and all(got[i] == 9 for i in ids) and got[1] == 1
@@ -198,11 +198,11 @@ def test_executor_pruning_keeps_bloom_and_partition_pruning(spark, tmp_path, mon
     ).repartition(3)
     for t in tables:
         entries = t.files()
-        want, n = IcepackTable.prune_by_keys(entries, keys, ["id"], t.schema())
+        want, n, _ = IcepackTable.prune_by_keys(entries, keys, ["id"], t.schema())
         assert n == 5 and 0 < len(want) < len(entries)
         with monkeypatch.context() as m:
             m.setattr(IcepackTable, "KEY_PROBE_MAX_ROWS", 1)
-            got, n = IcepackTable.prune_by_keys(entries, keys, ["id"], t.schema())
+            got, n, _ = IcepackTable.prune_by_keys(entries, keys, ["id"], t.schema())
         assert n == 5
         rows = t.read_with_positions(entries, t.schema()).where(
             F.col("id").isin(7, 150, 1000, 3000)
@@ -285,7 +285,7 @@ def test_single_key_pruning_matches_range_and_bloom_reference(spark, tmp_path, n
     keys_df = spark.createDataFrame([(k,) for k in keys], "k string")
     for t in (bloomed, ranged):
         entries = t.files()
-        kept, n = IcepackTable.prune_by_keys(entries, keys_df, ["k"], t.schema())
+        kept, n, _ = IcepackTable.prune_by_keys(entries, keys_df, ["k"], t.schema())
         assert n == len(keys)
         want = _reference_candidates(entries, keys, "k")
         assert sorted(e.path for e in kept) == want

@@ -1,9 +1,10 @@
-"""Merge-on-read (equality-delete) MERGE semantics and maintenance guards.
+"""Merge-on-read (positional-delete) MERGE semantics and maintenance guards.
 
 The MoR path (operators/mor.py) must be result-equivalent to the CoW merge
 (operators/table_merge.py) — which itself ports the reference's
 MergeQueriesSpec.scala golden suites — while writing only O(batch) bytes per
-merge. These tests pin:
+merge. Both are one body on ``generic_merge.merge_into``; MoR asks for the
+emitter that writes positional deletes. These tests pin:
 
 - visible-row parity with CoW across multi-batch insert/update/delete runs
 - idempotent replay + older-batch discard through the <= guard
@@ -14,8 +15,10 @@ merge. These tests pin:
 - snapshot isolation: a reader pinned before a MoR merge sees the old rows
 - compact()/cluster() auto-apply pending deletes before any data-file
   rewrite, and the CoW merge reads through them and drops the ones its
-  rewrite leaves dangling (a rewrite re-stamps data sequence numbers, which
-  would otherwise un-shadow deleted rows)
+  rewrite leaves dangling (a rewrite would otherwise carry deleted rows
+  into files no position names)
+- one delete kind: MoR merges and MoR DML interleave without a fold, and
+  a manifest entry of a retired kind is refused
 """
 
 from __future__ import annotations
@@ -180,9 +183,9 @@ def test_mor_write_amplification_is_batch_bound(spark, tmp_path):
     after_data = {e.path for e in entries if e.content == "data"}
     # every pre-merge data file survives untouched — only new files appended
     assert before_paths <= after_data
-    dels = [e for e in entries if e.content == "eq_deletes"]
+    dels = [e for e in entries if e.content == "pos_deletes"]
     assert len(dels) == 1
-    # the delete file holds keys only: updates+deletes that hit a row
+    # the delete file holds positions only: updates+deletes that hit a row
     touched = batch.where(F.col("change_type") != "INSERT").select(
         "image_id"
     ).distinct().count()
@@ -248,7 +251,7 @@ def test_compact_applies_pending_deletes_first(spark, tmp_path):
     v = compact(t, target_bytes=1 << 30)
     assert v is not None
     entries = t.files()
-    assert not [e for e in entries if e.content == "eq_deletes"]
+    assert not [e for e in entries if e.content == "pos_deletes"]
     assert key_state(t) == state
 
 
@@ -257,7 +260,7 @@ def test_cluster_applies_pending_deletes_first(spark, tmp_path):
     merge_into_table_mor(t, cb(spark, 0))
     state = key_state(t)
     cluster(t, cols=("phash", "image_id"), num_files=3)
-    assert not [e for e in t.files() if e.content == "eq_deletes"]
+    assert not [e for e in t.files() if e.content == "pos_deletes"]
     assert key_state(t) == state
 
 
@@ -270,12 +273,12 @@ def test_cow_merge_applies_pending_deletes_first(spark, tmp_path):
     merge_into_table(ref, cb(spark, 0))
     merge_into_table(ref, cb(spark, 1))
     merge_into_table(t, cb(spark, 1))
-    assert not [e for e in t.files() if e.content == "eq_deletes"]
+    assert not [e for e in t.files() if e.content == "pos_deletes"]
     assert key_state(t) == key_state(ref)
 
 
 def test_cow_merge_reads_through_pending_deletes(spark, tmp_path):
-    """A CoW merge over pending equality deletes resolves them in its own
+    """A CoW merge over pending positional deletes resolves them in its own
     read: the rows of an all-MoR history, and no apply-deletes commit."""
     t = fresh_table(spark, tmp_path)
     twin = fresh_table(spark, tmp_path, "twin")
@@ -321,23 +324,80 @@ def test_mor_empty_batch_short_circuit(spark, tmp_path):
     assert t.head_version() == v0
 
 
-def test_mor_key_mismatch_self_heals(spark, tmp_path):
-    """Tombstones recorded under a DIFFERENT key set are auto-applied
-    (apply_deletes) before the new-key merge proceeds — raising instead
-    would permanently wedge a foreachBatch stream whose merge key set
-    changed (review finding): every replayed batch would re-raise."""
+def test_mor_key_set_change_commits_without_folding(spark, tmp_path):
+    """Positions name rows, not keys: a MoR merge under a different key set
+    than the pending deletes' merge commits on top of them, and so does a
+    follow-up under the original key — no apply-deletes in between."""
     t = fresh_table(spark, tmp_path)
+    cow = fresh_table(spark, tmp_path, "cow")
     merge_into_table_mor(t, cb(spark, 0))
-    assert t.describe()["delete_files"] >= 1
-    v = merge_into_table_mor(t, cb(spark, 1), key="caption")
-    assert v is not None
-    # the old-key tombstones were applied; any pending ones are caption's
-    assert t.snapshot().summary.get("eq_delete_cols") in (None, ["caption"])
-    for e in t.files():
-        if e.content == "eq_deletes":
-            assert e.seq > 0  # only the new merge's tombstones remain
-    # and a follow-up merge under the ORIGINAL key self-heals again
+    merge_into_table(cow, cb(spark, 0))
+    assert t.describe()["delete_files"] == 1
+    assert merge_into_table_mor(t, cb(spark, 1), key="caption") is not None
+    merge_into_table(cow, cb(spark, 1), key="caption")
     assert merge_into_table_mor(t, cb(spark, 2)) is not None
+    merge_into_table(cow, cb(spark, 2))
+    snaps = t.snapshots()
+    assert "apply-deletes" not in {s.operation for s in snaps}
+    # every merge that replaced or deleted a row left its delete file
+    shadowing = [
+        s
+        for s in snaps
+        if s.operation == "merge-mor"
+        and (s.summary["rows_updated"] or s.summary["rows_deleted"])
+    ]
+    assert t.describe()["delete_files"] == len(shadowing) >= 2
+    assert key_state(t) == key_state(cow)
+
+
+def test_mor_merges_and_mor_dml_share_one_delete_kind(spark, tmp_path):
+    """A MoR CDC merge, a MoR DELETE, a MoR UPDATE and another MoR CDC merge
+    stack their positional-delete files with no fold between them, and the
+    visible rows equal the same copy-on-write sequence."""
+    from datastream_deltalake_connector_spark.operators.rowops import (
+        delete_where,
+        delete_where_mor,
+        update_where,
+        update_where_mor,
+    )
+
+    t = fresh_table(spark, tmp_path)
+    cow = fresh_table(spark, tmp_path, "cow")
+    steps = [
+        (merge_into_table_mor, merge_into_table, (cb(spark, 0),)),
+        (delete_where_mor, delete_where, ([("w", "<", 30)],)),
+        (update_where_mor, update_where, ({"caption": "'edited'"}, [("h", ">", 55)])),
+        (merge_into_table_mor, merge_into_table, (cb(spark, 1),)),
+    ]
+    for mor_op, cow_op, args in steps:
+        mor_op(t, *args)
+        cow_op(cow, *args)
+        assert key_state(t) == key_state(cow)
+    ops = [s.operation for s in t.snapshots()]
+    assert "apply-deletes" not in ops
+    assert {"merge-mor", "delete-pos", "update-mor"} <= set(ops)
+    assert t.describe()["delete_files"] == 4
+    assert t.count_rows() == len(key_state(cow))
+
+
+def test_retired_delete_kind_is_refused(spark, tmp_path):
+    """A manifest entry of a kind no reader resolves (the equality deletes
+    earlier releases wrote) raises the documented ValueError instead of
+    returning the rows it would shadow."""
+    import json
+    import os
+
+    t = fresh_table(spark, tmp_path)
+    snap = t.snapshot()
+    path = os.path.join(t.meta_dir, snap.manifest)
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["entries"][0]["content"] = "eq_deletes"
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    for read in (t.scan, t.count_rows, lambda: merge_into_table_mor(t, cb(spark, 0))):
+        with pytest.raises(ValueError, match="does not read"):
+            read()
 
 
 def test_mor_on_partitioned_table_matches_cow(spark, tmp_path):
@@ -413,7 +473,7 @@ def test_files_df_schema_parity_json_manifest(spark, tmp_path):
     """files_df must expose the SAME 7 columns on a JSON manifest (small
     tables) as on a parquet manifest, so maintenance-policy queries like
     where("content = 'data'") work regardless of table size — and pending
-    equality-delete files are distinguishable from data files."""
+    positional-delete files are distinguishable from data files."""
     t = fresh_table(spark, tmp_path, "fdf", num_files=3)
     merge_into_table_mor(t, cb(spark, 1), key="image_id")
     fdf = t.files_df()
@@ -422,14 +482,14 @@ def test_files_df_schema_parity_json_manifest(spark, tmp_path):
     }
     by_content = {r["content"]: r["n"] for r in fdf.groupBy("content").agg(
         F.count("*").alias("n")).collect()}
-    assert by_content.get("eq_deletes", 0) >= 1
+    assert by_content.get("pos_deletes", 0) >= 1
     assert by_content["data"] == sum(
         1 for e in t.files() if e.content == "data"
     )
 
 
 def test_expire_keeps_pending_delete_files(spark, tmp_path):
-    """Snapshot expiry on a MoR table with PENDING equality deletes: the
+    """Snapshot expiry on a MoR table with PENDING positional deletes: the
     delete files are reachable from HEAD, so expiring old snapshots must
     never remove them (or the data files they scope), and the resolved
     scan must be unchanged. After apply_deletes, a further expire may
@@ -449,7 +509,7 @@ def test_expire_keeps_pending_delete_files(spark, tmp_path):
     report = expire_snapshots(t, keep_last=1)
     assert report["n_expired_snapshots"] >= 1
     # pending delete files survive expiry — still referenced by HEAD
-    assert any(e.content == "eq_deletes" for e in t.files())
+    assert any(e.content == "pos_deletes" for e in t.files())
     after = sorted(
         (r["image_id"], r["caption"])
         for r in t.scan().select("image_id", "caption").collect()
@@ -460,7 +520,7 @@ def test_expire_keeps_pending_delete_files(spark, tmp_path):
     apply_deletes(t)
     expire_snapshots(t, keep_last=1)
     remove_orphans(t, grace_seconds=0)
-    assert not any(e.content == "eq_deletes" for e in t.files())
+    assert not any(e.content == "pos_deletes" for e in t.files())
     final = sorted(
         (r["image_id"], r["caption"])
         for r in t.scan().select("image_id", "caption").collect()
@@ -496,7 +556,7 @@ def test_mor_long_churn_soak(spark, tmp_path):
             applies += 1
         merge_into_table(t_cow, batch, key="image_id")
         batch.unpersist()
-        n_dels = sum(1 for e in t_mor.files() if e.content == "eq_deletes")
+        n_dels = sum(1 for e in t_mor.files() if e.content == "pos_deletes")
         trajectory.append(n_dels)
     # bounded: the policy fires AT the threshold, so the standing count
     # never exceeds it (one delete file lands per merge, reset on apply)

@@ -187,7 +187,7 @@ def test_mor_scan_single_broadcast(noaqe, tmp_path, n_deletes):
         tables[mode] = t
 
     mor = tables["mor"]
-    pending = [e for e in mor.files() if e.content == "eq_deletes"]
+    pending = [e for e in mor.files() if e.content == "pos_deletes"]
     assert len(pending) == n_deletes
     df = mor.scan()
     buf = io.StringIO()

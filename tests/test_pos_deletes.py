@@ -7,13 +7,14 @@ Pins:
 - write amplification: a MoR DML never rewrites a data file — it stages ONE
   (file, row-index) delete file (plus postimage data files for UPDATE)
 - metadata-only count_rows stays EXACT with pending positions (net = gross
-  - shadowed), unlike equality deletes which force a counting scan
+  - shadowed)
 - stacking: sequential MoR DMLs resolve prior positions first, so a row
   deleted once can never re-match, and an update can never resurrect it
 - apply_deletes folds positions into data files: same visible rows, clean
-  manifest, delete-kind homogeneity restored
-- boundary folds: pending equality tombstones are applied before a pos DML,
-  pending positions before a MoR CDC merge / CoW merge / compact / cluster
+  manifest
+- one delete kind: MoR DML and MoR CDC merges stack their position files
+  with no fold between them; a CoW merge / compact / cluster resolves or
+  folds pending positions before it rewrites
 - snapshot isolation + time travel across pos-delete commits
 - CDF: delete-pos emits delete rows, update-mor emits update_pre/postimage
 - the registered datasource read path resolves pending positions
@@ -168,6 +169,28 @@ def test_pos_file_is_single_and_exact(spark, tmp_path):
     assert list(t.pos_delete_targets([pos]).values()) == [10]
 
 
+def test_pos_file_footer_has_no_path_stats(spark, tmp_path):
+    """The ``__file`` column is written without min/max: nothing reads those
+    long path strings from the footer, so a delete file stays small, and
+    count_rows still nets the positions out exactly."""
+    import pyarrow.parquet as pq
+
+    t = make_table(spark, tmp_path, "nostats")
+    delete_where_mor(t, filters=[("g", "=", 2)])
+    (pos,) = [e for e in t.files() if e.content == "pos_deletes"]
+    md = pq.ParquetFile(t.data_path(pos.path)).metadata
+    for rg in range(md.num_row_groups):
+        cols = {
+            md.row_group(rg).column(i).path_in_schema: md.row_group(rg).column(i)
+            for i in range(md.num_columns)
+        }
+        st = cols["__file"].statistics
+        assert st is None or not st.has_min_max
+        assert cols["__pos"].statistics.has_min_max  # other columns keep theirs
+    assert "__file" not in pos.stats or "min" not in pos.stats["__file"]
+    assert t.count_rows() == 210 - 30 == t.scan().count()
+
+
 # ------------------------------------------------------------ stacking
 
 
@@ -237,45 +260,43 @@ def test_maybe_apply_deletes_counts_pos_files(spark, tmp_path):
     assert all(e.content == "data" for e in t.files())
 
 
-# ------------------------------------------------------ boundary folds
+# ------------------------------------------------------ one delete kind
 
 
-def test_pos_dml_folds_pending_equality_deletes_first(spark, tmp_path):
-    t = make_cdc_table(spark, tmp_path, "eqfirst")
-    batch = spark.createDataFrame(
-        [(5, 99, "gone", "DELETE", True)],
-        "id long, g long, v string, change_type string, is_deleted boolean",
+def _cdc_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "id long, g long, v string, change_type string, is_deleted boolean"
     ).select(
         "id", "g", "v", "change_type", "is_deleted",
         F.to_timestamp(F.lit("2024-02-01 00:00:00")).alias("source_timestamp"),
         F.lit(10).cast("long").alias("change_seq"),
     )
-    merge_into_table_mor(t, batch, key="id")
-    assert any(e.content == "eq_deletes" for e in t.files())
+
+
+def test_pos_dml_stacks_on_mor_merge_deletes(spark, tmp_path):
+    t = make_cdc_table(spark, tmp_path, "mergefirst")
+    merge_into_table_mor(t, _cdc_batch(spark, [(5, 99, "gone", "DELETE", True)]), key="id")
+    assert [e.content for e in t.files()].count("pos_deletes") == 1
     delete_where_mor(t, filters=[("g", "=", 4)])
-    kinds = {e.content for e in t.files()}
-    assert "eq_deletes" not in kinds and "pos_deletes" in kinds
+    assert [e.content for e in t.files()].count("pos_deletes") == 2
+    assert "apply-deletes" not in {s.operation for s in t.snapshots()}
     assert t.scan().where("id = 5").count() == 0
     assert t.scan().where("g = 4").count() == 0
     assert t.count_rows() == 210 - 1 - 30
 
 
-def test_mor_merge_folds_pending_positions_first(spark, tmp_path):
+def test_mor_merge_stacks_on_pending_positions(spark, tmp_path):
     t = make_cdc_table(spark, tmp_path, "posfirst")
     delete_where_mor(t, filters=[("g", "=", 4)])
-    batch = spark.createDataFrame(
-        [(7, 7, "upd", "UPDATE", False)],
-        "id long, g long, v string, change_type string, is_deleted boolean",
-    ).select(
-        "id", "g", "v", "change_type", "is_deleted",
-        F.to_timestamp(F.lit("2024-02-01 00:00:00")).alias("source_timestamp"),
-        F.lit(10).cast("long").alias("change_seq"),
-    )
+    # id 7 is live and updated; id 4 was deleted by the DML, so its update
+    # matches nothing and inserts (the reference's not-matched clause)
+    batch = _cdc_batch(spark, [(7, 7, "upd", "UPDATE", False), (4, 4, "back", "UPDATE", False)])
     merge_into_table_mor(t, batch, key="id")
-    kinds = {e.content for e in t.files()}
-    assert "pos_deletes" not in kinds  # folded at the boundary
-    assert t.scan().where("g = 4").count() == 0
+    assert [e.content for e in t.files()].count("pos_deletes") == 2
+    assert "apply-deletes" not in {s.operation for s in t.snapshots()}
+    assert t.scan().where("g = 4").select("id", "v").collect() == [(4, "back")]
     assert t.scan().where("id = 7").select("v").first().v == "upd"
+    assert t.count_rows() == 210 - 30 + 1
 
 
 def test_compact_and_cluster_fold_positions_first(spark, tmp_path):

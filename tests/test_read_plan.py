@@ -32,7 +32,8 @@ PKG = Path(__file__).resolve().parents[1] / "datastream_deltalake_connector_spar
 def test_delete_resolution_lives_only_in_icepack_table():
     """A second copy of the delete-resolving read cannot come back
     unnoticed: only table/icepack.py may name the resolvers or read
-    parquet row addresses."""
+    parquet row addresses, and no module names the retired
+    equality-delete kind."""
     owner = PKG / "table" / "icepack.py"
     needles = (
         "_scan_with_deletes",
@@ -46,6 +47,11 @@ def test_delete_resolution_lives_only_in_icepack_table():
         if path != owner
         for needle in needles
         if needle in path.read_text()
+    ]
+    offenders += [
+        f"{path.relative_to(PKG)}: eq_deletes"
+        for path in sorted(PKG.rglob("*.py"))
+        if "eq_deletes" in path.read_text()
     ]
     assert not offenders, offenders
 
@@ -82,15 +88,13 @@ def _keyed(spark, n=4000):
     )
 
 
-def test_pyds_ships_eq_deletes_only_to_bloom_refined_files(spark, tmp_path):
+def test_pyds_ships_pos_deletes_only_to_named_files(spark, tmp_path):
     register(spark)
     base = _keyed(spark)
-    t = IcepackTable.create(
-        spark, str(tmp_path / "bloomed"), base.schema, bloom_cols=["image_id"]
-    )
+    t = IcepackTable.create(spark, str(tmp_path / "named"), base.schema)
     t.append(base, num_files=16)
-    # the lowest and highest keys: the tombstone file's range spans the
-    # whole key domain, so ranges alone ship it to every older file
+    # the lowest and highest keys: a key range of the shadowed rows would
+    # span every file, their positions name at most two
     bounds = base.agg(F.min("image_id"), F.max("image_id")).first()
     victims = list(bounds)
     batch = spark.createDataFrame([(k,) for k in victims], ["image_id"]).select(
@@ -104,14 +108,9 @@ def test_pyds_ships_eq_deletes_only_to_bloom_refined_files(spark, tmp_path):
     merge_into_table_mor(t, batch, key="image_id")
 
     data = [e for e in t.files() if e.content == "data"]
-    dels = [e for e in t.files() if e.content == "eq_deletes"]
-    ranged = [
-        e
-        for e in data
-        if any(d.seq > e.seq and t._ranges_overlap(e, d, ["image_id"]) for d in dels)
-    ]
-    hit = t.delete_hit_candidates(data, dels, ["image_id"])
-    assert len(hit) < len(ranged)  # the Bloom filters dropped some files
+    dels = [e for e in t.files() if e.content == "pos_deletes"]
+    hit = t.delete_hit_candidates(data, dels)
+    assert 1 <= len(hit) <= 2 and len(data) == 16
 
     reader = IcepackBatchReader({"path": t.root}, t.schema())
     shipped = {p.path: set(p.delete_paths) for p in reader.partitions() if p.delete_paths}
@@ -262,8 +261,8 @@ def test_cow_delete_of_shadowed_rows_commits_nothing(spark, tmp_path):
 
 
 def test_cow_delete_of_eq_shadowed_rows_commits_nothing(spark, tmp_path):
-    """The locate step reads through pending equality deletes too: a CoW
-    delete whose only match a MoR merge already tombstoned leaves the head
+    """The locate step reads through the deletes a MoR merge leaves: a CoW
+    delete whose only match that merge already deleted leaves the head
     where it was."""
     df = spark.range(0, 100).select(
         "id",
@@ -286,7 +285,7 @@ def test_cow_delete_of_eq_shadowed_rows_commits_nothing(spark, tmp_path):
     )
     merge_into_table_mor(t, tombstones, key="id")
     head = t.head_version()
-    assert any(e.content == "eq_deletes" for e in t.files())
+    assert any(e.content == "pos_deletes" for e in t.files())
     rep = delete_where(t, [("id", "=", 15)])
     assert rep["version"] is None and rep["files_rewritten"] == 0
     assert t.head_version() == head
@@ -388,17 +387,24 @@ def test_bloom_prunes_only_on_probes_of_the_column_kind(spark, tmp_path):
     assert delete_where(t, [("id", "=", "017")])["rows_deleted"] == 1
 
 
-def test_pyds_refuses_eq_deletes_without_key_columns(spark, tmp_path):
-    """Equality deletes with no recorded key are corrupt metadata: the
-    data source raises as scan() does instead of returning shadowed rows."""
+def test_pyds_refuses_retired_delete_kind(spark, tmp_path):
+    """A manifest entry of a delete kind no reader resolves (the equality
+    deletes earlier releases wrote) fails the data source as it fails
+    scan(), instead of returning the rows it shadows."""
+    import json
+    import os
+
     df = _keyed(spark, 40)
     t = IcepackTable.create(spark, str(tmp_path / "t"), df.schema)
-    t.append(df, num_files=1)
-    reader = IcepackBatchReader({"path": t.root}, t.schema())
-    reader.deletes = t.files()  # stand-in delete files
-    assert reader.eq_cols == ()
-    with pytest.raises(ValueError, match="corrupt metadata"):
-        reader.partitions()
+    t.append(df, num_files=2)
+    path = os.path.join(t.meta_dir, t.snapshot().manifest)
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["entries"][1]["content"] = "eq_deletes"
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="does not read"):
+        IcepackBatchReader({"path": t.root}, t.schema())
 
 
 def test_identity_partition_values_never_mis_prune(spark, tmp_path):

@@ -161,7 +161,7 @@ def test_delete_resolves_pending_mor_deletes(spark, tmp_path):
         F.lit(0.0).alias("v"),
     )
     merge_into_table_mor(t, batch, key="id")
-    assert any(e.content == "eq_deletes" for e in t.files())
+    assert any(e.content == "pos_deletes" for e in t.files())
     # predicate delete over a range that includes shadowed rows
     rep = delete_where(t, [("id", "<", 30)])
     assert rep["version"] is not None

@@ -836,6 +836,71 @@ def test_insert_bare_parenthesized_select(sql):
     assert sql.execute("SELECT count(*) AS n FROM cp").collect()[0].n == 3
 
 
+def _jobs_run(spark, action) -> int:
+    """Spark jobs ``action`` submitted, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_prune_by_keys_reports_duplicate_key_tuples(spark, tmp_path, monkeypatch):
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "a BIGINT, b STRING")
+    t = IcepackTable.create(spark, str(tmp_path / "k"), df.schema)
+    t.append(df)
+    data = t.files()
+
+    def dups(rows):
+        keys = spark.createDataFrame(rows, "a BIGINT, b STRING")
+        return IcepackTable.prune_by_keys(data, keys, ["a", "b"], t.schema())[2]
+
+    assert dups([(1, "x"), (1, "y")]) is False  # a repeats, the tuple does not
+    assert dups([(1, "x"), (1, "x")]) is True
+    monkeypatch.setattr(IcepackTable, "KEY_PROBE_MAX_ROWS", 1)
+    assert dups([(1, "x"), (2, "y")]) is None  # past the cap: not known
+
+
+def test_duplicate_free_source_skips_the_cardinality_job(spark, tmp_path, monkeypatch):
+    """The pruner's key collect already tells a duplicate-free source apart,
+    so MERGE runs no source-only pre-check job for it; a source with a
+    duplicate matched key still raises."""
+
+    def mk(name):
+        df = spark.createDataFrame([(i, float(i)) for i in range(10)], "id BIGINT, v DOUBLE")
+        t = IcepackTable.create(spark, str(tmp_path / name), df.schema)
+        t.append(df, num_files=1)
+        return t
+
+    src = spark.createDataFrame([(1, 10.0), (2, 20.0), (42, 0.0)], "id BIGINT, v DOUBLE")
+    clauses = dict(
+        matched=[{"action": "update", "condition": None, "set": "*"}],
+        not_matched=[{"action": "insert", "condition": None, "values": "*"}],
+    )
+    known, unknown = mk("known"), mk("unknown")
+    jobs_known = _jobs_run(spark, lambda: merge_into(known, src, "id", **clauses))
+    real = IcepackTable.prune_by_keys.__func__
+
+    def not_known(cls, *args):
+        cand, n, _ = real(cls, *args)
+        return cand, n, None
+
+    with monkeypatch.context() as m:
+        m.setattr(IcepackTable, "prune_by_keys", classmethod(not_known))
+        jobs_unknown = _jobs_run(spark, lambda: merge_into(unknown, src, "id", **clauses))
+    assert jobs_known < jobs_unknown
+    assert sorted(known.scan().collect()) == sorted(unknown.scan().collect())
+
+    dup = spark.createDataFrame([(3, 1.0), (3, 2.0)], "id BIGINT, v DOUBLE")
+    with pytest.raises(MergeCardinalityError):
+        merge_into(known, dup, "id", **clauses)
+
+
 def test_cardinality_ignores_shadowed_rows(sql, spark, tmp_path):
     """Duplicate source keys whose only target match is MoR-shadowed are
     legal (both insert) — the probe must see the resolved view."""

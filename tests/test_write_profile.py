@@ -107,7 +107,8 @@ _BARE_SESSION_SCRIPT = textwrap.dedent(
     )
     out = {"codec_conf": spark.conf.get("spark.sql.parquet.compression.codec")}
     for e in t.files():
-        out.setdefault(e.content, []).append(chunks(t.data_path(e.path), "image_id"))
+        key = "__file" if e.content == "pos_deletes" else "image_id"
+        out.setdefault(e.content, []).append(chunks(t.data_path(e.path), key))
     register(spark)
     ds_root = os.path.join(root, "ds")
     df = spark.range(0, 200).select(
@@ -142,11 +143,11 @@ def test_bare_session_writes_engine_profile(tmp_path):
     )
     out = json.loads(line[len("PROFILE "):])
     assert out["codec_conf"] == "snappy"  # the session default was left alone
-    assert out["data"] and out["eq_deletes"] and out["datasource"]
-    for kind in ("data", "eq_deletes", "datasource"):
+    assert out["data"] and out["pos_deletes"] and out["datasource"]
+    for kind in ("data", "pos_deletes", "datasource"):
         for f in out[kind]:
             assert f["codecs"] == ["ZSTD"], (kind, f)
-    for kind in ("data", "eq_deletes"):
+    for kind in ("data", "pos_deletes"):
         for f in out[kind]:
             assert "DELTA_BYTE_ARRAY" in f["key"], (kind, f)
 
@@ -219,7 +220,7 @@ def test_mixed_profile_table_matches_all_snappy(spark, tmp_path, monkeypatch):
         assert rows(mixed) == rows(legacy), f"diverged after {name}"
         if name == "merge_mor_1":
             assert table_codecs(mixed) == {"SNAPPY", "ZSTD"}
-            assert any(e.content == "eq_deletes" for e in mixed.files())
+            assert any(e.content == "pos_deletes" for e in mixed.files())
     assert table_codecs(legacy) == {"SNAPPY"}
     assert table_codecs(mixed) == {"ZSTD"}  # compact rewrote the old files
     for b in batches:
