@@ -103,8 +103,10 @@ class MergeCardinalityError(ValueError):
 
 def _estimate_row_bytes(df: DataFrame) -> float:
     """Average serialized row size of a (cached) DataFrame: measured lengths
-    of the variable-width columns plus a fixed per-column overhead. One cheap
-    agg over the cache — no sampling bias, no collect of payload rows."""
+    of the variable-width columns plus a fixed per-column overhead. One
+    one-task agg over the cache: a single partition needs no exchange, so
+    the agg runs as one job — no sampling bias, no collect of payload
+    rows."""
     var_cols = [
         f.name
         for f in df.schema.fields
@@ -117,7 +119,7 @@ def _estimate_row_bytes(df: DataFrame) -> float:
     for c in var_cols:
         term = F.coalesce(F.length(F.col(f"`{c}`")).cast("double"), F.lit(0.0))
         total = term if total is None else total + term
-    row = df.select(F.avg(total).alias("b")).collect()[0]
+    row = df.coalesce(1).select(F.avg(total).alias("b")).collect()[0]
     return float(row["b"] or 0.0) + fixed
 
 
@@ -179,29 +181,36 @@ def _dangling(
 def _write_pos_delete_file(
     table: IcepackTable, positions: DataFrame, cand: list[FileEntry]
 ) -> list[FileEntry]:
-    """Stage ONE positional-delete file from (``__abs``, ``__idx``) rows:
-    URIs map back to manifest-relative paths through a broadcast of the
-    candidate list (driver-side, exact), sorted (file, pos) so footer stats
-    stay tight."""
-    mapping = table.spark.createDataFrame(
-        [(table._file_uri(e.path), e.path) for e in cand],
-        "__abs string, __relfile string",
-    )
-    pos_df = (
-        positions.join(F.broadcast(mapping), "__abs")
-        .select(
-            F.col("__relfile").alias(POS_FILE_COL),
-            F.col("__idx").alias(POS_IDX_COL),
+    """Stage ONE positional-delete file from (``__abs``, ``__idx``) rows
+    (none for no rows). One collect brings the rows to the driver; each
+    distinct URI maps back to its manifest path through the candidate list,
+    and a URI naming no candidate fails loudly instead of dropping rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    got = positions.select("__abs", "__idx").toArrow()
+    if not got.num_rows:
+        return []
+    uris = got.column("__abs").combine_chunks().dictionary_encode()
+    by_uri = {table._file_uri(e.path): e.path for e in cand}
+    named = uris.dictionary.to_pylist()
+    stray = [u for u in named if u not in by_uri]
+    if stray:
+        raise RuntimeError(
+            f"data-file URI mapping failed: Spark reports {stray[0]!r}, "
+            "which names no candidate file"
         )
-        # one task sorts the few matched rows; orderBy would first run a
-        # range-sampling job over the uncached candidate scan, and
-        # coalesce(1) would run that scan itself in one task
-        .repartition(1)
-        .sortWithinPartitions(POS_FILE_COL, POS_IDX_COL)
-    )
-    return table.write_data_files(
-        pos_df, content="pos_deletes", enforce_constraints=False
-    )
+    rels = pa.array([by_uri[u] for u in named], pa.string())
+    return [
+        table.write_pos_delete_file(
+            pa.table(
+                {
+                    POS_FILE_COL: pc.take(rels, uris.indices),
+                    POS_IDX_COL: got.column("__idx"),
+                }
+            )
+        )
+    ]
 
 
 def merge_into(
@@ -450,7 +459,7 @@ def merge_into(
             "files_probed": probed,
         }
         shadows = bool(mor and matched) and held is not None
-        if not rewrite and not not_matched and not shadows:
+        if not (rewrite or shadows or (not_matched and n_rows)):
             return {"version": None, **report, "files_rewritten": 0}
 
         # ---- emit ------------------------------------------------------
@@ -478,8 +487,14 @@ def merge_into(
 
         with rewrite_sized_splits(table.spark, rewrite_bytes):
             if mor:
+                if shadows:
+                    # the old versions of updated and deleted rows. Written
+                    # first: its single read of the held frame builds the
+                    # cache, which the data write then reads twice
+                    shadowed = _write_pos_delete_file(table, held.where(upd | dele), cand)
                 # updated and inserted rows: one range-partitioned, sorted
-                # write; counts observed after the range exchange
+                # write; counts observed after the range exchange. Both
+                # inputs read caches, so one file needs no exchange
                 parts = []
                 if shadows:
                     parts.append(
@@ -496,25 +511,25 @@ def merge_into(
                 rows = parts[0]
                 for p in parts[1:]:
                     rows = rows.unionByName(p)
+                pre = rows.where(upd | ins).withColumn("__keep", F.lit(True))
                 pre = (
-                    rows.where(upd | ins)
-                    .withColumn("__keep", F.lit(True))
-                    .repartitionByRange(num_files, *on)
+                    pre.coalesce(1)
+                    if num_files == 1
+                    else pre.repartitionByRange(num_files, *on)
                 )
-                added, got = _write_observed(
-                    table,
-                    pre,
-                    {k: F.sum(c.cast("long")) for k, c in (("u", upd), ("i", ins))},
-                    sort_on=on,
-                )
-                counts.update(got)
-                if shadows:
-                    # the old versions of updated and deleted rows
-                    shadowed = _write_pos_delete_file(
-                        table, held.where(upd | dele).select("__abs", "__idx"), cand
+                try:
+                    added, got = _write_observed(
+                        table,
+                        pre,
+                        {k: F.sum(c.cast("long")) for k, c in (("u", upd), ("i", ins))},
+                        sort_on=on,
                     )
-                    added += shadowed
-                    counts["d"] = sum(e.rows for e in shadowed) - counts["u"]
+                except Exception:
+                    table.discard_staged(shadowed)
+                    raise
+                added += shadowed
+                counts.update(got)
+                counts["d"] = sum(e.rows for e in shadowed) - counts["u"]
             elif rewrite:
                 # target rows with pending MoR deletes resolved: a shadowed
                 # row left unresolved would resurrect in the rewrite

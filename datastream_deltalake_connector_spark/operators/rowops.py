@@ -248,8 +248,7 @@ def delete_where_mor(
     plan = _plan(table, filters, residual_sql, metadata_drops=True)
     added: list[FileEntry] = []
     if plan.rest:
-        matched = plan.matches(plan.rest).select("__abs", "__idx")
-        added = _write_pos_delete_file(table, matched, plan.rest)
+        added = _write_pos_delete_file(table, plan.matches(plan.rest), plan.rest)
     rows_deleted = sum(e.rows for e in added)
     report = {**plan.report, "pos_delete_files": len(added)}
     if not plan.dropped and not added:
@@ -307,9 +306,7 @@ def update_where_mor(
         matched.unpersist()
         return {"version": None, "rows_updated": 0, "pos_delete_files": 0, **report}
 
-    pos_entries = _write_pos_delete_file(
-        table, matched.select("__abs", "__idx"), plan.cand
-    )
+    pos_entries = _write_pos_delete_file(table, matched, plan.cand)
     matched.unpersist()
     pos_rows = sum(e.rows for e in pos_entries)
     if pos_rows != rows_updated:

@@ -68,10 +68,15 @@ def merge_cdc(
     source = _source_projection(latest_by_keys(batch, keys, [TS_COL, SEQ_COL]), keys)
     source = source.cache()  # merge_into reads a cached source as is
     try:
-        n_winners = source.count()
-        if not n_winners:
-            return None  # ST6 empty-batch short-circuit: nothing committed
-        table.evolve_schema(batch.drop(*ENVELOPE_COLS).schema, strategy=schema_evolution)
+        # ST6 empty-batch short-circuit: nothing is committed, schema
+        # included. Only a batch that would change the schema pays a job to
+        # learn it is empty; merge_into learns it from its key collect
+        payload = batch.drop(*ENVELOPE_COLS).schema
+        known = set(table.schema().fieldNames())
+        if schema_evolution == "overwrite" or not known.issuperset(payload.fieldNames()):
+            if source.isEmpty():
+                return None
+            table.evolve_schema(payload, strategy=schema_evolution)
         # UPDATE SET / INSERT: every target column from the winner, NULL
         # where the batch lacks it (a column the batch dropped is retained,
         # not kept)
@@ -93,7 +98,7 @@ def merge_cdc(
                 {"action": "insert", "condition": "NOT s.__deleted", "values": values}
             ],
             num_files=(
-                max(1, math.ceil(n_winners / target_rows_per_file))
+                max(1, math.ceil(source.count() / target_rows_per_file))
                 if target_rows_per_file
                 else None
             ),

@@ -939,7 +939,9 @@ class IcepackTable:
         """The entries that may hold a row whose ``key_cols`` equal those of
         some ``keys_df`` row, the number of ``keys_df`` rows (rows with
         null keys count, though they match no file), and whether two rows
-        share a key tuple (None past the cap: not known).
+        share a key tuple (None past the cap, or with a floating-point key
+        column: Arrow tells 0.0 from -0.0 and NaN payloads apart, Spark's
+        joins do not).
 
         One job collects the key columns. Up to ``KEY_PROBE_MAX_ROWS`` rows,
         each key column becomes an ``in`` filter of its distinct non-null
@@ -949,6 +951,7 @@ class IcepackTable:
         a second job applies the same filters per Arrow batch on the
         executors and returns the union of the files each batch keeps with
         the row count, so no layout loses pruning to a large key set."""
+        import pyarrow as pa
         import pyarrow.compute as pc
 
         def key_filters(batch) -> list[tuple]:
@@ -960,13 +963,13 @@ class IcepackTable:
         keys = keys_df.select(*key_cols)
         got = keys.limit(cls.KEY_PROBE_MAX_ROWS + 1).toArrow()
         if got.num_rows <= cls.KEY_PROBE_MAX_ROWS:
-            dups = got.group_by(key_cols).aggregate([]).num_rows < got.num_rows
+            dups = None
+            if not any(pa.types.is_floating(got.schema.field(c).type) for c in key_cols):
+                dups = got.group_by(key_cols).aggregate([]).num_rows < got.num_rows
             return cls.prune_files(entries, key_filters(got), schema), got.num_rows, dups
         bc = keys_df.sparkSession.sparkContext.broadcast(entries)
 
         def kept(batches):
-            import pyarrow as pa
-
             todo, paths, n = bc.value, set(), 0
             for b in batches:
                 n += b.num_rows
@@ -1048,7 +1051,7 @@ class IcepackTable:
         losing rows."""
         from pyspark.sql import functions as F
 
-        self._check_uri_formula(entries[0])
+        self._check_uri_formula(entries[0], schema)
         df = (
             self.spark.read.schema(schema)
             .parquet(*[self.data_path(e.path) for e in entries])
@@ -1134,14 +1137,16 @@ class IcepackTable:
 
     _URI_FORMULA_CHECKED: set[str] = set()  # class-level, keyed by root
 
-    def _check_uri_formula(self, entry: FileEntry) -> None:
+    def _check_uri_formula(self, entry: FileEntry, schema: T.StructType) -> None:
         root_key = os.path.abspath(self.root)
         if root_key in IcepackTable._URI_FORMULA_CHECKED:
             return
         from pyspark.sql import functions as F
 
         got = (
-            self.spark.read.parquet(self.data_path(entry.path))
+            # an explicit schema: inferring one would cost a job
+            self.spark.read.schema(schema)
+            .parquet(self.data_path(entry.path))
             .select(F.col("_metadata.file_path").alias("fp"))
             .limit(1)
             .collect()
@@ -1157,29 +1162,26 @@ class IcepackTable:
         IcepackTable._URI_FORMULA_CHECKED.add(root_key)
 
     def _pos_delete_df(self, pos_deletes: list[FileEntry]) -> DataFrame:
-        """Union of pending pos-delete files as (__dabs, __dpos): rel paths
-        resolved to the URIs the scan's ``_metadata.file_path`` reports
-        through a literal map of the files they name, so the frame plans as
-        one scan with no join. Small by design (matched rows only) —
-        callers broadcast it."""
-        from pyspark.sql import functions as F
+        """Union of pending pos-delete files as (__dabs, __dpos), read on the
+        driver: the files are small by design (matched rows only, and
+        callers broadcast the frame), and each distinct rel path maps to the
+        URI the scan's ``_metadata.file_path`` reports once, through the
+        column's dictionary — no per-row lookup, and no join whose own
+        broadcast would cost a second job."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-        schema = T.StructType(
-            [
-                T.StructField(POS_FILE_COL, T.StringType()),
-                T.StructField(POS_IDX_COL, T.LongType()),
-            ]
+        tbl = pa.concat_tables(
+            pq.read_table(self.data_path(d.path), columns=[POS_FILE_COL, POS_IDX_COL])
+            for d in pos_deletes
         )
-        rels = sorted(self.pos_delete_targets(pos_deletes))
-        uris = F.map_from_arrays(
-            F.array(*[F.lit(r) for r in rels]),
-            F.array(*[F.lit(self._file_uri(r)) for r in rels]),
-        )
-        return self.spark.read.schema(schema).parquet(
-            *[self.data_path(d.path) for d in pos_deletes]
-        ).select(
-            uris[F.col(POS_FILE_COL)].alias("__dabs"),
-            F.col(POS_IDX_COL).alias("__dpos"),
+        rels = tbl.column(POS_FILE_COL).combine_chunks().dictionary_encode()
+        uris = pa.array([self._file_uri(r) for r in rels.dictionary.to_pylist()])
+        return self.spark.createDataFrame(
+            pa.table(
+                {"__dabs": pc.take(uris, rels.indices), "__dpos": tbl.column(POS_IDX_COL)}
+            )
         )
 
     @staticmethod
@@ -1206,17 +1208,14 @@ class IcepackTable:
         self,
         df: DataFrame,
         num_files: int | None = None,
-        content: str = "data",
         enforce_constraints: bool = True,
     ) -> list[FileEntry]:
-        """Stage a DataFrame as immutable parquet files of one ``content``
-        kind (``"data"`` or ``"pos_deletes"``); returns
-        manifest entries with footer-derived stats, tagged with that kind.
-        Does NOT commit.
+        """Stage a DataFrame as immutable data files; returns manifest
+        entries with footer-derived stats. Does NOT commit.
 
         The writer owns the table layout: data files always take the
-        table's partition spec, delete files are always unpartitioned.
-        ``enforce_constraints=False`` skips CHECK validation — for
+        table's partition spec. ``enforce_constraints=False`` skips CHECK
+        validation — for
         maintenance rewrites (compact/cluster/apply-deletes), which only
         re-file rows the table already validated.
 
@@ -1236,7 +1235,7 @@ class IcepackTable:
         expired snapshots — left in place they leak forever."""
         if enforce_constraints:
             self._enforce_check_constraints(df)
-        partition_by = self.partition_spec() if content == "data" else []
+        partition_by = self.partition_spec()
         stage = f"data/{uuid.uuid4().hex}"
         out_dir = os.path.join(self.root, stage)
         if num_files is not None:
@@ -1260,20 +1259,12 @@ class IcepackTable:
             )
         else:
             writer = df.write
-        writer = writer.options(**PARQUET_WRITE_OPTIONS)
-        if content == "pos_deletes":
-            # no min/max of the long path strings in the footer: nothing
-            # reads them (pos_delete_targets reads the column itself)
-            writer = writer.option(
-                f"parquet.column.statistics.enabled#{POS_FILE_COL}", "false"
-            )
-        writer.mode("overwrite").parquet(out_dir)
+        writer.options(**PARQUET_WRITE_OPTIONS).mode("overwrite").parquet(out_dir)
         if partition_by:
             self._strip_partition_prefix(out_dir)
         kept = []
         for e in self.collect_file_entries(stage):
             if e.rows > 0:
-                e.content = content
                 kept.append(e)
             else:
                 os.unlink(os.path.join(self.root, e.path))
@@ -1281,6 +1272,30 @@ class IcepackTable:
             # nothing staged: remove the empty staging dir too
             shutil.rmtree(out_dir, ignore_errors=True)
         return kept
+
+    def write_pos_delete_file(self, positions) -> FileEntry:
+        """Stage ONE positional-delete file from an Arrow table of
+        (``__file``, ``__pos``) rows, written on the driver: the rows are
+        few by design (every reader broadcasts them), and Spark's writer
+        would add a job and its schema JSON to a footer that outweighs
+        them. ``__file`` keeps its dictionary and carries no statistics:
+        nothing reads them (:meth:`pos_delete_targets` reads the column)."""
+        import pyarrow.parquet as pq
+
+        rel = os.path.join("data", uuid.uuid4().hex, "pos-deletes.parquet")
+        path = os.path.join(self.root, rel)
+        os.makedirs(os.path.dirname(path))
+        pq.write_table(
+            positions.sort_by([(POS_FILE_COL, "ascending"), (POS_IDX_COL, "ascending")]),
+            path,
+            **ARROW_WRITE_OPTIONS,
+            use_dictionary=[POS_FILE_COL],
+            write_statistics=False,
+            store_schema=False,
+        )
+        entry = self._footer_entry(path, rel, set())
+        entry.content = "pos_deletes"
+        return entry
 
     def discard_staged(self, entries: list[FileEntry]) -> None:
         """Remove the staging dir(s) of never-committed entries entirely —

@@ -170,9 +170,9 @@ def test_pos_file_is_single_and_exact(spark, tmp_path):
 
 
 def test_pos_file_footer_has_no_path_stats(spark, tmp_path):
-    """The ``__file`` column is written without min/max: nothing reads those
-    long path strings from the footer, so a delete file stays small, and
-    count_rows still nets the positions out exactly."""
+    """A delete file is written without min/max: nothing reads those long
+    path strings (or the positions) from the footer, so a delete file stays
+    small, and count_rows still nets the positions out exactly."""
     import pyarrow.parquet as pq
 
     t = make_table(spark, tmp_path, "nostats")
@@ -184,9 +184,9 @@ def test_pos_file_footer_has_no_path_stats(spark, tmp_path):
             md.row_group(rg).column(i).path_in_schema: md.row_group(rg).column(i)
             for i in range(md.num_columns)
         }
-        st = cols["__file"].statistics
-        assert st is None or not st.has_min_max
-        assert cols["__pos"].statistics.has_min_max  # other columns keep theirs
+        for c in ("__file", "__pos"):
+            st = cols[c].statistics
+            assert st is None or not st.has_min_max, c
     assert "__file" not in pos.stats or "min" not in pos.stats["__file"]
     assert t.count_rows() == 210 - 30 == t.scan().count()
 

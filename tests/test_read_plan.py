@@ -293,31 +293,32 @@ def test_cow_delete_of_eq_shadowed_rows_commits_nothing(spark, tmp_path):
 
 
 def test_pos_delete_file_is_written_sorted_without_range_sampling(spark, tmp_path):
-    """The positional-delete writer sorts within one partition: no
-    range-partitioning sample job re-reads the candidate files, and the
+    """The positional-delete writer sorts the collected rows on the driver:
+    no range-partitioning sample job re-reads the candidate files, and the
     file's rows still come out in (file, position) order."""
     import io
     from contextlib import redirect_stdout
 
     import pyarrow.parquet as pq
 
+    from datastream_deltalake_connector_spark.operators import rowops
+
     part, _twin = _bucketed_and_twin(spark, tmp_path)
     plans = []
-    orig = IcepackTable.write_data_files
+    orig = rowops._write_pos_delete_file
 
-    def spy(self, df, **kw):
-        if kw.get("content") == "pos_deletes":
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain()
-            plans.append(buf.getvalue())
-        return orig(self, df, **kw)
+    def spy(table, df, cand):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        plans.append(buf.getvalue())
+        return orig(table, df, cand)
 
-    IcepackTable.write_data_files = spy
+    rowops._write_pos_delete_file = spy
     try:
         rep = delete_where_mor(part, [("v", "<", 60.0)])
     finally:
-        IcepackTable.write_data_files = orig
+        rowops._write_pos_delete_file = orig
     assert rep["rows_deleted"] == 60 and len(plans) == 1
     assert "rangepartitioning" not in plans[0].lower()
     (pos,) = [e for e in part.files() if e.content == "pos_deletes"]

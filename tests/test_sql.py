@@ -901,6 +901,27 @@ def test_duplicate_free_source_skips_the_cardinality_job(spark, tmp_path, monkey
         merge_into(known, dup, "id", **clauses)
 
 
+def test_float_keys_zero_and_negative_zero_are_one_match(spark, tmp_path):
+    """Spark's join and groupBy treat 0.0 and -0.0 as one key, while Arrow
+    keeps them apart: the pruner must not report the pair duplicate-free,
+    or MERGE would skip its cardinality check and keep the target row once
+    per source match."""
+    df = spark.createDataFrame([(0.0, "t"), (1.0, "u")], "k DOUBLE, v STRING")
+    t = IcepackTable.create(spark, str(tmp_path / "f"), df.schema)
+    t.append(df, num_files=1)
+    src = spark.createDataFrame([(0.0, "a"), (-0.0, "b")], "k DOUBLE, v STRING")
+    assert IcepackTable.prune_by_keys(t.files(), src, ["k"], t.schema())[2] is None
+    with pytest.raises(MergeCardinalityError):
+        merge_into(
+            t,
+            src,
+            "k",
+            matched=[{"action": "update", "condition": None, "set": "*"}],
+            not_matched=[{"action": "insert", "condition": None, "values": "*"}],
+        )
+    assert sorted(r.v for r in t.scan().collect()) == ["t", "u"]
+
+
 def test_cardinality_ignores_shadowed_rows(sql, spark, tmp_path):
     """Duplicate source keys whose only target match is MoR-shadowed are
     legal (both insert) — the probe must see the resolved view."""
