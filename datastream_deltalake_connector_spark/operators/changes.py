@@ -30,9 +30,10 @@ feed reads ONLY
     only from the files those positions name,
 
 i.e. the commit's own churn working set — never the table. Maintenance
-commits (compact / cluster / apply-deletes / evolve-schema / rollup of
-deletes) are logically row-preserving under the resolved scan and emit
-nothing, matching Delta CDF's behavior for OPTIMIZE. The per-commit diffs
+and metadata-only commits (the engine's one ``ROW_PRESERVING_OPS`` set:
+compact, cluster, apply-deletes, schema, constraint and partition-spec
+changes) are row-preserving under the resolved scan and emit nothing,
+matching Delta CDF's behavior for OPTIMIZE. The per-commit diffs
 are assembled with ``unionByName(allowMissingColumns=True)`` so a schema
 evolution mid-range null-fills older commits exactly like the scan path.
 
@@ -52,20 +53,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import empty_frame
-from ..table.icepack import FileEntry, IcepackTable
+from ..table.icepack import ROW_PRESERVING_OPS, FileEntry, IcepackTable
 from .merge import SEQ_META, TS_META
 
 __all__ = ["table_changes", "incremental_changes", "foreach_changes"]
-
-# commits whose resolved row set is identical to their parent's: emit nothing
-_ROW_PRESERVING_OPS = {
-    "compact",
-    "cluster",
-    "apply-deletes",
-    "evolve-schema",
-    "set-constraint",
-    "create",
-}
 
 
 def _keys_for(table: IcepackTable, version: int, key) -> list[str]:
@@ -234,7 +225,7 @@ def table_changes(
         snap = table.snapshot(v)
         entries = table.files(v)
         op = snap.operation
-        if op in _ROW_PRESERVING_OPS:
+        if op in ROW_PRESERVING_OPS:
             prev_entries = entries
             continue
         old_by_path = {e.path: e for e in prev_entries}

@@ -15,6 +15,11 @@ boundaries come from a key-only scan (parquet column pruning: the ``bytes``
 column is never read), and rows go to their bucket's shuffle partition via
 an exact bucket→partition remap — the payload crosses exactly one exchange.
 
+Pending positional deletes are resolved in the rewrite's own read
+(``IcepackTable.read_live``): the clustered files hold only live rows, and
+the one commit drops every delete file left naming no live file (in
+incremental mode, a delete naming a clean file stays pending).
+
 After clustering, manifest pruning on either clustered dimension becomes
 effective: files hold tight [min,max] ranges of the interleaved key, so
 point/range lookups on ``phash`` or ``image_id`` hash prefixes skip most
@@ -72,17 +77,9 @@ def cluster(
     job_id = job_id or f"cluster-{uuid.uuid4().hex[:12]}"
     journal = LineageJournal(table.root, job_id)
     parent = table.head_version()
-    entries = table.files(parent)
-    # Apply pending deletes first: a clustering rewrite re-files every row,
-    # and a positional delete's (file, pos) refs would no longer name the
-    # rows it killed (same guard as compact(); Iceberg's rewrite_data_files
-    # does likewise).
-    if any(e.content != "data" for e in entries):
-        from .mor import apply_deletes
-
-        apply_deletes(table)
-        parent = table.head_version()
-        entries = table.files(parent)
+    # the rewrite reads through the pending positional deletes: a (file,
+    # pos) ref does not survive re-filing
+    entries, deletes = table._split_deletes(table.files(parent))
     if not entries:
         return parent
 
@@ -100,86 +97,59 @@ def cluster(
     # Resume: if this job already staged its rewrite (journal record with all
     # outputs still on disk) but died before the commit, reuse the staged
     # files verbatim instead of re-shuffling the table.
-    import os
-
-    done = journal.completed("cluster")
-    if "all" in done and not journal.committed():
-        rec = done["all"]
-        if all(os.path.exists(table.data_path(p)) for p in rec["files_out"]):
-            staged = [
-                table._footer_entry(
-                    table.data_path(p), p, set(table.stats_cols())
-                )
-                for p in rec["files_out"]
-            ]
-            version = table.commit(
-                "cluster",
-                added=staged,
-                removed_paths=rec["files_in"],
-                summary={"curve": curve, "cluster_cols": list(cols), "job_id": job_id, "resumed": True},
-                requirements=[
-                    ("files-live", rec["files_in"]),
-                    ("no-new-deletes", parent),
-                ],
+    rec = journal.completed("cluster").get("all")
+    added = journal.staged(table, rec) if rec and not journal.committed() else None
+    if added is not None:
+        base, files_in, extra = rec["base"], rec["files_in"], {"resumed": True}
+    else:
+        base, files_in = parent, [e.path for e in entries]
+        extra = {"mode": mode, "rewritten_files": len(entries)}
+        if num_files is None:
+            num_files = max(1, round(sum(e.bytes for e in entries) / target_bytes))
+        a = F.col(cols[0]).cast("long")
+        b = F.xxhash64(F.col(cols[1]))
+        key = z_value(a, b) if curve == "zorder" else hilbert_value(a, b)
+        # Read exactly the files being rewritten (all of them in full mode,
+        # the dirty subset in incremental mode). Boundaries come from a
+        # key-only pass over the same files: column pruning keeps pixel bytes
+        # out of it. Splits sized to the rewrite (~2 per core, 16 MB floor):
+        # re-clustering a compacted table means reading a few ~512 MB files,
+        # which at the default 128 MB maxPartitionBytes would starve the map
+        # side of the one exchange.
+        with rewrite_sized_splits(table.spark, sum(e.bytes for e in entries)):
+            src = table.read_live(entries, deletes, table.schema(parent))
+            keys_only = src.select(*cols).select(key.alias("__cluster_key"))
+            bounds = quantile_boundaries(keys_only, "__cluster_key", num_files)
+            clustered = repartition_by_bounds(
+                src, key, bounds, key_col_name="__cluster_key"
             )
-            journal.log_commit(version)
-            return version
-
-    a = F.col(cols[0]).cast("long")
-    b = F.xxhash64(F.col(cols[1]))
-    key = z_value(a, b) if curve == "zorder" else hilbert_value(a, b)
-
-    if num_files is None:
-        total = sum(e.bytes for e in entries)
-        num_files = max(1, round(total / target_bytes))
-
-    # Read exactly the files being rewritten (all of them in full mode, the
-    # dirty subset in incremental mode). Boundaries come from a key-only
-    # pass over the same files: column pruning keeps pixel bytes out of it.
-    paths = [table.data_path(e.path) for e in entries]
-    schema = table.schema(parent)
-    # Splits sized to the rewrite (~2 per core, 16 MB floor): re-clustering a
-    # compacted table means reading a few ~512 MB files, which at the default
-    # 128 MB maxPartitionBytes would starve the map side of the one exchange.
-    with rewrite_sized_splits(table.spark, sum(e.bytes for e in entries)):
-        src = table.spark.read.schema(schema).parquet(*paths)
-        keys_only = src.select(*cols).select(key.alias("__cluster_key"))
-        bounds = quantile_boundaries(keys_only, "__cluster_key", num_files)
-
-        clustered = repartition_by_bounds(src, key, bounds, key_col_name="__cluster_key")
-        # partitioned tables keep their hive layout: each curve bucket splits
-        # by partition value at write time (one file per bucket × partition),
-        # so pruning composes — partition dirs first, then key ranges.
-        added = table.write_data_files(
-            clustered, enforce_constraints=False  # re-files validated rows
+            # partitioned tables keep their hive layout: each curve bucket
+            # splits by partition value at write time (one file per bucket ×
+            # partition), so pruning composes — partition dirs first, then
+            # key ranges.
+            added = table.write_data_files(
+                clustered, enforce_constraints=False  # re-files validated rows
+            )
+        journal.log_task(
+            stage="cluster",
+            task_id="all",
+            base=base,
+            files_in=files_in,
+            files_out=[e.path for e in added],
+            rows_in=sum(e.rows for e in entries),
+            rows_out=sum(e.rows for e in added),
+            curve=curve,
         )
-    journal.log_task(
-        stage="cluster",
-        task_id="all",
-        files_in=[e.path for e in entries],
-        files_out=[e.path for e in added],
-        rows_in=sum(e.rows for e in entries),
-        rows_out=sum(e.rows for e in added),
-        curve=curve,
-    )
     version = table.commit(
         "cluster",
         added=added,
-        removed_paths=[e.path for e in entries],
+        removed_paths=files_in,
         # same optimistic-concurrency contract as compact(): rebase over
         # concurrent appends (they stay unclustered until the next cycle),
-        # refuse if an input was removed or a delete file landed meanwhile
-        requirements=[
-            ("files-live", [e.path for e in entries]),
-            ("no-new-deletes", parent),
-        ],
-        summary={
-            "curve": curve,
-            "cluster_cols": list(cols),
-            "job_id": job_id,
-            "mode": mode,
-            "rewritten_files": len(entries),
-        },
+        # refuse if a delete file landed since the version the rewrite read
+        requirements=[("no-new-deletes", base)],
+        summary={"curve": curve, "cluster_cols": list(cols), "job_id": job_id, **extra},
     )
     journal.log_commit(version)
     return version
+

@@ -10,20 +10,24 @@ to a 512MB target)"):
 - Candidate selection and FFD binning run on the driver over *manifest
   entries only* (a few bytes per file — at 100 TB / 512 MB files that is
   ~200k entries, trivially driver-sized). No data is read to plan.
-- Each bin is rewritten by its own small Spark job (``read.parquet(bin) →
-  coalesce(1) → write``). Bins are independent, so they are submitted from a
-  driver thread pool and the Spark scheduler runs them concurrently across
-  the cluster — no global shuffle of the table, no barrier.
+- Each bin is rewritten by its own small Spark job (``read_live(bin) →
+  repartition(1) → write``). Bins are independent, so they are submitted
+  from a driver thread pool and the Spark scheduler runs them concurrently
+  across the cluster — no global shuffle of the table, no barrier.
+- A bin reads its files through the pending positional deletes
+  (``IcepackTable.read_live``), as Iceberg's ``rewrite_data_files`` does:
+  a (file, pos) ref does not survive re-filing, so the rows it shadows are
+  dropped in the rewrite itself. The commit drops every delete file left
+  naming no live file; one naming a file outside the bins stays pending.
 - Every completed bin appends a lineage record (files-in → files-out + row
-  counts); a resumed job skips completed bins and reuses their staged output
-  (north_rule resumability).
+  counts + the version it read); a resumed job skips completed bins and
+  reuses their staged output (north_rule resumability).
 - The final snapshot swap is one CAS commit: scan-equivalence pre/post is an
   invariant (tested), readers pinned on the old snapshot are unaffected.
 """
 
 from __future__ import annotations
 
-import os
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
@@ -60,6 +64,18 @@ def plan_bins_ffd(
     return [members for _, members in bins if len(members) >= min_input_files]
 
 
+def _plan_bins(entries: list[FileEntry], target_bytes: int) -> list[list[FileEntry]]:
+    """FFD bins over the data files of ``entries``, planned per hive
+    partition: bins never mix partitions, so rewrites preserve the layout
+    and each output file stays single-partition (an unpartitioned table is
+    one group)."""
+    groups: dict[tuple, list[FileEntry]] = {}
+    for e in entries:
+        if e.content == "data":
+            groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
+    return [b for g in groups.values() for b in plan_bins_ffd(g, target_bytes)]
+
+
 def maybe_compact(
     table: IcepackTable,
     min_num_files: int = 10,
@@ -87,16 +103,7 @@ def maybe_compact(
     max-over-partitions gate never fires on streaming targets that sprinkle
     a couple of small files per ACTIVE partition then move on (round-3
     review finding)."""
-    groups: dict[tuple, list[FileEntry]] = {}
-    for e in table.files():
-        if e.content != "data":
-            continue  # delete files are maybe_apply_deletes' job
-        groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
-    binnable = sum(
-        len(b)
-        for members in groups.values()
-        for b in plan_bins_ffd(members, target_bytes)
-    )
+    binnable = sum(len(b) for b in _plan_bins(table.files(), target_bytes))
     if binnable < max(min_num_files, 2):
         return None
     return compact(table, target_bytes=target_bytes, **compact_kwargs)
@@ -113,92 +120,59 @@ def compact(
     job_id = job_id or f"compact-{uuid.uuid4().hex[:12]}"
     journal = LineageJournal(table.root, job_id)
     parent = table.head_version()
-    entries = table.files(parent)
-    # Pending deletes must be applied BEFORE any data-file rewrite: a
-    # positional delete's (file, pos) refs don't survive re-filing, so the
-    # rows they shadow would come back. (Iceberg's rewrite_data_files applies
-    # deletes for the same reason.)
-    if any(e.content != "data" for e in entries):
-        from .mor import apply_deletes
-
-        apply_deletes(table)
-        parent = table.head_version()
-        entries = table.files(parent)
-    # partition-aware: bins never mix hive partitions, so rewrites preserve
-    # the layout and each output file stays single-partition (unpartitioned
-    # tables collapse to one group — behavior unchanged)
-    groups: dict[tuple, list[FileEntry]] = {}
-    for e in entries:
-        groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
-    bins: list[list[FileEntry]] = []
-    for members in groups.values():
-        bins.extend(plan_bins_ffd(members, target_bytes))
+    data, deletes = table._split_deletes(table.files(parent))
+    bins = _plan_bins(data, target_bytes)
     if not bins:
         return None
 
     done = journal.completed("compact-bin")
     schema = table.schema(parent)
-    results: dict[str, tuple[list[str], list[FileEntry]]] = {}
 
     def rewrite_bin(bin_id: str, members: list[FileEntry]):
-        if bin_id in done:
-            rec = done[bin_id]
-            staged = [
-                table._footer_entry(
-                    table.data_path(p), p, set(table.stats_cols())
-                )
-                for p in rec["files_out"]
-                if os.path.exists(table.data_path(p))
-            ]
-            if len(staged) == len(rec["files_out"]):
-                return bin_id, rec["files_in"], staged  # resume: reuse staged output
-        paths = [table.data_path(e.path) for e in members]
+        files_in = [e.path for e in members]
+        rec = done.get(bin_id)
+        if rec and rec["files_in"] == files_in:
+            staged = journal.staged(table, rec)
+            if staged is not None:
+                return rec["base"], files_in, staged  # resume: reuse staged output
         # repartition(1), NOT coalesce(1): coalesce collapses the whole plan
         # (read + decode + encode + write) into a single task, serializing the
         # read of every input file in the bin. repartition keeps the read
         # parallel across the cluster and only funnels the ~target_bytes of
         # rows through one shuffle into the single writer task — measured 5-7x
         # faster per bin at 512 MB.
-        df = table.spark.read.schema(schema).parquet(*paths).repartition(1)
+        df = table.read_live(members, deletes, schema).repartition(1)
         added = table.write_data_files(
             df, enforce_constraints=False  # re-files already-validated rows
         )
         journal.log_task(
             stage="compact-bin",
             task_id=bin_id,
-            files_in=[e.path for e in members],
+            base=parent,
+            files_in=files_in,
             files_out=[e.path for e in added],
             rows_in=sum(e.rows for e in members),
             rows_out=sum(e.rows for e in added),
         )
-        return bin_id, [e.path for e in members], added
+        return parent, files_in, added
 
     with ThreadPoolExecutor(max_workers=max_concurrent_bins) as pool:
-        futures = [
-            pool.submit(rewrite_bin, f"bin-{i:05d}", members)
-            for i, members in enumerate(bins)
-        ]
-        for fut in futures:
-            bin_id, files_in, added = fut.result()
-            results[bin_id] = (files_in, added)
+        results = list(
+            pool.map(rewrite_bin, [f"bin-{i:05d}" for i in range(len(bins))], bins)
+        )
 
-    removed = [p for files_in, _ in results.values() for p in files_in]
-    added_all = [e for _, added in results.values() for e in added]
     version = table.commit(
         "compact",
-        added=added_all,
-        removed_paths=removed,
+        added=[e for _, _, added in results for e in added],
+        removed_paths=[p for _, files_in, _ in results for p in files_in],
         summary={"bins": len(bins), "job_id": job_id},
         # Optimistic concurrency: a long compaction must land beside the
         # appends that streamed in meanwhile (carry-forward rebases them in),
-        # but NOT beside a writer that removed one of its input files (its
-        # output would duplicate/resurrect that file's old rows) or one that
-        # added delete files (the rebased outputs' fresh seq would lift the
-        # rewritten rows above the delete's seq and un-shadow them).
-        requirements=[
-            ("files-live", removed),
-            ("no-new-deletes", parent),
-        ],
+        # but NOT beside a writer that added delete files since the oldest
+        # version a bin read: their positions name the files this rewrite
+        # removes, so the rows they shadow would come back. (commit itself
+        # refuses a removed input that already left the table.)
+        requirements=[("no-new-deletes", min(base for base, _, _ in results))],
     )
     journal.log_commit(version)
     return version

@@ -48,11 +48,13 @@ Scale shape (the 100-TB plan):
   silently applying one arbitrary match, or keeping the target row once per
   match, is how engines corrupt tables. A source whose collected key set
   holds no duplicate tuple skips the check.
-- **Serializable commit.** The commit requires that its inputs (the files
-  it rewrites, or the files its positions name) are live and that no data
-  or delete file landed since its snapshot (Delta's
-  Serializable level), so a racing append raises ``ConflictError`` instead
-  of letting a MERGE insert a key that append just wrote.
+- **Serializable commit.** The commit requires that no data or delete file
+  landed since its snapshot (Delta's Serializable level), so a racing
+  append raises ``ConflictError`` instead of letting a MERGE insert a key
+  that append just wrote; merge-on-read positions also need the files they
+  name live. ``IcepackTable.commit`` itself refuses a rewrite whose inputs
+  left the table, and drops the delete files a rewrite leaves naming no
+  live file (the rewrite read through them).
 
 Clause dicts (the SQL front end in ``sql.py`` builds these from text):
 
@@ -165,17 +167,6 @@ def _write_observed(
     added = table.write_data_files(final(observed), enforce_constraints=False)
     got = obs.get
     return added, {k: int(got[k] or 0) for k in counts}
-
-
-def _dangling(
-    table: IcepackTable, carried: list[FileEntry], deletes: list[FileEntry]
-) -> list[FileEntry]:
-    """The delete files that name none of the ``carried`` data files once a
-    rewrite removed the rest — Iceberg's dangling deletes. The rewrite read
-    through them, so they can leave the manifest in the same commit."""
-    hits = table.delete_hit_candidates(carried, deletes)
-    live = {d.path for ds in hits.values() for d in ds}
-    return [d for d in deletes if d.path not in live]
 
 
 def _write_pos_delete_file(
@@ -585,19 +576,15 @@ def merge_into(
             table.discard_staged(added)
             return {"version": None, **report, "files_rewritten": 0}
 
-        removed = [e.path for e in rewrite]
-        gone = set(removed)
-        carried = [e for e in data if e.path not in gone]
-        dropped = _dangling(table, carried, deletes) if rewrite else []
-        # a rewrite needs its inputs live, positions the files they name
-        inputs = sorted(table.pos_delete_targets(shadowed)) if mor else removed
+        # positions need the files they name live (see the module docstring)
+        named = sorted(table.pos_delete_targets(shadowed)) if mor else []
         try:
             version = table.commit(
                 "merge-mor" if mor else "merge",
                 added=added,
-                removed_paths=removed + [d.path for d in dropped],
+                removed_paths=[e.path for e in rewrite],
                 requirements=[
-                    ("files-live", inputs),
+                    ("files-live", named),
                     ("no-new-deletes", snap.version),
                     ("no-new-data", snap.version),
                 ],

@@ -30,7 +30,12 @@ Write amplification per batch: O(batch) instead of O(touched files). The
 deferred cost is paid once, in bulk, by :func:`apply_deletes` (major
 compaction), which rewrites only the data files a delete file names and
 drops the delete files — policy-driven via :func:`maybe_apply_deletes`
-exactly like ``maybe_compact``.
+exactly like ``maybe_compact``. No other rewrite waits for it: compaction,
+clustering and every copy-on-write rewrite read through the pending
+deletes themselves, and their commit drops the delete files left naming
+no live file. All three maintenance rewrites share one commit contract:
+rebase over concurrent appends, refuse once a delete file lands after the
+version they read (``no-new-deletes``).
 
 Semantics parity with CoW (pinned by tests/test_mor.py): same visible rows
 for any batch sequence, idempotent replay, older-batch discard, delete via
@@ -43,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_MOR_MAX_DELETE_FILES, DEFAULT_MOR_MAX_DELETE_RATIO
-from ..table.icepack import FileEntry, IcepackTable
+from ..table.icepack import ConflictError, FileEntry, IcepackTable
 # prune_candidates: the pruning step's name, which perfbench's tracer wraps here
 from .table_merge import merge_cdc, prune_candidates  # noqa: F401
 
@@ -91,16 +96,22 @@ def apply_deletes(table: IcepackTable) -> int | None:
         added = table.write_data_files(
             resolved, enforce_constraints=False  # re-files validated rows
         )
-    return table.commit(
-        "apply-deletes",
-        added=added,
-        removed_paths=[e.path for e in hit + deletes],
-        expected_parent=parent,
-        summary={
-            "applied_delete_files": len(deletes),
-            "rewritten_files": len(hit),
-        },
-    )
+    try:
+        return table.commit(
+            "apply-deletes",
+            added=added,
+            removed_paths=[e.path for e in hit + deletes],
+            # the maintenance rewrites' contract: rebase over appends, refuse
+            # once a delete file this fold has not read lands
+            requirements=[("no-new-deletes", parent)],
+            summary={
+                "applied_delete_files": len(deletes),
+                "rewritten_files": len(hit),
+            },
+        )
+    except ConflictError:
+        table.discard_staged(added)  # a refused commit leaves no files
+        raise
 
 
 def maybe_apply_deletes(

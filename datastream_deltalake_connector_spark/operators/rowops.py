@@ -40,7 +40,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..table.icepack import FileEntry, IcepackTable, Snapshot
+from ..table.icepack import ConflictError, FileEntry, IcepackTable, Snapshot
 from .generic_merge import _write_pos_delete_file
 
 __all__ = [
@@ -112,22 +112,26 @@ class _Plan:
     def commit(
         self, op: str, added: list[FileEntry], removed: list[FileEntry], summary: dict
     ) -> int:
-        return self.table.commit(
-            op,
-            added=added,
-            removed_paths=[e.path for e in removed],
-            # snapshot-isolation DML with optimistic concurrency: rebase over
-            # concurrent appends (rows this predicate never saw stay
-            # untouched), refuse if a candidate file was removed (a rewrite
-            # would resurrect its old rows; positions would dangle) or a
-            # delete file landed since the read (a rewrite would drop the
-            # file its positions name) — see commit()
-            requirements=[
-                ("files-live", [e.path for e in self.cand]),
-                ("no-new-deletes", self.snap.version),
-            ],
-            summary={"predicate": self.report["predicate"], **summary},
-        )
+        try:
+            return self.table.commit(
+                op,
+                added=added,
+                removed_paths=[e.path for e in removed],
+                # snapshot-isolation DML with optimistic concurrency: rebase
+                # over concurrent appends (rows this predicate never saw stay
+                # untouched), refuse if a candidate file was removed (a
+                # rewrite would resurrect its old rows; positions would
+                # dangle) or a delete file landed since the read (a rewrite
+                # would drop the file its positions name) — see commit()
+                requirements=[
+                    ("files-live", [e.path for e in self.cand]),
+                    ("no-new-deletes", self.snap.version),
+                ],
+                summary={"predicate": self.report["predicate"], **summary},
+            )
+        except ConflictError:
+            self.table.discard_staged(added)  # a refused commit leaves no files
+            raise
 
 
 def _plan(

@@ -39,10 +39,12 @@ versions; each batch reads the data files ADDED by the commits in
 never leak in. Non-append commits (a merge/delete rewrites or removes
 files) fail the stream by default exactly like Delta; opt-outs:
 ``skipChangeCommits=true`` (ignore those commits entirely, Delta's
-skipChangeCommits) . Maintenance commits (compact/cluster/apply-deletes/
-metadata-only) are transparent: they re-file existing rows, so they emit
-nothing. ``startingVersion`` begins the stream at a historical version
-(default: the head when the stream starts, i.e. only NEW commits).
+skipChangeCommits). Maintenance and metadata-only commits (the engine's
+one ``ROW_PRESERVING_OPS`` set: compact, cluster, apply-deletes, schema,
+constraint and partition-spec changes) are transparent: they re-file
+existing rows or touch none, so they emit nothing. ``startingVersion``
+begins the stream at a historical version (default: the head when the
+stream starts, i.e. only NEW commits).
 
 Reference seam: the reference consumes Delta tables as streaming sources via
 ``spark.readStream.format("delta")`` (DatastreamIO.scala); this gives the
@@ -76,16 +78,6 @@ if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
 
 __all__ = ["IcepackDataSource", "register"]
-
-# commits that re-file or annotate EXISTING rows — transparent to a stream
-_ROW_PRESERVING = {
-    "compact",
-    "cluster",
-    "apply_deletes",
-    "evolve-schema",
-    "set-partition-spec",
-    "create",
-}
 
 
 def _table(root: str):
@@ -255,6 +247,8 @@ class IcepackStreamReader(DataSourceStreamReader):
         return {"version": _table(self.root).head_version()}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        from ..table.icepack import ROW_PRESERVING_OPS
+
         t = _table(self.root)
         lo, hi = start["version"], end["version"]
         if hi <= lo:
@@ -275,7 +269,7 @@ class IcepackStreamReader(DataSourceStreamReader):
         parts: list[InputPartition] = []
         for v in reversed(path):
             snap = t.snapshot(v)
-            if snap.operation in _ROW_PRESERVING:
+            if snap.operation in ROW_PRESERVING_OPS:
                 continue
             prev = {e.path for e in t.files(snap.parent)}
             entries = t.files(v)

@@ -88,6 +88,21 @@ _URI_QUOTE = str.maketrans(
     {c: f"%{ord(c):02X}" for c in [*map(chr, range(0x21)), "\x7f", *'"#%<>?[\\]^`{|}']}
 )
 
+# Commit operations whose resolved row set equals their parent's: they
+# re-file rows, fold deletes or change metadata only. The change feed and
+# the streaming source both emit nothing for them.
+ROW_PRESERVING_OPS = frozenset(
+    {
+        "create",
+        "compact",
+        "cluster",
+        "apply-deletes",
+        "evolve-schema",
+        "set-constraint",
+        "set-partition-spec",
+    }
+)
+
 
 class ConflictError(RuntimeError):
     """Another writer committed since this writer's snapshot was resolved."""
@@ -1508,6 +1523,19 @@ class IcepackTable:
         the rollback path, which restores the target's entries as they
         were.
 
+        Two rules hold for every commit but rollback and clone (which pass
+        ``entries_override``), so no caller restates them:
+
+        - every path in ``removed_paths`` is still in the head manifest,
+          the implied ``files-live``. A file a concurrent writer already
+          removed or re-filed would otherwise come back as this commit's
+          output (Delta's ``ConcurrentDeleteDeleteException``);
+        - when a data file leaves, so does every positional-delete file
+          that names no data file left in the new manifest (Iceberg's
+          dangling deletes). The commit's writer read through those
+          deletes, so their rows left with the rewrite. ``removed_files``
+          in the summary counts them.
+
         ``requirements`` are Iceberg-style commit preconditions (the
         UpdateRequirements of its optimistic-concurrency retry loop),
         validated under the commit lock against the CURRENT head on every
@@ -1519,8 +1547,8 @@ class IcepackTable:
         merge deleted, or double-write rows a concurrent DELETE rewrote):
 
         - ``("files-live", paths)`` — every path is still in the head
-          manifest. A rewrite's inputs left the table → its outputs would
-          duplicate/resurrect rows another writer removed or re-filed.
+          manifest; for inputs a commit reads but does not remove, such as
+          the files a positional-delete file names.
         - ``("no-new-deletes", base_version)`` — no positional-delete file
           entered the manifest after ``base_version``. Its (file, pos) refs
           die with a rewrite of the files they name, which resurrects the
@@ -1539,6 +1567,8 @@ class IcepackTable:
         removed = set(removed_paths)
         added = list(added)
         requirements = list(requirements or ())
+        if entries_override is None:
+            requirements.insert(0, ("files-live", removed))
         for attempt in range(max_retries):
             parent = self.head_version() if expected_parent is None else expected_parent
             lock_path = os.path.join(self.meta_dir, "COMMIT.lock")
@@ -1606,6 +1636,16 @@ class IcepackTable:
                     for e in added:
                         e.seq = version
                     entries = [e for e in old_entries if e.path not in removed] + added
+                    if any(e.content == "data" for e in old_entries if e.path in removed):
+                        live = {e.path for e in entries if e.content == "data"}
+                        dangling = {
+                            e.path
+                            for e in entries
+                            if e.content == "pos_deletes"
+                            and live.isdisjoint(self.pos_delete_targets([e]))
+                        }
+                        entries = [e for e in entries if e.path not in dangling]
+                        removed = removed | dangling
                 # Manifest format by size: JSON for human-scale tables,
                 # PARQUET past the threshold — at 10^12 images / 512 MB
                 # files the manifest is ~2.4M entries, where JSON costs
@@ -2002,7 +2042,11 @@ class IcepackTable:
     def overwrite_all(self, df: DataFrame, num_files: int | None = None) -> int:
         old = [e.path for e in self.files()]
         entries = self.write_data_files(df, num_files=num_files)
-        return self.commit("overwrite", added=entries, removed_paths=old)
+        try:
+            return self.commit("overwrite", added=entries, removed_paths=old)
+        except ConflictError:
+            self.discard_staged(entries)  # a refused commit leaves no files
+            raise
 
     def rollback(self, version: int) -> int:
         """Restore HEAD to the state of an earlier snapshot — Delta

@@ -11,8 +11,12 @@ single job and a single commit, so they keep no journal.
 Journal = append-only JSONL under <table>/metadata/lineage/<job_id>.jsonl.
 Each completed unit of work (a compaction bin, a cluster range) appends one
 record *after* its output files are durably staged; the final table commit
-appends a ``commit`` record. A resumed job replays the journal, skips
-completed tasks, and reuses their staged outputs verbatim.
+appends a ``commit`` record. Each task record carries ``base``, the
+snapshot version its output read: the rewrites read through the deletes
+pending at that version, so a resumed commit must require that no delete
+file landed since the oldest base it reuses. A resumed job replays the
+journal, skips completed tasks, and reuses their staged outputs verbatim
+(:meth:`LineageJournal.staged`); a record without ``base`` is re-staged.
 """
 
 from __future__ import annotations
@@ -52,10 +56,23 @@ class LineageJournal:
     def committed(self) -> bool:
         return any(r.get("stage") == "commit" for r in self.records())
 
+    def staged(self, table, rec: dict[str, Any]) -> list | None:
+        """A completed task's outputs as manifest entries, re-read from their
+        footers, or None when the task must be staged again: its record
+        has no ``base`` or an output file is gone."""
+        outs = rec["files_out"]
+        if "base" not in rec or not all(
+            os.path.exists(table.data_path(p)) for p in outs
+        ):
+            return None
+        stats = set(table.stats_cols())
+        return [table._footer_entry(table.data_path(p), p, stats) for p in outs]
+
     def log_task(
         self,
         stage: str,
         task_id: str,
+        base: int,
         files_in: list[str],
         files_out: list[str],
         rows_in: int | None = None,
@@ -67,6 +84,7 @@ class LineageJournal:
                 "stage": stage,
                 "task_id": task_id,
                 "status": "done",
+                "base": base,
                 "files_in": files_in,
                 "files_out": files_out,
                 "rows_in": rows_in,

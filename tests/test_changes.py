@@ -159,6 +159,24 @@ def test_maintenance_commits_emit_nothing(spark, tmp_path):
     assert feed_set(table_changes(t, 0)) == expected_feed(t, 0, head)
 
 
+def test_metadata_commits_need_no_merge_key(spark, tmp_path):
+    """A constraint or partition-spec change on an append-only table is
+    row-preserving: the feed stays pure inserts and needs no merge key."""
+    t = fresh_table(spark, tmp_path)
+    t.add_check_constraint("w_pos", "w > 0")
+    t.set_partition_spec(["bucket(2, image_id)"])
+    more = generate_images(spark, 6, num_partitions=1, seed=7).select(
+        F.concat(F.lit("new-"), "image_id").alias("image_id"),
+        *[c for c in MERGED_IMAGE_SCHEMA.names if c not in ("image_id", TS, SEQ)],
+        F.to_timestamp(F.lit("2024-01-02 00:00:00")).alias(TS),
+        F.lit(0).cast("long").alias(SEQ),
+    )
+    t.append(more)
+    got = feed_set(table_changes(t, 0))
+    assert got == expected_feed(t, 0, t.head_version())
+    assert {r[1] for r in got} == {"insert"}
+
+
 def test_rollback_feed_is_exact_inverse(spark, tmp_path):
     t = fresh_table(spark, tmp_path)
     v1 = t.head_version()

@@ -32,6 +32,7 @@ from datastream_deltalake_connector_spark.operators.compaction import compact
 from datastream_deltalake_connector_spark.operators.concurrency import (
     run_with_commit_retries,
 )
+from datastream_deltalake_connector_spark.operators.expire import remove_orphans
 from datastream_deltalake_connector_spark.operators.mor import (
     apply_deletes,
     merge_into_table_mor,
@@ -191,8 +192,8 @@ def test_compact_refuses_when_delete_file_lands(spark, tmp_path):
 
     # deleted keys stayed dead through the refused rewrite
     assert key_set(t).isdisjoint(deleted)
-    # operation-level retry recomputes from the fresh head (folds the
-    # tombstones via apply_deletes) and lands
+    # operation-level retry recomputes from the fresh head (its bins read
+    # through the new delete file, which its commit then drops) and lands
     v = run_with_commit_retries(lambda: compact(t, target_bytes=1 << 30))
     assert v is not None
     assert key_set(t).isdisjoint(deleted)
@@ -235,6 +236,11 @@ def test_delete_where_mor_refuses_after_concurrent_compact(spark, tmp_path):
     with pytest.raises(ConflictError, match="files-live"):
         delete_where_mor(t, residual_sql=pred)
     assert key_set(t) >= expect_gone  # nothing half-applied
+    # the refused commit reclaimed its staged delete file (Spark's _SUCCESS
+    # and .crc markers of committed writes are orphans too, so only parquet
+    # files count)
+    orphans = remove_orphans(t, grace_seconds=0, dry_run=True)["orphans"]
+    assert not [p for p in orphans if p.endswith(".parquet")], orphans
 
     rep = run_with_commit_retries(lambda: delete_where_mor(t, residual_sql=pred))
     assert rep["version"] is not None
@@ -242,6 +248,24 @@ def test_delete_where_mor_refuses_after_concurrent_compact(spark, tmp_path):
     assert t.count_rows() == N_BASE - len(expect_gone)
     apply_deletes(t)
     assert t.count_rows() == N_BASE - len(expect_gone)
+
+
+def test_overwrite_refuses_after_concurrent_compact(spark, tmp_path):
+    """An overwrite removes the files it read; a compaction that re-filed
+    them first would see its output survive the overwrite. The commit's
+    implied files-live check refuses instead, the table keeps its
+    pre-overwrite rows, and the refused overwrite leaves no staged file."""
+    t = fresh_table(spark, tmp_path, num_files=8)
+    before = key_set(t)
+    other = second_handle(spark, t)
+    inject_before_commit(t, lambda: compact(other, target_bytes=1 << 30))
+    with pytest.raises(ConflictError, match="files-live"):
+        t.overwrite_all(extra_df(spark), num_files=1)
+    assert t.snapshot().operation == "compact"
+    assert key_set(t) == before
+    assert t.count_rows() == N_BASE
+    orphans = remove_orphans(t, grace_seconds=0, dry_run=True)["orphans"]
+    assert not [p for p in orphans if p.endswith(".parquet")], orphans
 
 
 def test_pinned_merge_conflicts_then_retry_converges(spark, tmp_path):

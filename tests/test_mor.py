@@ -13,8 +13,8 @@ emitter that writes positional deletes. These tests pin:
 - apply_deletes: drops delete files, restores metadata-only count_rows,
   leaves the visible row set unchanged
 - snapshot isolation: a reader pinned before a MoR merge sees the old rows
-- compact()/cluster() auto-apply pending deletes before any data-file
-  rewrite, and the CoW merge reads through them and drops the ones its
+- compact()/cluster() and the CoW merge read through pending deletes in
+  their own rewrite and commit once; the commit drops the delete files the
   rewrite leaves dangling (a rewrite would otherwise carry deleted rows
   into files no position names)
 - one delete kind: MoR merges and MoR DML interleave without a fold, and
@@ -245,23 +245,29 @@ def test_mor_snapshot_isolation(spark, tmp_path):
 
 
 def test_compact_applies_pending_deletes_first(spark, tmp_path):
+    """Compaction resolves pending deletes in its own read and commit: one
+    snapshot, no apply-deletes before it, and no delete file after it."""
     t = fresh_table(spark, tmp_path, num_files=8)
     merge_into_table_mor(t, cb(spark, 0), target_rows_per_file=10)
     state = key_state(t)
+    n_snaps = len(t.snapshots())
     v = compact(t, target_bytes=1 << 30)
     assert v is not None
     entries = t.files()
     assert not [e for e in entries if e.content == "pos_deletes"]
     assert key_state(t) == state
+    assert [s.operation for s in t.snapshots()[n_snaps:]] == ["compact"]
 
 
 def test_cluster_applies_pending_deletes_first(spark, tmp_path):
     t = fresh_table(spark, tmp_path)
     merge_into_table_mor(t, cb(spark, 0))
     state = key_state(t)
+    n_snaps = len(t.snapshots())
     cluster(t, cols=("phash", "image_id"), num_files=3)
     assert not [e for e in t.files() if e.content == "pos_deletes"]
     assert key_state(t) == state
+    assert [s.operation for s in t.snapshots()[n_snaps:]] == ["cluster"]
 
 
 def test_cow_merge_applies_pending_deletes_first(spark, tmp_path):

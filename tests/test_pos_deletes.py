@@ -13,8 +13,9 @@ Pins:
 - apply_deletes folds positions into data files: same visible rows, clean
   manifest
 - one delete kind: MoR DML and MoR CDC merges stack their position files
-  with no fold between them; a CoW merge / compact / cluster resolves or
-  folds pending positions before it rewrites
+  with no fold between them; a CoW merge / DML, compact and cluster
+  resolve pending positions in their own rewrite and commit once, and the
+  commit drops the delete files the rewrite leaves naming no live file
 - snapshot isolation + time travel across pos-delete commits
 - CDF: delete-pos emits delete rows, update-mor emits update_pre/postimage
 - the registered datasource read path resolves pending positions
@@ -306,14 +307,81 @@ def test_compact_and_cluster_fold_positions_first(spark, tmp_path):
     t = make_table(spark, tmp_path, "maint")
     delete_where_mor(t, filters=[("g", "=", 0)])
     visible = rows_of(t)
-    compact(t)
+    v = t.head_version()
+    assert compact(t) == v + 1  # one commit: no apply-deletes before it
     assert all(e.content == "data" for e in t.files())
     assert rows_of(t) == visible
     t2 = make_table(spark, tmp_path, "maint2")
     delete_where_mor(t2, filters=[("g", "=", 0)])
-    cluster(t2, cols=("id", "g"))
+    v2 = t2.head_version()
+    assert cluster(t2, cols=("id", "g")) == v2 + 1
     assert all(e.content == "data" for e in t2.files())
     assert rows_of(t2) == rows_of(t)
+
+
+def test_compact_keeps_delete_naming_a_file_outside_its_bins(spark, tmp_path):
+    """A delete file naming a compacted file and one the bins leave out
+    stays pending for the latter; its positions on the compacted file are
+    resolved in the rewrite, so the visible rows and count_rows stay exact."""
+    from datastream_deltalake_connector_spark.operators.compaction import compact
+
+    t = make_table(spark, tmp_path, "partial")
+    delete_where_mor(t, filters=[("g", "=", 0)])  # one file naming all three
+    visible = rows_of(t)
+    sizes = sorted((e.bytes for e in t.files() if e.content == "data"), reverse=True)
+    # FFD packs the two largest files into one bin; the third stays alone,
+    # and a singleton bin is never rewritten
+    v = compact(t, target_bytes=sizes[0] + sizes[1])
+    assert t.snapshot(v).summary["bins"] == 1
+    deletes = [e for e in t.files() if e.content == "pos_deletes"]
+    assert len(deletes) == 1
+    assert len(t.pos_delete_targets(deletes)) == 3  # still names all three
+    assert rows_of(t) == visible
+    assert t.count_rows() == len(visible) == 180
+    apply_deletes(t)
+    assert rows_of(t) == visible
+
+
+def test_cow_delete_drops_the_delete_file_it_leaves_dangling(spark, tmp_path):
+    """A CoW DELETE that rewrites the only file a pending positional delete
+    names reads through it; the commit then drops that delete file, which
+    would otherwise name no live file."""
+    t = make_table(spark, tmp_path, "dangle")
+    delete_where_mor(t, filters=[("id", "<", 10)])  # names the first file only
+    rep = delete_where(t, filters=[("id", "=", 20)])
+    assert rep["files_rewritten"] == 1
+    assert [e for e in t.files() if e.content != "data"] == []
+    assert t.snapshot(rep["version"]).summary["removed_files"] == 2
+    assert t.count_rows() == t.scan().count() == 199
+    assert t.scan().where("id < 10 or id = 20").count() == 0
+
+
+def test_compaction_resume_refuses_after_new_delete(spark, tmp_path):
+    """A compaction staged over pending deletes, killed before its commit,
+    then resumed after another MoR delete committed: its staged bins read
+    the older deletes only, so the resume is refused and the rows the new
+    delete removed stay deleted."""
+    from datastream_deltalake_connector_spark.operators.compaction import compact
+    from datastream_deltalake_connector_spark.table.icepack import ConflictError
+
+    t = make_table(spark, tmp_path, "resume")
+    delete_where_mor(t, filters=[("g", "=", 0)])
+    real = IcepackTable.commit
+
+    def killed(op, *args, **kwargs):
+        if op == "compact":
+            raise RuntimeError("killed before the compaction commit")
+        return real(t, op, *args, **kwargs)
+
+    t.commit = killed
+    with pytest.raises(RuntimeError, match="killed"):
+        compact(t, job_id="resume-after-delete")
+    del t.commit
+    delete_where_mor(t, filters=[("g", "=", 5)])
+    with pytest.raises(ConflictError):
+        compact(t, job_id="resume-after-delete")
+    assert t.scan().where("g in (0, 5)").count() == 0
+    assert t.count_rows() == t.scan().count() == 150
 
 
 def test_cow_dml_resolves_pending_positions(spark, tmp_path):

@@ -186,6 +186,19 @@ def test_stream_maintenance_transparent(spark, tmp_path):
     assert spark.read.parquet(out).count() == 50  # compaction emitted nothing
 
 
+def test_stream_metadata_commits_transparent(spark, tmp_path):
+    """A constraint or partition-spec change touches no row: the stream
+    reads the appends around it and fails on neither."""
+    t, df = simple_table(spark, tmp_path, name="stk", n=50)
+    out, ckpt = str(tmp_path / "outk"), str(tmp_path / "ckptk")
+    _drain(spark, t, out, ckpt, startingVersion=0)
+    t.add_check_constraint("id_nonneg", "id >= 0")
+    t.set_partition_spec(["bucket(2, uid)"])
+    t.append(df.limit(4))
+    _drain(spark, t, out, ckpt, startingVersion=0)
+    assert spark.read.parquet(out).count() == 54
+
+
 def test_stream_non_append_fails_then_skip(spark, tmp_path):
     t, df = simple_table(spark, tmp_path, name="stc", n=50)
     out, ckpt = str(tmp_path / "outc"), str(tmp_path / "ckptc")
